@@ -1436,7 +1436,7 @@ def _sessions(spark, sf_dir, gap_sec: int = 86400) -> DataFrame:
     The token is ``event_type_<k mod 16>`` (k from the props payload, via
     a portable regexp both engines run identically), NOT the bare event
     type: a 5-symbol vocabulary gives ≤25 distinct bigram shingles, under
-    which set-Jaccard is semantically degenerate — at sf1 (~15k sessions)
+    which set-Jaccard is semantically degenerate — at sf1 (~94k sessions)
     nearly EVERY session pair is genuinely ≥0.9 similar and the true pair
     graph itself is quadratic (surfaced by the round-5 sf1 pass: the
     contract run sat 20+ minutes inside this one query).  80 tokens /
@@ -1488,7 +1488,7 @@ def q_session_dedup(spark, sf_dir):
     event-type tokens (5 symbols, <=25 distinct bigrams) made set-Jaccard
     degenerate — at sf1 nearly every session pair is genuinely >=0.9
     similar and the TRUE pair graph is quadratic, so the query (and its
-    brute-force oracle) exploded at ~15k sessions.  ``_sessions`` now
+    brute-force oracle) exploded at ~94k sessions.  ``_sessions`` now
     token-enriches (``event_type_<k mod 16>``, ~6.4k distinct bigrams), so
     similarity is discriminative at every sf; threshold=0.5 keeps a
     non-empty pair graph at sf0.01 (4 edges) so CC + representative
@@ -5872,7 +5872,7 @@ sess AS (
   SELECT user_id * 1000000 + CAST(sess_id AS BIGINT) AS sess_key,
          string_agg(
            event_type || '_' ||
-             CAST(CAST(regexp_extract(props, '"k": (\\d+)', 1) AS BIGINT) % 16
+             CAST(TRY_CAST(regexp_extract(props, '"k": (\\d+)', 1) AS BIGINT) % 16
                   AS VARCHAR),
            ' ' ORDER BY ts, event_id) AS text,
          count(*) AS n_events

@@ -2,8 +2,12 @@
 
 Cluster usage (the north-rule launch shape):
 
-    spark-submit --py-files log_analysis_spark.zip jobs/run_pipeline.py \
+    spark-submit --driver-java-options -XX:-DontCompileHugeMethods \
+        --py-files log_analysis_spark.zip jobs/run_pipeline.py \
         --input /path/transcripts --out /path/out
+
+(``get_spark`` sets that JVM flag itself only when it launches the JVM; see
+``log_analysis_spark.session``.)
 
 Sandbox usage:
 

@@ -538,7 +538,7 @@ def audio_ahash64(samples: "np.ndarray") -> int:
 
     * channels fold to mono by integer mean (sum div n_ch);
     * 65 frames with integer boundaries ``(i·n) div 65``; per-frame
-      energy = Σ\|sample\| (exact int64);
+      energy = Σ\\|sample\\| (exact int64);
     * bit i = 1 iff ``energy[i]·len[i+1] > energy[i+1]·len[i]``
       (cross-multiplied MEAN comparison — frames differ by ±1 sample, a
       raw-sum compare would bias every boundary), packed MSB-first.

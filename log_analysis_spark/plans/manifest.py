@@ -14,7 +14,6 @@ from __future__ import annotations
 import json
 import os
 from dataclasses import asdict, dataclass
-from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -126,42 +125,3 @@ def partition_row_counts(df: DataFrame) -> dict[str, int]:
     )
     return {str(r["_pid"]): r["n"] for r in rows}
 
-
-def run_stage(
-    manifest: Manifest,
-    stage: str,
-    input_fingerprint: str,
-    output_path: str,
-    write_fn: Callable[[], DataFrame],
-    read_fn: Callable[[], DataFrame],
-    metrics_fn: Callable[[], dict] | None = None,
-) -> tuple[DataFrame, bool]:
-    """Run (or skip) one stage idempotently.
-
-    ``write_fn`` must materialize the stage output at ``output_path`` with
-    overwrite semantics and return the written DataFrame; ``read_fn`` loads
-    the existing output.  ``metrics_fn`` (optional) is called after the write
-    action completes — pair it with an ``Observation`` attached to the
-    written DataFrame so stage metrics ride along at zero extra passes.
-    Returns (df, skipped).
-    """
-    prior = manifest.lookup(stage, input_fingerprint)
-    if prior is not None and os.path.exists(output_path):
-        df = read_fn()
-        return df, True
-
-    df = write_fn()
-    written = read_fn()
-    pc = partition_row_counts(written)
-    manifest.record(
-        StageRecord(
-            stage=stage,
-            input_fingerprint=input_fingerprint,
-            output_path=output_path,
-            rows=sum(pc.values()),
-            n_partitions=len(pc),
-            partition_rows=pc,
-            metrics=dict(metrics_fn()) if metrics_fn is not None else {},
-        )
-    )
-    return written, False

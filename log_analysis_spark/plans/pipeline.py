@@ -6,12 +6,15 @@ broadcast enrich joins, a one-pass router fan-out write, and one aggregation
 pass per output — where the reference re-reads its combined file ~25 times.
 
 Stages checkpoint through the manifest (plans/manifest.py) so a killed run
-resumes without recomputing or double-writing completed stages.
+resumes without recomputing or double-writing completed stages.  Per-sink
+counts ride the write as an ``Observation`` and land in the route record, so
+neither a cold run nor a resume re-scans the routed output to count it.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 import time
 from dataclasses import dataclass, field
 
@@ -27,9 +30,15 @@ from log_analysis_spark.plans.manifest import (
     StageRecord,
     fingerprint_input,
     fingerprint_source,
-    run_stage,
 )
 from log_analysis_spark.sources.iceberg import route_write_resumable
+
+
+# Folded into the route fingerprint: a resumed run reports the route
+# record's ``partition_rows`` as its per-sink counts, so a record whose
+# ``partition_rows`` were keyed by Spark partition id (written before the
+# counts rode the write) must never match.
+ROUTE_LAYOUT = "partition_rows=sink"
 
 
 @dataclass
@@ -50,7 +59,6 @@ def run_pipeline(
     parse_impl: str = "arrow",
     manifest_path: str | None = None,
     input_fingerprint: str | None = None,
-    salt_partitions: int = 16,
 ) -> PipelineResult:
     """Run the full parse→enrich→route→aggregate DAG over ``turns``."""
     t0 = time.monotonic()
@@ -59,9 +67,10 @@ def run_pipeline(
     # into the same out_dir with DIFFERENT input must not share resume state,
     # and the SAME input resubmitted from a new process must still resume
     # (file list + size + mtime; semanticHash fallback for in-memory frames)
-    fp = input_fingerprint or fingerprint_input(
+    source_fp = input_fingerprint or fingerprint_input(
         out_dir, parse_impl, fingerprint_source(turns)
     )
+    fp = fingerprint_input(ROUTE_LAYOUT, source_fp)
     skipped: list[str] = []
 
     # -- parse + enrich + tag: one fused projection pipeline (no shuffle) --
@@ -69,21 +78,27 @@ def run_pipeline(
     enriched = enrich.enrich_tools(
         enrich.enrich_roles(parsed, role_taxonomy(spark)), tool_registry(spark)
     )
-    tagged = router.tag_sinks(enriched, router.default_rules())
+    rules = router.default_rules()
+    tagged = router.tag_sinks(enriched, rules)
+    sinks = [r.sink for r in rules] + [router.DEFAULT_REMAINDER]
 
     # -- route: single fan-out write, hive-partitioned by sink --------------
-    # observe() rides stage metrics (rows, error rows, null-class rows) on
-    # the write action itself — lineage metrics with zero extra passes
     routed_path = f"{out_dir}/routed"
-    obs = Observation("route_metrics")
-    observed = tagged.observe(
-        obs,
-        F.count(F.lit(1)).alias("rows_written"),
-        F.sum((F.col("turn_class") == "error").cast("long")).alias("error_rows"),
-        F.sum(F.col("turn_class").isNull().cast("long")).alias("null_class_rows"),
-    )
-
-    def _write() -> DataFrame:
+    prior = manifest.lookup("route", fp)
+    if prior is not None and os.path.exists(routed_path):
+        skipped.append("route")
+        per_sink = prior["partition_rows"]
+    else:
+        # per-sink counts and stage metrics ride the write action itself as
+        # an Observation — lineage with zero extra passes over the output
+        obs = Observation("route_metrics")
+        observed = tagged.observe(
+            obs,
+            F.count(F.lit(1)).alias("rows_written"),
+            F.sum((F.col("turn_class") == "error").cast("long")).alias("error_rows"),
+            F.sum(F.col("turn_class").isNull().cast("long")).alias("null_class_rows"),
+            *(F.count_if(F.col("sink") == s).alias(f"sink={s}") for s in sinks),
+        )
         # replace-partition semantics (Iceberg overwritePartitions, or the
         # dynamic-overwrite parquet fallback): a run killed mid-write leaves
         # partial sink partitions, and the rerun replaces exactly those —
@@ -97,11 +112,8 @@ def run_pipeline(
         # the first write attempt for this fingerprint) distinguishes the two
         # cases: same-fp retry → resume partition-by-partition; new/changed
         # fp → clear the dir first.
-        import shutil
-
         if manifest.lookup("route.intent", fp) is None:
-            if os.path.exists(routed_path):
-                shutil.rmtree(routed_path, ignore_errors=True)
+            shutil.rmtree(routed_path, ignore_errors=True)
             manifest.record(
                 StageRecord(
                     stage="route.intent",
@@ -114,27 +126,29 @@ def run_pipeline(
                 )
             )
         route_write_resumable(observed, routed_path)
-        return spark.read.parquet(routed_path)
+        # the write is one shuffle-free result stage, so each task's metrics
+        # are merged once even when a task is retried
+        m = obs.get
+        per_sink = {s: m[f"sink={s}"] for s in sinks if m[f"sink={s}"]}
+        manifest.record(
+            StageRecord(
+                stage="route",
+                input_fingerprint=fp,
+                output_path=routed_path,
+                rows=m["rows_written"],
+                n_partitions=len(per_sink),
+                partition_rows=per_sink,
+                metrics={k: m[k] for k in ("rows_written", "error_rows", "null_class_rows")},
+            )
+        )
 
-    routed, was_skipped = run_stage(
-        manifest,
-        "route",
-        fp,
-        routed_path,
-        _write,
-        lambda: spark.read.parquet(routed_path),
-        metrics_fn=lambda: obs.get,
-    )
-    if was_skipped:
-        skipped.append("route")
-
-    # -- aggregate: per-sink counts (one pass), hourly rollup, salted conv --
-    per_sink = {
-        r["sink"]: r["n"] for r in router.sink_counts(routed).collect()
-    }
+    # -- aggregate: the one read of the routed output (schema known, so no
+    # inference job); the plain groupBy's partial aggregate already folds a
+    # hot conversation to one row per map task before the exchange
+    routed = spark.read.schema(tagged.schema).parquet(routed_path)
     total = sum(per_sink.values())
     hourly = agg.hourly_rollup(routed, keys=["sink", "role", "tool"])
-    conv_counts = agg.salted_group_count(routed, "conv_id", n_salts=salt_partitions)
+    conv_counts = routed.groupBy("conv_id").agg(F.count(F.lit(1)).alias("n"))
 
     return PipelineResult(
         routed_path=routed_path,
@@ -145,3 +159,4 @@ def run_pipeline(
         wall_sec=time.monotonic() - t0,
         stages_skipped=skipped,
     )
+

@@ -23,6 +23,20 @@ def get_spark(
     Defaults: ``local[$SPARK_GRAFT_CPUS]`` (or ``local[*]``), AQE enabled,
     Arrow enabled for pandas UDFs, UTC session timezone (required for
     DuckDB-oracle comparability — duckdb timestamps are UTC-naive).
+
+    JVMs start with ``-XX:-DontCompileHugeMethods``.  HotSpot never
+    JIT-compiles a method whose bytecode exceeds its fixed 8,000-byte
+    ``HugeMethodLimit``.  In the fused scan → parse → enrich → tag stage of
+    ``plans.pipeline`` the largest generated method is
+    7,246 bytes after parse, which compiles, but 8,192 after the two enrich
+    joins and 8,564 after the tag, so without the flag that whole stage runs
+    interpreted and the broadcast joins against 4- and 7-row dims cost about
+    as much CPU as the parse itself.  The flag goes in the
+    ``default*JavaOptions`` keys, which Spark prepends to any caller
+    ``extraJavaOptions``.  It only takes effect when this call launches the
+    JVM: under ``spark-submit`` the driver JVM is already running, so pass
+    ``--driver-java-options -XX:-DontCompileHugeMethods`` on the command
+    line.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -53,6 +67,8 @@ def get_spark(
         # partition columns (per-PID splits) stay safe.
         .config("spark.sql.optimizer.plannedWrite.enabled", "false")
         .config("spark.sql.maxConcurrentOutputFileWriters", "10")
+        .config("spark.driver.defaultJavaOptions", "-XX:-DontCompileHugeMethods")
+        .config("spark.executor.defaultJavaOptions", "-XX:-DontCompileHugeMethods")
     )
     if extra_conf:
         for k, v in extra_conf.items():

@@ -45,6 +45,8 @@ def _submit(pkg_zip, job, extra, cwd):
             # (the JVM is already up); the default 1g OOMs the longer stage
             # chains, so size the driver here like any real launch would
             "--driver-memory", "4g",
+            # likewise get_spark's default JVM options: the README launch shape
+            "--driver-java-options", "-XX:-DontCompileHugeMethods",
             "--conf", "spark.ui.enabled=false",
             "--py-files", str(pkg_zip),
             str(REPO / "jobs" / job),

@@ -57,13 +57,22 @@ def _normalize(df):  # pandas DataFrame → canonical string rows
     return hashlib.sha256("\n".join(rows).encode()).hexdigest(), len(rows)
 
 
+def _usage_error(msg: str) -> int:
+    print(f"usage: check_oracle.py [--retired] [--skip a,b] [sf_dir] [query ...]\n"
+          f"check_oracle.py: error: {msg}", file=sys.stderr)
+    return 2
+
+
 def main() -> int:
     skip: set[str] = set()
     args = []
     it = iter(sys.argv[1:])
     for a in it:
         if a == "--skip":
-            skip |= set(next(it).split(","))
+            names = next(it, None)
+            if names is None:
+                return _usage_error("--skip needs a comma-separated list of query names")
+            skip |= set(names.split(","))
         elif a != "--retired":
             args.append(a)
     retired = "--retired" in sys.argv[1:]
@@ -74,17 +83,23 @@ def main() -> int:
     import __spark_entry__ as entrymod
     from log_analysis_spark.session import get_spark
 
+    if retired:
+        qs, oracles = entrymod.retired_queries(), entrymod.retired_oracle_sql()
+    else:
+        qs, oracles = entrymod.queries(), entrymod.oracle_sql()
+    unknown = sorted(skip - set(qs))
+    if unknown:
+        return _usage_error(
+            f"--skip names no query: {', '.join(unknown)}; "
+            f"valid names: {', '.join(sorted(qs))}"
+        )
+
     spark = get_spark("oracle-check")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
-
-    if retired:
-        qs, oracles = entrymod.retired_queries(), entrymod.retired_oracle_sql()
-    else:
-        qs, oracles = entrymod.queries(), entrymod.oracle_sql()
     failures = 0
     for name, fn in qs.items():
         if only and name not in only:
