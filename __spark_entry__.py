@@ -7,6 +7,11 @@ row-count + schema + order-insensitive value hash at sf0.01).
 
 Queries without an oracle entry (approximate / hash-seeded / Arrow-UDF ops)
 get the driver's weaker rows-only check and are unit-tested in tests/.
+
+Each query is declared once: ``q_<name>`` is its engine function and
+``_oracle_table()`` holds its oracle under ``<name>``.  ``CONTRACT`` lists
+the 50 names ``queries()`` exposes; every other ``q_*`` function is a
+retired query (``retired_queries()`` / ``retired_oracle_sql()``).
 """
 
 from __future__ import annotations
@@ -831,7 +836,7 @@ def q_turn_transitions(spark, sf_dir):
     )
 
 
-def q_graph_pagerank(spark, sf_dir):
+def q_graph_tool_pagerank(spark, sf_dir):
     """Weighted integer PageRank over the tool→tool transition graph the
     transcripts induce (edges = `transition_counts` over tool-bearing
     turns): which tools sit at the center of agent workflows.  The whole
@@ -941,7 +946,7 @@ CMS_DEPTH, CMS_WIDTH = 4, 256
 QUANTILE_QS, QUANTILE_RES = [0.5, 0.9, 0.99], 0.25
 
 
-def q_events_cms(spark, sf_dir):
+def q_events_cms_counts(spark, sf_dir):
     """Count-min sketch point queries: estimated per-user event counts from
     a 4×256-counter sketch probed for every distinct user — the mergeable
     bounded-memory count estimate (never undercounts; overcount bounded by
@@ -1227,7 +1232,7 @@ def q_embed_hard_negatives(spark, sf_dir):
     return similarity.hard_negatives(emb, queries, k=3)
 
 
-def q_events_kmv(spark, sf_dir):
+def q_events_kmv_distinct(spark, sf_dir):
     """KMV (bottom-k) distinct-user estimate per event_type — the mergeable
     approximate-distinct sketch whose md5-integer estimator a DuckDB oracle
     reproduces bit-exactly (unlike HLL registers).  k=32 < |users| at sf0.01
@@ -1240,7 +1245,7 @@ HLL_P = 6  # m = 64 registers — small enough that the oracle's literal
 #            ln-table stays readable; production default is p=12
 
 
-def q_events_hll(spark, sf_dir):
+def q_events_hll_distinct(spark, sf_dir):
     """HyperLogLog distinct estimates per event_type — BOTH estimator
     branches in one query: distinct users (~150/type at sf0.01 → the
     linear-counting small-range branch) and distinct event ids
@@ -1999,7 +2004,7 @@ MARKUP_SUFFIX = (
 NFC_SUFFIX = " voila\u0300"  # DECOMPOSED: a + combining grave -> \u00e0 under NFC
 
 
-def q_graph_k_core(spark, sf_dir):
+def q_graph_tool_k_core(spark, sf_dir):
     """2-core of the tool transition graph: iterative peel of degree-<2
     nodes — the dense workflow backbone vs peripheral one-off tools.  The
     k-core is order-independent and unique, so Spark's peel-until-stable
@@ -2119,7 +2124,7 @@ def q_doc_normalize_unicode(spark, sf_dir):
     return textstats.normalize_unicode(docs, "NFC").select("doc_id", "norm_text")
 
 
-def q_graph_triangles(spark, sf_dir):
+def q_graph_tool_triangles(spark, sf_dir):
     """Per-tool triangle counts over the transition graph (undirected,
     deduped, self-loops dropped): interlocking workflow cliques vs
     hub-and-spoke usage.  Canonical a<b<c enumeration via two narrow
@@ -2304,7 +2309,7 @@ def q_doc_softdedup(spark, sf_dir):
     return dedup.softdedup_weights(_docs(spark, sf_dir))
 
 
-def q_graph_communities(spark, sf_dir):
+def q_graph_tool_communities(spark, sf_dir):
     """Tool communities by deterministic synchronous weighted label
     propagation over the same transition graph as the PageRank query —
     which tools co-occur in workflow clusters.  All-integer votes with
@@ -2553,7 +2558,7 @@ def q_graph_error_route(spark, sf_dir):
     )
 
 
-def q_doc_heavy_hitters(spark, sf_dir):
+def q_doc_token_heavy_hitters(spark, sf_dir):
     """EXACT heavy hitters over the corpus token stream (count > n/50)
     WITHOUT a full-cardinality shuffle: per-partition Misra-Gries
     candidates (<= k+1 rows/partition, no shuffle) then an exact recount
@@ -2932,95 +2937,105 @@ def entry(spark: SparkSession) -> DataFrame:
     return q_logs_overview(spark, "/root/testdata/sf0.001")
 
 
+# The driver contract: EXACTLY 50 names, in driver order.  The driver's
+# correctness window checks the first 50 insertion-order entries of
+# queries(), so the contract is sized to get a driver row for every query
+# (rounds 1-2 carried 51/56 entries and the tail went unchecked).  Every
+# other q_* function is a retired query, verified by
+# tools/check_oracle.py --retired.  Dropped vs round 2 (all still
+# implemented + unit-tested; each §2 ID keeps an in-window green twin — see
+# R3_NOTES.md):
+#
+#   * class_counts        — strict coarsening of logs_overview (A1)
+#   * request_errors_flat — J4 flat twin of nested_errors
+#   * cache_op_counts     — A2 twin of conditional_agg
+#   * error_follows_tool  — W3 twin of adjacent_pairing
+#   * doc_token_count     — n_tokens is a column of doc_quality's output
+#   * doc_minhash_lsh     — no-oracle production twin of doc_minhash_lsh_md5
+#   * doc_simhash         — no-oracle production twin of doc_simhash_md5
+#   * doc_fingerprint     — no-oracle production twin of doc_fingerprint_md5
+#   * enrich_roles/_tools — chained verbatim inside enrich_dims (J1+J2+F8)
+#   * minmax_ts           — A6 extrema folded into conditional_agg's scan
+#   * events_sessionize   — session_dedup composes the same sessionize
+#                           machinery as its first stage
+#
+# ALL 50 have exact oracles.  embed_ivf_topk (rows-only in rounds 1-3) now
+# probes a deterministic md5-seeded index whose build + assignment + probe
+# the oracle recomputes end to end (its ANN approximation is vs exact
+# top-k, not vs the oracle); the kmeans-built production index is the
+# rows-only retired twin embed_ivf_topk_kmeans.
+#
+# Rotating a row in or out of the contract is moving its name into or out
+# of this list; its q_* function and oracle stay where they are.
+CONTRACT = [
+    "transcripts",
+    "parse_fields",
+    "logs_overview",
+    "route_counts",
+    "enrich_dims",
+    "hourly_rollup",
+    "conv_counts_salted",
+    "outliers",
+    "unmatched_roles_anti",
+    "full_outer_merge",
+    "lookup_sentinel",
+    "interval_join",
+    "adjacent_pairing",
+    "error_subclasses",
+    "conditional_agg",
+    "nested_errors",
+    "pid_fanout",
+    "lifecycle_merge",
+    "streaming_conv_state",
+    "streaming_dedup",
+    "session_dedup",
+    "conv_docs",
+    "doc_exact_dedup",
+    "doc_quality",
+    "doc_langid",
+    "doc_repetition",
+    "corpus_pack",
+    "corpus_sample",
+    "doc_decontaminate",
+    "doc_pii_scrub",
+    "doc_ngram_jaccard",
+    "doc_neardup_groups",
+    "doc_dedup_kept",
+    "doc_minhash_lsh_md5",
+    "doc_simhash_md5",
+    "doc_fingerprint_md5",
+    "embed_cosine_topk",
+    "embed_neardup",
+    "embed_ivf_topk",
+    "multimodal_features",
+    # promoted from the retired suite in round 5, when ten long-stable
+    # rows (scalar_funcs, union_by_name, distinct_codes, timing_stats,
+    # pair_math, action_set_convs, duration_histogram, text_filters,
+    # turn_ordering, req_resp_merge) were retired in their place
+    "doc_bm25_topk",
+    "events_asof",
+    "doc_dup_span_clean",
+    "embed_semdedup",
+    "events_burst_hours",
+    "doc_winnow",
+    "doc_line_dedup",
+    "corpus_report",
+    "events_skew_join",
+    "doc_quality_classifier",
+]
+assert len(set(CONTRACT)) == len(CONTRACT) == 50, (
+    f"contract must stay exactly 50 distinct queries, got {len(CONTRACT)}"
+)
+
+
+def _query_fns() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """Every ``q_<name>`` function of this module, keyed by ``<name>``."""
+    return {k[2:]: fn for k, fn in globals().items() if k.startswith("q_")}
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {name: _utc(fn) for name, fn in _raw_queries().items()}
-
-
-def _raw_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """EXACTLY 50 entries — the driver's correctness window checks the first
-    50 insertion-order entries, so the contract is sized to get a driver row
-    for every query (rounds 1-2 carried 51/56 entries and the tail went
-    unchecked).  Dropped vs round 2 (all still implemented + unit-tested;
-    each §2 ID keeps an in-window green twin — see R3_NOTES.md):
-
-      * class_counts        — strict coarsening of logs_overview (A1)
-      * request_errors_flat — J4 flat twin of nested_errors
-      * cache_op_counts     — A2 twin of conditional_agg
-      * error_follows_tool  — W3 twin of adjacent_pairing
-      * doc_token_count     — n_tokens is a column of doc_quality's output
-      * doc_minhash_lsh     — no-oracle production twin of doc_minhash_lsh_md5
-      * doc_simhash         — no-oracle production twin of doc_simhash_md5
-      * doc_fingerprint     — no-oracle production twin of doc_fingerprint_md5
-      * enrich_roles/_tools — chained verbatim inside enrich_dims (J1+J2+F8)
-      * minmax_ts           — A6 extrema folded into conditional_agg's scan
-      * events_sessionize   — session_dedup composes the same sessionize
-                              machinery as its first stage
-
-    ALL 50 have exact oracles.  embed_ivf_topk (rows-only in rounds 1-3)
-    now probes a deterministic md5-seeded index whose build + assignment +
-    probe the oracle recomputes end to end (its ANN approximation is vs
-    exact top-k, not vs the oracle); the kmeans-built production index is
-    the rows-only retired twin embed_ivf_topk_kmeans."""
-    q = {
-        "transcripts": q_transcripts,
-        "parse_fields": q_parse_fields,
-        "logs_overview": q_logs_overview,
-        "route_counts": q_route_counts,
-        "enrich_dims": q_enrich_dims,
-        "hourly_rollup": q_hourly_rollup,
-        "conv_counts_salted": q_conv_counts_salted,
-        "outliers": q_outliers,
-        "unmatched_roles_anti": q_unmatched_roles_anti,
-        "full_outer_merge": q_full_outer_merge,
-        "lookup_sentinel": q_lookup_sentinel,
-        "interval_join": q_interval_join,
-        "adjacent_pairing": q_adjacent_pairing,
-        "error_subclasses": q_error_subclasses,
-        "conditional_agg": q_conditional_agg,
-        "nested_errors": q_nested_errors,
-        "pid_fanout": q_pid_fanout,
-        "lifecycle_merge": q_lifecycle_merge,
-        "streaming_conv_state": q_streaming_conv_state,
-        "streaming_dedup": q_streaming_dedup,
-        "session_dedup": q_session_dedup,
-        "conv_docs": q_conv_docs,
-        "doc_exact_dedup": q_doc_exact_dedup,
-        "doc_quality": q_doc_quality,
-        "doc_langid": q_doc_langid,
-        "doc_repetition": q_doc_repetition,
-        "corpus_pack": q_corpus_pack,
-        "corpus_sample": q_corpus_sample,
-        "doc_decontaminate": q_doc_decontaminate,
-        "doc_pii_scrub": q_doc_pii_scrub,
-        "doc_ngram_jaccard": q_doc_ngram_jaccard,
-        "doc_neardup_groups": q_doc_neardup_groups,
-        "doc_dedup_kept": q_doc_dedup_kept,
-        "doc_minhash_lsh_md5": q_doc_minhash_lsh_md5,
-        "doc_simhash_md5": q_doc_simhash_md5,
-        "doc_fingerprint_md5": q_doc_fingerprint_md5,
-        "embed_cosine_topk": q_embed_cosine_topk,
-        "embed_neardup": q_embed_neardup,
-        "embed_ivf_topk": q_embed_ivf_topk,
-        "multimodal_features": q_multimodal_features,
-        # round-5 window rotation: ten long-stable rows (scalar_funcs,
-        # union_by_name, distinct_codes, timing_stats, pair_math,
-        # action_set_convs, duration_histogram, text_filters,
-        # turn_ordering, req_resp_merge) retired to the --retired suite;
-        # ten high-value retired rows promoted so the driver's hard gate
-        # exercises fresh surface (judge round-4 item 4)
-        "doc_bm25_topk": q_doc_bm25_topk,
-        "events_asof": q_events_asof,
-        "doc_dup_span_clean": q_doc_dup_span_clean,
-        "embed_semdedup": q_embed_semdedup,
-        "events_burst_hours": q_events_burst_hours,
-        "doc_winnow": q_doc_winnow,
-        "doc_line_dedup": q_doc_line_dedup,
-        "corpus_report": q_corpus_report,
-        "events_skew_join": q_events_skew_join,
-        "doc_quality_classifier": q_doc_quality_classifier,
-    }
-    assert len(q) == 50, f"contract must stay exactly 50 queries, got {len(q)}"
-    return q
+    fns = _query_fns()
+    return {name: _utc(fns[name]) for name in CONTRACT}
 
 
 def retired_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -3029,166 +3044,17 @@ def retired_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     tests/test_retired_contract.py keep them verified (the doc/simhash/
     minhash/fingerprint production twins are separately pair-set-equality
     tested against their in-contract md5 twins)."""
-    return {name: _utc(fn) for name, fn in {
-        # round-5 rotation: long-stable former contract rows
-        "scalar_funcs": q_scalar_funcs,
-        "union_by_name": q_union_by_name,
-        "distinct_codes": q_distinct_codes,
-        "timing_stats": q_timing_stats,
-        "pair_math": q_pair_math,
-        "action_set_convs": q_action_set_convs,
-        "duration_histogram": q_duration_histogram,
-        "text_filters": q_text_filters,
-        "turn_ordering": q_turn_ordering,
-        "req_resp_merge": q_req_resp_merge,
-        "class_counts": q_class_counts,
-        "enrich_roles": q_enrich_roles,
-        "enrich_tools": q_enrich_tools,
-        "minmax_ts": q_minmax_ts,
-        "events_sessionize": q_events_sessionize,
-        "request_errors_flat": q_request_errors_flat,
-        "cache_op_counts": q_cache_op_counts,
-        "error_follows_tool": q_error_follows_tool,
-        "count_distinct": q_count_distinct,
-        "substring_filter": q_substring_filter,
-        "regex_filter": q_regex_filter,
-        "streaming_hourly": q_streaming_hourly,
-        "streaming_ss_join": q_streaming_ss_join,
-        "streaming_sessions": q_streaming_sessions,
-        "events_interval_lookup": q_events_interval_lookup,
-        "doc_token_count": q_doc_token_count,
-        "corpus_temperature_mix": q_corpus_temperature_mix,
-        "doc_dup_span_stats": q_doc_dup_span_stats,
-        "embed_d4_prune": q_embed_d4_prune,
-        "embed_cluster_balanced": q_embed_cluster_balanced,
-        "corpus_dsir_select": q_corpus_dsir_select,
-        "corpus_leakage_split": q_corpus_leakage_split,
-        "corpus_vocabulary": q_corpus_vocabulary,
-        "doc_unigram_surprise": q_doc_unigram_surprise,
-        "doc_pareto_gate": q_doc_pareto_gate,
-        "doc_gopher_rules": q_doc_gopher_rules,
-        "doc_ppl_buckets": q_doc_ppl_buckets,
-        "doc_strip_common_lines": q_doc_strip_common_lines,
-        "embed_semantic_decontam": q_embed_semantic_decontam,
-        "doc_decontaminate_bloom": q_doc_decontaminate_bloom,
-        "doc_lev_neardup": q_doc_lev_neardup,
-        "doc_chunks": q_doc_chunks,
-        "corpus_pack_sequences": q_corpus_pack_sequences,
-        "corpus_cap_group": q_corpus_cap_group,
-        "events_sliding": q_events_sliding,
-        "events_funnel": q_events_funnel,
-        "events_retention": q_events_retention,
-        "events_kmv_distinct": q_events_kmv,
-        "events_kmv_setops": q_events_kmv_setops,
-        "events_cms_counts": q_events_cms,
-        "events_quantiles": q_events_quantiles,
-        "streaming_quantiles": q_streaming_quantiles,
-        "events_rolling": q_events_rolling,
-        "events_bloom_join": q_events_bloom_join,
-        "events_funnel_times": q_events_funnel_times,
-        "events_ohlc": q_events_ohlc,
-        "events_profile": q_events_profile,
-        "events_anomalies": q_events_anomalies,
-        "events_expectations": q_events_expectations,
-        "turn_transitions": q_turn_transitions,
-        "graph_tool_pagerank": q_graph_pagerank,
-        "graph_tool_communities": q_graph_communities,
-        "graph_tool_triangles": q_graph_triangles,
-        "graph_tool_k_core": q_graph_k_core,
-        "doc_dedup_best": q_doc_dedup_best,
-        "doc_url_blocklist": q_doc_url_blocklist,
-        "doc_url_domains": q_doc_url_domains,
-        "events_hll_distinct": q_events_hll,
-        "conv_response_latency": q_conv_response_latency,
-        "streaming_burst_hours": q_streaming_burst_hours,
-        "streaming_cusum_drift": q_streaming_cusum_drift,
-        "streaming_rate_limit": q_streaming_rate_limit,
-        "customer_fuzzy_match": q_customer_fuzzy_match,
-        "events_incidents": q_events_incidents,
-        "events_cusum_drift": q_events_cusum_drift,
-        "events_changepoint": q_events_changepoint,
-        "conv_tool_rules": q_conv_tool_rules,
-        "graph_error_route": q_graph_error_route,
-        "doc_token_heavy_hitters": q_doc_heavy_hitters,
-        "events_time_weighted": q_events_time_weighted,
-        "events_gapfill": q_events_gapfill,
-        "events_seasonal": q_events_seasonal,
-        "events_trend": q_events_trend,
-        "events_rank_compare": q_events_rank_compare,
-        "events_ks_drift": q_events_ks_drift,
-        "events_k_anonymity": q_events_k_anonymity,
-        "events_l_diversity": q_events_l_diversity,
-        "events_benford": q_events_benford,
-        "events_concurrency": q_events_concurrency,
-        "logs_latency_quantiles": q_logs_latency_quantiles,
-        "events_forecast_backtest": q_events_forecast_backtest,
-        "streaming_forecast_backtest": q_streaming_forecast_backtest,
-        "events_percentile": q_events_percentile,
-        "streaming_psi_drift": q_streaming_psi_drift,
-        "events_session_impact": q_events_session_impact,
-        "events_chi2": q_events_chi2,
-        "events_auc": q_events_auc,
-        "events_gini": q_events_gini,
-        "events_acf": q_events_acf,
-        "events_active_users": q_events_active_users,
-        "events_burn_rate": q_events_burn_rate,
-        "events_psi_drift": q_events_psi_drift,
-        "streaming_active_users": q_streaming_active_users,
-        "log_templates": q_log_templates,
-        "log_rare_templates": q_log_rare_templates,
-        "logs_path_rollup": q_logs_path_rollup,
-        "doc_phrase_search": q_doc_phrase_search,
-        "embed_outliers": q_embed_outliers,
-        "doc_badwords": q_doc_badwords,
-        "doc_compress_ratio": q_doc_compress_ratio,
-        "conv_tool_paths": q_conv_tool_paths,
-        "events_winsorized": q_events_winsorized,
-        "routed_rows_fingerprint": q_routed_rows_fingerprint,
-        "events_entropy": q_events_entropy,
-        "timing_correlation": q_timing_correlation,
-        "graph_error_distance": q_graph_error_distance,
-        "doc_tfidf_top": q_doc_tfidf_top,
-        "doc_readability": q_doc_readability,
-        "doc_softdedup": q_doc_softdedup,
-        "doc_containment": q_doc_containment,
-        "doc_loop_detection": q_doc_loop_detection,
-        "corpus_diversity": q_corpus_diversity,
-        "doc_classifier_calibration": q_doc_classifier_calibration,
-        "doc_lang_margin": q_doc_lang_margin,
-        "embed_cluster_psi": q_embed_cluster_psi,
-        "events_attribution": q_events_attribution,
-        "embed_mmr": q_embed_mmr,
-        "doc_hybrid_search": q_doc_hybrid_search,
-        "graph_tool_overlap": q_graph_tool_overlap,
-        "doc_strip_markup": q_doc_strip_markup,
-        "doc_normalize_unicode": q_doc_normalize_unicode,
-        "doc_fuzzy_decontam": q_doc_fuzzy_decontam,
-        "corpus_vocab_drift": q_corpus_vocab_drift,
-        "orders_join_size": q_orders_join_size,
-        "events_join_size": q_events_join_size,
-        "conv_seq_integrity": q_conv_seq_integrity,
-        "streaming_seq_integrity": q_streaming_seq_integrity,
-        "turn_class_cube": q_turn_class_cube,
-        "role_class_pivot": q_role_class_pivot,
-        "corpus_pack_bylang": q_corpus_pack_bylang,
-        "corpus_budget_mix": q_corpus_budget_mix,
-        "streaming_vocab_drift": q_streaming_vocab_drift,
-        "events_robust_outliers": q_events_robust_outliers,
-        "doc_lexical_diversity": q_doc_lexical_diversity,
-        "corpus_shard_assign": q_corpus_shard_assign,
-        "corpus_overlap_matrix": q_corpus_overlap_matrix,
-        "doc_bigram_surprise": q_doc_bigram_surprise,
-        "corpus_bpe_merges": q_corpus_bpe_merges,
-        "corpus_snapshot_diff": q_corpus_snapshot_diff,
-        "corpus_weighted_sample": q_corpus_weighted_sample,
-        "embed_hard_negatives": q_embed_hard_negatives,
-        "embed_quantized_topk": q_embed_quantized_topk,
-        "doc_minhash_lsh": q_doc_minhash_lsh,
-        "doc_simhash": q_doc_simhash,
-        "doc_fingerprint": q_doc_fingerprint,
-        "embed_ivf_topk_kmeans": q_embed_ivf_topk_kmeans,
-        "embed_pca_project": q_embed_pca_project,
-    }.items()}
+    return {
+        name: _utc(fn) for name, fn in _query_fns().items() if name not in CONTRACT
+    }
+
+
+def oracle_sql() -> dict[str, str]:
+    return {k: v for k, v in _oracle_table().items() if k in CONTRACT}
+
+
+def retired_oracle_sql() -> dict[str, str]:
+    return {k: v for k, v in _oracle_table().items() if k not in CONTRACT}
 
 
 # shared by conv_seq_integrity (batch) and streaming_seq_integrity (the
@@ -3215,11 +3081,298 @@ SELECT "group", n_rows, n_distinct_idx, min_idx, max_idx,
 FROM g""")
 
 
-def _retired_oracle_base() -> dict[str, str]:
-    """Exact DuckDB oracles for the retired queries that have one (the rest
-    are hash-seeded rows-only production twins of in-contract md5 queries)."""
+def _oracle_table() -> dict[str, str]:
+    """Exact DuckDB oracle per query name, contract and retired alike.
+    Queries without an entry (hash-seeded production twins of in-contract
+    md5 queries) get the driver's rows-only check."""
     P = oracles.on_parsed
+    T = oracles.on_transcripts
     return {
+        "transcripts": T("SELECT * FROM transcripts"),
+        "parse_fields": P(
+            "SELECT conv_id, turn_idx, role, tool, ts, turn_class, http_code,"
+            " attempt, code_ref, n_responses, duration_ms, action, cache_op,"
+            " url_path, http_method, req_epoch, instance_id, pid FROM parsed"
+        ),
+        "logs_overview": P(
+            "SELECT turn_class, http_code, count(*) AS n FROM parsed"
+            " GROUP BY turn_class, http_code"
+        ),
+        "route_counts": P(
+            f"SELECT {_SINK_TAG} AS sink, count(*) AS n FROM parsed GROUP BY 1"
+        ),
+        "enrich_dims": P(
+            f"""SELECT p.conv_id, p.turn_idx,
+                COALESCE(tr.role, p.role) AS role,
+                rt.role_class, rt.is_human,
+                CASE WHEN rt.role IS NULL
+                     THEN 'Failed to locate matching record for ' || p.role
+                     ELSE 'ok' END AS role_status,
+                p.tool, tr.tool_kind, tr.tool_owner,
+                CASE WHEN tr.tool IS NULL
+                     THEN 'Failed to locate matching record for ' || p.tool
+                     ELSE 'ok' END AS tool_status
+                FROM parsed p
+                LEFT JOIN ({ROLE_TAXONOMY_SQL}) rt ON p.role = rt.role
+                LEFT JOIN ({TOOL_REGISTRY_SQL}) tr ON p.tool = tr.tool"""
+        ),
+        "hourly_rollup": P(
+            "SELECT role, tool, date_trunc('hour', ts) AS hour, count(*) AS n"
+            " FROM parsed GROUP BY role, tool, date_trunc('hour', ts)"
+        ),
+        "conv_counts_salted": P(
+            "SELECT conv_id, count(*) AS n FROM parsed GROUP BY conv_id"
+        ),
+        "distinct_codes": P(
+            "SELECT DISTINCT http_code FROM parsed WHERE http_code IS NOT NULL"
+        ),
+        "timing_stats": P(
+            "SELECT action, count(*) AS n, CAST(median(duration_ms) AS DOUBLE) AS med_val,"
+            " max(duration_ms) AS max_val FROM parsed WHERE duration_ms IS NOT NULL"
+            " GROUP BY action"
+        ),
+        "action_set_convs": P(
+            "SELECT conv_id, count(*) AS n FROM parsed WHERE action IS NOT NULL"
+            " GROUP BY conv_id"
+            " HAVING list_sort(list_distinct(list(action))) ="
+            " ['CurlHandlePool::get', 'DmrppArray::read', 'TheBESKeys::TheKeys']"
+        ),
+        "duration_histogram": P(
+            "SELECT action, CAST(floor(duration_ms / 500.0) AS BIGINT) AS bin,"
+            " count(*) AS n FROM parsed WHERE duration_ms IS NOT NULL"
+            " GROUP BY action, bin"
+        ),
+        "outliers": P(
+            "SELECT conv_id, turn_idx, text FROM parsed"
+            " WHERE turn_class NOT IN ('request', 'info', 'error', 'timing')"
+        ),
+        "text_filters": P(
+            """SELECT 'substr' AS src, conv_id, turn_idx, code_ref AS val
+               FROM parsed WHERE text LIKE '%BESUtil.cc:29%'
+               UNION ALL
+               SELECT 'regex' AS src, conv_id, turn_idx,
+                      CAST(http_code AS STRING) AS val
+               FROM parsed WHERE regexp_matches(text, 'HTTP code of 4[0-9][0-9]')"""
+        ),
+        "unmatched_roles_anti": P(
+            f"""SELECT conv_id, turn_idx, role FROM parsed
+                WHERE role NOT IN (SELECT role FROM ({ROLE_TAXONOMY_SQL}) rt)"""
+        ),
+        "req_resp_merge": P(
+            f""", {_REQ_RESP_CTES.strip().lstrip()}
+            SELECT r.request_id, r.url_path, r.req_code,
+                   s.http_response_code, s.attempt
+            FROM request_log r LEFT JOIN response_log s USING (request_id)"""
+        ),
+        "full_outer_merge": P(
+            f""", {_REQ_RESP_CTES.strip().lstrip()}
+            SELECT COALESCE(r.request_id, s.request_id) AS request_id,
+                   r.url_path, r.req_code, s.http_response_code
+            FROM request_log r FULL OUTER JOIN response_log s USING (request_id)"""
+        ),
+        "lookup_sentinel": P(
+            f""", {_REQ_RESP_CTES.strip().lstrip()},
+            resp1 AS (
+              SELECT * FROM (
+                SELECT request_id, http_response_code,
+                       row_number() OVER (PARTITION BY request_id ORDER BY resp_ts) AS rn
+                FROM response_log
+              ) WHERE rn = 1
+            )
+            SELECT r.request_id, r.req_code, s.http_response_code,
+                   CASE WHEN s.request_id IS NULL
+                        THEN 'Failed to locate matching record for ' || r.request_id
+                        END AS error
+            FROM request_log r LEFT JOIN resp1 s USING (request_id)"""
+        ),
+        "interval_join": P(
+            """SELECT a.conv_id, a.turn_idx AS anchor_idx, o.turn_idx AS other_idx
+               FROM parsed a JOIN parsed o
+                 ON a.conv_id = o.conv_id
+                AND a.turn_class = 'request' AND o.turn_class <> 'request'
+                AND o.ts >= a.ts AND o.ts <= a.ts + INTERVAL 30 MINUTE"""
+        ),
+        "adjacent_pairing": P(
+            """SELECT conv_id, turn_idx, n_responses, duration_ms, status_code FROM (
+                 SELECT conv_id, turn_idx, turn_class, n_responses, duration_ms,
+                        CASE WHEN lead(turn_class) OVER w = 'error'
+                             THEN lead(http_code) OVER w ELSE 200 END AS status_code
+                 FROM parsed
+                 WINDOW w AS (PARTITION BY conv_id ORDER BY turn_idx)
+               ) WHERE turn_class = 'timing'"""
+        ),
+        "turn_ordering": P(
+            """SELECT row_number() OVER (ORDER BY conv_id, turn_idx) AS rn,
+                      conv_id, turn_idx, turn_class,
+                      lag(turn_class) OVER (PARTITION BY conv_id ORDER BY turn_idx) AS prev_class
+               FROM parsed"""
+        ),
+        "pair_math": P(
+            """SELECT conv_id,
+                      min_by(duration_ms, turn_idx) AS first_val,
+                      max_by(duration_ms, turn_idx) AS last_val,
+                      max_by(duration_ms, turn_idx) - min_by(duration_ms, turn_idx) AS span
+               FROM parsed WHERE duration_ms IS NOT NULL GROUP BY conv_id"""
+        ),
+        "union_by_name": P(
+            """SELECT conv_id, turn_idx, 'request' AS kind, http_code, url_path
+               FROM parsed WHERE turn_class = 'request'
+               UNION ALL BY NAME
+               SELECT conv_id, turn_idx, 'error' AS kind, http_code
+               FROM parsed WHERE turn_class = 'error'"""
+        ),
+        "scalar_funcs": P(
+            """SELECT conv_id, turn_idx,
+                      strftime(make_timestamp(req_epoch * 1000000), '%Y-%m-%dT%H:%M:%SZ') AS iso_ts,
+                      upper(role) AS role_uc,
+                      lower(instance_id) AS inst_lc,
+                      substring(url_path, 1, 11) AS path_prefix,
+                      '2. ' || http_method AS tagged_method,
+                      replace(url_path, '/hyrax/ngap', '/h/n') AS path_short,
+                      string_split(url_path, '/')[3] AS path_seg,
+                      CAST(floor(http_code / 100.0) AS INTEGER) AS code_class
+               FROM parsed WHERE turn_class = 'request'"""
+        ),
+        "error_subclasses": P(
+            """SELECT subclass, count(*) AS n FROM (
+                 SELECT CASE WHEN http_code = 404 THEN 'not_found'
+                             WHEN http_code = 500 THEN 'server_error'
+                             WHEN http_code = 401 THEN 'auth'
+                             ELSE 'other' END AS subclass
+                 FROM parsed WHERE turn_class = 'error'
+               ) GROUP BY ROLLUP(subclass)"""
+        ),
+        "conditional_agg": P(
+            """SELECT count(DISTINCT conv_id) AS n_convs, count(*) AS n_turns,
+                      min(ts) AS min_ts, max(ts) AS max_ts,
+                      CAST(sum(CASE WHEN http_code = 404 THEN 1 ELSE 0 END) AS BIGINT) AS n_404,
+                      CAST(sum(CASE WHEN http_code = 500 THEN 1 ELSE 0 END) AS BIGINT) AS n_500,
+                      CAST(sum(CASE WHEN turn_class = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS n_errors,
+                      CAST(sum(CASE WHEN tool <> '-' THEN 1 ELSE 0 END) AS BIGINT) AS n_tool_calls,
+                      CAST(sum(CASE WHEN url_path LIKE '/hyrax/ngap%' THEN 1 ELSE 0 END) AS BIGINT) AS n_ngap
+               FROM parsed"""
+        ),
+        "nested_errors": P(
+            f""", {_REQ_RESP_CTES.strip().lstrip()}
+            SELECT r.request_id,
+                   array_to_string(list_sort(list(
+                     CASE WHEN e.http_code IS NOT NULL
+                          THEN cast(e.turn_idx AS STRING) || ':' || cast(e.http_code AS STRING)
+                     END)), ',') AS errs,
+                   count(e.http_code) AS n_errs
+            FROM request_log r LEFT JOIN parsed e
+              ON r.conv_id = e.conv_id AND e.turn_class = 'error'
+            GROUP BY r.request_id"""
+        ),
+        "pid_fanout": P(
+            """SELECT pid, count(*) AS n, count(DISTINCT instance_id) AS n_instances
+               FROM parsed WHERE turn_class = 'request' GROUP BY pid"""
+        ),
+        "lifecycle_merge": P(
+            f""", {_REQ_RESP_CTES.strip().lstrip()},
+            resp1 AS (
+              SELECT * FROM (
+                SELECT request_id, http_response_code,
+                       row_number() OVER (PARTITION BY request_id ORDER BY resp_ts) AS rn
+                FROM response_log
+              ) WHERE rn = 1
+            ),
+            merged AS (
+              SELECT r.request_id, r.conv_id, r.url_path, r.req_code,
+                     s.http_response_code,
+                     CASE WHEN s.request_id IS NULL
+                          THEN 'Failed to locate matching record for ' || r.request_id
+                          END AS error
+              FROM request_log r LEFT JOIN resp1 s USING (request_id)
+            )
+            SELECT m.request_id, m.url_path, m.req_code, m.http_response_code,
+                   m.error,
+                   array_to_string(list_sort(list(
+                     CASE WHEN e.http_code IS NOT NULL
+                          THEN cast(e.turn_idx AS STRING) || ':' || cast(e.http_code AS STRING)
+                     END)), ',') AS bes
+            FROM merged m LEFT JOIN parsed e
+              ON m.conv_id = e.conv_id AND e.turn_class = 'error'
+            GROUP BY m.request_id, m.url_path, m.req_code, m.http_response_code, m.error"""
+        ),
+        "streaming_dedup": P(
+            """SELECT turn_class, count(*) AS n_unique FROM (
+                 SELECT DISTINCT text, turn_class FROM parsed
+               ) GROUP BY turn_class"""
+        ),
+        "streaming_conv_state": P(
+            """SELECT conv_id, count(*) AS n_turns,
+                      CAST(sum(CASE WHEN turn_class = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS n_errors,
+                      CAST(sum(CASE WHEN tool <> '-' THEN 1 ELSE 0 END) AS BIGINT) AS n_tool_calls,
+                      max(turn_idx) AS max_turn_idx
+               FROM parsed GROUP BY conv_id"""
+        ),
+        "session_dedup": _session_dedup_oracle(),
+        "conv_docs": _conv_docs_oracle(),
+        # mirrors exact_dedup's hash-keyed groupBy (md5 + length, never the
+        # raw text) — result-identical to GROUP BY text absent md5+length
+        # collisions
+        "doc_exact_dedup": (
+            "SELECT min(doc_id) AS keep_id, count(*) AS n_copies FROM documents"
+            " GROUP BY md5(text), length(text)"
+        ),
+        "doc_quality": _doc_quality_oracle(),
+        "doc_langid": _langid_oracle(),
+        "doc_repetition": _doc_repetition_oracle(),
+        "corpus_pack": _corpus_pack_oracle(budget=2048),
+        "corpus_sample": _corpus_sample_oracle({"en": 0.5, "zh": 0.25}),
+        "doc_decontaminate": _decontaminate_oracle(n=5),
+        "doc_pii_scrub": _pii_scrub_oracle(),
+        "doc_ngram_jaccard": _ngram_jaccard_oracle(),
+        "doc_neardup_groups": _neardup_groups_oracle(),
+        "doc_dedup_kept": (
+            _neardup_groups_oracle().rstrip()
+            .replace(
+                "SELECT id, min(r) AS rep_id FROM reach GROUP BY id",
+                """SELECT d.doc_id, d.lang, d.n_chars
+FROM documents d
+JOIN (
+  SELECT id FROM (SELECT id, min(r) AS rep_id FROM reach GROUP BY id)
+  WHERE id = rep_id
+) reps ON d.doc_id = reps.id""",
+            )
+        ),
+        "doc_fingerprint_md5": (
+            "SELECT doc_id, list_min([md5(substr(text, i, 16))"
+            " FOR i IN range(1, greatest(length(text) - 15, 1) + 1)])"
+            " AS fingerprint_md5 FROM documents"
+        ),
+        "doc_minhash_lsh_md5": _minhash_md5_oracle(),
+        "doc_simhash_md5": _simhash_md5_oracle(),
+        "embed_cosine_topk": _cosine_topk_oracle(),
+        "embed_neardup": _embed_neardup_oracle(),
+        # the mapInPandas extractor's md5 runs over the raw payload bytes ==
+        # utf-8 text bytes (synth_media's encode); duckdb md5() hashes the
+        # string's utf-8 bytes and octet_length(encode()) counts them
+        "multimodal_features": """
+SELECT doc_id AS media_id,
+       CASE WHEN doc_id % 3 = 0 THEN 'image'
+            WHEN doc_id % 3 = 1 THEN 'audio'
+            ELSE 'video' END AS kind,
+       CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
+       md5(text) AS md5
+FROM documents
+""",
+        "embed_ivf_topk": _ivf_topk_oracle(),
+        "doc_bm25_topk": _bm25_oracle(k=5, k1=1.2, b=0.75),
+        "events_asof": _ASOF_ORACLE,
+        "doc_dup_span_clean": _dup_span_oracle(k=3, clean=True),
+        "embed_semdedup": _semdedup_oracle(threshold=0.3, n_centroids=8),
+        "events_burst_hours": _burst_hours_oracle(n=24, z=3),
+        "doc_winnow": _winnow_oracle(k=16, w=8),
+        "doc_line_dedup": _line_dedup_oracle(min_words=2),
+        "corpus_report": _corpus_report_oracle(),
+        "events_skew_join": """
+SELECT e.event_id, e.user_id, e.event_type,
+       'u' || CAST(e.user_id AS VARCHAR) AS utag
+FROM events e JOIN (SELECT DISTINCT user_id FROM events) d USING (user_id)
+""",
+        "doc_quality_classifier": _quality_classifier_oracle(n_buckets=4096),
         "class_counts": P(
             "SELECT turn_class, count(*) AS n FROM parsed GROUP BY turn_class"
         ),
@@ -3331,8 +3484,6 @@ FROM grp GROUP BY conv_id, sid"""
             temperature=2.0, target_fraction=0.5
         ),
         "doc_dup_span_stats": _dup_span_oracle(k=3, clean=False),
-        "doc_dup_span_clean": _dup_span_oracle(k=3, clean=True),
-        "embed_semdedup": _semdedup_oracle(threshold=0.3, n_centroids=8),
         "embed_d4_prune": _d4_oracle(
             threshold=0.3, keep_fraction=0.5, n_centroids=8
         ),
@@ -3343,21 +3494,16 @@ FROM grp GROUP BY conv_id, sid"""
         "corpus_leakage_split": _leakage_split_oracle(eval_fraction=0.1),
         "corpus_vocabulary": _vocabulary_oracle(top_v=200),
         "doc_unigram_surprise": _UNIGRAM_SURPRISE_ORACLE,
-        "doc_quality_classifier": _quality_classifier_oracle(n_buckets=4096),
         "doc_pareto_gate": _pareto_gate_oracle(n_buckets=4096, alpha=9.0),
-        "doc_winnow": _winnow_oracle(k=16, w=8),
         "doc_gopher_rules": _gopher_rules_oracle(min_stopwords=1),
         "doc_ppl_buckets": _ppl_buckets_oracle(n_buckets=3),
-        "doc_line_dedup": _line_dedup_oracle(min_words=2),
         "doc_strip_common_lines": _strip_common_lines_oracle(
             max_doc_frac=0.03, min_docs=2, min_words=2
         ),
-        "corpus_report": _corpus_report_oracle(),
         "embed_semantic_decontam": _semantic_decontam_oracle(threshold=0.3),
         "doc_decontaminate_bloom": _decontaminate_bloom_oracle(
             n=5, m_bits=1 << 20, n_hashes=4
         ),
-        "doc_bm25_topk": _bm25_oracle(k=5, k1=1.2, b=0.75),
         "doc_lev_neardup": _lev_neardup_oracle(max_dist=5),
         "doc_chunks": _chunks_oracle(max_tokens=24, overlap=6, min_tokens=1),
         "corpus_pack_sequences": _pack_sequences_oracle(seq_len=64),
@@ -3366,7 +3512,6 @@ FROM grp GROUP BY conv_id, sid"""
             {"en": 200000, "de": 400000, "zh": 400000}, budget=12_000
         ),
         "corpus_cap_group": _cap_group_oracle(group_col="lang", cap=100),
-        "events_asof": _ASOF_ORACLE,
         "events_sliding": _sliding_oracle(window_sec=3600, slide_sec=900),
         "events_funnel": _funnel_oracle(FUNNEL_STEPS),
         "events_retention": _RETENTION_ORACLE,
@@ -3382,11 +3527,6 @@ FROM grp GROUP BY conv_id, sid"""
         "events_rolling": _rolling_oracle(n=ROLLING_N),
         "events_bloom_join": _BLOOM_JOIN_ORACLE,
         "events_funnel_times": _funnel_times_oracle(FUNNEL_STEPS),
-        "events_skew_join": """
-SELECT e.event_id, e.user_id, e.event_type,
-       'u' || CAST(e.user_id AS VARCHAR) AS utag
-FROM events e JOIN (SELECT DISTINCT user_id FROM events) d USING (user_id)
-""",
         "events_ohlc": """
 SELECT event_type,
        to_timestamp((CAST(floor(epoch(ts) / 86400) AS BIGINT) * 86400))
@@ -3464,7 +3604,6 @@ JOIN deg db ON db.node = node_b"""),
         "doc_url_blocklist": _url_blocklist_oracle(),
         "doc_url_domains": _url_domains_oracle(),
         "events_hll_distinct": _hll_oracle(p=HLL_P),
-        "events_burst_hours": _burst_hours_oracle(n=24, z=3),
         "streaming_burst_hours": _burst_hours_oracle(n=24, z=3),
         "streaming_cusum_drift": _cusum_oracle(k_milli=300, h_mult=2),
         "streaming_rate_limit": """
@@ -4037,284 +4176,6 @@ unitv AS (
   WHERE nrm > 0
 )
 """
-
-
-def _oracle_sql_base() -> dict[str, str]:
-    P = oracles.on_parsed
-    T = oracles.on_transcripts
-    return {
-        "transcripts": T("SELECT * FROM transcripts"),
-        "parse_fields": P(
-            "SELECT conv_id, turn_idx, role, tool, ts, turn_class, http_code,"
-            " attempt, code_ref, n_responses, duration_ms, action, cache_op,"
-            " url_path, http_method, req_epoch, instance_id, pid FROM parsed"
-        ),
-        "logs_overview": P(
-            "SELECT turn_class, http_code, count(*) AS n FROM parsed"
-            " GROUP BY turn_class, http_code"
-        ),
-        "route_counts": P(
-            f"SELECT {_SINK_TAG} AS sink, count(*) AS n FROM parsed GROUP BY 1"
-        ),
-        "enrich_dims": P(
-            f"""SELECT p.conv_id, p.turn_idx,
-                COALESCE(tr.role, p.role) AS role,
-                rt.role_class, rt.is_human,
-                CASE WHEN rt.role IS NULL
-                     THEN 'Failed to locate matching record for ' || p.role
-                     ELSE 'ok' END AS role_status,
-                p.tool, tr.tool_kind, tr.tool_owner,
-                CASE WHEN tr.tool IS NULL
-                     THEN 'Failed to locate matching record for ' || p.tool
-                     ELSE 'ok' END AS tool_status
-                FROM parsed p
-                LEFT JOIN ({ROLE_TAXONOMY_SQL}) rt ON p.role = rt.role
-                LEFT JOIN ({TOOL_REGISTRY_SQL}) tr ON p.tool = tr.tool"""
-        ),
-        "hourly_rollup": P(
-            "SELECT role, tool, date_trunc('hour', ts) AS hour, count(*) AS n"
-            " FROM parsed GROUP BY role, tool, date_trunc('hour', ts)"
-        ),
-        "conv_counts_salted": P(
-            "SELECT conv_id, count(*) AS n FROM parsed GROUP BY conv_id"
-        ),
-        "distinct_codes": P(
-            "SELECT DISTINCT http_code FROM parsed WHERE http_code IS NOT NULL"
-        ),
-        "timing_stats": P(
-            "SELECT action, count(*) AS n, CAST(median(duration_ms) AS DOUBLE) AS med_val,"
-            " max(duration_ms) AS max_val FROM parsed WHERE duration_ms IS NOT NULL"
-            " GROUP BY action"
-        ),
-        "action_set_convs": P(
-            "SELECT conv_id, count(*) AS n FROM parsed WHERE action IS NOT NULL"
-            " GROUP BY conv_id"
-            " HAVING list_sort(list_distinct(list(action))) ="
-            " ['CurlHandlePool::get', 'DmrppArray::read', 'TheBESKeys::TheKeys']"
-        ),
-        "duration_histogram": P(
-            "SELECT action, CAST(floor(duration_ms / 500.0) AS BIGINT) AS bin,"
-            " count(*) AS n FROM parsed WHERE duration_ms IS NOT NULL"
-            " GROUP BY action, bin"
-        ),
-        "outliers": P(
-            "SELECT conv_id, turn_idx, text FROM parsed"
-            " WHERE turn_class NOT IN ('request', 'info', 'error', 'timing')"
-        ),
-        "text_filters": P(
-            """SELECT 'substr' AS src, conv_id, turn_idx, code_ref AS val
-               FROM parsed WHERE text LIKE '%BESUtil.cc:29%'
-               UNION ALL
-               SELECT 'regex' AS src, conv_id, turn_idx,
-                      CAST(http_code AS STRING) AS val
-               FROM parsed WHERE regexp_matches(text, 'HTTP code of 4[0-9][0-9]')"""
-        ),
-        "unmatched_roles_anti": P(
-            f"""SELECT conv_id, turn_idx, role FROM parsed
-                WHERE role NOT IN (SELECT role FROM ({ROLE_TAXONOMY_SQL}) rt)"""
-        ),
-        "req_resp_merge": P(
-            f""", {_REQ_RESP_CTES.strip().lstrip()}
-            SELECT r.request_id, r.url_path, r.req_code,
-                   s.http_response_code, s.attempt
-            FROM request_log r LEFT JOIN response_log s USING (request_id)"""
-        ),
-        "full_outer_merge": P(
-            f""", {_REQ_RESP_CTES.strip().lstrip()}
-            SELECT COALESCE(r.request_id, s.request_id) AS request_id,
-                   r.url_path, r.req_code, s.http_response_code
-            FROM request_log r FULL OUTER JOIN response_log s USING (request_id)"""
-        ),
-        "lookup_sentinel": P(
-            f""", {_REQ_RESP_CTES.strip().lstrip()},
-            resp1 AS (
-              SELECT * FROM (
-                SELECT request_id, http_response_code,
-                       row_number() OVER (PARTITION BY request_id ORDER BY resp_ts) AS rn
-                FROM response_log
-              ) WHERE rn = 1
-            )
-            SELECT r.request_id, r.req_code, s.http_response_code,
-                   CASE WHEN s.request_id IS NULL
-                        THEN 'Failed to locate matching record for ' || r.request_id
-                        END AS error
-            FROM request_log r LEFT JOIN resp1 s USING (request_id)"""
-        ),
-        "interval_join": P(
-            """SELECT a.conv_id, a.turn_idx AS anchor_idx, o.turn_idx AS other_idx
-               FROM parsed a JOIN parsed o
-                 ON a.conv_id = o.conv_id
-                AND a.turn_class = 'request' AND o.turn_class <> 'request'
-                AND o.ts >= a.ts AND o.ts <= a.ts + INTERVAL 30 MINUTE"""
-        ),
-        "adjacent_pairing": P(
-            """SELECT conv_id, turn_idx, n_responses, duration_ms, status_code FROM (
-                 SELECT conv_id, turn_idx, turn_class, n_responses, duration_ms,
-                        CASE WHEN lead(turn_class) OVER w = 'error'
-                             THEN lead(http_code) OVER w ELSE 200 END AS status_code
-                 FROM parsed
-                 WINDOW w AS (PARTITION BY conv_id ORDER BY turn_idx)
-               ) WHERE turn_class = 'timing'"""
-        ),
-        "turn_ordering": P(
-            """SELECT row_number() OVER (ORDER BY conv_id, turn_idx) AS rn,
-                      conv_id, turn_idx, turn_class,
-                      lag(turn_class) OVER (PARTITION BY conv_id ORDER BY turn_idx) AS prev_class
-               FROM parsed"""
-        ),
-        "pair_math": P(
-            """SELECT conv_id,
-                      min_by(duration_ms, turn_idx) AS first_val,
-                      max_by(duration_ms, turn_idx) AS last_val,
-                      max_by(duration_ms, turn_idx) - min_by(duration_ms, turn_idx) AS span
-               FROM parsed WHERE duration_ms IS NOT NULL GROUP BY conv_id"""
-        ),
-        "union_by_name": P(
-            """SELECT conv_id, turn_idx, 'request' AS kind, http_code, url_path
-               FROM parsed WHERE turn_class = 'request'
-               UNION ALL BY NAME
-               SELECT conv_id, turn_idx, 'error' AS kind, http_code
-               FROM parsed WHERE turn_class = 'error'"""
-        ),
-        "scalar_funcs": P(
-            """SELECT conv_id, turn_idx,
-                      strftime(make_timestamp(req_epoch * 1000000), '%Y-%m-%dT%H:%M:%SZ') AS iso_ts,
-                      upper(role) AS role_uc,
-                      lower(instance_id) AS inst_lc,
-                      substring(url_path, 1, 11) AS path_prefix,
-                      '2. ' || http_method AS tagged_method,
-                      replace(url_path, '/hyrax/ngap', '/h/n') AS path_short,
-                      string_split(url_path, '/')[3] AS path_seg,
-                      CAST(floor(http_code / 100.0) AS INTEGER) AS code_class
-               FROM parsed WHERE turn_class = 'request'"""
-        ),
-        "error_subclasses": P(
-            """SELECT subclass, count(*) AS n FROM (
-                 SELECT CASE WHEN http_code = 404 THEN 'not_found'
-                             WHEN http_code = 500 THEN 'server_error'
-                             WHEN http_code = 401 THEN 'auth'
-                             ELSE 'other' END AS subclass
-                 FROM parsed WHERE turn_class = 'error'
-               ) GROUP BY ROLLUP(subclass)"""
-        ),
-        "conditional_agg": P(
-            """SELECT count(DISTINCT conv_id) AS n_convs, count(*) AS n_turns,
-                      min(ts) AS min_ts, max(ts) AS max_ts,
-                      CAST(sum(CASE WHEN http_code = 404 THEN 1 ELSE 0 END) AS BIGINT) AS n_404,
-                      CAST(sum(CASE WHEN http_code = 500 THEN 1 ELSE 0 END) AS BIGINT) AS n_500,
-                      CAST(sum(CASE WHEN turn_class = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS n_errors,
-                      CAST(sum(CASE WHEN tool <> '-' THEN 1 ELSE 0 END) AS BIGINT) AS n_tool_calls,
-                      CAST(sum(CASE WHEN url_path LIKE '/hyrax/ngap%' THEN 1 ELSE 0 END) AS BIGINT) AS n_ngap
-               FROM parsed"""
-        ),
-        "nested_errors": P(
-            f""", {_REQ_RESP_CTES.strip().lstrip()}
-            SELECT r.request_id,
-                   array_to_string(list_sort(list(
-                     CASE WHEN e.http_code IS NOT NULL
-                          THEN cast(e.turn_idx AS STRING) || ':' || cast(e.http_code AS STRING)
-                     END)), ',') AS errs,
-                   count(e.http_code) AS n_errs
-            FROM request_log r LEFT JOIN parsed e
-              ON r.conv_id = e.conv_id AND e.turn_class = 'error'
-            GROUP BY r.request_id"""
-        ),
-        "pid_fanout": P(
-            """SELECT pid, count(*) AS n, count(DISTINCT instance_id) AS n_instances
-               FROM parsed WHERE turn_class = 'request' GROUP BY pid"""
-        ),
-        "lifecycle_merge": P(
-            f""", {_REQ_RESP_CTES.strip().lstrip()},
-            resp1 AS (
-              SELECT * FROM (
-                SELECT request_id, http_response_code,
-                       row_number() OVER (PARTITION BY request_id ORDER BY resp_ts) AS rn
-                FROM response_log
-              ) WHERE rn = 1
-            ),
-            merged AS (
-              SELECT r.request_id, r.conv_id, r.url_path, r.req_code,
-                     s.http_response_code,
-                     CASE WHEN s.request_id IS NULL
-                          THEN 'Failed to locate matching record for ' || r.request_id
-                          END AS error
-              FROM request_log r LEFT JOIN resp1 s USING (request_id)
-            )
-            SELECT m.request_id, m.url_path, m.req_code, m.http_response_code,
-                   m.error,
-                   array_to_string(list_sort(list(
-                     CASE WHEN e.http_code IS NOT NULL
-                          THEN cast(e.turn_idx AS STRING) || ':' || cast(e.http_code AS STRING)
-                     END)), ',') AS bes
-            FROM merged m LEFT JOIN parsed e
-              ON m.conv_id = e.conv_id AND e.turn_class = 'error'
-            GROUP BY m.request_id, m.url_path, m.req_code, m.http_response_code, m.error"""
-        ),
-        "streaming_dedup": P(
-            """SELECT turn_class, count(*) AS n_unique FROM (
-                 SELECT DISTINCT text, turn_class FROM parsed
-               ) GROUP BY turn_class"""
-        ),
-        "streaming_conv_state": P(
-            """SELECT conv_id, count(*) AS n_turns,
-                      CAST(sum(CASE WHEN turn_class = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS n_errors,
-                      CAST(sum(CASE WHEN tool <> '-' THEN 1 ELSE 0 END) AS BIGINT) AS n_tool_calls,
-                      max(turn_idx) AS max_turn_idx
-               FROM parsed GROUP BY conv_id"""
-        ),
-        "session_dedup": _session_dedup_oracle(),
-        "conv_docs": _conv_docs_oracle(),
-        # mirrors exact_dedup's hash-keyed groupBy (md5 + length, never the
-        # raw text) — result-identical to GROUP BY text absent md5+length
-        # collisions
-        "doc_exact_dedup": (
-            "SELECT min(doc_id) AS keep_id, count(*) AS n_copies FROM documents"
-            " GROUP BY md5(text), length(text)"
-        ),
-        "doc_quality": _doc_quality_oracle(),
-        "doc_langid": _langid_oracle(),
-        "doc_repetition": _doc_repetition_oracle(),
-        "corpus_pack": _corpus_pack_oracle(budget=2048),
-        "corpus_sample": _corpus_sample_oracle({"en": 0.5, "zh": 0.25}),
-        "doc_decontaminate": _decontaminate_oracle(n=5),
-        "doc_pii_scrub": _pii_scrub_oracle(),
-        "doc_ngram_jaccard": _ngram_jaccard_oracle(),
-        "doc_neardup_groups": _neardup_groups_oracle(),
-        "doc_dedup_kept": (
-            _neardup_groups_oracle().rstrip()
-            .replace(
-                "SELECT id, min(r) AS rep_id FROM reach GROUP BY id",
-                """SELECT d.doc_id, d.lang, d.n_chars
-FROM documents d
-JOIN (
-  SELECT id FROM (SELECT id, min(r) AS rep_id FROM reach GROUP BY id)
-  WHERE id = rep_id
-) reps ON d.doc_id = reps.id""",
-            )
-        ),
-        "doc_fingerprint_md5": (
-            "SELECT doc_id, list_min([md5(substr(text, i, 16))"
-            " FOR i IN range(1, greatest(length(text) - 15, 1) + 1)])"
-            " AS fingerprint_md5 FROM documents"
-        ),
-        "doc_minhash_lsh_md5": _minhash_md5_oracle(),
-        "doc_simhash_md5": _simhash_md5_oracle(),
-        "embed_cosine_topk": _cosine_topk_oracle(),
-        "embed_neardup": _embed_neardup_oracle(),
-        # the mapInPandas extractor's md5 runs over the raw payload bytes ==
-        # utf-8 text bytes (synth_media's encode); duckdb md5() hashes the
-        # string's utf-8 bytes and octet_length(encode()) counts them
-        "multimodal_features": """
-SELECT doc_id AS media_id,
-       CASE WHEN doc_id % 3 = 0 THEN 'image'
-            WHEN doc_id % 3 = 1 THEN 'audio'
-            ELSE 'video' END AS kind,
-       CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-       md5(text) AS md5
-FROM documents
-""",
-        "embed_ivf_topk": _ivf_topk_oracle(),
-    }
 
 
 def _doc_quality_oracle() -> str:
@@ -6554,7 +6415,7 @@ def _u56_sql(expr: str) -> str:
 
 
 def _kmv_oracle(k: int) -> str:
-    """Independent recompute of q_events_kmv: distinct md5-u56 hashes,
+    """Independent recompute of q_events_kmv_distinct: distinct md5-u56 hashes,
     per-group bottom-k rank, and the exact integer estimator
     (k-1)·2^56 // kth (or the sketch size when it never filled)."""
     numer = (k - 1) * (1 << 56)
@@ -6886,7 +6747,7 @@ FROM best WHERE rn = 1
 
 
 def _heavy_hitters_oracle(k: int) -> str:
-    """Mirror of q_doc_heavy_hitters: the exact definition is purely the
+    """Mirror of q_doc_token_heavy_hitters: the exact definition is purely the
     multiset — every token with count * k strictly above the total
     occurrence count — so the oracle is the plain full groupBy the
     two-pass operator avoids."""
@@ -7452,7 +7313,7 @@ FROM stats
 
 
 def _cms_oracle(depth: int, width: int) -> str:
-    """Independent recompute of q_events_cms: the row-salted md5-u32
+    """Independent recompute of q_events_cms_counts: the row-salted md5-u32
     bucket map, the depth×width counter table, and the min-over-rows
     point query — false positives (hash collisions) and all."""
     salt = "'cms' || CAST(r AS VARCHAR) || ':' || CAST(user_id AS VARCHAR)"
@@ -7615,7 +7476,7 @@ FROM uw JOIN c USING (user_id) GROUP BY 1, 2
 def _pagerank_oracle(
     n_iters: int = 5, damping_pct: int = 85, scale: int = 10**9
 ) -> str:
-    """Unrolled replay of q_graph_pagerank's integer recurrence: edges from
+    """Unrolled replay of q_graph_tool_pagerank's integer recurrence: edges from
     the lag window over tool-bearing turns, N and the teleport term derived
     in SQL (nothing precomputed on faith), each iteration one CTE with the
     HUGEINT (rank·w)//out_j contribution sum — bit-identical to Spark's
@@ -7659,7 +7520,7 @@ SELECT node, rank FROM r{n_iters}""")
 
 
 def _lpa_oracle(n_iters: int = 4) -> str:
-    """Unrolled replay of q_graph_communities: the same transition edges as
+    """Unrolled replay of q_graph_tool_communities: the same transition edges as
     the PageRank oracle, symmetrized with summed parallel weights, then
     each synchronous round as one CTE — integer vote sums, argmax by
     (votes desc, label asc) via row_number."""
@@ -7698,7 +7559,7 @@ SELECT node, label FROM l{n_iters}""")
 
 
 def _k_core_oracle(k: int = 2, n_rounds: int = 6) -> str:
-    """Mirror of q_graph_k_core: the same canonical edges, ``n_rounds``
+    """Mirror of q_graph_tool_k_core: the same canonical edges, ``n_rounds``
     unrolled peel rounds (the k-core fixpoint is unique and this graph
     converges in far fewer — extra rounds are no-ops), final in-core
     degrees.  Every round CTE is MATERIALIZED: each c{{i}} references
@@ -7971,7 +7832,7 @@ FROM documents
 
 
 def _triangles_oracle() -> str:
-    """Mirror of q_graph_triangles: the same transition edges, canonical
+    """Mirror of q_graph_tool_triangles: the same transition edges, canonical
     a<b dedup (self-loops dropped), a<b<c enumeration via the same two
     joins, three-corner credit, zeros kept by the nodes left join."""
     return oracles.on_parsed(""", seq AS (
@@ -8235,36 +8096,3 @@ cand AS (
 SELECT id_a, id_b, round(list_inner_product(ua, ub), 6) AS cosine
 FROM cand WHERE round(list_inner_product(ua, ub), 6) >= {threshold}
 """
-
-
-# ---- round-5 contract-window rotation --------------------------------------
-# Ten long-stable contract rows swapped with ten high-value retired rows so
-# the driver's hard correctness gate exercises fresh surface each round.
-# The oracle strings stay defined next to their family; these wrappers only
-# re-route which gate (contract vs --retired) each pair runs under.
-_ROTATED_IN_R5 = (
-    "doc_bm25_topk", "events_asof", "doc_dup_span_clean", "embed_semdedup",
-    "events_burst_hours", "doc_winnow", "doc_line_dedup", "corpus_report",
-    "events_skew_join", "doc_quality_classifier",
-)
-_ROTATED_OUT_R5 = (
-    "scalar_funcs", "union_by_name", "distinct_codes", "timing_stats",
-    "pair_math", "action_set_convs", "duration_histogram", "text_filters",
-    "turn_ordering", "req_resp_merge",
-)
-
-
-def oracle_sql() -> dict[str, str]:
-    base, ret = _oracle_sql_base(), _retired_oracle_base()
-    out = {k: v for k, v in base.items() if k not in _ROTATED_OUT_R5}
-    for k in _ROTATED_IN_R5:
-        out[k] = ret[k]
-    return out
-
-
-def retired_oracle_sql() -> dict[str, str]:
-    base, ret = _oracle_sql_base(), _retired_oracle_base()
-    out = {k: v for k, v in ret.items() if k not in _ROTATED_IN_R5}
-    for k in _ROTATED_OUT_R5:
-        out[k] = base[k]
-    return out

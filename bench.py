@@ -188,7 +188,6 @@ def main() -> None:
     tagged_cached.count()
 
     _parse_with("arrow", warm)   # python-worker spin-up, untimed
-    _parse_with("pandas", warm)
 
     q = entrymod.queries()
     for r in range(n_repeats):
@@ -205,7 +204,6 @@ def main() -> None:
             lambda: route_write_resumable(tagged_cached, f"{work}/w_only_{r}"),
         )
         timed("parse_arrow", lambda: _parse_with("arrow"))   # arrow_udf, pyarrow/RE2
-        timed("parse_pandas", lambda: _parse_with("pandas"))  # pandas_udf .str regex
         for name in [
             "logs_overview",
             "interval_join",

@@ -35,7 +35,7 @@ def main() -> None:
     src.add_argument("--sf-dir", help="testdata dir to derive transcripts from")
     ap.add_argument("--out", required=True, help="output directory")
     ap.add_argument(
-        "--parse-impl", default="native", choices=["native", "arrow", "pandas"]
+        "--parse-impl", default="native", choices=["native", "arrow"]
     )
     ap.add_argument(
         "--expect", action="store_true",

@@ -5,9 +5,10 @@ Two interchangeable implementations with identical output schema/semantics:
 * ``impl="native"`` — pure ``pyspark.sql.functions`` expressions: stays
   inside WholeStageCodegen, zero JVM↔Python traffic.  This is the fast path
   at 100 TB.
-* ``impl="arrow"`` — one struct-returning ``pandas_udf`` doing multi-pattern
-  grok extraction over Arrow batches (the sanctioned slow path for patterns
-  that outgrow single regexp_extract calls; never per-row Python).
+* ``impl="arrow"`` — one struct-returning ``arrow_udf`` doing multi-pattern
+  grok extraction in pyarrow.compute (RE2) over Arrow batches (the sanctioned
+  slow path for patterns that outgrow single regexp_extract calls; never
+  per-row Python).
 
 Taxonomy + extraction shapes derive from the reference:
   * class constants — ngap-logs.py:86-90; counting/classify loop
@@ -23,7 +24,6 @@ Taxonomy + extraction shapes derive from the reference:
 
 from __future__ import annotations
 
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -54,7 +54,7 @@ PARSED_SCHEMA = T.StructType(
 
 PARSED_COLS = [f.name for f in PARSED_SCHEMA.fields]
 
-# regex patterns shared by both impls (Java regex == Python re for these)
+# Java regex patterns of the native impl (the arrow impl runs RE2 variants)
 RX_HTTP_CODE_ERR = r"HTTP code of ([0-9]+)"
 RX_ATTEMPT = r"attempt: ([0-9]+)"
 RX_CODE_REF = r"\(([A-Za-z_]+\.(?:cc|h|py|jl):[0-9]+)\)"
@@ -131,60 +131,6 @@ def parse_turns_native(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df
 
 
-def _grok_pandas(batch):
-    """Arrow-batch grok: one pass of vectorized pandas .str ops per pattern."""
-    t = batch
-    cls = pd.Series("unknown", index=t.index, dtype="object")
-    cls[t.str.contains(r"\|&\|request\|&\|", regex=True, na=False)] = "request"
-    cls[t.str.startswith("BESLog::info()", na=False)] = "info"
-    cls[t.str.startswith("Profile timing:", na=False)] = "timing"
-    cls[t.str.startswith("ERROR!", na=False)] = "error"
-
-    out = pd.DataFrame({"turn_class": cls})
-    is_req = cls == "request"
-    # one vectorized split into positional columns (no per-row lambdas);
-    # column 4 == Spark's element_at(parts, 5).  Split only the request rows:
-    # an all-NaN `.where` result breaks the .str accessor on batches that
-    # happen to contain no requests.
-    parts = t[is_req].str.split(r"\|&\|", regex=True, expand=True)
-    parts = parts.reindex(index=t.index, columns=range(5))
-
-    err_code = t.str.extract(RX_HTTP_CODE_ERR, expand=False)
-    payload = parts[4].fillna("")  # all-NaN column would break .str
-    req = payload.str.extract(RX_REQ_PAYLOAD)
-    out["http_code"] = (
-        err_code.fillna(req[2]).astype("float").astype("Int32")
-    )
-    out["attempt"] = t.str.extract(RX_ATTEMPT, expand=False).astype("float").astype("Int32")
-    out["code_ref"] = t.str.extract(RX_CODE_REF, expand=False)
-    out["n_responses"] = (
-        t.str.extract(RX_N_RESPONSES, expand=False).astype("float").astype("Int32")
-    )
-    out["duration_ms"] = t.str.extract(RX_DURATION, expand=False).astype("float")
-    out["action"] = t.str.extract(RX_ACTION, expand=False)
-    out["cache_op"] = t.str.extract(RX_CACHE_OP, expand=False)
-    out["url_path"] = req[1].fillna(t.str.extract(RX_INFO_PATH, expand=False))
-    out["http_method"] = req[0]
-    out["req_epoch"] = pd.to_numeric(parts[0], errors="coerce").astype("Int64")
-    out["instance_id"] = parts[1]
-    out["pid"] = pd.to_numeric(parts[2], errors="coerce").astype("Int32")
-    return out
-
-
-def parse_turns_pandas(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Parse stage as a single struct-returning pandas UDF (Arrow transfer,
-    pandas .str regex execution)."""
-
-    @F.pandas_udf(PARSED_SCHEMA)
-    def grok(t: "pd.Series") -> "pd.DataFrame":
-        return _grok_pandas(t)
-
-    df = df.withColumn("_parsed", grok(F.col(text_col)))
-    for name in PARSED_COLS:
-        df = df.withColumn(name, F.col(f"_parsed.{name}"))
-    return df.drop("_parsed")
-
-
 # named-group variants for pyarrow.compute.extract_regex (RE2 engine)
 RXN_REQ_LINE = (
     r"^(?P<epoch>[0-9]+)\|&\|(?P<inst>[^|]*)\|&\|(?P<pid>[0-9]+)"
@@ -254,7 +200,7 @@ def _grok_arrow(t):
         "url_path": pc.coalesce(
             # RE2's '$' matches end-of-text only; Java/Python '$' also match
             # before one final '\n' — the optional trailing newline keeps the
-            # three impls cell-identical on newline-terminated rows
+            # two impls cell-identical on newline-terminated rows
             pc.struct_field(pm, "path"), ex(r"path: (?P<p>\S+)\n?$", "p")
         ),
         "http_method": pc.struct_field(pm, "method"),
@@ -300,8 +246,6 @@ def parse_turns(df: DataFrame, text_col: str = "text", impl: str = "native") -> 
         return parse_turns_native(df, text_col)
     if impl == "arrow":
         return parse_turns_arrow(df, text_col)
-    if impl == "pandas":
-        return parse_turns_pandas(df, text_col)
     raise ValueError(f"unknown parse impl: {impl!r}")
 
 

@@ -1026,7 +1026,12 @@ def containment_pairs(
     containing side may be arbitrarily larger), so the full-side posting
     stream shuffles in whole — but as narrow (shingle, id, size) rows,
     never text, the same row class as the minhash band stream; exact
-    verify attaches the two shingle arrays by id AFTER candidate dedup."""
+    verify attaches the two shingle arrays by id AFTER candidate dedup.
+
+    The result is an eager ``localCheckpoint``: the whole join runs when
+    this function is called, not at the caller's first action, and the
+    returned frame's lineage is truncated — its rows live in executor
+    storage, so losing an executor loses them instead of recomputing."""
     if not (0.0 < threshold <= 1.0):
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
     t_micro = int(round(threshold * 1_000_000))

@@ -15,7 +15,7 @@ single ``partitionBy("sink")`` write, and per-sink counts come from one
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Callable
+from typing import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -66,34 +66,32 @@ def sink_counts(tagged: DataFrame) -> DataFrame:
     return tagged.groupBy("sink").agg(F.count("*").alias("n"))
 
 
+# Parquet row-group size of every fan-out write.  It bounds writer memory:
+# with concurrent fan-out writers (session.py disables the planned-write
+# sort) every task holds one open writer per sink, so resident writer
+# buffers ≈ ``tasks_per_executor × n_sinks × ROW_GROUP_BYTES``.  The parquet
+# default (128 MB) blows that envelope at high task counts — 32 tasks × 6
+# sinks × 128 MB = 24 GB, measured 90s vs 19s for a 16M-row routed write —
+# while 16 MB keeps it ~3 GB with negligible scan-side cost for sink tables.
+ROW_GROUP_BYTES = 16 * 1024 * 1024
+
+
 def route_write(
-    tagged: DataFrame,
-    out_dir: str,
-    fmt: str = "parquet",
-    mode: str = "overwrite",
-    extra_partition_cols: list[str] | None = None,
-    row_group_bytes: int = 16 * 1024 * 1024,
+    tagged: DataFrame, out_dir: str, partition_cols: Sequence[str] = ("sink",)
 ) -> None:
-    """Single-pass fan-out: one write, hive-partitioned by sink (the Spark
-    equivalent of N separate output files; each sink is one directory).
+    """Single-pass fan-out: one overwrite parquet write, hive-partitioned by
+    sink (the Spark equivalent of N separate output files; each sink is one
+    directory).  The batch fallback and the streaming micro-batches both
+    write through here.
 
     At cluster scale this is one shuffle-free scan + write; the reference's
     25-rescan cascade collapses into a single job.
-
-    ``row_group_bytes`` bounds writer memory: with concurrent fan-out writers
-    (session.py disables the planned-write sort) every task holds one open
-    writer per sink, so resident writer buffers ≈
-    ``tasks_per_executor × n_sinks × row_group_bytes``.  The parquet default
-    (128 MB) blows that envelope at high task counts — 32 tasks × 6 sinks
-    × 128 MB = 24 GB, measured 90s vs 19s for a 16M-row routed write — while
-    16 MB keeps it ~3 GB with negligible scan-side cost for sink tables.
     """
-    cols = ["sink"] + (extra_partition_cols or [])
     (
-        tagged.write.mode(mode)
-        .format(fmt)
-        .option("parquet.block.size", row_group_bytes)
-        .partitionBy(*cols)
+        tagged.write.mode("overwrite")
+        .format("parquet")
+        .option("parquet.block.size", ROW_GROUP_BYTES)
+        .partitionBy(*partition_cols)
         .save(out_dir)
     )
 

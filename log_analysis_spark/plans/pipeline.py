@@ -56,7 +56,7 @@ def run_pipeline(
     spark: SparkSession,
     turns: DataFrame,
     out_dir: str,
-    parse_impl: str = "arrow",
+    parse_impl: str = "native",
     manifest_path: str | None = None,
     input_fingerprint: str | None = None,
 ) -> PipelineResult:

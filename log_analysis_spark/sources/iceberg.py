@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from log_analysis_spark.operators.router import route_write
+
 
 def iceberg_available(spark: SparkSession) -> bool:
     """True iff the Iceberg Spark runtime is on the session classpath."""
@@ -70,13 +72,7 @@ def overwrite_partitions(df: DataFrame, table: str) -> None:
     df.writeTo(table).overwritePartitions()
 
 
-def replace_partition_write(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str],
-    fmt: str = "parquet",
-    row_group_bytes: int = 16 * 1024 * 1024,
-) -> None:
+def replace_partition_write(df: DataFrame, path: str, partition_cols: list[str]) -> None:
     """Parquet fallback with the Iceberg ``overwritePartitions`` contract:
     dynamic partition overwrite replaces only the hive partitions present in
     ``df`` and never touches the rest, so a rerun after a partial/failed
@@ -86,13 +82,7 @@ def replace_partition_write(
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
-        (
-            df.write.mode("overwrite")
-            .format(fmt)
-            .option("parquet.block.size", row_group_bytes)
-            .partitionBy(*partition_cols)
-            .save(path)
-        )
+        route_write(df, path, partition_cols)
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 

@@ -172,12 +172,7 @@ def run_stream_routed(
     tagged = router.tag_sinks(parsed, router.default_rules())
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.write.mode("overwrite")
-            .option("parquet.block.size", 16 * 1024 * 1024)
-            .partitionBy("sink")
-            .parquet(f"{out_dir}/batch={batch_id}")
-        )
+        router.route_write(batch_df, f"{out_dir}/batch={batch_id}")
 
     writer = tagged.writeStream.foreachBatch(write_batch).option(
         "checkpointLocation", checkpoint

@@ -1,5 +1,5 @@
-"""``tools/check_oracle.py`` rejects bad ``--skip`` arguments loudly, before
-any Spark session starts."""
+"""``tools/check_oracle.py`` rejects bad ``--skip`` arguments and unknown
+query names loudly, before any Spark session starts."""
 
 from __future__ import annotations
 
@@ -27,3 +27,17 @@ def test_unknown_skip_name_fails_and_lists_valid_names():
     assert out.returncode == 2
     assert "no_such_query" in out.stderr
     assert "valid names:" in out.stderr and "logs_overview" in out.stderr
+
+
+def test_unknown_query_name_fails_and_lists_valid_names():
+    out = _run("sf_dir", "no_such_query")
+    assert out.returncode == 2
+    assert "no_such_query" in out.stderr
+    assert "valid names:" in out.stderr and "logs_overview" in out.stderr
+
+
+def test_contract_name_under_retired_is_unknown():
+    out = _run("--retired", "sf_dir", "logs_overview")
+    assert out.returncode == 2
+    assert "logs_overview" in out.stderr
+    assert "valid names:" in out.stderr and "class_counts" in out.stderr

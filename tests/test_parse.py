@@ -54,22 +54,21 @@ def test_timing_and_info_fields(spark, transcripts):
 
 
 def test_native_vs_arrow_equivalence(spark, transcripts):
-    """All three parse impls must agree cell-for-cell (schema + values)."""
+    """Both parse impls must agree cell-for-cell (schema + values)."""
     key = ["conv_id", "turn_idx"]
     a = parse_turns(transcripts, impl="native").select(*key, *PARSED_COLS)
-    for impl in ("arrow", "pandas"):
-        b = parse_turns(transcripts, impl=impl).select(*key, *PARSED_COLS)
-        assert [f.simpleString() for f in a.schema.fields] == [
-            f.simpleString() for f in b.schema.fields
-        ], impl
-        assert a.exceptAll(b).count() == 0, impl
-        assert b.exceptAll(a).count() == 0, impl
+    b = parse_turns(transcripts, impl="arrow").select(*key, *PARSED_COLS)
+    assert [f.simpleString() for f in a.schema.fields] == [
+        f.simpleString() for f in b.schema.fields
+    ]
+    assert a.exceptAll(b).count() == 0
+    assert b.exceptAll(a).count() == 0
 
 
 def test_impl_equivalence_on_newline_terminated_rows(spark):
     """Regression: RE2's '$' is end-of-text only, Java/Python '$' also match
     before a final '\\n' — info-path rows ending in a newline must parse the
-    same url_path in all three impls."""
+    same url_path in both impls."""
     rows = [
         ("c1", 0, "sys", "BESLog::info() - Cache hit, path: /data/a.nc\n", "-", None),
         ("c1", 1, "sys", "BESLog::info() - Cache miss, path: /data/b.nc", "-", None),
@@ -78,12 +77,12 @@ def test_impl_equivalence_on_newline_terminated_rows(spark):
         rows, "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
     )
     out = {}
-    for impl in ("native", "arrow", "pandas"):
+    for impl in ("native", "arrow"):
         out[impl] = {
             r["turn_idx"]: r["url_path"]
             for r in parse_turns(df, impl=impl).select("turn_idx", "url_path").collect()
         }
-    assert out["native"] == out["arrow"] == out["pandas"]
+    assert out["native"] == out["arrow"]
     assert out["native"][0] == "/data/a.nc"
 
 

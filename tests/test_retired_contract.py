@@ -55,14 +55,16 @@ def test_coverage_doc_counts_match():
     )
 
 
-def test_rotation_is_disjoint_and_complete():
-    """The round-5 window rotation must keep contract and retired DISJOINT
-    and every promoted/demoted pair (query, oracle) on the same side."""
+def test_registry_views_partition_every_query():
+    """The four driver views derive from CONTRACT and one oracle table:
+    contract + retired cover every q_* function exactly once, and every
+    oracle key names a registered query (a misspelled key would otherwise
+    silently turn its row into a rows-only check)."""
     q, o = entry.queries(), entry.oracle_sql()
     rq, ro = entry.retired_queries(), entry.retired_oracle_sql()
-    assert len(q) == 50 and set(o) == set(q)
+    assert list(q) == entry.CONTRACT and len(set(entry.CONTRACT)) == 50
+    assert set(o) == set(q)
     assert not (set(q) & set(rq)), sorted(set(q) & set(rq))
-    for k in entry._ROTATED_IN_R5:
-        assert k in q and k in o and k not in rq and k not in ro, k
-    for k in entry._ROTATED_OUT_R5:
-        assert k in rq and k in ro and k not in q and k not in o, k
+    q_fns = {k[2:] for k in vars(entry) if k.startswith("q_")}
+    assert set(q) | set(rq) == q_fns
+    assert set(entry._oracle_table()) == set(o) | set(ro) <= q_fns

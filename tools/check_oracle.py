@@ -87,11 +87,11 @@ def main() -> int:
         qs, oracles = entrymod.retired_queries(), entrymod.retired_oracle_sql()
     else:
         qs, oracles = entrymod.queries(), entrymod.oracle_sql()
-    unknown = sorted(skip - set(qs))
+    unknown = sorted((skip | only) - set(qs))
     if unknown:
         return _usage_error(
-            f"--skip names no query: {', '.join(unknown)}; "
-            f"valid names: {', '.join(sorted(qs))}"
+            f"no such {'retired' if retired else 'contract'} query: "
+            f"{', '.join(unknown)}; valid names: {', '.join(sorted(qs))}"
         )
 
     spark = get_spark("oracle-check")
@@ -100,13 +100,14 @@ def main() -> int:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
-    failures = 0
+    failures = checked = 0
     for name, fn in qs.items():
         if only and name not in only:
             continue
         if name in skip:
             print(f"skip {name}: excluded by --skip")
             continue
+        checked += 1
         try:
             sdf = fn(spark, sf_dir).toPandas()
         except Exception as e:  # noqa: BLE001
@@ -136,7 +137,7 @@ def main() -> int:
             failures += 1
         else:
             print(f"ok   {name}: {sn} rows")
-    print(f"\n{failures} failures / {len(qs)} queries")
+    print(f"\n{failures} failures / {checked} queries")
     return 1 if failures else 0
 
 
