@@ -46,8 +46,9 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 def _max_task_metrics(spark, group: str, fn) -> dict:
     """Run ``fn`` under a job group, then pull that group's per-task maxima
     (duration ms, shuffle-read bytes) from the UI REST API.  Wall time on a
-    many-core box can't show a straggler; the max task can.  Returns zeros
-    if the UI is unreachable (the wall timing still stands)."""
+    many-core box can't show a straggler; the max task can.  Raises when the
+    UI is off or unreachable, or when the group ran no stage: a skew row
+    without task metrics would be no evidence at all."""
     import json as _json
     import urllib.request
 
@@ -57,46 +58,29 @@ def _max_task_metrics(spark, group: str, fn) -> dict:
         fn()
     finally:
         sc.setJobGroup(None, None)
+    if not sc.uiWebUrl:
+        raise RuntimeError(
+            f"{group}: no Spark UI (spark.ui.enabled=false?); "
+            "per-task metrics are read from its REST API"
+        )
+    app = f"{sc.uiWebUrl}/api/v1/applications/{sc.applicationId}"
+    jobs = _json.load(urllib.request.urlopen(f"{app}/jobs"))
+    stage_ids = sorted(
+        {s for j in jobs if j.get("jobGroup") == group for s in j.get("stageIds", [])}
+    )
+    if not stage_ids:
+        raise RuntimeError(f"{group}: the job group ran no stage")
     out = {"max_task_ms": 0, "max_task_shuffle_read_mb": 0.0}
-    base = sc.uiWebUrl
-    if not base:
-        return out
-    try:
-        app = sc.applicationId
-        jobs = _json.load(
-            urllib.request.urlopen(f"{base}/api/v1/applications/{app}/jobs")
-        )
-        stage_ids = sorted(
-            {
-                s
-                for j in jobs
-                if j.get("jobGroup") == group
-                for s in j.get("stageIds", [])
-            }
-        )
-        for sid in stage_ids:
-            url = f"{base}/api/v1/applications/{app}/stages/{sid}?details=true"
-            try:
-                attempts = _json.load(urllib.request.urlopen(url))
-            except Exception:
-                continue
-            for att in attempts:
-                for t in (att.get("tasks") or {}).values():
-                    out["max_task_ms"] = max(
-                        out["max_task_ms"], int(t.get("duration") or 0)
-                    )
-                    sm = (t.get("taskMetrics") or {}).get(
-                        "shuffleReadMetrics"
-                    ) or {}
-                    rd = (sm.get("remoteBytesRead") or 0) + (
-                        sm.get("localBytesRead") or 0
-                    )
-                    out["max_task_shuffle_read_mb"] = max(
-                        out["max_task_shuffle_read_mb"],
-                        round(rd / 1e6, 2),
-                    )
-    except Exception:
-        pass
+    for sid in stage_ids:
+        attempts = _json.load(urllib.request.urlopen(f"{app}/stages/{sid}?details=true"))
+        for att in attempts:
+            for t in (att.get("tasks") or {}).values():
+                out["max_task_ms"] = max(out["max_task_ms"], int(t.get("duration") or 0))
+                sm = (t.get("taskMetrics") or {}).get("shuffleReadMetrics") or {}
+                rd = (sm.get("remoteBytesRead") or 0) + (sm.get("localBytesRead") or 0)
+                out["max_task_shuffle_read_mb"] = max(
+                    out["max_task_shuffle_read_mb"], round(rd / 1e6, 2)
+                )
     return out
 
 

@@ -87,22 +87,14 @@ def replace_partition_write(df: DataFrame, path: str, partition_cols: list[str])
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
 
-def route_write_resumable(
-    tagged: DataFrame,
-    out: str,
-    extra_partition_cols: list[str] | None = None,
-    table_mode: bool | None = None,
-) -> None:
+def route_write_resumable(tagged: DataFrame, out: str) -> None:
     """Fan-out write with replace-partition resume semantics.
 
-    ``out`` is an Iceberg table name when the runtime is available (or
-    ``table_mode=True``), else a parquet root directory.  Either way the
-    write is idempotent per partition: rerunning the same input after a
-    mid-write failure reproduces the clean sinks exactly."""
-    spark = tagged.sparkSession
-    use_iceberg = iceberg_available(spark) if table_mode is None else table_mode
-    cols = ["sink"] + (extra_partition_cols or [])
-    if use_iceberg:
+    ``out`` is an Iceberg table name when the runtime is available, else a
+    parquet root directory partitioned by ``sink``.  Either way the write is
+    idempotent per partition: rerunning the same input after a mid-write
+    failure reproduces the clean sinks exactly."""
+    if iceberg_available(tagged.sparkSession):
         overwrite_partitions(tagged, out)
     else:
-        replace_partition_write(tagged, out, cols)
+        replace_partition_write(tagged, out, ["sink"])

@@ -1,50 +1,93 @@
 """Physical-plan audit: assert that the plans Catalyst produces are the ones
 we designed for 100 TB, and write the evidence to EXPLAIN.md.
 
-Checks (each is a hard assertion, not prose):
-  * native parse stays inside WholeStageCodegen — zero Python in the plan
-  * parquet scans get filter pushdown + column pruning (PushedFilters /
-    ReadSchema)
-  * enrich joins execute as BroadcastHashJoin — the fact side never shuffles
-  * the bucketed interval join is a plain shuffle join — no
-    CartesianProduct / BroadcastNestedLoopJoin anywhere
-  * the salted skew aggregation is a two-phase HashAggregate chain
-  * the fan-out (partitionBy) write plans no Sort (concurrent writers)
+The audit is one table, ``SECTIONS``: one entry per EXPLAIN.md section, each a
+title, a builder that returns the frame(s) to inspect, and its checks.  A
+check is a name plus a predicate built from the shared vocabulary below
+(``no_cross``, ``no_python``, ``no_exchange``, ``count_at_least``,
+``shuffles_exclude`` ...); a check that combines properties combines
+predicates with ``all_of``.  Every check is a hard assertion, not prose.
+
+To add a check, add a row ``(name, predicate)`` to a section, or
+``(name, frame, predicate)`` when the builder returns a dict of frames.  To
+add a section, call ``section(title, *rows, build=...)`` or decorate its
+builder with ``@section(title, *rows)``.  The first frame a builder returns
+is the plan EXPLAIN.md shows.
 
 Usage: python tools/explain_audit.py [sf_dir]  (default /root/testdata/sf0.01)
 """
 
 from __future__ import annotations
 
+import contextlib
+import fnmatch
 import os
+import re
+import shutil
 import sys
+import tempfile
+from functools import cached_property
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+import __spark_entry__ as entry  # noqa: E402
+from pyspark.sql import functions as F  # noqa: E402
 
-def executed(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
+from log_analysis_spark.datagen import (  # noqa: E402
+    role_taxonomy,
+    tool_registry,
+    transcripts_from_events,
+)
+from log_analysis_spark.functions.parse import parse_turns  # noqa: E402
+from log_analysis_spark.operators import (  # noqa: E402
+    aggregate,
+    chunking,
+    corpus,
+    dedup,
+    enrich,
+    expectations,
+    graph,
+    incremental,
+    incremental_embed,
+    itemsets,
+    joins,
+    retrieval,
+    router,
+    semdedup,
+    similarity,
+    sketches,
+    span_dedup,
+    templates,
+    textstats,
+    timeseries,
+    urls,
+    windows_ops,
+)
+from log_analysis_spark.session import get_spark  # noqa: E402
+from log_analysis_spark.sources import bucketed  # noqa: E402
+
+BROADCAST_THRESHOLD = "spark.sql.autoBroadcastJoinThreshold"
+AQE = "spark.sql.adaptive.enabled"
+BUCKET_DB = "explain_buck"
+
+
+def _shuffles_of(node) -> list[tuple[str, list[str]]]:
+    """(partitioning, columns) of every shuffle in a JVM physical plan."""
+    out = [
+        s for i in range(node.children().size()) for s in _shuffles_of(node.children().apply(i))
+    ]
+    if "ShuffleExchange" in node.getClass().getSimpleName():
+        cols = [node.output().apply(i).name() for i in range(node.output().size())]
+        out.insert(0, (node.outputPartitioning().toString(), cols))
+    return out
 
 
 def shuffle_schemas(df) -> list[tuple[str, list[str]]]:
     """(partitioning, output column names) for every shuffle Exchange in the
     executed plan — the machine-readable answer to "what does this shuffle
     actually carry?", which the plan's toString does not print."""
-    out: list[tuple[str, list[str]]] = []
-
-    def walk(node):
-        if "ShuffleExchange" in node.getClass().getSimpleName():
-            cols = [
-                node.output().apply(i).name()
-                for i in range(node.output().size())
-            ]
-            out.append((node.outputPartitioning().toString(), cols))
-        for i in range(node.children().size()):
-            walk(node.children().apply(i))
-
-    walk(df._jdf.queryExecution().executedPlan())
-    return out
+    return _shuffles_of(df._jdf.queryExecution().executedPlan())
 
 
 def formatted(df) -> str:
@@ -53,2007 +96,1437 @@ def formatted(df) -> str:
     )
 
 
-def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+class Plan:
+    """What a check inspects: the executed plan text of one or more frames and
+    the (partitioning, columns) of their shuffles.  The physical plan is fixed
+    when the Plan is made, so a builder that changes a conf makes its Plans
+    inside that change.  ``text``/``shuffles`` may be given literally."""
 
-    import __spark_entry__ as entry
-    from pyspark.sql import functions as F
-    from log_analysis_spark.datagen import (
-        role_taxonomy,
-        tool_registry,
-        transcripts_from_events,
+    def __init__(self, *dfs, **literal):
+        self.dfs = dfs
+        self._jplans = [d._jdf.queryExecution().executedPlan() for d in dfs]
+        self.__dict__.update(literal)
+
+    @cached_property
+    def text(self) -> str:
+        return "\n".join(j.toString() for j in self._jplans)
+
+    @cached_property
+    def shuffles(self) -> list[tuple[str, list[str]]]:
+        return [s for j in self._jplans for s in _shuffles_of(j)]
+
+
+# ---- predicates: each maps a Plan to True (PASS) or False (FAIL) -----------
+
+
+def all_of(*preds):
+    return lambda p: all(pred(p) for pred in preds)
+
+
+def any_of(*preds):
+    return lambda p: any(pred(p) for pred in preds)
+
+
+def has(token: str):
+    return lambda p: token in p.text
+
+
+def lacks(*tokens: str):
+    return lambda p: not any(t in p.text for t in tokens)
+
+
+def count_at_least(node: str, n: int):
+    """At least ``n`` matches of the regex ``node`` in the plan text."""
+    return lambda p: len(re.findall(node, p.text)) >= n
+
+
+def count_at_most(node: str, n: int):
+    return lambda p: len(re.findall(node, p.text)) <= n
+
+
+def count_exactly(node: str, n: int):
+    return all_of(count_at_least(node, n), count_at_most(node, n))
+
+
+no_cartesian = lacks("CartesianProduct")
+no_nested_loop = lacks("BroadcastNestedLoopJoin")
+no_cross = all_of(no_cartesian, no_nested_loop)
+# every Python stage Spark plans: row/Arrow UDF eval, UDTFs, (co)grouped and
+# map-partition pandas/Arrow stages, Arrow aggregate and window UDFs
+no_python = lacks(
+    "EvalPython", "InPandas", "InArrow", "PythonUDTF", "AggregatePython", "WindowPython"
+)
+no_exchange = lacks("Exchange")
+codegen = any_of(has("WholeStageCodegen"), has("*(1)"))  # `*(n)` = codegen stage marker
+
+
+def _keyed(p, keyed: str) -> list[list[str]]:
+    """Columns of each shuffle whose partitioning matches the regex ``keyed``."""
+    return [cols for part, cols in p.shuffles if re.search(keyed, part)]
+
+
+def shuffles_exclude(*patterns: str, keyed: str = ""):
+    """No shuffle (partitioned by ``keyed``) carries a column matching one of
+    the fnmatch ``patterns`` (``"text"`` exact, ``"*text*"`` substring)."""
+    return lambda p: not any(
+        fnmatch.fnmatchcase(c, pat)
+        for cols in _keyed(p, keyed) for c in cols for pat in patterns
     )
-    from log_analysis_spark.functions.parse import parse_turns
-    from log_analysis_spark.operators import aggregate as agg
-    from log_analysis_spark.operators import enrich, router
-    from log_analysis_spark.session import get_spark
 
-    spark = get_spark("explain-audit")
-    # AQE leaves displayed plans as isFinalPlan=false (no WholeStageCodegen
-    # wrapper shown pre-execution); disable it for legible audit plans — the
-    # operator choices under audit (broadcast, no-cross-product, two-phase
-    # agg) are decided before AQE anyway.
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    sections: list[tuple[str, str, list[str]]] = []  # (title, plan, notes)
-    failures: list[str] = []
 
-    def check(name: str, ok: bool, detail: str = "") -> str:
-        line = f"{'PASS' if ok else 'FAIL'}  {name}" + (f" — {detail}" if detail else "")
-        if not ok:
-            failures.append(line)
-        print(line)
-        return line
+def shuffles_within(*allowed: str, keyed: str = ""):
+    """Every shuffle (partitioned by ``keyed``) carries only ``allowed`` columns."""
+    return lambda p: all(set(cols) <= set(allowed) for cols in _keyed(p, keyed))
 
-    # audit the pipeline the way it runs at scale: from a materialized table
-    # scan (the events→transcripts derivation's window shuffle is datagen,
-    # not pipeline, and would pollute the enrich shuffle check)
-    import tempfile
 
-    tdir = tempfile.mkdtemp(prefix="explain_transcripts_")
-    transcripts_from_events(spark, sf_dir).write.mode("overwrite").parquet(tdir)
-    turns = spark.read.parquet(tdir)
-    parsed = parse_turns(turns)
+def shuffles_keyed(key: str):
+    """Every shuffle is partitioned by an expression matching ``key``."""
+    return lambda p: all(re.search(key, part) for part, _cols in p.shuffles)
 
-    # 1 — native parse: all-JVM, codegen
-    plan = executed(parsed)
-    notes = [
-        check("parse: no Python eval in plan",
-              "EvalPython" not in plan and "ArrowEval" not in plan),
-        check("parse: WholeStageCodegen present",
-              "WholeStageCodegen" in plan or "*(1)" in plan),  # `*(n)` = codegen stage marker
-    ]
-    sections.append(("Native parse stage", plan, notes))
 
-    # 2 — parquet scan: pushdown + pruning
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    q = docs.filter(F.col("lang") == "en").select("doc_id")
-    plan = formatted(q)
-    notes = [
-        check("scan: filter pushed to parquet", "PushedFilters: [IsNotNull(lang), EqualTo(lang,en)]" in plan),
-        check("scan: columns pruned to (doc_id, lang)",
-              "ReadSchema" in plan and "text" not in plan.split("ReadSchema")[1][:200]),
-    ]
-    sections.append(("Parquet scan pushdown + pruning", plan, notes))
+def shuffles_at_least(n: int, keyed: str = ""):
+    return lambda p: len(_keyed(p, keyed)) >= n
 
-    # 3 — enrich: broadcast joins, no shuffle of the fact side
-    enriched = enrich.enrich_tools(
-        enrich.enrich_roles(parsed, role_taxonomy(spark)), tool_registry(spark)
-    )
-    plan = executed(enriched)
-    notes = [
-        check("enrich: two BroadcastHashJoins", plan.count("BroadcastHashJoin") == 2),
-        check("enrich: no SortMergeJoin", "SortMergeJoin" not in plan),
-        check("enrich: no fact-side shuffle",
-              "Exchange hashpartitioning" not in plan),
-    ]
-    sections.append(("Broadcast enrich joins", plan, notes))
 
-    # 4 — bucketed interval join: no cross product
-    ij = entry.q_interval_join(spark, sf_dir)
-    plan = executed(ij)
-    notes = [
-        check("interval join: no CartesianProduct", "CartesianProduct" not in plan),
-        check("interval join: no BroadcastNestedLoopJoin",
-              "BroadcastNestedLoopJoin" not in plan),
-    ]
-    sections.append(("Bucketed interval join (J5)", plan, notes))
+def shuffles_at_most(n: int, keyed: str = ""):
+    return lambda p: len(_keyed(p, keyed)) <= n
 
-    # 5 — salted agg: two-phase
-    sa = agg.salted_group_count(parsed, "conv_id")
-    plan = executed(sa)
-    notes = [
-        check("salted agg: >=4 HashAggregate stages (partial+final ×2 phases)",
-              plan.count("HashAggregate") >= 4),
-    ]
-    sections.append(("Salted two-phase skew aggregation", plan, notes))
 
-    # 6 — fan-out write: no Sort in the write plan (concurrent writers)
-    tagged = router.tag_sinks(parsed, router.default_rules())
-    import tempfile, shutil
+def shuffles_exactly(n: int, keyed: str = ""):
+    return all_of(shuffles_at_least(n, keyed), shuffles_at_most(n, keyed))
 
-    out = tempfile.mkdtemp(prefix="explain_route_")
-    tagged.write.mode("overwrite").partitionBy("sink").parquet(out)
-    # the executed write plan is not exposed post-hoc; assert via the conf +
-    # the logical absence of a Sort when planning the same write
-    plan_sort_off = spark.conf.get("spark.sql.optimizer.plannedWrite.enabled")
-    notes = [
-        check("fan-out write: planned-write sort disabled (concurrent writers)",
-              plan_sort_off == "false",
-              f"plannedWrite={plan_sort_off}, "
-              f"maxConcurrentOutputFileWriters={spark.conf.get('spark.sql.maxConcurrentOutputFileWriters')}"),
-    ]
-    shutil.rmtree(out, ignore_errors=True)
-    sections.append(("Fan-out (router) write", "(see notes)", notes))
 
-    # 7 — two-phase global ordering: the fact table is never windowed
-    # through a single partition; only the conv-granularity cumsum is
-    to_df = entry.q_turn_ordering(spark, sf_dir)
-    plan = executed(to_df)
-    # single-partition sorts show up as "Exchange SinglePartition"; exactly
-    # one is allowed — the conv-level offset cumsum (input: one row per conv,
-    # i.e. post-aggregate) — and it must sit above a HashAggregate, never
-    # directly above the fact scan/parse
-    single_parts = plan.count("Exchange SinglePartition")
-    seg_after = plan.split("Exchange SinglePartition", 1)[-1]
-    notes = [
-        check("turn_ordering: at most one SinglePartition exchange",
-              single_parts <= 1, f"found {single_parts}"),
-        check("turn_ordering: the single-partition input is the conv-level "
-              "aggregate (HashAggregate below it), not the fact table",
-              single_parts == 0 or "HashAggregate" in seg_after[:2000]),
-        check("turn_ordering: per-conv rank window is hash-partitioned",
-              "hashpartitioning(conv_id" in plan),
-    ]
-    sections.append(("Two-phase global ordering (W4)", plan, notes))
+no_shuffle = shuffles_at_most(0)
+VECTORS = ("*unit*", "*embedding*")
+BAND_KEYED = "band#.*bkey#"  # the (band, bkey) candidate join
+narrow_band_joins = all_of(
+    shuffles_at_least(1, keyed=BAND_KEYED), shuffles_exclude(*VECTORS, keyed=BAND_KEYED)
+)
 
-    # 8 — IVF assignment: pure projection on the corpus (no window/join)
-    from log_analysis_spark.operators import similarity
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    assigned, _cents = similarity.assign_centroids(emb, n_centroids=8, kmeans_rounds=0)
-    plan = executed(assigned)
-    notes = [
-        check("ivf assign: no Window on the corpus", "Window" not in plan),
-        check("ivf assign: no Join on the corpus", "Join" not in plan),
-        check("ivf assign: no Exchange on the corpus", "Exchange" not in plan),
-    ]
-    sections.append(("IVF centroid assignment (projection-only)", plan, notes))
+def fed_by_aggregate(p) -> bool:
+    """The single-partition exchange, if any, sits on a HashAggregate."""
+    _head, single, tail = p.text.partition("Exchange SinglePartition")
+    return not single or "HashAggregate" in tail[:2000]
 
-    # 9 — near-dup candidate joins: banded/prefix equi-joins, never a cross
-    # product (the 100-TB kill criterion for any all-pairs op)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    from log_analysis_spark.operators import dedup
 
-    nd_plans = {
-        "jaccard_prefix": executed(dedup.ngram_jaccard_pairs(docs, k=2, threshold=0.2)),
-        "minhash_lsh": executed(dedup.minhash_lsh_pairs(docs, threshold=0.2)),
-        "minhash_numpy": executed(
-            dedup.minhash_lsh_pairs(docs, threshold=0.2, hash_impl="numpy")
+def read_schema_lacks(col: str):
+    return lambda p: "ReadSchema" in p.text and col not in p.text.split("ReadSchema")[1][:200]
+
+
+def conf_is(key: str, value: str):
+    return lambda p: p.dfs[0].sparkSession.conf.get(key) == value
+
+
+# ---- the table ---------------------------------------------------------------
+
+SECTIONS: list[tuple[str, object, tuple]] = []
+
+
+def section(title: str, *checks: tuple, build=None):
+    """Append the next section of the audit.  Without ``build`` it returns a
+    decorator that registers the decorated function as the builder."""
+    if build is None:
+        return lambda fn: section(title, *checks, build=fn) or fn
+    SECTIONS.append((title, build, checks))
+
+
+@contextlib.contextmanager
+def no_broadcast(spark):
+    """Broadcast joins off: at audit scale small sides broadcast, but at
+    100 TB both sides shuffle, and that shuffle is what some checks audit."""
+    old = spark.conf.get(BROADCAST_THRESHOLD)
+    spark.conf.set(BROADCAST_THRESHOLD, "-1")
+    try:
+        yield
+    finally:
+        spark.conf.set(BROADCAST_THRESHOLD, old)
+
+
+class Inputs:
+    """The tables the builders read.  The pipeline is audited the way it runs
+    at scale: from a materialized transcripts scan (the events→transcripts
+    derivation's window shuffle is datagen, not pipeline, and would pollute
+    the enrich shuffle check)."""
+
+    def __init__(self, spark, sf_dir: str, root: str):
+        self.spark, self.sf_dir, self.root = spark, sf_dir, root
+        tdir = os.path.join(root, "transcripts")
+        transcripts_from_events(spark, sf_dir).write.mode("overwrite").parquet(tdir)
+        self.turns = spark.read.parquet(tdir)
+        self.parsed = parse_turns(self.turns)
+        self.docs = self.read("documents")
+        self.emb = self.read("embeddings")
+        self.ev = self.read("events")
+
+    def read(self, name: str):
+        return self.spark.read.parquet(f"{self.sf_dir}/{name}.parquet")
+
+    @cached_property
+    def cents(self) -> list[list[float]]:
+        """The 8 md5-seeded embedding centroids the IVF-style builders share."""
+        return similarity.md5_seed_centroids(self.emb, n_centroids=8)
+
+
+def _bench_split():
+    """~1/8 of the docs, by doc_id hash: the benchmark side of a decontam."""
+    return F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1).isin("0", "1")
+
+
+section(
+    "Native parse stage",
+    ("parse: no Python eval in plan", no_python),
+    ("parse: WholeStageCodegen present", codegen),
+    build=lambda x: x.parsed,
+)
+
+section(
+    "Parquet scan pushdown + pruning",
+    ("scan: filter pushed to parquet",
+     has("PushedFilters: [IsNotNull(lang), EqualTo(lang,en)]")),
+    ("scan: columns pruned to (doc_id, lang)", read_schema_lacks("text")),
+    build=lambda x: Plan(text=formatted(x.docs.filter(F.col("lang") == "en").select("doc_id"))),
+)
+
+
+@section(
+    "Broadcast enrich joins",
+    ("enrich: two BroadcastHashJoins", count_exactly("BroadcastHashJoin", 2)),
+    ("enrich: no SortMergeJoin", lacks("SortMergeJoin")),
+    ("enrich: no fact-side shuffle", lacks("Exchange hashpartitioning")),
+)
+def _enrich(x):
+    roles = enrich.enrich_roles(x.parsed, role_taxonomy(x.spark))
+    return enrich.enrich_tools(roles, tool_registry(x.spark))
+
+
+section(
+    "Bucketed interval join (J5)",
+    ("interval join: no CartesianProduct", no_cartesian),
+    ("interval join: no BroadcastNestedLoopJoin", no_nested_loop),
+    build=lambda x: entry.q_interval_join(x.spark, x.sf_dir),
+)
+
+section(
+    "Salted two-phase skew aggregation",
+    ("salted agg: >=4 HashAggregate stages (partial+final ×2 phases)",
+     count_at_least("HashAggregate", 4)),
+    build=lambda x: aggregate.salted_group_count(x.parsed, "conv_id"),
+)
+
+# the executed write plan is not exposed post-hoc; the planned-write sort is
+# off by conf, so the fan-out runs concurrent writers with no Sort
+section(
+    "Fan-out (router) write",
+    ("fan-out write: planned-write sort disabled (concurrent writers)",
+     conf_is("spark.sql.optimizer.plannedWrite.enabled", "false")),
+    build=lambda x: router.tag_sinks(x.parsed, router.default_rules()),
+)
+
+# the fact table is never windowed through a single partition: exactly one
+# SinglePartition exchange is allowed — the conv-level offset cumsum (one
+# row per conv, post-aggregate) — and it must sit above a HashAggregate
+section(
+    "Two-phase global ordering (W4)",
+    ("turn_ordering: at most one SinglePartition exchange",
+     count_at_most("Exchange SinglePartition", 1)),
+    ("turn_ordering: the single-partition input is the conv-level "
+     "aggregate (HashAggregate below it), not the fact table", fed_by_aggregate),
+    ("turn_ordering: per-conv rank window is hash-partitioned",
+     has("hashpartitioning(conv_id")),
+    build=lambda x: entry.q_turn_ordering(x.spark, x.sf_dir),
+)
+
+section(
+    "IVF centroid assignment (projection-only)",
+    ("ivf assign: no Window on the corpus", lacks("Window")),
+    ("ivf assign: no Join on the corpus", lacks("Join")),
+    ("ivf assign: no Exchange on the corpus", no_exchange),
+    build=lambda x: similarity.assign_centroids(x.emb, n_centroids=8, kmeans_rounds=0)[0],
+)
+
+# near-dup candidate joins are banded/prefix equi-joins, never a cross
+# product (the 100-TB kill criterion for any all-pairs op)
+section(
+    "Near-dup candidate joins (equi-band, cross-product-free)",
+    ("jaccard_prefix: no CartesianProduct", "jaccard_prefix", no_cartesian),
+    ("jaccard_prefix: no BroadcastNestedLoopJoin", "jaccard_prefix", no_nested_loop),
+    ("minhash_lsh: no CartesianProduct", "minhash_lsh", no_cartesian),
+    ("minhash_lsh: no BroadcastNestedLoopJoin", "minhash_lsh", no_nested_loop),
+    ("minhash_numpy: no CartesianProduct", "minhash_numpy", no_cartesian),
+    ("minhash_numpy: no BroadcastNestedLoopJoin", "minhash_numpy", no_nested_loop),
+    ("simhash: no CartesianProduct", "simhash", no_cartesian),
+    ("simhash: no BroadcastNestedLoopJoin", "simhash", no_nested_loop),
+    ("embed_neardup: no CartesianProduct", "embed_neardup", no_cartesian),
+    ("embed_neardup: no BroadcastNestedLoopJoin", "embed_neardup", no_nested_loop),
+    ("minhash_numpy: Python only as whole-batch Arrow stages", "minhash_numpy",
+     lacks("BatchEvalPython")),
+    ("jaccard_prefix: PPJoin pruning predicates inside the join", "jaccard_prefix",
+     all_of(has("least("), has("CEIL("))),
+    build=lambda x: {
+        "jaccard_prefix": dedup.ngram_jaccard_pairs(x.docs, k=2, threshold=0.2),
+        "minhash_lsh": dedup.minhash_lsh_pairs(x.docs, threshold=0.2),
+        "minhash_numpy": dedup.minhash_lsh_pairs(x.docs, threshold=0.2, hash_impl="numpy"),
+        "simhash": dedup.simhash_neardup_pairs(dedup.simhash_table(x.docs), max_hamming=8),
+        "embed_neardup": similarity.embedding_neardup_pairs(
+            x.emb, threshold=0.3, band_bits=4
         ),
-        "simhash": executed(
-            dedup.simhash_neardup_pairs(dedup.simhash_table(docs), max_hamming=8)
-        ),
-        "embed_neardup": executed(
-            similarity.embedding_neardup_pairs(emb, threshold=0.3, band_bits=4)
-        ),
-    }
-    notes = []
-    for name, plan in nd_plans.items():
-        notes.append(
-            check(f"{name}: no CartesianProduct", "CartesianProduct" not in plan)
-        )
-        notes.append(
-            check(
-                f"{name}: no BroadcastNestedLoopJoin",
-                "BroadcastNestedLoopJoin" not in plan,
-            )
-        )
-    notes.append(
-        check(
-            "minhash_numpy: Python only as whole-batch Arrow stages",
-            "BatchEvalPython" not in nd_plans["minhash_numpy"],
-        )
-    )
-    notes.append(
-        check(
-            "jaccard_prefix: PPJoin pruning predicates inside the join",
-            "least(" in nd_plans["jaccard_prefix"]
-            and "CEIL(" in nd_plans["jaccard_prefix"].upper(),
-        )
-    )
-    sections.append(
-        ("Near-dup candidate joins (equi-band, cross-product-free)",
-         nd_plans["jaccard_prefix"], notes)
-    )
+    },
+)
 
-    # 10 — round-3 additions: matmul signature path, simhash-md5 twin,
-    # session dedup composition, salted interval join — same kill criteria
-    # (no cross products; Python only as whole-batch Arrow stages; the md5
-    # twin fully JVM)
-    mm = executed(
-        similarity.embedding_neardup_pairs_matmul(emb, threshold=0.3, band_bits=4)
-    )
-    sm = executed(
-        dedup.simhash_neardup_pairs(dedup.simhash_md5_table(docs), max_hamming=8)
-    )
-    sd = executed(entry.q_session_dedup(spark, sf_dir))
-    from log_analysis_spark.operators import joins as joins_ops
 
-    p = parse_turns(turns)
+@section(
+    "Round-3 ops (matmul signatures, md5 twin, session dedup, salted J5)",
+    ("embed_neardup_matmul: no CartesianProduct", "matmul", no_cartesian),
+    ("embed_neardup_matmul: no BroadcastNestedLoopJoin", "matmul", no_nested_loop),
+    ("embed_neardup_matmul: Python only as whole-batch Arrow stages", "matmul",
+     lacks("BatchEvalPython")),
+    ("simhash_md5 twin: zero Python in plan (pure JVM expressions)", "md5", no_python),
+    ("simhash_md5 twin: no CartesianProduct", "md5", no_cartesian),
+    ("session_dedup: no CartesianProduct", "session", no_cartesian),
+    ("session_dedup: no BroadcastNestedLoopJoin", "session", no_nested_loop),
+    ("salted interval join: no CartesianProduct", "salted", no_cartesian),
+    ("salted interval join: salt keys in the join condition", "salted",
+     all_of(has("_asalt"), has("_osalt"))),
+)
+def _round3(x):
+    p = x.parsed
     anchors = p.filter(F.col("turn_class") == "request").select(
         "conv_id",
         F.col("ts").alias("start_ts"),
         (F.col("ts") + F.expr("INTERVAL 30 MINUTES")).alias("end_ts"),
     )
     others = p.filter(F.col("turn_class") != "request").select("conv_id", "ts")
-    salted = joins_ops.interval_join(
-        anchors, others, ["conv_id"], "start_ts", "end_ts", "ts",
-        bucketed=True, n_salts=8,
-    )
-    sj = executed(salted)
-    notes = [
-        check("embed_neardup_matmul: no CartesianProduct", "CartesianProduct" not in mm),
-        check("embed_neardup_matmul: no BroadcastNestedLoopJoin",
-              "BroadcastNestedLoopJoin" not in mm),
-        check("embed_neardup_matmul: Python only as whole-batch Arrow stages",
-              "BatchEvalPython" not in mm),
-        check("simhash_md5 twin: zero Python in plan (pure JVM expressions)",
-              "EvalPython" not in sm and "ArrowEval" not in sm
-              and "InPandas" not in sm),
-        check("simhash_md5 twin: no CartesianProduct", "CartesianProduct" not in sm),
-        check("session_dedup: no CartesianProduct", "CartesianProduct" not in sd),
-        check("session_dedup: no BroadcastNestedLoopJoin",
-              "BroadcastNestedLoopJoin" not in sd),
-        check("salted interval join: no CartesianProduct",
-              "CartesianProduct" not in sj),
-        check("salted interval join: salt keys in the join condition",
-              "_asalt" in sj and "_osalt" in sj),
-    ]
-    sections.append(("Round-3 ops (matmul signatures, md5 twin, session dedup, salted J5)", sm, notes))
+    return {
+        "md5": dedup.simhash_neardup_pairs(dedup.simhash_md5_table(x.docs), max_hamming=8),
+        "matmul": similarity.embedding_neardup_pairs_matmul(
+            x.emb, threshold=0.3, band_bits=4
+        ),
+        "session": entry.q_session_dedup(x.spark, x.sf_dir),
+        "salted": joins.interval_join(
+            anchors, others, ["conv_id"], "start_ts", "end_ts", "ts",
+            bucketed=True, n_salts=8,
+        ),
+    }
 
-    # 11 — corpus ops: stratified sample must be a pure scan+filter (no
-    # exchange anywhere — it composes with partition pruning at 100 TB);
-    # shard packing's only SinglePartition stage is the 256-row bucket-offset
-    # window (above a HashAggregate, never the raw corpus); repetition stats
-    # stay cross-product-free and zero-Python
-    from log_analysis_spark.operators import corpus
 
-    samp = executed(
-        corpus.stratified_sample(docs, "lang", {"en": 0.5, "zh": 0.25})
-    )
-    pack = executed(corpus.pack_shards(docs, budget=2048))
-    rep = executed(corpus.repetition_stats(docs))
-    pack_sp = pack.count("Exchange SinglePartition")
-    pack_after = pack.split("Exchange SinglePartition", 1)[-1]
-    notes = [
-        check("stratified sample: zero Exchange (pure scan+filter)",
-              "Exchange" not in samp),
-        check("stratified sample: zero Python", "EvalPython" not in samp
-              and "InPandas" not in samp),
-        check("pack: exactly one SinglePartition exchange (bucket offsets)",
-              pack_sp == 1, f"found {pack_sp}"),
-        check("pack: the single-partition input is the 256-row bucket "
-              "aggregate (HashAggregate below it), not the corpus",
-              "HashAggregate" in pack_after[:2000]),
-        check("pack: offsets re-attach by broadcast (no corpus-side "
-              "shuffle for the join)", "BroadcastHashJoin" in pack),
-        check("repetition: no CartesianProduct", "CartesianProduct" not in rep),
-        check("repetition: zero Python (explode/groupBy JVM tree)",
-              "EvalPython" not in rep and "InPandas" not in rep),
-    ]
-    sections.append(("Corpus ops (stratified sample, shard packing, repetition)", pack, notes))
+# stratified sample is a pure scan+filter (it composes with partition
+# pruning at 100 TB); shard packing's only SinglePartition stage is the
+# 256-row bucket-offset window, above a HashAggregate
+section(
+    "Corpus ops (stratified sample, shard packing, repetition)",
+    ("stratified sample: zero Exchange (pure scan+filter)", "sample", no_exchange),
+    ("stratified sample: zero Python", "sample", no_python),
+    ("pack: exactly one SinglePartition exchange (bucket offsets)", "pack",
+     count_exactly("Exchange SinglePartition", 1)),
+    ("pack: the single-partition input is the 256-row bucket "
+     "aggregate (HashAggregate below it), not the corpus", "pack", fed_by_aggregate),
+    ("pack: offsets re-attach by broadcast (no corpus-side "
+     "shuffle for the join)", "pack", has("BroadcastHashJoin")),
+    ("repetition: no CartesianProduct", "repetition", no_cartesian),
+    ("repetition: zero Python (explode/groupBy JVM tree)", "repetition", no_python),
+    build=lambda x: {
+        "pack": corpus.pack_shards(x.docs, budget=2048),
+        "sample": corpus.stratified_sample(x.docs, "lang", {"en": 0.5, "zh": 0.25}),
+        "repetition": corpus.repetition_stats(x.docs),
+    },
+)
 
-    # 12 — decontamination joins the exploded corpus grams against the
-    # BROADCAST benchmark gram set (the corpus never shuffles for the
-    # probe); PII scrub is a pure scan-fused projection — zero Python,
-    # zero Exchange
-    bench_split = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1).isin("0", "1")
-    dec = executed(
-        corpus.decontaminate(docs.filter(~bench_split), docs.filter(bench_split), n=5)
-    )
-    from log_analysis_spark.operators import textstats
 
-    pii = executed(textstats.scrub_pii(docs))
-    notes = [
-        check("decontaminate: gram probe is a BroadcastHashJoin",
-              "BroadcastHashJoin" in dec),
-        check("decontaminate: no CartesianProduct", "CartesianProduct" not in dec),
-        check("decontaminate: no BroadcastNestedLoopJoin",
-              "BroadcastNestedLoopJoin" not in dec),
-        check("decontaminate: zero Python (explode/join/groupBy JVM tree)",
-              "EvalPython" not in dec and "InPandas" not in dec),
-        check("pii scrub: zero Exchange (pure projection)", "Exchange" not in pii),
-        check("pii scrub: zero Python", "EvalPython" not in pii and "InPandas" not in pii),
-        check("pii scrub: WholeStageCodegen present",
-              "WholeStageCodegen" in pii or "*(1)" in pii),
-    ]
-    cd = executed(corpus.transcripts_to_docs(turns))
-    notes += [
-        check("conv_docs: boilerplate strip is a broadcast anti-join "
-              "(fact side never shuffles for it)",
-              "BroadcastHashJoin" in cd and "LeftAnti" in cd),
-        check("conv_docs: no SortMergeJoin", "SortMergeJoin" not in cd),
-        check("conv_docs: no global window (assembly is a conv-keyed "
-              "aggregate, no SinglePartition over the fact table)",
-              "Window" not in cd),
-        check("conv_docs: zero Python", "EvalPython" not in cd and "InPandas" not in cd),
-    ]
-    sections.append(("Decontamination + PII scrub + conv_docs assembly", dec, notes))
+# decontamination probes the BROADCAST benchmark gram set (the corpus never
+# shuffles for the probe); PII scrub is a pure scan-fused projection
+@section(
+    "Decontamination + PII scrub + conv_docs assembly",
+    ("decontaminate: gram probe is a BroadcastHashJoin", "decontam",
+     has("BroadcastHashJoin")),
+    ("decontaminate: no CartesianProduct", "decontam", no_cartesian),
+    ("decontaminate: no BroadcastNestedLoopJoin", "decontam", no_nested_loop),
+    ("decontaminate: zero Python (explode/join/groupBy JVM tree)", "decontam", no_python),
+    ("pii scrub: zero Exchange (pure projection)", "pii", no_exchange),
+    ("pii scrub: zero Python", "pii", no_python),
+    ("pii scrub: WholeStageCodegen present", "pii", codegen),
+    ("conv_docs: boilerplate strip is a broadcast anti-join "
+     "(fact side never shuffles for it)", "conv_docs",
+     all_of(has("BroadcastHashJoin"), has("LeftAnti"))),
+    ("conv_docs: no SortMergeJoin", "conv_docs", lacks("SortMergeJoin")),
+    ("conv_docs: no global window (assembly is a conv-keyed "
+     "aggregate, no SinglePartition over the fact table)", "conv_docs", lacks("Window")),
+    ("conv_docs: zero Python", "conv_docs", no_python),
+)
+def _decontam(x):
+    bench = _bench_split()
+    return {
+        "decontam": corpus.decontaminate(x.docs.filter(~bench), x.docs.filter(bench), n=5),
+        "pii": textstats.scrub_pii(x.docs),
+        "conv_docs": corpus.transcripts_to_docs(x.turns),
+    }
 
-    # 12 — bucketed (co-located) tables: the write-once shuffle
-    from log_analysis_spark.sources import bucketed as buck
 
-    bdir = tempfile.mkdtemp(prefix="explain_buckdb_")
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS explain_buck LOCATION '{bdir}'")
-    buck.write_bucketed(
-        turns, "explain_buck.turns_b", "conv_id", 8,
-        sort_cols=["conv_id", "turn_idx"],
-    )
-    bt = buck.read_bucketed(spark, "explain_buck.turns_b")
-    bagg = executed(bt.groupBy("conv_id").agg(F.count("*").alias("n")))
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    bjoin = executed(
-        bt.alias("a").join(buck.read_bucketed(spark, "explain_buck.turns_b").alias("b"), "conv_id")
-    )
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-    notes = [
-        check("bucketed: conv-keyed aggregate carries ZERO Exchange",
-              "Exchange" not in bagg),
-        check("bucketed: co-located self-join is SMJ with ZERO Exchange",
-              "Exchange" not in bjoin and "SortMergeJoin" in bjoin),
-        check("bucketed: scan reports the bucket layout",
-              "Bucketed: true" in bjoin),
-    ]
-    sections.append(("Bucketed co-located tables (write-once shuffle)", bjoin, notes))
-    spark.sql("DROP TABLE IF EXISTS explain_buck.turns_b")
-    spark.sql("DROP DATABASE IF EXISTS explain_buck")
+@section(
+    "Bucketed co-located tables (write-once shuffle)",
+    ("bucketed: conv-keyed aggregate carries ZERO Exchange", "agg", no_exchange),
+    ("bucketed: co-located self-join is SMJ with ZERO Exchange", "join",
+     all_of(no_exchange, has("SortMergeJoin"))),
+    ("bucketed: scan reports the bucket layout", "join", has("Bucketed: true")),
+)
+def _bucketed(x):
+    table = f"{BUCKET_DB}.turns_b"
+    location = os.path.join(x.root, "buckdb")
+    x.spark.sql(f"CREATE DATABASE IF NOT EXISTS {BUCKET_DB} LOCATION '{location}'")
+    bucketed.write_bucketed(x.turns, table, "conv_id", 8, sort_cols=["conv_id", "turn_idx"])
+    bt = bucketed.read_bucketed(x.spark, table)
+    with no_broadcast(x.spark):
+        join = Plan(bt.alias("a").join(bucketed.read_bucketed(x.spark, table).alias("b"),
+                                       "conv_id"))
+    return {"join": join, "agg": bt.groupBy("conv_id").agg(F.count("*").alias("n"))}
 
-    # 13 — incremental ingest: candidate probe is an equi join on the band
-    # index, verify reads only the two signature arrays — no corpus text,
-    # no cross product, anywhere in the plan
-    from log_analysis_spark.operators import incremental
 
-    docs200 = docs.limit(200).select(
-        F.col("doc_id").cast("string").alias("doc_id"), "text"
-    )
+# the candidate probe is an equi join on the band index, and the verify
+# reads only the two signature arrays
+@section(
+    "Incremental LSH ingest (state probe)",
+    ("incremental: no CartesianProduct", no_cartesian),
+    ("incremental: no BroadcastNestedLoopJoin", no_nested_loop),
+    ("incremental: all-JVM (sig-agreement verify has no Python eval)", no_python),
+)
+def _incremental(x):
+    docs200 = x.docs.limit(200).select(F.col("doc_id").cast("string").alias("doc_id"), "text")
     half = docs200.filter(F.xxhash64("doc_id") % 2 == 0)
     r0 = incremental.ingest_batch(
-        half, spark.createDataFrame([], "id string, sig array<bigint>"),
-        spark.createDataFrame([], "id string, band int, bkey bigint"),
+        half, x.spark.createDataFrame([], "id string, sig array<bigint>"),
+        x.spark.createDataFrame([], "id string, band int, bkey bigint"),
     )
-    inc = executed(
-        incremental.ingest_batch(
-            docs200.subtract(half), r0.new_sig_rows, r0.new_band_rows
-        ).accepted
-    )
-    notes = [
-        check("incremental: no CartesianProduct", "CartesianProduct" not in inc),
-        check("incremental: no BroadcastNestedLoopJoin",
-              "BroadcastNestedLoopJoin" not in inc),
-        check("incremental: all-JVM (sig-agreement verify has no Python eval)",
-              "EvalPython" not in inc and "ArrowEval" not in inc),
-    ]
-    sections.append(("Incremental LSH ingest (state probe)", inc, notes))
+    return incremental.ingest_batch(
+        docs200.subtract(half), r0.new_sig_rows, r0.new_band_rows
+    ).accepted
 
-    # 14 — round-4 shuffle-shape fixes: the band joins carry ONLY
-    # (id, band, bkey) — never the unit vectors (512 B each, exploded
-    # ×n_bands) — and exact dedup's shuffle key is the 16-byte md5, never
-    # the document text.  Asserted on the exchanges' actual output schemas
-    # (shuffle_schemas), not plan prose.
-    # broadcast off: at audit scale the banded side broadcasts and no
-    # shuffle exists to inspect — at 100 TB both sides shuffle, which is
-    # exactly the plan whose payload width is under audit
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    nd_expr = similarity.embedding_neardup_pairs(emb, threshold=0.3, band_bits=4)
-    nd_mm = similarity.embedding_neardup_pairs_matmul(emb, threshold=0.3, band_bits=4)
-    notes = []
-    for label, frame in (("expr", nd_expr), ("matmul", nd_mm)):
-        band_shufs = [
-            (p, cols)
-            for p, cols in shuffle_schemas(frame)
-            if "band" in p and "bkey" in p
-        ]
-        wide = [
-            (p, cols)
-            for p, cols in band_shufs
-            if any("unit" in c or "embedding" in c for c in cols)
-        ]
-        notes.append(
-            check(
-                f"embed_neardup[{label}]: band-join shuffles exist and carry "
-                "no vector column",
-                len(band_shufs) >= 1 and not wide,
-                f"{len(band_shufs)} band shuffles; wide={wide[:1]}",
-            )
-        )
-    xd_shufs = shuffle_schemas(dedup.exact_dedup(docs))
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-    notes.append(
-        check(
-            # the md5 key survives planning as a _groupingexpression; the
-            # load-bearing assertion is the absence of the text column from
-            # every exchange payload
-            "exact_dedup: shuffles exist and never carry the text column",
-            len(xd_shufs) >= 1
-            and all(
-                not any("text" in c for c in cols) for _p, cols in xd_shufs
-            ),
-            f"shuffles={[(p[:60], cols) for p, cols in xd_shufs]}",
-        )
-    )
-    sections.append(
-        ("Round-4 shuffle shapes (narrow band joins, hash-keyed exact dedup)",
-         executed(nd_mm), notes)
+
+# the band joins carry ONLY (id, band, bkey), never the unit vectors (512 B
+# each, exploded ×n_bands); exact dedup's shuffle key is the 16-byte md5 —
+# the md5 survives planning as a _groupingexpression, so the load-bearing
+# assertion is the absence of the text column
+@section(
+    "Round-4 shuffle shapes (narrow band joins, hash-keyed exact dedup)",
+    ("embed_neardup[expr]: band-join shuffles exist and carry "
+     "no vector column", "expr", narrow_band_joins),
+    ("embed_neardup[matmul]: band-join shuffles exist and carry "
+     "no vector column", "matmul", narrow_band_joins),
+    ("exact_dedup: shuffles exist and never carry the text column", "exact",
+     all_of(shuffles_at_least(1), shuffles_exclude("*text*"))),
+)
+def _round4_shapes(x):
+    with no_broadcast(x.spark):
+        return {
+            "matmul": Plan(similarity.embedding_neardup_pairs_matmul(
+                x.emb, threshold=0.3, band_bits=4)),
+            "expr": Plan(similarity.embedding_neardup_pairs(x.emb, threshold=0.3, band_bits=4)),
+            "exact": Plan(dedup.exact_dedup(x.docs)),
+        }
+
+
+# the bench side (bounded eval suites) broadcasts at every join; the only
+# shuffles are the candidate-pair dedup and the per-doc hit fold
+@section(
+    "Fuzzy decontamination (broadcast bench side, corpus never shuffles)",
+    ("fuzzy_decontaminate: every bench-side join is broadcast "
+     "(no sort-merge join anywhere)",
+     all_of(lacks("SortMergeJoin"), count_at_least("BroadcastHashJoin", 3))),
+    ("fuzzy_decontaminate: no exchange carries text or shingle arrays",
+     shuffles_exclude("text", "sh*")),
+)
+def _fuzzy_decontam(x):
+    bench = _bench_split()
+    return dedup.fuzzy_decontaminate(
+        x.docs.filter(~bench), x.docs.filter(bench), threshold=0.2
     )
 
-    # 14b — fuzzy decontamination: the bench side (bounded eval suites)
-    # broadcasts at every join, so the corpus never enters a wide exchange —
-    # the only shuffles are the candidate-pair dedup and the per-doc hit
-    # fold, both carrying ids/ints, never text or shingle arrays.
-    is_bench = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1).isin(
-        "0", "1"
+
+# the cross-corpus probe is a (band, bkey) equi join against the persisted
+# index; units re-attach by id only for the verify
+@section(
+    "Incremental EMBED ingest (state probe)",
+    ("incremental embed: no CartesianProduct", no_cartesian),
+    ("incremental embed: no BroadcastNestedLoopJoin", no_nested_loop),
+    ("incremental embed: probe band-join shuffles carry no vector column",
+     narrow_band_joins),
+)
+def _incremental_embed(x):
+    emb200 = x.emb.limit(200).select("vec_id", "embedding")
+    half = emb200.filter(F.xxhash64(F.col("vec_id").cast("string")) % 2 == 0)
+    r0 = incremental_embed.ingest_embedding_batch(
+        half, *incremental_embed.empty_embed_state(x.spark), threshold=0.3, band_bits=4,
     )
-    fz = dedup.fuzzy_decontaminate(
-        docs.filter(~is_bench), docs.filter(is_bench), threshold=0.2
-    )
-    fz_plan = executed(fz)
-    fz_shufs = shuffle_schemas(fz)
-    notes = [
-        check(
-            "fuzzy_decontaminate: every bench-side join is broadcast "
-            "(no sort-merge join anywhere)",
-            "SortMergeJoin" not in fz_plan
-            and fz_plan.count("BroadcastHashJoin") >= 3,
-            f"{fz_plan.count('BroadcastHashJoin')} broadcast joins",
-        ),
-        check(
-            "fuzzy_decontaminate: no exchange carries text or shingle arrays",
-            all(
-                not any(c == "text" or c.startswith("sh") for c in cols)
-                for _p, cols in fz_shufs
-            ),
-            f"shuffles={[(p[:50], cols) for p, cols in fz_shufs]}",
-        ),
-    ]
-    sections.append(
-        ("Fuzzy decontamination (broadcast bench side, corpus never shuffles)",
-         fz_plan, notes)
-    )
+    with no_broadcast(x.spark):
+        return Plan(incremental_embed.ingest_embedding_batch(
+            emb200.subtract(half), r0.new_unit_rows, r0.new_band_rows,
+            threshold=0.3, band_bits=4,
+        ).accepted)
 
-    # 15 — incremental EMBED ingest: the cross-corpus candidate probe is a
-    # (band, bkey) equi join against the persisted index whose exchanges
-    # carry no vector column (units re-attach by id only for the verify),
-    # and nothing in the plan is a cross product
-    from log_analysis_spark.operators import incremental_embed
 
-    emb200 = emb.limit(200).select("vec_id", "embedding")
-    ehalf = emb200.filter(F.xxhash64(F.col("vec_id").cast("string")) % 2 == 0)
-    er0 = incremental_embed.ingest_embedding_batch(
-        ehalf, *incremental_embed.empty_embed_state(spark),
-        threshold=0.3, band_bits=4,
-    )
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    eres = incremental_embed.ingest_embedding_batch(
-        emb200.subtract(ehalf), er0.new_unit_rows, er0.new_band_rows,
-        threshold=0.3, band_bits=4,
-    )
-    einc = executed(eres.accepted)
-    eband_shufs = [
-        (p, cols)
-        for p, cols in shuffle_schemas(eres.accepted)
-        if "band" in p and "bkey" in p
-    ]
-    ewide = [
-        (p, cols)
-        for p, cols in eband_shufs
-        if any("unit" in c or "embedding" in c for c in cols)
-    ]
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-    notes = [
-        check("incremental embed: no CartesianProduct",
-              "CartesianProduct" not in einc),
-        check("incremental embed: no BroadcastNestedLoopJoin",
-              "BroadcastNestedLoopJoin" not in einc),
-        check(
-            "incremental embed: probe band-join shuffles carry no vector column",
-            len(eband_shufs) >= 1 and not ewide,
-            f"{len(eband_shufs)} band shuffles; wide={ewide[:1]}",
-        ),
-    ]
-    sections.append(("Incremental EMBED ingest (state probe)", einc, notes))
+# the only corpus-sized shuffle is keyed by the gram md5 (16 B) + int
+# positions; text reaches the rebuild via the scan
+section(
+    "Span-level dedup (gram-hash shuffles only)",
+    ("span_dedup: shuffles exist and none carries text or token arrays",
+     all_of(shuffles_at_least(1), shuffles_exclude("text", "_toks"))),
+    ("span_dedup: rebuild join is broadcast (text stays scan-side)",
+     has("BroadcastHashJoin")),
+    ("span_dedup: no Python eval (JVM higher-order rebuild)", no_python),
+    build=lambda x: span_dedup.remove_dup_spans(x.docs, k=3),
+)
 
-    # 16 — round-4 session-2 ops: span dedup / semdedup / temperature mix /
-    # leakage split.  The shared claim: document text and unit vectors stay
-    # out of every shuffle the op doesn't inherently need them in.
-    from log_analysis_spark.operators import semdedup as semd
-    from log_analysis_spark.operators import span_dedup
 
-    # span dedup: the only corpus-sized shuffle is keyed by the gram md5
-    # (16 B) + int positions; the text column reaches the final rebuild via
-    # the scan, never an exchange (covered-position aggregate broadcasts)
-    clean = span_dedup.remove_dup_spans(docs, k=3)
-    sd_shufs = shuffle_schemas(clean)
-    sd_text = [
-        (p, cols) for p, cols in sd_shufs
-        if any(c in ("text", "_toks") for c in cols)
-    ]
-    sd_plan = executed(clean)
-    notes = [
-        check("span_dedup: shuffles exist and none carries text or token arrays",
-              len(sd_shufs) >= 1 and not sd_text,
-              f"{len(sd_shufs)} shuffles; text-bearing={sd_text[:1]}"),
-        check("span_dedup: rebuild join is broadcast (text stays scan-side)",
-              "BroadcastHashJoin" in sd_plan),
-        check("span_dedup: no Python eval (JVM higher-order rebuild)",
-              "EvalPython" not in sd_plan and "ArrowEval" not in sd_plan),
-    ]
-    sections.append(("Span-level dedup (gram-hash shuffles only)", sd_plan, notes))
+# assignment is projection-only; the within-cluster self-join is equi on
+# centroid_id.  Both join sides are the same assigned frame, so Spark plans
+# one Exchange and a ReusedExchange: each vector crosses the wire once
+@section(
+    "SemDeDup (projection assignment + cluster-keyed pairs)",
+    ("semdedup: centroid assignment has zero Exchange", "assign", no_exchange),
+    ("semdedup: no CartesianProduct / BroadcastNestedLoopJoin", "pairs", no_cross),
+    ("semdedup: pair-join shuffles exist, all keyed by centroid_id", "pairs",
+     all_of(shuffles_at_least(1), shuffles_keyed("centroid_id"))),
+)
+def _semdedup(x):
+    assign = Plan(similarity.assign_to_centroids(x.emb, x.cents))
+    with no_broadcast(x.spark):
+        pairs = Plan(semdedup.semdedup_pairs(
+            x.emb, threshold=0.3, cents=x.cents, max_cluster=None))
+    return {"pairs": pairs, "assign": assign}
 
-    # semdedup: assignment is projection-only (zero Exchange); the
-    # within-cluster self-join is equi on centroid_id (no cross product) —
-    # each vector shuffles ONCE (single cluster membership, no band
-    # explosion), which is the op's minimal shape
-    cents_a = similarity.md5_seed_centroids(emb, n_centroids=8)
-    asg = similarity.assign_to_centroids(emb, cents_a)
-    notes = [
-        check("semdedup: centroid assignment has zero Exchange",
-              "Exchange" not in executed(asg)),
-    ]
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    sp = semd.semdedup_pairs(emb, threshold=0.3, cents=cents_a, max_cluster=None)
-    sp_plan = executed(sp)
-    sp_shufs = shuffle_schemas(sp)
-    notes += [
-        check("semdedup: no CartesianProduct / BroadcastNestedLoopJoin",
-              "CartesianProduct" not in sp_plan
-              and "BroadcastNestedLoopJoin" not in sp_plan),
-        # both join sides are the SAME assigned frame, so Spark plans one
-        # Exchange and a ReusedExchange for the other side — each vector
-        # crosses the wire once, which is exactly the claim under audit
-        check("semdedup: pair-join shuffles exist, all keyed by centroid_id",
-              len(sp_shufs) >= 1
-              and all("centroid_id" in p for p, _c in sp_shufs),
-              f"{[(p[:50]) for p, _c in sp_shufs]}"),
-    ]
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-    sections.append(("SemDeDup (projection assignment + cluster-keyed pairs)",
-                     sp_plan, notes))
 
-    # temperature mix: ONE tiny count aggregate (rows out = #sources) +
-    # broadcast rate join + pure filter — no corpus-payload shuffle
-    tm = corpus.temperature_mix(docs, "source", temperature=2.0,
-                                target_fraction=0.5)
-    tm_plan = executed(tm)
-    tm_shufs = shuffle_schemas(tm)
-    tm_wide = [
-        (p, cols) for p, cols in tm_shufs
-        if any(c in ("text", "doc_id") for c in cols)
-    ]
-    notes = [
-        check("temperature_mix: rate join is broadcast onto the corpus",
-              "BroadcastHashJoin" in tm_plan),
-        check("temperature_mix: shuffles carry only per-source aggregates",
-              not tm_wide,
-              f"{len(tm_shufs)} shuffles; corpus-bearing={tm_wide[:1]}"),
-    ]
-    sections.append(("Temperature mixing (count agg + broadcast rates)",
-                     tm_plan, notes))
+section(
+    "Temperature mixing (count agg + broadcast rates)",
+    ("temperature_mix: rate join is broadcast onto the corpus", has("BroadcastHashJoin")),
+    ("temperature_mix: shuffles carry only per-source aggregates",
+     shuffles_exclude("text", "doc_id")),
+    build=lambda x: corpus.temperature_mix(x.docs, "source", temperature=2.0, target_fraction=0.5),
+)
 
-    # leakage split: with the contract projection (doc_id, rep_id, split),
-    # Catalyst prunes text out of the label-attach join — asserted so a
-    # regression that drags text through the group join fails loudly
-    lk_pairs = dedup.ngram_jaccard_pairs(docs.limit(200), k=2, threshold=0.2)
-    lk_groups = dedup.neardup_groups(
-        docs.limit(200).select(F.col("doc_id").alias("id")), lk_pairs
-    )
-    lk = corpus.leakage_safe_split(docs.limit(200), lk_groups, 0.1).select(
-        "doc_id", "rep_id", "split"
-    )
-    lk_shufs = shuffle_schemas(lk)
-    lk_text = [
-        (p, cols) for p, cols in lk_shufs if any("text" in c for c in cols)
-    ]
-    notes = [
-        check("leakage_split: projected result shuffles never carry text",
-              not lk_text,
-              f"{len(lk_shufs)} shuffles; text-bearing={lk_text[:1]}"),
-    ]
-    sections.append(("Leakage-safe split (pruned label-attach join)",
-                     executed(lk), notes))
 
-    # quality classifier: the corpus-sized shuffles carry (id/bucket, 8 B)
-    # rows — text never enters an exchange — and the weight table joins
-    # back by broadcast (it is <= n_buckets + 1 rows by construction)
-    qc = textstats.ngram_quality_classifier(
-        docs, F.col("lang") == "en", n_buckets=4096
-    )
-    qc_plan = executed(qc)
-    qc_shufs = shuffle_schemas(qc)
-    qc_text = [
-        (p, cols) for p, cols in qc_shufs if any("text" in c for c in cols)
-    ]
-    notes = [
-        check("quality_classifier: no shuffle carries the text column",
-              not qc_text,
-              f"{len(qc_shufs)} shuffles; text-bearing={qc_text[:1]}"),
-        check("quality_classifier: weight join is broadcast",
-              "BroadcastHashJoin" in qc_plan),
-    ]
-    sections.append(("Quality classifier (hashed-feature shuffles, broadcast weights)",
-                     qc_plan, notes))
+# with the contract projection Catalyst prunes text out of the label-attach
+# join; a regression that drags text through the group join fails here
+@section(
+    "Leakage-safe split (pruned label-attach join)",
+    ("leakage_split: projected result shuffles never carry text",
+     shuffles_exclude("*text*")),
+)
+def _leakage_split(x):
+    docs = x.docs.limit(200)
+    pairs = dedup.ngram_jaccard_pairs(docs, k=2, threshold=0.2)
+    groups = dedup.neardup_groups(docs.select(F.col("doc_id").alias("id")), pairs)
+    return corpus.leakage_safe_split(docs, groups, 0.1).select("doc_id", "rep_id", "split")
 
-    # semantic decontamination (matmul production path): the corpus side is
-    # scan -> mapInPandas with ZERO exchanges — the bench matrix rides in
-    # the closure, so cost is one pass over the embedding column
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    sdec = similarity.semantic_decontaminate_matmul(
-        emb.filter(F.col("vec_id") % 37 != 0),
-        emb.filter(F.col("vec_id") % 37 == 0),
+
+section(
+    "Quality classifier (hashed-feature shuffles, broadcast weights)",
+    ("quality_classifier: no shuffle carries the text column", shuffles_exclude("*text*")),
+    ("quality_classifier: weight join is broadcast", has("BroadcastHashJoin")),
+    build=lambda x: textstats.ngram_quality_classifier(
+        x.docs, F.col("lang") == "en", n_buckets=4096
+    ),
+)
+
+# the bench matrix rides in the closure: one pass over the embedding column
+section(
+    "Semantic decontamination (zero-shuffle matmul scan)",
+    ("semantic_decontam_matmul: zero shuffles (scan -> mapInPandas)", no_shuffle),
+    ("semantic_decontam_matmul: no join operator in the plan", lacks("Join")),
+    build=lambda x: similarity.semantic_decontaminate_matmul(
+        x.emb.filter(F.col("vec_id") % 37 != 0),
+        x.emb.filter(F.col("vec_id") % 37 == 0),
         threshold=0.3,
+    ),
+)
+
+section(
+    "Corpus audit report (one-pass aggregate)",
+    ("corpus_report: exactly one exchange (single-pass aggregate)", shuffles_exactly(1)),
+    ("corpus_report: the exchange carries no text column", shuffles_exclude("*text*")),
+    ("corpus_report: partial aggregation before the exchange "
+     "(map-side combine)", has("partial_")),
+    build=lambda x: corpus.corpus_report(x.docs, gopher_min_stopwords=1),
+)
+
+section(
+    "Line-level corpus dedup (hash-keyed shuffle, scan-side rebuild)",
+    ("line_dedup: no exchange carries line or document text",
+     shuffles_exclude("text", "_line", "clean_text")),
+    ("line_dedup: no Python in the plan", no_python),
+    build=lambda x: span_dedup.dedup_lines(x.docs, min_words=2),
+)
+
+# line-keyed (_k) exchanges may carry the map-side-combined count and the
+# (k, doc) distinct pairs, never occurrence rows (pos) or raw line text
+section(
+    "Common-line stripping (broadcast frequency gate)",
+    ("strip_common_lines: line-key exchanges carry only the "
+     "map-side-combined count, never occurrence rows (the "
+     "occurrence probe rides the broadcast)",
+     all_of(shuffles_exclude("_line"), shuffles_exclude("pos", keyed=r"hashpartitioning\(_k"))),
+    ("strip_common_lines: common-set probe is a broadcast join", has("BroadcastHashJoin")),
+    build=lambda x: span_dedup.strip_common_lines(x.docs, min_words=2),
+)
+
+section(
+    "Gopher quality rules (scan-fused projection)",
+    ("gopher_rules: zero shuffles (pure projection gate)", no_shuffle),
+    ("gopher_rules: no Python in the plan", no_python),
+    build=lambda x: textstats.gopher_rules(x.docs),
+)
+
+# the only SinglePartition exchange allowed is the unigram LM's 1-row
+# corpus-total aggregate; the bucket window is lang-partitioned
+section(
+    "CCNet perplexity buckets (histogram CDF, no corpus-sized partition)",
+    ("ppl_buckets: no exchange carries the document text", shuffles_exclude("text", "*.text")),
+    ("ppl_buckets: SinglePartition exchanges are scalar-aggregate "
+     "only (bucket window is lang-partitioned over the histogram)",
+     all_of(shuffles_at_most(1, keyed="SinglePartition"),
+            shuffles_exclude("doc_id", "tok", "_smicro", "surprise", keyed="SinglePartition"))),
+    build=lambda x: textstats.perplexity_buckets(x.docs, n_buckets=3),
+)
+
+section(
+    "Winnowing fingerprints (zero-shuffle sketch)",
+    ("winnow: zero shuffles (projection + explode only)", no_shuffle),
+    ("winnow: no Python in the plan", no_python),
+    build=lambda x: textstats.winnow_fingerprints(x.docs, k=16, w=8, hash_impl="xxhash64"),
+)
+
+section(
+    "Cluster-balanced sampling (broadcast rates, narrow agg)",
+    ("cluster_balanced: no exchange carries a vector column", shuffles_exclude(*VECTORS)),
+    ("cluster_balanced: rate table joins back by broadcast", has("BroadcastHashJoin")),
+    build=lambda x: semdedup.cluster_balanced_sample(x.emb, cap_per_cluster=40, cents=x.cents),
+)
+
+
+@section(
+    "BM25 retrieval (query-vocab broadcast, text-free shuffles)",
+    ("bm25: no exchange carries the document text column", shuffles_exclude("text")),
+    ("bm25: query vocabulary filters postings via broadcast join", has("BroadcastHashJoin")),
+    ("bm25: no Python in the plan", no_python),
+)
+def _bm25(x):
+    queries = x.spark.createDataFrame(
+        [(1, "hash join table"), (2, "slow scan filter")], "query_id int, query_text string"
     )
-    sdec_plan = executed(sdec)
-    sdec_shufs = shuffle_schemas(sdec)
-    notes = [
-        check("semantic_decontam_matmul: zero shuffles (scan -> mapInPandas)",
-              not sdec_shufs, f"shuffles={sdec_shufs[:2]}"),
-        check("semantic_decontam_matmul: no join operator in the plan",
-              "Join" not in sdec_plan),
-    ]
-    sections.append(("Semantic decontamination (zero-shuffle matmul scan)",
-                     sdec_plan, notes))
+    return retrieval.bm25_topk(x.docs, queries, k=5)
 
-    # corpus audit report: per-doc features fuse into the scan; the report
-    # is ONE map-side-combinable aggregate, so the only exchange carries
-    # the (source, lang) keys + integer partials — never text
-    from log_analysis_spark.operators import corpus as corpus_ops
 
-    cr = corpus_ops.corpus_report(docs, gopher_min_stopwords=1)
-    cr_plan = executed(cr)
-    cr_shufs = shuffle_schemas(cr)
-    cr_text = [
-        (p, cols) for p, cols in cr_shufs
-        if any("text" in c for c in cols)
-    ]
-    notes = [
-        check("corpus_report: exactly one exchange (single-pass aggregate)",
-              len(cr_shufs) == 1, f"shuffles={len(cr_shufs)}"),
-        check("corpus_report: the exchange carries no text column",
-              not cr_text, f"text={cr_text[:1]}"),
-        check("corpus_report: partial aggregation before the exchange "
-              "(map-side combine)", "partial" in cr_plan.lower()),
-    ]
-    sections.append(("Corpus audit report (one-pass aggregate)",
-                     cr_plan, notes))
+# the bench bits ride as ONE packed-longs row; the only corpus-sized
+# exchange is the per-doc count, keyed by id
+section(
+    "Bloom decontamination (packed-bitmap broadcast probe)",
+    ("bloom decontaminate: no exchange carries gram/text strings "
+     "(the per-doc count is the only corpus-sized shuffle)",
+     all_of(shuffles_at_least(1), shuffles_exclude("gram", "text"))),
+    ("bloom decontaminate: probe is the one-row packed-bitmap "
+     "broadcast (bit tests in the projection — no per-position "
+     "explode/equi-join)",
+     all_of(has("BroadcastNestedLoopJoin"), lacks("BroadcastHashJoin"))),
+    ("bloom decontaminate: no Python in the plan", no_python),
+    build=lambda x: corpus.decontaminate_bloom(
+        x.docs, x.docs.limit(20), n=5, m_bits=1 << 20, n_hashes=4
+    ),
+)
 
-    # line-level corpus dedup: the only corpus-sized shuffle is keyed by
-    # the 16-byte line md5 with (id, pos) ints; the rebuild's text column
-    # arrives via the scan, never an exchange
-    from log_analysis_spark.operators import span_dedup as span_dedup_ops
+section(
+    "Token-window chunking (shuffle-free generate)",
+    ("chunking: zero shuffles (scan -> project -> generate)", no_shuffle),
+    ("chunking: no Python in the plan", no_python),
+    ("chunking: generator emits pre-sliced chunk structs", has("Generate explode")),
+    build=lambda x: chunking.chunk_documents(x.docs, max_tokens=24, overlap=6),
+)
 
-    ld = span_dedup_ops.dedup_lines(docs, min_words=2)
-    ld_plan = executed(ld)
-    ld_shufs = shuffle_schemas(ld)
-    ld_text = [
-        (p, cols) for p, cols in ld_shufs
-        if any(c == "text" or c == "_line" or c == "clean_text" for c in cols)
-    ]
-    notes = [
-        check("line_dedup: no exchange carries line or document text",
-              not ld_text, f"{len(ld_shufs)} shuffles; text={ld_text[:1]}"),
-        check("line_dedup: no Python in the plan",
-              "Python" not in ld_plan and "Arrow" not in ld_plan),
-    ]
-    sections.append(("Line-level corpus dedup (hash-keyed shuffle, "
-                     "scan-side rebuild)", ld_plan, notes))
+section(
+    "Per-group quota capping (narrow rank, broadcast re-attach)",
+    ("cap_per_group: no exchange carries the document text "
+     "(rank window sees only the (id, group) projection)", shuffles_exclude("text", "*.text")),
+    ("cap_per_group: over-cap set and survivor ids join by broadcast",
+     has("BroadcastHashJoin")),
+    ("cap_per_group: no Python in the plan", no_python),
+    build=lambda x: corpus.cap_per_group(x.docs, "lang", 100),
+)
 
-    # common-line stripping: the common set broadcasts, so line
-    # occurrences never hash-shuffle — the only exchanges are keyed by
-    # doc id (the drop-list aggregate) or SinglePartition 1-row totals
-    cl = span_dedup_ops.strip_common_lines(docs, min_words=2)
-    cl_plan = executed(cl)
-    cl_shufs = shuffle_schemas(cl)
-    # safe _k-keyed exchanges: the map-side-combined count (['_k','count'])
-    # and the (k, doc) distinct-pair phase (compound key spreads hot lines).
-    # unsafe: occurrence rows (pos) or raw line text moving on the line key
-    cl_linekey_wide = [
-        (p, cols)
-        for p, cols in cl_shufs
-        if ("_line" in cols)
-        or ("hashpartitioning(_k" in p and "pos" in cols)
-    ]
-    notes = [
-        check("strip_common_lines: line-key exchanges carry only the "
-              "map-side-combined count, never occurrence rows (the "
-              "occurrence probe rides the broadcast)", not cl_linekey_wide,
-              f"{len(cl_shufs)} shuffles; wide={cl_linekey_wide[:1]}"),
-        check("strip_common_lines: common-set probe is a broadcast join",
-              "BroadcastHashJoin" in cl_plan),
-    ]
-    sections.append(("Common-line stripping (broadcast frequency gate)",
-                     cl_plan, notes))
+# placement is the narrow two-phase cumsum (pack_shards' shape); the text
+# path re-attaches by one id equi-join and explodes pre-sliced segments
+section(
+    "Sequence packing (narrow placement, one text attach)",
+    ("pack_sequences (narrow): no exchange carries the document text", "narrow",
+     shuffles_exclude("text", "*.text")),
+    ("pack_sequences (narrow): exactly one SinglePartition exchange "
+     "(the 256-row bucket offsets)", "narrow", count_exactly("Exchange SinglePartition", 1)),
+    ("pack_sequences (text): generator emits pre-sliced segment structs", "text",
+     has("Generate explode")),
+    ("pack_sequences (text): no Python in the plan", "text", no_python),
+    build=lambda x: {
+        "text": chunking.pack_sequences(x.docs, seq_len=256),
+        "narrow": chunking.pack_sequences(x.docs, seq_len=256, emit_text=False),
+    },
+)
 
-    # Gopher rules: the whole 7-rule gate is integer expression work that
-    # fuses into the scan — zero exchanges, zero Python
-    gr = textstats.gopher_rules(docs)
-    gr_plan = executed(gr)
-    gr_shufs = shuffle_schemas(gr)
-    notes = [
-        check("gopher_rules: zero shuffles (pure projection gate)",
-              not gr_shufs, f"shuffles={gr_shufs[:2]}"),
-        check("gopher_rules: no Python in the plan",
-              "Python" not in gr_plan and "Arrow" not in gr_plan),
-    ]
-    sections.append(("Gopher quality rules (scan-fused projection)",
-                     gr_plan, notes))
 
-    # CCNet perplexity buckets: the cumulative window runs over the
-    # (lang, score) HISTOGRAM, never the corpus — no single-partition
-    # stage, and no exchange ever carries the document text
-    pb = textstats.perplexity_buckets(docs, n_buckets=3)
-    pb_plan = executed(pb)
-    pb_shufs = shuffle_schemas(pb)
-    pb_text = [
-        (p, cols) for p, cols in pb_shufs
-        if any(c == "text" or c.endswith(".text") for c in cols)
-    ]
-    # the only SinglePartition exchange allowed is the unigram LM's 1-row
-    # corpus-total scalar aggregate; the bucket window itself must be
-    # lang-hash-partitioned over histogram rows, never a global funnel
-    pb_single = [
-        (p, cols) for p, cols in pb_shufs if "SinglePartition" in p
-    ]
-    pb_single_bad = [
-        (p, cols)
-        for p, cols in pb_single
-        if any(c in ("doc_id", "tok", "_smicro", "surprise") for c in cols)
-    ]
-    notes = [
-        check("ppl_buckets: no exchange carries the document text",
-              not pb_text, f"{len(pb_shufs)} shuffles; text={pb_text[:1]}"),
-        check("ppl_buckets: SinglePartition exchanges are scalar-aggregate "
-              "only (bucket window is lang-partitioned over the histogram)",
-              len(pb_single) <= 1 and not pb_single_bad,
-              f"single={pb_single[:2]}"),
-    ]
-    sections.append(("CCNet perplexity buckets (histogram CDF, no "
-                     "corpus-sized partition)", pb_plan, notes))
-
-    # winnowing fingerprints: pure projection + explode — the whole sketch
-    # is JVM expression work inside the scan stage, zero exchanges
-    wn = textstats.winnow_fingerprints(docs, k=16, w=8, hash_impl="xxhash64")
-    wn_plan = executed(wn)
-    wn_shufs = shuffle_schemas(wn)
-    notes = [
-        check("winnow: zero shuffles (projection + explode only)",
-              not wn_shufs, f"shuffles={wn_shufs[:2]}"),
-        check("winnow: no Python in the plan",
-              "Python" not in wn_plan and "Arrow" not in wn_plan),
-    ]
-    sections.append(("Winnowing fingerprints (zero-shuffle sketch)",
-                     wn_plan, notes))
-
-    # cluster-balanced sampling: assignment is projection-only, the only
-    # corpus-sized movement is the (centroid_id, count) aggregate — the
-    # rate table comes back by broadcast and no exchange carries a vector
-    from log_analysis_spark.operators import semdedup as semdedup_ops
-    from log_analysis_spark.operators.similarity import md5_seed_centroids
-
-    cbal = semdedup_ops.cluster_balanced_sample(
-        emb, cap_per_cluster=40, cents=md5_seed_centroids(emb, 8)
+@section(
+    "Levenshtein verify (equi-join text attach, JVM distance)",
+    ("lev verify: no CartesianProduct", no_cartesian),
+    ("lev verify: no BroadcastNestedLoopJoin", no_nested_loop),
+    ("lev verify: no Python (JVM levenshtein expression)", no_python),
+)
+def _levenshtein(x):
+    docs = x.docs.limit(300).select(F.col("doc_id").alias("id"), "text")
+    cands = dedup.minhash_lsh_pairs(docs, id_col="id", threshold=0.2)
+    return dedup.levenshtein_verified_pairs(
+        cands.select("id_a", "id_b"), docs, max_dist=8, id_col="id"
     )
-    cbal_plan = executed(cbal)
-    cbal_shufs = shuffle_schemas(cbal)
-    cbal_wide = [
-        (p, cols)
-        for p, cols in cbal_shufs
-        if any("embedding" in c or "unit" in c for c in cols)
-    ]
-    notes = [
-        check("cluster_balanced: no exchange carries a vector column",
-              not cbal_wide, f"{len(cbal_shufs)} shuffles; wide={cbal_wide[:1]}"),
-        check("cluster_balanced: rate table joins back by broadcast",
-              "BroadcastHashJoin" in cbal_plan),
-    ]
-    sections.append(("Cluster-balanced sampling (broadcast rates, narrow agg)",
-                     cbal_plan, notes))
 
-    # BM25 retrieval: postings are broadcast-filtered to the query
-    # vocabulary at the scan; exchanges carry tokens/counts, never the
-    # document text; no Python anywhere
-    from log_analysis_spark.operators import retrieval as retrieval_ops
 
-    bm_queries = spark.createDataFrame(
-        [(1, "hash join table"), (2, "slow scan filter")],
-        "query_id int, query_text string",
-    )
-    bm = retrieval_ops.bm25_topk(docs, bm_queries, k=5)
-    bm_plan = executed(bm)
-    bm_shufs = shuffle_schemas(bm)
-    bm_wide = [
-        (p, cols) for p, cols in bm_shufs if any(c == "text" for c in cols)
-    ]
-    notes = [
-        check("bm25: no exchange carries the document text column",
-              not bm_wide, f"{len(bm_shufs)} shuffles; wide={bm_wide[:1]}"),
-        check("bm25: query vocabulary filters postings via broadcast join",
-              "BroadcastHashJoin" in bm_plan),
-        check("bm25: no Python in the plan",
-              "Python" not in bm_plan and "Arrow" not in bm_plan),
-    ]
-    sections.append(("BM25 retrieval (query-vocab broadcast, text-free shuffles)",
-                     bm_plan, notes))
-
-    # Bloom decontamination: the bench bits ride as ONE packed-longs row
-    # and every gram's positions are bit-tested inside the projection —
-    # no exchange may carry BOTH the doc id and raw gram/text strings
-    # (the only corpus-sized exchange is the per-doc count, keyed by id)
-    bm_bench = docs.limit(20)
-    bd = corpus.decontaminate_bloom(
-        docs, bm_bench, n=5, m_bits=1 << 20, n_hashes=4
-    )
-    bd_plan = executed(bd)
-    bd_shufs = shuffle_schemas(bd)
-    bd_wide = [
-        (p, cols)
-        for p, cols in bd_shufs
-        if any(c in ("gram", "text") for c in cols)
-    ]
-    notes = [
-        check("bloom decontaminate: no exchange carries gram/text strings "
-              "(the per-doc count is the only corpus-sized shuffle)",
-              len(bd_shufs) >= 1 and not bd_wide,
-              f"{len(bd_shufs)} shuffles; wide={bd_wide[:1]}"),
-        check("bloom decontaminate: probe is the one-row packed-bitmap "
-              "broadcast (bit tests in the projection — no per-position "
-              "explode/equi-join)",
-              "BroadcastNestedLoopJoin" in bd_plan
-              and "BroadcastHashJoin" not in bd_plan),
-        check("bloom decontaminate: no Python in the plan",
-              "Python" not in bd_plan and "Arrow" not in bd_plan),
-    ]
-    sections.append(("Bloom decontamination (packed-bitmap broadcast probe)",
-                     bd_plan, notes))
-
-    # token-window chunking: scan -> project -> generate, fully pipelined —
-    # zero exchanges, zero Python, and the explode emits already-sliced
-    # chunk structs (the token array is never duplicated per output row)
-    from log_analysis_spark.operators import chunking as chunking_ops
-
-    ch = chunking_ops.chunk_documents(docs, max_tokens=24, overlap=6)
-    ch_plan = executed(ch)
-    ch_shufs = shuffle_schemas(ch)
-    notes = [
-        check("chunking: zero shuffles (scan -> project -> generate)",
-              not ch_shufs, f"shuffles={ch_shufs[:2]}"),
-        check("chunking: no Python in the plan",
-              "Python" not in ch_plan and "Arrow" not in ch_plan),
-        check("chunking: generator emits pre-sliced chunk structs",
-              "Generate explode" in ch_plan),
-    ]
-    sections.append(("Token-window chunking (shuffle-free generate)",
-                     ch_plan, notes))
-
-    # per-group quota capping: the decision runs over the narrow (id,
-    # group) projection — the rank window's exchange must never carry the
-    # document text; over-cap detection and the under-cap bypass ride
-    # broadcasts
-    cap = corpus.cap_per_group(docs, "lang", 100)
-    cap_plan = executed(cap)
-    cap_shufs = shuffle_schemas(cap)
-    cap_wide = [
-        (p, cols) for p, cols in cap_shufs
-        if any(c == "text" or c.endswith(".text") for c in cols)
-    ]
-    notes = [
-        check("cap_per_group: no exchange carries the document text "
-              "(rank window sees only the (id, group) projection)",
-              not cap_wide, f"{len(cap_shufs)} shuffles; wide={cap_wide[:1]}"),
-        check("cap_per_group: over-cap set and survivor ids join by broadcast",
-              "BroadcastHashJoin" in cap_plan),
-        check("cap_per_group: no Python in the plan",
-              "Python" not in cap_plan and "Arrow" not in cap_plan),
-    ]
-    sections.append(("Per-group quota capping (narrow rank, broadcast re-attach)",
-                     cap_plan, notes))
-
-    # sequence packing: the placement decision is the narrow two-phase
-    # cumsum (pack_shards' shape) — with emit_text=False NO exchange may
-    # carry the document text at all, and the only SinglePartition stage
-    # is the 256-row bucket-offset window; the text path re-attaches by
-    # one id equi-join and explodes pre-sliced segment structs
-    ps_narrow = chunking_ops.pack_sequences(docs, seq_len=256, emit_text=False)
-    psn_plan = executed(ps_narrow)
-    psn_shufs = shuffle_schemas(ps_narrow)
-    psn_text = [
-        (p, cols) for p, cols in psn_shufs
-        if any(c == "text" or c.endswith(".text") for c in cols)
-    ]
-    psn_sp = psn_plan.count("Exchange SinglePartition")
-    ps_text = chunking_ops.pack_sequences(docs, seq_len=256)
-    pst_plan = executed(ps_text)
-    notes = [
-        check("pack_sequences (narrow): no exchange carries the document text",
-              not psn_text, f"{len(psn_shufs)} shuffles; text={psn_text[:1]}"),
-        check("pack_sequences (narrow): exactly one SinglePartition exchange "
-              "(the 256-row bucket offsets)", psn_sp == 1, f"found {psn_sp}"),
-        check("pack_sequences (text): generator emits pre-sliced segment structs",
-              "Generate explode" in pst_plan),
-        check("pack_sequences (text): no Python in the plan",
-              "Python" not in pst_plan and "Arrow" not in pst_plan),
-    ]
-    sections.append(("Sequence packing (narrow placement, one text attach)",
-                     pst_plan, notes))
-
-    # Levenshtein-verified near-dup pairs: candidates come from the banded
-    # LSH join (already audited); the edit-distance verify attaches the two
-    # texts by id equi-joins — never a cross product, never Python
-    lv_docs = docs.limit(300).select(F.col("doc_id").alias("id"), "text")
-    lv_cands = dedup.minhash_lsh_pairs(lv_docs, id_col="id", threshold=0.2)
-    lv = dedup.levenshtein_verified_pairs(
-        lv_cands.select("id_a", "id_b"), lv_docs, max_dist=8, id_col="id"
-    )
-    lv_plan = executed(lv)
-    notes = [
-        check("lev verify: no CartesianProduct", "CartesianProduct" not in lv_plan),
-        check("lev verify: no BroadcastNestedLoopJoin",
-              "BroadcastNestedLoopJoin" not in lv_plan),
-        check("lev verify: no Python (JVM levenshtein expression)",
-              "EvalPython" not in lv_plan and "InPandas" not in lv_plan),
-    ]
-    sections.append(("Levenshtein verify (equi-join text attach, JVM distance)",
-                     lv_plan, notes))
-
-    # Event-stream analytics: the as-of join must be ONE shuffle on the key
-    # (union-tag + window carry), never a range/nested-loop join
-    from log_analysis_spark.operators import sketches as sk_ops
-    from log_analysis_spark.operators import timeseries as ts_ops
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    ao = ts_ops.asof_join(
-        ev.filter(F.col("event_type") == "error"),
-        ev.filter(F.col("event_type") == "purchase"),
+# the as-of join is ONE shuffle on the key (union-tag + window carry)
+section(
+    "As-of join (single key shuffle, window carry)",
+    ("asof: no CartesianProduct", no_cartesian),
+    ("asof: no BroadcastNestedLoopJoin", no_nested_loop),
+    ("asof: no SortMergeJoin/ShuffledHashJoin (window carry, not a join)",
+     lacks("SortMergeJoin", "ShuffledHashJoin")),
+    ("asof: exactly one key-partitioned exchange", shuffles_exactly(1, keyed="_k#|user_id#")),
+    ("asof: zero Python", no_python),
+    build=lambda x: timeseries.asof_join(
+        x.ev.filter(F.col("event_type") == "error"),
+        x.ev.filter(F.col("event_type") == "purchase"),
         "user_id",
         ["value", "event_id"],
         right_order="event_id",
-    )
-    ao_plan = executed(ao)
-    ao_shufs = shuffle_schemas(ao)
-    key_shufs = [s for s in ao_shufs if "_k" in s[1] or "user_id" in s[0]]
-    notes = [
-        check("asof: no CartesianProduct", "CartesianProduct" not in ao_plan),
-        check("asof: no BroadcastNestedLoopJoin",
-              "BroadcastNestedLoopJoin" not in ao_plan),
-        check("asof: no SortMergeJoin/ShuffledHashJoin (window carry, not a join)",
-              "SortMergeJoin" not in ao_plan and "ShuffledHashJoin" not in ao_plan),
-        check("asof: exactly one key-partitioned exchange",
-              len(key_shufs) == 1, f"shuffles={ao_shufs}"),
-        check("asof: zero Python",
-              "EvalPython" not in ao_plan and "InPandas" not in ao_plan),
-    ]
-    sections.append(("As-of join (single key shuffle, window carry)",
-                     ao_plan, notes))
+    ),
+)
 
-    # Snapshot diff: the full-outer join carries (id, 16 B fingerprint) —
-    # document text must not appear in ANY exchange
-    sd = corpus.snapshot_diff(docs, docs, "doc_id", ["text", "lang", "source"])
-    sd_shufs = shuffle_schemas(sd)
-    wide = [s for s in sd_shufs if any(c == "text" for c in s[1])]
-    notes = [
-        check("snapshot_diff: no exchange carries text",
-              not wide, f"shuffles={sd_shufs}"),
-        check("snapshot_diff: zero Python",
-              "EvalPython" not in executed(sd)),
-    ]
-    sections.append(("Snapshot diff (fingerprint-only join payload)",
-                     executed(sd), notes))
+section(
+    "Snapshot diff (fingerprint-only join payload)",
+    ("snapshot_diff: no exchange carries text", shuffles_exclude("text")),
+    ("snapshot_diff: zero Python", no_python),
+    build=lambda x: corpus.snapshot_diff(x.docs, x.docs, "doc_id", ["text", "lang", "source"]),
+)
 
-    # Sketches: KMV global = TakeOrderedAndProject; KMV grouped shuffles
-    # only (group, 8 B hash); CMS probe = broadcast join
-    kmv_g = sk_ops.kmv_sketch(ev, "props", k=64)
-    kmv_grp = sk_ops.kmv_sketch(ev, "props", k=64, group="event_type")
-    grp_shufs = shuffle_schemas(kmv_grp)
-    cms = sk_ops.cms_estimate(
-        sk_ops.cms_sketch(ev, "user_id", depth=4, width=256),
-        ev.select("user_id").distinct(),
-        "user_id",
-        depth=4,
-        width=256,
-    )
-    cms_plan = executed(cms)
-    q = sk_ops.hist_quantiles(ev, "value", [0.5, 0.99], resolution=0.25,
-                              group="event_type")
-    q_shufs = shuffle_schemas(q)
-    notes = [
-        check("kmv global: TakeOrderedAndProject (no single-partition sort)",
-              "TakeOrderedAndProject" in executed(kmv_g)),
-        check("kmv grouped: every exchange carries only (group, hash)",
-              all(set(c for c in cols) <= {"event_type", "h", "_rk"}
-                  for _, cols in grp_shufs),
-              f"shuffles={grp_shufs}"),
-        check("cms probe: broadcast join (sketch side bounded at d*w rows)",
-              "BroadcastHashJoin" in cms_plan),
-        check("hist_quantiles: exchanges carry cells, not values",
-              all("value" not in cols for _, cols in q_shufs),
-              f"shuffles={q_shufs}"),
-    ]
-    sections.append(("Sketches (KMV bottom-k, CMS broadcast probe, "
-                     "histogram quantiles)", cms_plan, notes))
 
-    # Hard-negative mining (production path): whole-batch Arrow matmul over
-    # the corpus scan, candidates only in the shuffle — no |corpus|x|Q| join
-    hn = similarity.hard_negatives_matmul(
-        emb, emb.filter(F.col("vec_id") % 50 == 0), k=3
-    )
-    hn_plan = executed(hn)
-    notes = [
-        check("hard_negatives_matmul: no CartesianProduct",
-              "CartesianProduct" not in hn_plan),
-        check("hard_negatives_matmul: no BroadcastNestedLoopJoin",
-              "BroadcastNestedLoopJoin" not in hn_plan),
-        check("hard_negatives_matmul: whole-batch Arrow stage present",
-              "InPandas" in hn_plan or "ArrowEvalPython" in hn_plan),
-    ]
-    sections.append(("Hard-negative mining (batched matmul, candidate-only "
-                     "shuffle)", hn_plan, notes))
-
-    # Session-9 batch 2: expectations (row-local rules = ONE scan), bigram
-    # LM (pair-keyed shuffles, never text), funnel + transitions (one key
-    # shuffle each), weighted sample (TakeOrderedAndProject)
-    from log_analysis_spark.operators import expectations as exp_ops
-    from log_analysis_spark.operators import textstats as ts2
-    from log_analysis_spark.operators import windows_ops as wops
-
-    scan_rep = exp_ops.check_expectations(
-        ev,
-        [
-            exp_ops.not_null("value"),
-            exp_ops.accepted_values("event_type", ["click", "view"]),
-            exp_ops.in_range("value", 0.0, 100.0),
-            exp_ops.min_rows(10),
-        ],
-    )
-    scan_plan = executed(scan_rep)
-    bg = ts2.bigram_surprise(docs)
-    bg_shufs = shuffle_schemas(bg)
-    fnl = ts_ops.funnel_steps(
-        ev, "user_id", "ts", "event_type", ["signup", "view"], "event_id"
-    )
-    fnl_shufs = shuffle_schemas(fnl)
-    trans = wops.transition_counts(ev, "user_id", ["ts", "event_id"], "event_type")
-    trans_shufs = shuffle_schemas(trans)
-    ws = corpus.weighted_sample(docs, "n_chars", k=50)
-    notes = [
-        check("expectations (row-local rules): zero hashpartitioning exchanges"
-              " — one scan, one 1-row aggregate",
-              not [s for s in shuffle_schemas(scan_rep)
-                   if "hashpartitioning" in s[0]],
-              f"shuffles={shuffle_schemas(scan_rep)}"),
-        check("expectations: zero Python", "EvalPython" not in scan_plan),
-        check("bigram LM: no exchange carries document text",
-              all("text" not in cols for _, cols in bg_shufs),
-              f"shuffles={[c for _, c in bg_shufs]}"),
-        check("funnel: exactly one key shuffle",
-              len([s for s in fnl_shufs if "hashpartitioning" in s[0]]) == 1
-              and "InPandas" not in executed(fnl),
-              f"shuffles={fnl_shufs}"),
-        check("transitions: exactly one key shuffle (lag window)",
-              len([s for s in trans_shufs if "hashpartitioning(user_id" in s[0]]) == 1,
-              f"shuffles={trans_shufs}"),
-        check("weighted sample: TakeOrderedAndProject (no global sort)",
-              "TakeOrderedAndProject" in executed(ws)),
-    ]
-    sections.append(("Session-9 ops (expectations, bigram LM, funnel, "
-                     "transitions, weighted sample)", scan_plan, notes))
-
-    # Joins batch 3: bloom prefilter (JVM bit tests, 1-row bitmap
-    # broadcast), skew-aware split (broadcast hot half + shuffle cold
-    # half), OHLC (one algebraic aggregate, no window)
-    bdims = (
-        ev.select("user_id").distinct()
-        .filter(F.col("user_id") % 17 == 0)
-        .withColumn("tag", F.lit("x"))
-    )
-    bj = joins_ops.bloom_prefiltered_join(ev, bdims, "user_id", m_bits=1 << 16)
-    bj_plan = executed(bj)
-    sj = joins_ops.skew_aware_join(
-        ev,
-        ev.select("user_id").distinct().withColumn("tag", F.lit("y")),
-        "user_id",
-        threshold_frac=0.0067,
-    )
-    sj_plan = executed(sj)
-    oh = ts_ops.downsample_ohlc(ev, "event_type", "ts", "value", "event_id", 86400)
-    oh_shufs = shuffle_schemas(oh)
-    notes = [
-        check("bloom join: zero Python (bit tests are JVM expressions)",
-              "EvalPython" not in bj_plan and "InPandas" not in bj_plan),
-        check("bloom join: prefilter precedes the equi-join "
-              "(bitmap element_at in a Filter above the scan)",
-              "element_at" in bj_plan and "Filter" in bj_plan),
-        check("skew join: broadcast hot half + union with shuffle cold half",
-              "BroadcastHashJoin" in sj_plan and "Union" in sj_plan),
-        check("ohlc: single narrow aggregate, no window",
-              "Window" not in executed(oh)
-              and all("value" not in cols or "_first" not in cols
-                      for _, cols in oh_shufs)
-              and len(oh_shufs) == 1,
-              f"shuffles={[(p.split(',')[0], c) for p, c in oh_shufs]}"),
-    ]
-    sections.append(("Joins batch 3 (bloom prefilter, skew split) + OHLC",
-                     bj_plan, notes))
-
-    # Round-4 batch 4: int8 quantized ANN (candidate shuffle carries only
-    # (ids, integer score) — never a vector column) + integer PageRank
-    # (per-iteration broadcast rank join, no cross product)
-    from log_analysis_spark.operators import graph as graph_ops
-
-    qq = emb.filter(F.col("vec_id") % 50 == 0)
-    qt_mm = similarity.quantized_topk_matmul(emb, qq, k=3)
-    qt_shufs = shuffle_schemas(qt_mm)
-    qt_plan = executed(qt_mm)
-    pr_edges = (
-        ev.groupBy(
-            F.col("event_type").alias("src"),
-            (F.col("user_id") % 7).cast("string").alias("dst"),
-        ).agg(F.count("*").alias("w"))
-    )
-    pr = graph_ops.pagerank(pr_edges, n_iters=3)
-    pr_plan = executed(pr)
-    notes = [
-        check("quantized topk: no embedding/vector column in any exchange",
-              all("embedding" not in c and "qvec" not in c and "unit" not in c
-                  for _, cols in qt_shufs for c in cols),
-              f"shuffles={[(p.split(',')[0], c) for p, c in qt_shufs]}"),
-        check("quantized topk: corpus codes never collected "
-              "(one mapInPandas scan feeds the rank window)",
-              "InPandas" in qt_plan and "CartesianProduct" not in qt_plan),
-        check("pagerank: every iteration joins ranks by broadcast "
-              "(3 iters -> >=3 BroadcastHashJoins)",
-              pr_plan.count("BroadcastHashJoin") >= 3),
-        check("pagerank: no cross product at any iteration",
-              "CartesianProduct" not in pr_plan
-              and "BroadcastNestedLoopJoin" not in pr_plan),
-    ]
-    from log_analysis_spark.operators import textstats as ts_mod
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    tfidf = ts_mod.tfidf_top_terms(docs, m=3)
-    tfidf_shufs = shuffle_schemas(tfidf)
-    lpa = graph_ops.label_propagation(pr_edges, n_iters=3)
-    lpa_plan = executed(lpa)
-    notes += [
-        check("tfidf: document text never enters an exchange",
-              all("text" not in c for _, cols in tfidf_shufs for c in cols),
-              f"shuffles={[c for _, c in tfidf_shufs]}"),
-        check("tfidf: the only SinglePartition exchange is the one-row "
-              "corpus-total count (per-doc rank window never globalizes)",
-              all(cols == ["count"] for p, cols in tfidf_shufs
-                  if "SinglePartition" in p)
-              and sum("SinglePartition" in p for p, _ in tfidf_shufs) <= 1,
-              f"singles={[c for p, c in tfidf_shufs if 'SinglePartition' in p]}"),
-        check("label propagation: per-round broadcast label join, "
-              "no cross product",
-              lpa_plan.count("BroadcastHashJoin") >= 3
-              and "CartesianProduct" not in lpa_plan),
-    ]
-    tri = graph_ops.triangle_counts(pr_edges)
-    tri_plan = executed(tri)
-    tri_shufs = shuffle_schemas(tri)
-    notes += [
-        check("triangles: equi-joins only (no cross product / BNLJ)",
-              "CartesianProduct" not in tri_plan
-              and "BroadcastNestedLoopJoin" not in tri_plan),
-        # event_type/_groupingexpression belong to the upstream
-        # edge-BUILD aggregate (counting transitions), not the triangle
-        # machinery — every triangle join/agg exchange is node-ids only.
-        check("triangles: every exchange carries only node-id columns "
-              "(plus the upstream edge-build grouping keys)",
-              all(set(cols) <= {"a", "b", "c", "node", "count", "src", "dst",
-                                "event_type", "_groupingexpression"}
-                  for _, cols in tri_shufs),
-              f"shuffles={[c for _, c in tri_shufs]}"),
-    ]
-    sections.append(("Quantized ANN (narrow candidates) + integer PageRank",
-                     qt_plan, notes))
-
-    # ---- HLL sketch / burst detection / URL gate shapes -------------------
-    from log_analysis_spark.operators import sketches as sk_ops
-    from log_analysis_spark.operators import timeseries as ts_ops2
-    from log_analysis_spark.operators import urls as urls_ops
-    import __spark_entry__ as entrymod
-
-    hll = sk_ops.hll_distinct(ev, "user_id", p=12, group="event_type")
-    hll_plan = executed(hll)
-    hll_shufs = shuffle_schemas(hll)
-    burst = ts_ops2.burst_hours(ev, "ts", "event_type", n_trail=24, z=3)
-    burst_shufs = shuffle_schemas(burst)
-    url_gate = urls_ops.blocklist_filter(
-        urls_ops.with_url_domains(
-            entrymod._docs_with_urls(spark, sf_dir)
+@section(
+    "Sketches (KMV bottom-k, CMS broadcast probe, histogram quantiles)",
+    ("kmv global: TakeOrderedAndProject (no single-partition sort)", "kmv",
+     has("TakeOrderedAndProject")),
+    ("kmv grouped: every exchange carries only (group, hash)", "kmv_grouped",
+     shuffles_within("event_type", "h", "_rk")),
+    ("cms probe: broadcast join (sketch side bounded at d*w rows)", "cms",
+     has("BroadcastHashJoin")),
+    ("hist_quantiles: exchanges carry cells, not values", "quantiles",
+     shuffles_exclude("value")),
+)
+def _sketches(x):
+    ev = x.ev
+    cms = sketches.cms_sketch(ev, "user_id", depth=4, width=256)
+    return {
+        "cms": sketches.cms_estimate(
+            cms, ev.select("user_id").distinct(), "user_id", depth=4, width=256
         ),
-        ["tracker.com"],
-    )
-    url_plan = executed(url_gate)
-    notes = [
-        check("hll grouped sketch: pure aggregation — no per-group rank "
-              "window anywhere in the plan (the grouped-KMV cost this "
-              "sketch exists to avoid)",
-              "Window" not in hll_plan),
-        check("hll: every exchange carries only (group, bucket, rho) "
-              "register rows / estimate columns — never the value column",
-              all("user_id" not in c for _, cols in hll_shufs for c in cols),
-              f"shuffles={[c for _, c in hll_shufs]}"),
-        check("burst detection: the raw event stream is never windowed — "
-              "every exchange carries only (key, hour, count/spine) "
-              "columns, no event-level column",
-              all(set(cols) <= {"key", "hour_id", "cnt", "count",
-                                "min", "max"}
-                  for _, cols in burst_shufs),
-              f"shuffles={[c for _, c in burst_shufs]}"),
-        check("url blocklist gate: scan-fused pure projection — zero "
-              "exchanges, zero Python",
-              "Exchange" not in url_plan and "InPandas" not in url_plan
-              and "BatchEvalPython" not in url_plan),
+        "kmv": sketches.kmv_sketch(ev, "props", k=64),
+        "kmv_grouped": sketches.kmv_sketch(ev, "props", k=64, group="event_type"),
+        "quantiles": sketches.hist_quantiles(
+            ev, "value", [0.5, 0.99], resolution=0.25, group="event_type"
+        ),
+    }
+
+
+section(
+    "Hard-negative mining (batched matmul, candidate-only shuffle)",
+    ("hard_negatives_matmul: no CartesianProduct", no_cartesian),
+    ("hard_negatives_matmul: no BroadcastNestedLoopJoin", no_nested_loop),
+    ("hard_negatives_matmul: whole-batch Arrow stage present",
+     any_of(has("InPandas"), has("ArrowEvalPython"))),
+    build=lambda x: similarity.hard_negatives_matmul(
+        x.emb, x.emb.filter(F.col("vec_id") % 50 == 0), k=3
+    ),
+)
+
+
+@section(
+    "Session-9 ops (expectations, bigram LM, funnel, transitions, weighted sample)",
+    ("expectations (row-local rules): zero hashpartitioning exchanges"
+     " — one scan, one 1-row aggregate", "expectations",
+     shuffles_at_most(0, keyed="hashpartitioning")),
+    ("expectations: zero Python", "expectations", no_python),
+    ("bigram LM: no exchange carries document text", "bigram", shuffles_exclude("text")),
+    ("funnel: exactly one key shuffle", "funnel",
+     all_of(shuffles_exactly(1, keyed="hashpartitioning"), no_python)),
+    ("transitions: exactly one key shuffle (lag window)", "transitions",
+     shuffles_exactly(1, keyed=r"hashpartitioning\(user_id")),
+    ("weighted sample: TakeOrderedAndProject (no global sort)", "weighted",
+     has("TakeOrderedAndProject")),
+)
+def _session9(x):
+    ev = x.ev
+    rules = [
+        expectations.not_null("value"),
+        expectations.accepted_values("event_type", ["click", "view"]),
+        expectations.in_range("value", 0.0, 100.0),
+        expectations.min_rows(10),
     ]
-    sections.append(
-        ("HLL registers / temporal burst detection / URL domain gate",
-         hll_plan, notes)
-    )
+    return {
+        "expectations": expectations.check_expectations(ev, rules),
+        "bigram": textstats.bigram_surprise(x.docs),
+        "funnel": timeseries.funnel_steps(
+            ev, "user_id", "ts", "event_type", ["signup", "view"], "event_id"
+        ),
+        "transitions": windows_ops.transition_counts(
+            ev, "user_id", ["ts", "event_id"], "event_type"
+        ),
+        "weighted": corpus.weighted_sample(x.docs, "n_chars", k=50),
+    }
 
-    # ---- template mining / CUSUM drift / path rollup shapes ---------------
-    from log_analysis_spark.operators import templates as tmpl_ops
 
-    tm = tmpl_ops.mine_templates(turns, "text")
-    tm_plan = executed(tm)
-    tm_shufs = shuffle_schemas(tm)
-    cus = ts_ops2.cusum_hours(ev, "ts", "event_type", k_milli=300, h_mult=2)
-    cus_plan = executed(cus)
-    cus_shufs = shuffle_schemas(cus)
-    roll = urls_ops.path_prefix_rollup(parsed, "url_path", max_depth=4)
-    roll_plan = executed(roll)
-    roll_shufs = shuffle_schemas(roll)
-    notes = [
-        check("template mining: the raw line text never enters an "
-              "exchange — shuffles carry only (n_tok, head, pos, tok) "
-              "group/position cells and their aggregates",
-              all("text" not in cols and "_tk" not in cols
-                  for _, cols in tm_shufs),
-              f"shuffles={[c for _, c in tm_shufs]}"),
-        check("template mining: zero Python in the plan",
-              "InPandas" not in tm_plan and "EvalPython" not in tm_plan),
-        check("cusum drift: no SinglePartition exchange — the prefix-sum "
-              "reflection runs per key, never globally ordered",
-              "SinglePartition" not in str([p for p, _ in cus_shufs])),
-        check("cusum drift: every exchange carries only (key, hour, "
-              "count/spine) columns — the event stream itself is never "
-              "windowed",
-              all(set(cols) <= {"key", "hour_id", "cnt", "count",
-                                "min", "max", "_mn", "_mx"}
-                  for _, cols in cus_shufs),
-              f"shuffles={[c for _, c in cus_shufs]}"),
-        check("path rollup: two-phase aggregate — partial HashAggregate "
-              "before the (depth, prefix) exchange collapses hot prefixes "
-              "map-side",
-              roll_plan.count("HashAggregate") >= 2),
-        check("path rollup: exchanges carry only (depth, prefix, count) — "
-              "never the text or full-path row",
-              all("text" not in cols and "url_path" not in cols
-                  for _, cols in roll_shufs),
-              f"shuffles={[c for _, c in roll_shufs]}"),
-    ]
-    sections.append(
-        ("Template mining / CUSUM drift / path rollup", tm_plan, notes)
-    )
+@section(
+    "Joins batch 3 (bloom prefilter, skew split) + OHLC",
+    ("bloom join: zero Python (bit tests are JVM expressions)", "bloom", no_python),
+    ("bloom join: prefilter precedes the equi-join "
+     "(bitmap element_at in a Filter above the scan)", "bloom",
+     all_of(has("element_at"), has("Filter"))),
+    ("skew join: broadcast hot half + union with shuffle cold half", "skew",
+     all_of(has("BroadcastHashJoin"), has("Union"))),
+    ("ohlc: single narrow aggregate, no window", "ohlc",
+     all_of(lacks("Window"), shuffles_exclude("value"), shuffles_exactly(1))),
+)
+def _joins3(x):
+    ev = x.ev
+    users = ev.select("user_id").distinct()
+    dims = users.filter(F.col("user_id") % 17 == 0).withColumn("tag", F.lit("x"))
+    return {
+        "bloom": joins.bloom_prefiltered_join(ev, dims, "user_id", m_bits=1 << 16),
+        "skew": joins.skew_aware_join(
+            ev, users.withColumn("tag", F.lit("y")), "user_id", threshold_frac=0.0067
+        ),
+        "ohlc": timeseries.downsample_ohlc(
+            ev, "event_type", "ts", "value", "event_id", 86400
+        ),
+    }
 
-    # ---- phrase search / embedding outliers / badwords gate ---------------
-    from log_analysis_spark.operators import retrieval as retr_ops
-    from log_analysis_spark.operators import similarity as sim_ops
-    from log_analysis_spark.operators import textstats as ts_stats
 
-    docs_t = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    ph = retr_ops.phrase_search(docs_t, "the data")
-    ph_plan = executed(ph)
-    ph_shufs = shuffle_schemas(ph)
-    emb_t = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    cents8 = sim_ops.md5_seed_centroids(emb_t, n_centroids=8)
-    outl = sim_ops.centroid_outliers(emb_t, cents8, max_cos_micro=80_000)
-    outl_plan = executed(outl)
-    bw = ts_stats.badwords_gate(docs_t, ["vector"], max_hits=0)
-    bw_plan = executed(bw)
-    notes = [
-        check("phrase search: no window, no join — anchor coverage is "
-              "pure aggregation",
-              "Window" not in ph_plan and "Join" not in ph_plan),
-        check("phrase search: document text never enters an exchange — "
-              "shuffles carry only (doc, anchor/offset) cells",
-              all("text" not in cols for _, cols in ph_shufs),
-              f"shuffles={[c for _, c in ph_shufs]}"),
-        check("embedding outliers: scan-fused projection — zero "
-              "exchanges, zero Python (centroids are literals)",
-              "Exchange" not in outl_plan and "InPandas" not in outl_plan
-              and "EvalPython" not in outl_plan),
-        check("badwords gate: scan-fused projection — zero exchanges, "
-              "zero Python (blocklist is a literal IN-list)",
-              "Exchange" not in bw_plan and "InPandas" not in bw_plan
-              and "EvalPython" not in bw_plan),
-    ]
-    sections.append(
-        ("Phrase search / embedding outliers / badwords gate",
-         ph_plan, notes)
-    )
+def _tool_edges(ev):
+    """A small weighted graph over events: event_type → user_id mod 7."""
+    return ev.groupBy(
+        F.col("event_type").alias("src"),
+        (F.col("user_id") % 7).cast("string").alias("dst"),
+    ).agg(F.count("*").alias("w"))
 
-    # ---- tool-path motifs / entropy profile / correlation ------------------
-    from log_analysis_spark.operators import expectations as exp_ops
-    from log_analysis_spark.operators import windows_ops as w_ops
 
-    motifs = w_ops.state_path_ngrams(
-        parsed, "conv_id", ["turn_idx"], "tool", k=3, exclude=["-"]
-    )
-    motif_plan = executed(motifs)
-    motif_shufs = shuffle_schemas(motifs)
-    entropy = exp_ops.column_entropy(ev, ["event_type", "user_id"])
-    ent_shufs = shuffle_schemas(entropy)
-    corr = exp_ops.column_correlation(ev, "value", "user_id")
-    corr_plan = executed(corr)
-    notes = [
-        check("tool-path motifs: exactly one key exchange feeds the lead "
-              "window; the path count is map-side combinable (two-phase "
-              "HashAggregate)",
-              sum(1 for p, _ in motif_shufs if "conv_id" in p) == 1
-              and motif_plan.count("HashAggregate") >= 2,
-              f"shuffles={[p[:40] for p, _ in motif_shufs]}"),
-        check("entropy profile: exchanges carry only (column, value, "
-              "count) cells / per-column aggregates — never a source row",
-              all(set(cols) <= {"column", "val", "c", "count", "sum",
-                                "isEmpty", "n", "n_distinct", "_sclc"}
-                  for _, cols in ent_shufs),
-              f"shuffles={[c for _, c in ent_shufs]}"),
-        check("correlation: ONE algebraic aggregate — no window, no "
-              "join; the only exchange is the one-row final merge",
-              "Window" not in corr_plan and "Join" not in corr_plan),
-    ]
-    sections.append(
-        ("Tool-path motifs / entropy profile / correlation",
-         motif_plan, notes)
-    )
+# int8 ANN candidates carry (ids, integer score), never a vector; graph
+# iterations join ranks/labels by broadcast
+@section(
+    "Quantized ANN (narrow candidates) + integer PageRank",
+    ("quantized topk: no embedding/vector column in any exchange", "quantized",
+     shuffles_exclude("*embedding*", "*qvec*", "*unit*")),
+    ("quantized topk: corpus codes never collected "
+     "(one mapInPandas scan feeds the rank window)", "quantized",
+     all_of(has("InPandas"), no_cartesian)),
+    ("pagerank: every iteration joins ranks by broadcast "
+     "(3 iters -> >=3 BroadcastHashJoins)", "pagerank",
+     count_at_least("BroadcastHashJoin", 3)),
+    ("pagerank: no cross product at any iteration", "pagerank", no_cross),
+    ("tfidf: document text never enters an exchange", "tfidf", shuffles_exclude("*text*")),
+    ("tfidf: the only SinglePartition exchange is the one-row "
+     "corpus-total count (per-doc rank window never globalizes)", "tfidf",
+     all_of(shuffles_within("count", keyed="SinglePartition"),
+            shuffles_at_most(1, keyed="SinglePartition"))),
+    ("label propagation: per-round broadcast label join, "
+     "no cross product", "labels", all_of(count_at_least("BroadcastHashJoin", 3), no_cartesian)),
+    ("triangles: equi-joins only (no cross product / BNLJ)", "triangles", no_cross),
+    # event_type/_groupingexpression belong to the upstream edge-BUILD
+    # aggregate, not the triangle machinery
+    ("triangles: every exchange carries only node-id columns "
+     "(plus the upstream edge-build grouping keys)", "triangles",
+     shuffles_within("a", "b", "c", "node", "count", "src", "dst",
+                     "event_type", "_groupingexpression")),
+)
+def _quantized_graph(x):
+    edges = _tool_edges(x.ev)
+    return {
+        "quantized": similarity.quantized_topk_matmul(
+            x.emb, x.emb.filter(F.col("vec_id") % 50 == 0), k=3
+        ),
+        "pagerank": graph.pagerank(edges, n_iters=3),
+        "tfidf": textstats.tfidf_top_terms(x.docs, m=3),
+        "labels": graph.label_propagation(edges, n_iters=3),
+        "triangles": graph.triangle_counts(edges),
+    }
 
-    # ---- Pettitt changepoint / association rules / weighted SP round ------
-    from log_analysis_spark.operators import graph as graph_ops
-    from log_analysis_spark.operators import itemsets as itemsets_ops
-    from log_analysis_spark.operators import timeseries as ts_ops
 
-    pett = ts_ops.pettitt_changepoint(ev, "ts", "event_type")
-    pett_shufs = shuffle_schemas(pett)
-    pett_ok = all(
-        not ({"event_id", "user_id", "value", "ts"} & set(cols))
-        for _, cols in pett_shufs
-    )
-    tool_rows = parsed.filter(F.col("tool") != "-")
-    rules = itemsets_ops.pair_association_rules(
-        tool_rows, "conv_id", "tool", min_pair_count=2
-    )
-    rules_plan = executed(rules)
-    rules_shufs = shuffle_schemas(rules)
-    rules_ok = all(
-        not ({"text", "raw", "turn_class", "http_code"} & set(cols))
-        for _, cols in rules_shufs
-    )
-    sp_base = ev.select("event_type").distinct()
-    sp_edges = sp_base.select(
+@section(
+    "HLL registers / temporal burst detection / URL domain gate",
+    ("hll grouped sketch: pure aggregation — no per-group rank "
+     "window anywhere in the plan (the grouped-KMV cost this "
+     "sketch exists to avoid)", "hll", lacks("Window")),
+    ("hll: every exchange carries only (group, bucket, rho) "
+     "register rows / estimate columns — never the value column", "hll",
+     shuffles_exclude("*user_id*")),
+    ("burst detection: the raw event stream is never windowed — "
+     "every exchange carries only (key, hour, count/spine) "
+     "columns, no event-level column", "burst",
+     shuffles_within("key", "hour_id", "cnt", "count", "min", "max")),
+    ("url blocklist gate: scan-fused pure projection — zero "
+     "exchanges, zero Python", "urls", all_of(no_exchange, no_python)),
+)
+def _hll_burst_urls(x):
+    docs = urls.with_url_domains(entry._docs_with_urls(x.spark, x.sf_dir))
+    return {
+        "hll": sketches.hll_distinct(x.ev, "user_id", p=12, group="event_type"),
+        "burst": timeseries.burst_hours(x.ev, "ts", "event_type", n_trail=24, z=3),
+        "urls": urls.blocklist_filter(docs, ["tracker.com"]),
+    }
+
+
+section(
+    "Template mining / CUSUM drift / path rollup",
+    ("template mining: the raw line text never enters an "
+     "exchange — shuffles carry only (n_tok, head, pos, tok) "
+     "group/position cells and their aggregates", "templates",
+     shuffles_exclude("text", "_tk")),
+    ("template mining: zero Python in the plan", "templates", no_python),
+    ("cusum drift: no SinglePartition exchange — the prefix-sum "
+     "reflection runs per key, never globally ordered", "cusum",
+     shuffles_at_most(0, keyed="SinglePartition")),
+    ("cusum drift: every exchange carries only (key, hour, "
+     "count/spine) columns — the event stream itself is never "
+     "windowed", "cusum",
+     shuffles_within("key", "hour_id", "cnt", "count", "min", "max", "_mn", "_mx")),
+    ("path rollup: two-phase aggregate — partial HashAggregate "
+     "before the (depth, prefix) exchange collapses hot prefixes "
+     "map-side", "rollup", count_at_least("HashAggregate", 2)),
+    ("path rollup: exchanges carry only (depth, prefix, count) — "
+     "never the text or full-path row", "rollup", shuffles_exclude("text", "url_path")),
+    build=lambda x: {
+        "templates": templates.mine_templates(x.turns, "text"),
+        "cusum": timeseries.cusum_hours(x.ev, "ts", "event_type", k_milli=300, h_mult=2),
+        "rollup": urls.path_prefix_rollup(x.parsed, "url_path", max_depth=4),
+    },
+)
+
+section(
+    "Phrase search / embedding outliers / badwords gate",
+    ("phrase search: no window, no join — anchor coverage is "
+     "pure aggregation", "phrase", lacks("Window", "Join")),
+    ("phrase search: document text never enters an exchange — "
+     "shuffles carry only (doc, anchor/offset) cells", "phrase", shuffles_exclude("text")),
+    ("embedding outliers: scan-fused projection — zero "
+     "exchanges, zero Python (centroids are literals)", "outliers",
+     all_of(no_exchange, no_python)),
+    ("badwords gate: scan-fused projection — zero exchanges, "
+     "zero Python (blocklist is a literal IN-list)", "badwords",
+     all_of(no_exchange, no_python)),
+    build=lambda x: {
+        "phrase": retrieval.phrase_search(x.docs, "the data"),
+        "outliers": similarity.centroid_outliers(x.emb, x.cents, max_cos_micro=80_000),
+        "badwords": textstats.badwords_gate(x.docs, ["vector"], max_hits=0),
+    },
+)
+
+section(
+    "Tool-path motifs / entropy profile / correlation",
+    ("tool-path motifs: exactly one key exchange feeds the lead "
+     "window; the path count is map-side combinable (two-phase "
+     "HashAggregate)", "motifs",
+     all_of(shuffles_exactly(1, keyed="conv_id"), count_at_least("HashAggregate", 2))),
+    ("entropy profile: exchanges carry only (column, value, "
+     "count) cells / per-column aggregates — never a source row", "entropy",
+     shuffles_within("column", "val", "c", "count", "sum", "isEmpty", "n", "n_distinct",
+                     "_sclc")),
+    ("correlation: ONE algebraic aggregate — no window, no "
+     "join; the only exchange is the one-row final merge", "correlation",
+     lacks("Window", "Join")),
+    build=lambda x: {
+        "motifs": windows_ops.state_path_ngrams(
+            x.parsed, "conv_id", ["turn_idx"], "tool", k=3, exclude=["-"]
+        ),
+        "entropy": expectations.column_entropy(x.ev, ["event_type", "user_id"]),
+        "correlation": expectations.column_correlation(x.ev, "value", "user_id"),
+    },
+)
+
+
+@section(
+    "Pettitt changepoint / association rules / weighted-SP round",
+    ("pettitt: every exchange carries spine cells (key, hour, "
+     "cnt, ranks) — never a raw event row", "pettitt",
+     shuffles_exclude("event_id", "user_id", "value", "ts")),
+    ("association rules: exchanges carry basket/pair rows only — "
+     "no transcript payload column ever shuffles", "rules",
+     all_of(shuffles_exclude("text", "raw", "turn_class", "http_code"), no_cartesian)),
+    ("association rules: item totals and group count attach via "
+     "broadcast (vocabulary-sized by construction)", "rules",
+     count_at_least("Broadcast(Hash|NestedLoop)Join", 3)),
+    ("weighted-SP relax round: the join carries only (node, dist) "
+     "x (s, d, w) — the frontier, never the graph payload; min is "
+     "two-phase", "relax",
+     all_of(shuffles_within("node", "dist", "s", "d", "w", "min", "count", "event_type"),
+            count_at_least("HashAggregate", 2), no_cartesian)),
+)
+def _pettitt_rules_relax(x):
+    types = x.ev.select("event_type").distinct()
+    edges = types.select(
         F.col("event_type").alias("s"),
         F.col("event_type").alias("d"),
         F.lit(1).cast("long").alias("w"),
     )
-    sp_frontier = sp_base.select(
-        F.col("event_type").alias("node"), F.lit(0).cast("long").alias("dist")
-    )
-    relax = graph_ops._relax(sp_frontier, sp_edges)
-    relax_plan = executed(relax)
-    relax_shufs = shuffle_schemas(relax)
-    relax_ok = all(
-        set(cols) <= {"node", "dist", "s", "d", "w", "min", "count",
-                      "event_type"}
-        for _, cols in relax_shufs
-    )
-    notes = [
-        check("pettitt: every exchange carries spine cells (key, hour, "
-              "cnt, ranks) — never a raw event row",
-              pett_ok, f"shuffles={[c for _, c in pett_shufs]}"),
-        check("association rules: exchanges carry basket/pair rows only — "
-              "no transcript payload column ever shuffles",
-              rules_ok and "CartesianProduct" not in rules_plan,
-              f"shuffles={[c for _, c in rules_shufs]}"),
-        check("association rules: item totals and group count attach via "
-              "broadcast (vocabulary-sized by construction)",
-              rules_plan.count("BroadcastHashJoin")
-              + rules_plan.count("BroadcastNestedLoopJoin") >= 3),
-        check("weighted-SP relax round: the join carries only (node, dist) "
-              "x (s, d, w) — the frontier, never the graph payload; min is "
-              "two-phase",
-              relax_ok and relax_plan.count("HashAggregate") >= 2
-              and "CartesianProduct" not in relax_plan,
-              f"shuffles={[c for _, c in relax_shufs]}"),
-    ]
-    sections.append(
-        ("Pettitt changepoint / association rules / weighted-SP round",
-         relax_plan, notes)
-    )
-
-    # ---- heavy hitters / gauge-series ops (session-13 round) ---------------
-    from log_analysis_spark.operators import sketches as sk_ops
-
-    hh_toks = ts_stats.token_table(docs_t)
-    hh = sk_ops.heavy_hitters(hh_toks, "tok", k=50)
-    hh_plan = executed(hh)
-    hh_shufs = shuffle_schemas(hh)
-    hh_ok = all(
-        set(cols) <= {"tok", "count", "item", "sum", "cnt", "_n", "isEmpty"}
-        for _, cols in hh_shufs
-    )
-    twa = ts_ops.time_weighted_avg(ev, "ts", "user_id", "value", "event_id")
-    twa_plan = executed(twa)
-    twa_shufs = shuffle_schemas(twa)
-    twa_ok = all(
-        not ({"value", "event_type", "text"} & set(cols))
-        for _, cols in twa_shufs
-    )
-    gauge = ts_ops.hourly_gauge(ev, "ts", "event_type", "value")
-    gf = ts_ops.gapfill_linear(gauge)
-    gf_plan = executed(gf)
-    gf_shufs = shuffle_schemas(gf)
-    gf_ok = all(
-        set(cols) <= {"key", "hour_id", "sum", "count", "min", "max"}
-        for _, cols in gf_shufs
-    )
-    sa = ts_ops.seasonal_anomalies(ev, "ts", "event_type", n_mad=3)
-    sa_plan = executed(sa)
-    sa_shufs = shuffle_schemas(sa)
-    sa_ok = all(
-        set(cols) <= {"key", "hour_id", "count", "min", "max"}
-        for _, cols in sa_shufs
-    )
-    notes = [
-        check("heavy hitters: the token tail never shuffles — exchanges "
-              "carry only candidate/partial-count cells (tok,count / item "
-              "/ 1-row total), candidate semi-probe and total attach are "
-              "broadcast, no cross product",
-              hh_ok and "CartesianProduct" not in hh_plan
-              and hh_plan.count("BroadcastHashJoin") >= 1
-              and hh_plan.count("BroadcastNestedLoopJoin") == 1,
-              f"shuffles={[c for _, c in hh_shufs]}"),
-        check("heavy hitters: Misra-Gries candidate pass is shuffle-free "
-              "Arrow batches — mapInPandas appears with no exchange below "
-              "it (<= k+1 rows/partition by construction)",
-              "InPandas" in hh_plan),
-        check("time-weighted avg: exactly one key exchange feeds the "
-              "LOCF window, the DECIMAL(38,0) aggregate merges partials "
-              "on the same key — no raw gauge column in any exchange",
-              twa_ok and twa_plan.count("Window") == 1
-              and len(twa_shufs) == 2,
-              f"shuffles={[c for _, c in twa_shufs]}"),
-        check("gap-fill: both carry directions collapse into ONE Window "
-              "node over one key exchange; the only shuffles are the "
-              "map-side-combined gauge/min-max partials (spine cells, "
-              "never an event row)",
-              gf_ok and gf_plan.count("Window") == 1,
-              f"shuffles={[c for _, c in gf_shufs]}"),
-        check("seasonal median/MAD: raw events shuffle ONCE (hourly-count "
-              "partials); all median/MAD attach joins are spine-sized "
-              "broadcasts, no cartesian",
-              sa_ok and "CartesianProduct" not in sa_plan
-              and sa_plan.count("BroadcastHashJoin") >= 3,
-              f"shuffles={[c for _, c in sa_shufs]}"),
-    ]
-    sections.append(
-        ("Heavy hitters / time-weighted avg / gap-fill / seasonal MAD",
-         hh_plan, notes)
-    )
-
-    # ---- exact-integer statistics round (sessions 13-14) -------------------
-    # The shared discipline under audit: raw rows fold into bounded VALUE
-    # CELLS in ONE map-side-combined aggregate; every window / single-
-    # partition exchange runs over CELLS, never rows; zero Python.
-    from log_analysis_spark.operators import expectations as exp_ops2
-
-    trend = ts_ops.trend_test(ev, "ts", "event_type")
-    trend_plan = executed(trend)
-    mw = exp_ops2.rank_compare(ev, "value", "event_type", "view", "click")
-    mw_shufs = shuffle_schemas(mw)
-    mw_cells_only = all(
-        "value" not in cols and "event_type" not in cols
-        for _, cols in mw_shufs
-    )
-    ks = exp_ops2.ks_test(
-        ev.filter(F.col("event_type") == "purchase"),
-        ev.filter(F.col("event_type") == "signup"),
-        "value",
-    )
-    ks_shufs = shuffle_schemas(ks)
-    chi = exp_ops2.chi2_independence(
-        ev.select("event_type", F.floor(F.hour("ts") / 6).alias("day_q")),
-        "event_type", "day_q", crit_micro=21_026_000,
-    )
-    chi_shufs = shuffle_schemas(chi)
-    chi_cells_only = all(
-        set(cols) <= {"_a", "_b", "o", "r", "c", "n", "ka", "kb",
-                      "_groupingexpression", "count"}
-        for _, cols in chi_shufs
-    )
-    auc = exp_ops2.ranking_auc(
-        ev.select(F.col("value").alias("s"),
-                  (F.col("event_type") == "purchase").alias("y")),
-        "s", "y",
-    )
-    auc_shufs = shuffle_schemas(auc)
-    gini = exp_ops2.gini_concentration(ev, "user_id")
-    gini_shufs = shuffle_schemas(gini)
-    gini_cells_only = all(
-        set(cols) <= {"x", "m", "_below", "_nk", "user_id", "count"}
-        for _, cols in gini_shufs
-    )
-    kan = exp_ops2.k_anonymity_violations(ev, ["user_id", "event_type"], 10)
-    kan_shufs = shuffle_schemas(kan)
-    cell_plans = "\n".join(
-        executed(d) for d in (mw, ks, chi, auc, gini, kan)
-    )
-    notes = [
-        check("Mann-Kendall trend: no cartesian; its one Python stage is "
-              "the whole-batch Arrow pairwise-slope fold (never "
-              "row-at-a-time)",
-              "CartesianProduct" not in trend_plan
-              and "BatchEvalPython" not in trend_plan),
-        check("Mann-Whitney: exchanges carry value CELLS (micro value, "
-              "conditional counts), never the raw value/group columns",
-              mw_cells_only, f"shuffles={[c for _, c in mw_shufs]}"),
-        check("KS drift: cumulative window runs over cells — every "
-              "single-partition exchange is cell-sized",
-              all("value" not in cols for _, cols in ks_shufs),
-              f"shuffles={[c for _, c in ks_shufs]}"),
-        check("chi-square: one (a,b) cell count; margin windows over "
-              "cells only (r/c/n attach), rows never re-shuffle",
-              chi_cells_only, f"shuffles={[c for _, c in chi_shufs]}"),
-        check("ranking AUC: rank_compare's cell plan — conditional cell "
-              "counts then a cell window, raw scores absent from "
-              "exchanges",
-              all("s" not in cols and "value" not in cols
-                  for _, cols in auc_shufs),
-              f"shuffles={[c for _, c in auc_shufs]}"),
-        check("gini: one narrow (key,count) partial shuffle, then "
-              "count-value cells; no global row_number — the only "
-              "ordered window is over cells",
-              gini_cells_only, f"shuffles={[c for _, c in gini_shufs]}"),
-        check("k-anonymity: one narrow (qi) count shuffle, no window",
-              len([s for s in kan_shufs if "hashpartitioning" in s[0]]) == 1
-              and "Window" not in executed(kan),
-              f"shuffles={[c for _, c in kan_shufs]}"),
-        check("cell-fold stats (MW/KS/chi2/AUC/gini/k-anon): zero Python "
-              "anywhere",
-              "EvalPython" not in cell_plans and "InPandas" not in cell_plans),
-    ]
-    sections.append(
-        ("Exact-integer statistics (trend, MW-U, KS, chi2, AUC, gini, "
-         "k-anon)", executed(chi), notes)
-    )
-
-    # ---- ACF / rolling actives / burn-rate (session-14) --------------------
-    acf = ts_ops.autocorrelation(ev, "ts", "event_type", lags=(1, 24))
-    acf_plan = executed(acf)
-    acf_shufs = shuffle_schemas(acf)
-    rau = ts_ops.rolling_active_users(ev, "ts", "user_id", 7)
-    rau_plan = executed(rau)
-    rau_shufs = shuffle_schemas(rau)
-    rau_ok = all(
-        set(cols) <= {"_u", "_d", "day_id", "count", "_mx", "max",
-                      "_groupingexpression"}
-        for _, cols in rau_shufs
-    )
-    brn = ts_ops.burn_rate_alerts(
-        ev.withColumn("is_err", F.col("event_type") == "error"),
-        "ts", "is_err", slo_milli=800, thr_milli=1000, long_h=6, short_h=1,
-    )
-    brn_plan = executed(brn)
-    brn_shufs = shuffle_schemas(brn)
-    brn_ok = all(
-        set(cols) <= {"hour_id", "tot", "err", "count", "sum", "min",
-                      "max", "_mn", "_mx"}
-        for _, cols in brn_shufs
-    )
-    notes = [
-        check("autocorrelation: ALL lags come from ONE window pass per "
-              "key (exactly one Window node), spine cells only in "
-              "exchanges, zero Python",
-              acf_plan.count("Window") == 1
-              and "EvalPython" not in acf_plan
-              and all("value" not in c and "props" not in c
-                      for _, c in acf_shufs),
-              f"shuffles={[c for _, c in acf_shufs]}"),
-        check("rolling actives: raw stream compresses to DISTINCT "
-              "(user,day) BEFORE the x7 expand — exchanges carry "
-              "presence/expansion cells, the max-day attach is a 1-row "
-              "broadcast",
-              rau_ok and "BroadcastNestedLoopJoin" in rau_plan,
-              f"shuffles={[c for _, c in rau_shufs]}"),
-        check("burn-rate: one hourly conditional-count aggregate; both "
-              "rolling windows in ONE Window node over dense spine "
-              "cells; zero Python",
-              brn_ok and brn_plan.count("Window") == 1
-              and "EvalPython" not in brn_plan,
-              f"shuffles={[c for _, c in brn_shufs]}"),
-    ]
-    sections.append(
-        ("ACF / rolling distinct actives / SLO burn-rate", brn_plan, notes)
-    )
-
-    # ---- PSI drift (session-15) --------------------------------------------
-    from log_analysis_spark.operators import expectations as exp_ops
-
-    psi = exp_ops.psi_drift(
-        ev.filter(F.col("event_type") == "purchase"),
-        ev.filter(F.col("event_type") == "signup"),
-        "value", width=0.5,
-    )
-    psi_plan = executed(psi)
-    psi_shufs = shuffle_schemas(psi)
-    notes = [
-        check("psi: raw values compress to per-bin counts at the scan "
-              "side — no exchange carries the value column, only "
-              "(bin, count/ca/cb) cells",
-              all("value" not in cols and "props" not in cols
-                  for _, cols in psi_shufs),
-              f"shuffles={[c for _, c in psi_shufs]}"),
-        check("psi: the totals attach is a 1-row broadcast onto the "
-              "bounded bin table (no bin-table re-shuffle), zero Python",
-              "BroadcastNestedLoopJoin" in psi_plan
-              and "EvalPython" not in psi_plan
-              and "InPandas" not in psi_plan),
-    ]
-    sections.append(("PSI distribution drift", psi_plan, notes))
-
-    # ---- session-16: readability / softdedup / hybrid RRF / overlap --------
-    from log_analysis_spark.operators import dedup as dedup_ops
-    from log_analysis_spark.operators import graph as graph_ops
-    from log_analysis_spark.operators import retrieval as retr_ops
-    from log_analysis_spark.operators import textstats as ts_ops
-    from log_analysis_spark.operators import windows_ops as w_ops
-
-    read_plan = executed(ts_ops.readability(docs))
-    notes = [
-        check("readability: pure zero-shuffle zero-Python projection "
-              "(fuses into the parquet scan at 100 TB)",
-              "Exchange" not in read_plan
-              and "EvalPython" not in read_plan
-              and "InPandas" not in read_plan),
-    ]
-    sections.append(("Flesch/FK readability", read_plan, notes))
-
-    soft = dedup_ops.softdedup_weights(docs)
-    soft_shufs = shuffle_schemas(soft)
-    notes = [
-        check("softdedup: every exchange is keyed by (md5, length) — "
-              "document text never shuffles",
-              len(soft_shufs) > 0
-              and all("text" not in cols for _, cols in soft_shufs),
-              f"shuffles={[c for _, c in soft_shufs]}"),
-    ]
-    sections.append(("SoftDedup reweighting", executed(soft), notes))
-
-    bm_q = spark.createDataFrame(
-        entry.BM25_QUERIES, "query_id int, query_text string"
-    )
-    fused = retr_ops.rrf_fuse(
-        [retr_ops.bm25_topk(docs, bm_q, k=20),
-         retr_ops.jaccard_topk(docs, bm_q, k=20)],
-        k=5,
-    )
-    fused_plan = executed(fused)
-    fused_shufs = shuffle_schemas(fused)
-    notes = [
-        check("hybrid RRF: query vocabulary probes ride broadcast joins "
-              "(postings filtered at the scan), no SortMergeJoin anywhere",
-              fused_plan.count("BroadcastHashJoin") >= 3
-              and "SortMergeJoin" not in fused_plan),
-        check("hybrid RRF: no exchange carries document text — only "
-              "ids, terms and integer score cells",
-              all("text" not in cols for _, cols in fused_shufs),
-              f"shuffles={[c for _, c in fused_shufs]}"),
-        check("hybrid RRF: zero per-row Python",
-              "EvalPython" not in fused_plan and "InPandas" not in fused_plan),
-    ]
-    sections.append(("Hybrid retrieval (BM25 + Jaccard, RRF fusion)", fused_plan, notes))
-
-    seq16 = parsed.filter(F.col("tool") != "-")
-    ov_edges = w_ops.transition_counts(seq16, "conv_id", ["turn_idx"], "tool")
-    ov = graph_ops.neighborhood_overlap(
-        ov_edges.selectExpr("from_state AS src", "to_state AS dst")
-    )
-    ov_shufs = shuffle_schemas(ov)
-    ov_ok_cols = all(
-        set(cols) <= {"node", "nb", "node_a", "node_b", "d", "_da", "_db",
-                      "n_common", "count", "conv_id", "turn_idx", "tool",
-                      "from_state", "to_state", "n"}
-        for _, cols in ov_shufs
-    )
-    notes = [
-        check("neighborhood overlap: every exchange carries node-id pairs "
-              "and counts only (the triangle_counts discipline); wedge "
-              "join is an equi-join on the shared neighbor — no cross "
-              "product",
-              ov_ok_cols and "CartesianProduct" not in executed(ov),
-              f"shuffles={[c for _, c in ov_shufs]}"),
-    ]
-    sections.append(("Neighborhood-overlap similarity", executed(ov), notes))
-
-    # ---- session-16 batch 2: containment / cluster PSI / attribution ------
-    from log_analysis_spark.operators import similarity as sim_ops
-    from log_analysis_spark.operators import timeseries as tsr_ops
-
-    cont = dedup_ops.containment_pairs(docs, k=3, threshold=0.9)
-    cont_plan = executed(cont)
-    cont_shufs = shuffle_schemas(cont)
-    notes = [
-        check("containment: candidates from the asymmetric prefix-filter "
-              "equi-join — no CartesianProduct/BNLJ, no exchange carries "
-              "raw document text (shingle SETS attach by id for the exact "
-              "verify, the ngram_jaccard discipline)",
-              "CartesianProduct" not in cont_plan
-              and "BroadcastNestedLoopJoin" not in cont_plan
-              and all("text" not in cols for _, cols in cont_shufs)),
-    ]
-    sections.append(("Containment pairs (asymmetric prefix filter)", cont_plan, notes))
-
-    emb16 = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    cents16 = sim_ops.md5_seed_centroids(emb16, n_centroids=8)
-    cpsi = sim_ops.cluster_histogram_psi(
-        emb16.filter(F.col("label") < 5), emb16.filter(F.col("label") >= 5), cents16
-    )
-    cpsi_shufs = shuffle_schemas(cpsi)
-    notes = [
-        check("cluster PSI: assignment is projection-only — no exchange "
-              "carries an embedding/unit vector, only (bin, count) cells "
-              "and the one-row totals",
-              all("embedding" not in cols and "unit" not in cols
-                  for _, cols in cpsi_shufs),
-              f"shuffles={[c for _, c in cpsi_shufs]}"),
-    ]
-    sections.append(("Embedding cluster-histogram PSI", executed(cpsi), notes))
-
-    ev16 = spark.read.parquet(f"{sf_dir}/events.parquet")
-    attr = tsr_ops.attribution(ev16)
-    attr_plan = executed(attr)
-    attr_shufs = shuffle_schemas(attr)
-    notes = [
-        check("attribution: hour-bucketed equi interval join (no "
-              "CartesianProduct/BNLJ), exactly one Window pass, exchanges "
-              "never carry the events payload columns (value/props pruned "
-              "at the scan)",
-              "CartesianProduct" not in attr_plan
-              and "BroadcastNestedLoopJoin" not in attr_plan
-              and attr_plan.count("Window") == 1
-              and all("value" not in cols and "props" not in cols
-                      for _, cols in attr_shufs),
-              f"shuffles={[c for _, c in attr_shufs]}"),
-    ]
-    sections.append(("Multi-touch attribution", attr_plan, notes))
-
-    # ---- MMR re-rank -------------------------------------------------------
-    mmr = sim_ops.mmr_rerank(
-        sim_ops.cosine_topk(
-            emb16, emb16.filter(F.col("vec_id") % 50 == 0), k=20
-        ).join(
-            sim_ops.with_unit_vec(emb16).select(
-                F.col("vec_id").alias("corpus_id"), "unit"
-            ),
-            "corpus_id",
+    frontier = types.select(F.col("event_type").alias("node"), F.lit(0).cast("long").alias("dist"))
+    return {
+        "relax": graph._relax(frontier, edges),
+        "pettitt": timeseries.pettitt_changepoint(x.ev, "ts", "event_type"),
+        "rules": itemsets.pair_association_rules(
+            x.parsed.filter(F.col("tool") != "-"), "conv_id", "tool", min_pair_count=2
         ),
+    }
+
+
+@section(
+    "Heavy hitters / time-weighted avg / gap-fill / seasonal MAD",
+    ("heavy hitters: the token tail never shuffles — exchanges "
+     "carry only candidate/partial-count cells (tok,count / item "
+     "/ 1-row total), candidate semi-probe and total attach are "
+     "broadcast, no cross product", "hh",
+     all_of(shuffles_within("tok", "count", "item", "sum", "cnt", "_n", "isEmpty"),
+            no_cartesian, count_at_least("BroadcastHashJoin", 1),
+            count_exactly("BroadcastNestedLoopJoin", 1))),
+    ("heavy hitters: Misra-Gries candidate pass is shuffle-free "
+     "Arrow batches — mapInPandas appears with no exchange below "
+     "it (<= k+1 rows/partition by construction)", "hh", has("InPandas")),
+    ("time-weighted avg: exactly one key exchange feeds the "
+     "LOCF window, the DECIMAL(38,0) aggregate merges partials "
+     "on the same key — no raw gauge column in any exchange", "twa",
+     all_of(shuffles_exclude("value", "event_type", "text"), count_exactly("Window", 1),
+            shuffles_exactly(2))),
+    ("gap-fill: both carry directions collapse into ONE Window "
+     "node over one key exchange; the only shuffles are the "
+     "map-side-combined gauge/min-max partials (spine cells, "
+     "never an event row)", "gapfill",
+     all_of(shuffles_within("key", "hour_id", "sum", "count", "min", "max"),
+            count_exactly("Window", 1))),
+    ("seasonal median/MAD: raw events shuffle ONCE (hourly-count "
+     "partials); all median/MAD attach joins are spine-sized "
+     "broadcasts, no cartesian", "seasonal",
+     all_of(shuffles_within("key", "hour_id", "count", "min", "max"), no_cartesian,
+            count_at_least("BroadcastHashJoin", 3))),
+)
+def _heavy_hitters_gauges(x):
+    ev = x.ev
+    return {
+        "hh": sketches.heavy_hitters(textstats.token_table(x.docs), "tok", k=50),
+        "twa": timeseries.time_weighted_avg(ev, "ts", "user_id", "value", "event_id"),
+        "gapfill": timeseries.gapfill_linear(
+            timeseries.hourly_gauge(ev, "ts", "event_type", "value")
+        ),
+        "seasonal": timeseries.seasonal_anomalies(ev, "ts", "event_type", n_mad=3),
+    }
+
+
+# raw rows fold into bounded VALUE CELLS in ONE map-side-combined
+# aggregate; every window / single-partition exchange runs over cells
+@section(
+    "Exact-integer statistics (trend, MW-U, KS, chi2, AUC, gini, k-anon)",
+    ("Mann-Kendall trend: no cartesian; its one Python stage is "
+     "the whole-batch Arrow pairwise-slope fold (never "
+     "row-at-a-time)", "trend", all_of(no_cartesian, lacks("BatchEvalPython"))),
+    ("Mann-Whitney: exchanges carry value CELLS (micro value, "
+     "conditional counts), never the raw value/group columns", "mw",
+     shuffles_exclude("value", "event_type")),
+    ("KS drift: cumulative window runs over cells — every "
+     "single-partition exchange is cell-sized", "ks", shuffles_exclude("value")),
+    ("chi-square: one (a,b) cell count; margin windows over "
+     "cells only (r/c/n attach), rows never re-shuffle", "chi2",
+     shuffles_within("_a", "_b", "o", "r", "c", "n", "ka", "kb", "_groupingexpression",
+                     "count")),
+    ("ranking AUC: rank_compare's cell plan — conditional cell "
+     "counts then a cell window, raw scores absent from "
+     "exchanges", "auc", shuffles_exclude("s", "value")),
+    ("gini: one narrow (key,count) partial shuffle, then "
+     "count-value cells; no global row_number — the only "
+     "ordered window is over cells", "gini",
+     shuffles_within("x", "m", "_below", "_nk", "user_id", "count")),
+    ("k-anonymity: one narrow (qi) count shuffle, no window", "kanon",
+     all_of(shuffles_exactly(1, keyed="hashpartitioning"), lacks("Window"))),
+    ("cell-fold stats (MW/KS/chi2/AUC/gini/k-anon): zero Python "
+     "anywhere", "cells", no_python),
+)
+def _exact_stats(x):
+    ev = x.ev
+    frames = {
+        "chi2": expectations.chi2_independence(
+            ev.select("event_type", F.floor(F.hour("ts") / 6).alias("day_q")),
+            "event_type", "day_q", crit_micro=21_026_000,
+        ),
+        "trend": timeseries.trend_test(ev, "ts", "event_type"),
+        "mw": expectations.rank_compare(ev, "value", "event_type", "view", "click"),
+        "ks": expectations.ks_test(
+            ev.filter(F.col("event_type") == "purchase"),
+            ev.filter(F.col("event_type") == "signup"),
+            "value",
+        ),
+        "auc": expectations.ranking_auc(
+            ev.select(F.col("value").alias("s"), (F.col("event_type") == "purchase").alias("y")),
+            "s", "y",
+        ),
+        "gini": expectations.gini_concentration(ev, "user_id"),
+        "kanon": expectations.k_anonymity_violations(ev, ["user_id", "event_type"], 10),
+    }
+    cells = ("mw", "ks", "chi2", "auc", "gini", "kanon")
+    return {**frames, "cells": Plan(*(frames[k] for k in cells))}
+
+
+@section(
+    "ACF / rolling distinct actives / SLO burn-rate",
+    ("autocorrelation: ALL lags come from ONE window pass per "
+     "key (exactly one Window node), spine cells only in "
+     "exchanges, zero Python", "acf",
+     all_of(count_exactly("Window", 1), no_python, shuffles_exclude("value", "props"))),
+    ("rolling actives: raw stream compresses to DISTINCT "
+     "(user,day) BEFORE the x7 expand — exchanges carry "
+     "presence/expansion cells, the max-day attach is a 1-row "
+     "broadcast", "actives",
+     all_of(shuffles_within("_u", "_d", "day_id", "count", "_mx", "max",
+                            "_groupingexpression"),
+            has("BroadcastNestedLoopJoin"))),
+    ("burn-rate: one hourly conditional-count aggregate; both "
+     "rolling windows in ONE Window node over dense spine "
+     "cells; zero Python", "burn",
+     all_of(shuffles_within("hour_id", "tot", "err", "count", "sum", "min", "max",
+                            "_mn", "_mx"),
+            count_exactly("Window", 1), no_python)),
+)
+def _acf_actives_burn(x):
+    ev = x.ev
+    return {
+        "burn": timeseries.burn_rate_alerts(
+            ev.withColumn("is_err", F.col("event_type") == "error"),
+            "ts", "is_err", slo_milli=800, thr_milli=1000, long_h=6, short_h=1,
+        ),
+        "acf": timeseries.autocorrelation(ev, "ts", "event_type", lags=(1, 24)),
+        "actives": timeseries.rolling_active_users(ev, "ts", "user_id", 7),
+    }
+
+
+section(
+    "PSI distribution drift",
+    ("psi: raw values compress to per-bin counts at the scan "
+     "side — no exchange carries the value column, only "
+     "(bin, count/ca/cb) cells", shuffles_exclude("value", "props")),
+    ("psi: the totals attach is a 1-row broadcast onto the "
+     "bounded bin table (no bin-table re-shuffle), zero Python",
+     all_of(has("BroadcastNestedLoopJoin"), no_python)),
+    build=lambda x: expectations.psi_drift(
+        x.ev.filter(F.col("event_type") == "purchase"),
+        x.ev.filter(F.col("event_type") == "signup"),
+        "value", width=0.5,
+    ),
+)
+
+section(
+    "Flesch/FK readability",
+    ("readability: pure zero-shuffle zero-Python projection "
+     "(fuses into the parquet scan at 100 TB)", all_of(no_exchange, no_python)),
+    build=lambda x: textstats.readability(x.docs),
+)
+
+section(
+    "SoftDedup reweighting",
+    ("softdedup: every exchange is keyed by (md5, length) — "
+     "document text never shuffles", all_of(shuffles_at_least(1), shuffles_exclude("text"))),
+    build=lambda x: dedup.softdedup_weights(x.docs),
+)
+
+
+@section(
+    "Hybrid retrieval (BM25 + Jaccard, RRF fusion)",
+    ("hybrid RRF: query vocabulary probes ride broadcast joins "
+     "(postings filtered at the scan), no SortMergeJoin anywhere",
+     all_of(count_at_least("BroadcastHashJoin", 3), lacks("SortMergeJoin"))),
+    ("hybrid RRF: no exchange carries document text — only "
+     "ids, terms and integer score cells", shuffles_exclude("text")),
+    ("hybrid RRF: zero per-row Python", no_python),
+)
+def _hybrid_rrf(x):
+    queries = x.spark.createDataFrame(entry.BM25_QUERIES, "query_id int, query_text string")
+    return retrieval.rrf_fuse(
+        [retrieval.bm25_topk(x.docs, queries, k=20),
+         retrieval.jaccard_topk(x.docs, queries, k=20)],
         k=5,
     )
-    mmr_plan = executed(mmr)
-    notes = [
-        check("MMR: the only Python stage is the per-query whole-group "
-              "Arrow rerank over BOUNDED candidate lists (top-20/query) — "
-              "no per-row Python, nothing corpus-sized enters the group "
-              "exchange (candidates only)",
-              "FlatMapGroupsInPandas" in mmr_plan
-              and "BatchEvalPython" not in mmr_plan),
-    ]
-    sections.append(("MMR diverse re-ranking", mmr_plan, notes))
 
-    # ---- session-16 batch 3: l-diversity / benford / concurrency / loop ---
-    ldv = exp_ops.l_diversity_violations(
-        ev16.withColumn("day", F.date_trunc("day", F.col("ts"))),
-        ["user_id", "day"], "event_type", 3,
-    )
-    ldv_shufs = shuffle_schemas(ldv)
-    benf = exp_ops.benford_deviation(ev16, "value")
-    benf_plan = executed(benf)
-    benf_shufs = shuffle_schemas(benf)
-    conc = tsr_ops.concurrency_timeline(
-        tsr_ops.session_intervals(ev16, "ts", "user_id", 1800,
-                                  ["ts", "event_id"])
-    )
-    conc_shufs = shuffle_schemas(conc)
-    loop = ts_ops.loop_detection(docs)
-    loop_plan = executed(loop)
-    notes = [
-        check("l-diversity: the two-phase count-distinct shuffles only "
-              "narrow (qi, sensitive) keys and counts — no payload column "
-              "in any exchange",
-              all("value" not in c and "props" not in c
-                  for _, c in ldv_shufs),
-              f"shuffles={[c for _, c in ldv_shufs]}"),
-        check("benford: one narrow (digit) count exchange + the 9-row "
-              "literal broadcast; zero Python; the raw value column never "
-              "shuffles",
-              all("value" not in c for _, c in benf_shufs)
-              and "EvalPython" not in benf_plan
-              and "InPandas" not in benf_plan,
-              f"shuffles={[c for _, c in benf_shufs]}"),
-        check("concurrency: the sweep shuffles interval ENDPOINTS only "
-              "(session aggregates, 2 rows/session) — no event payload "
-              "column in any exchange",
-              all("value" not in c and "props" not in c
-                  and "event_type" not in c for _, c in conc_shufs),
-              f"shuffles={[c for _, c in conc_shufs]}"),
-        check("loop detection: pure zero-shuffle zero-Python projection",
-              "Exchange" not in loop_plan
-              and "EvalPython" not in loop_plan
-              and "InPandas" not in loop_plan),
-    ]
-    sections.append(
-        ("l-diversity / Benford / concurrency sweep / loop detection",
-         benf_plan, notes)
-    )
 
-    # ---- session-16 batch 4: lang margin / diversity / backtest -----------
-    lm_plan = executed(ts_ops.with_lang_margin(docs))
-    div = ts_ops.distinct_ngram_ratio(docs, ns=(1, 2))
-    div_shufs = shuffle_schemas(div)
-    bt = tsr_ops.seasonal_naive_backtest(ev16, "ts", "event_type")
-    bt_plan = executed(bt)
-    bt_shufs = shuffle_schemas(bt)
-    notes = [
-        check("lang margin: zero-shuffle zero-Python projection",
-              "Exchange" not in lm_plan and "EvalPython" not in lm_plan
-              and "InPandas" not in lm_plan),
-        check("distinct-n diversity: grams shuffle as 16-byte md5 keys — "
-              "raw text/gram strings never enter an exchange",
-              all("text" not in c and "_g" not in c for _, c in div_shufs),
-              f"shuffles={[c for _, c in div_shufs]}"),
-        check("forecast backtest: ONE Window node serves every lag; "
-              "exchanges carry spine cells and (key, lag) aggregates only",
-              bt_plan.count("Window") == 1
-              and all("value" not in c and "props" not in c
-                      for _, c in bt_shufs),
-              f"shuffles={[c for _, c in bt_shufs]}"),
-    ]
-    sections.append(
-        ("Lang margin / distinct-n diversity / forecast backtest",
-         bt_plan, notes)
+@section(
+    "Neighborhood-overlap similarity",
+    ("neighborhood overlap: every exchange carries node-id pairs "
+     "and counts only (the triangle_counts discipline); wedge "
+     "join is an equi-join on the shared neighbor — no cross "
+     "product",
+     all_of(shuffles_within("node", "nb", "node_a", "node_b", "d", "_da", "_db", "n_common",
+                            "count", "conv_id", "turn_idx", "tool", "from_state",
+                            "to_state", "n"),
+            no_cartesian)),
+)
+def _neighborhood_overlap(x):
+    edges = windows_ops.transition_counts(
+        x.parsed.filter(F.col("tool") != "-"), "conv_id", ["turn_idx"], "tool"
     )
+    return graph.neighborhood_overlap(edges.selectExpr("from_state AS src", "to_state AS dst"))
 
-    # ---- interval x interval overlap join ---------------------------------
-    from log_analysis_spark.operators import joins as joins_ops
 
-    iv16 = tsr_ops.session_intervals(ev16, "ts", "user_id", 1800,
-                                     ["ts", "event_id"])
-    sess16 = iv16.select(
-        (F.col("user_id") * 100000 + F.col("sess_id")).alias("sid"),
-        "start_ts", "end_ts",
+section(
+    "Containment pairs (asymmetric prefix filter)",
+    ("containment: candidates from the asymmetric prefix-filter "
+     "equi-join — no CartesianProduct/BNLJ, no exchange carries "
+     "raw document text (shingle SETS attach by id for the exact "
+     "verify, the ngram_jaccard discipline)", all_of(no_cross, shuffles_exclude("text"))),
+    build=lambda x: dedup.containment_pairs(x.docs, k=3, threshold=0.9),
+)
+
+section(
+    "Embedding cluster-histogram PSI",
+    ("cluster PSI: assignment is projection-only — no exchange "
+     "carries an embedding/unit vector, only (bin, count) cells "
+     "and the one-row totals", shuffles_exclude("embedding", "unit")),
+    build=lambda x: similarity.cluster_histogram_psi(
+        x.emb.filter(F.col("label") < 5), x.emb.filter(F.col("label") >= 5), x.cents
+    ),
+)
+
+section(
+    "Multi-touch attribution",
+    ("attribution: hour-bucketed equi interval join (no "
+     "CartesianProduct/BNLJ), exactly one Window pass, exchanges "
+     "never carry the events payload columns (value/props pruned "
+     "at the scan)",
+     all_of(no_cross, count_exactly("Window", 1), shuffles_exclude("value", "props"))),
+    build=lambda x: timeseries.attribution(x.ev),
+)
+
+
+@section(
+    "MMR diverse re-ranking",
+    ("MMR: the only Python stage is the per-query whole-group "
+     "Arrow rerank over BOUNDED candidate lists (top-20/query) — "
+     "no per-row Python, nothing corpus-sized enters the group "
+     "exchange (candidates only)",
+     all_of(has("FlatMapGroupsInPandas"), lacks("BatchEvalPython"))),
+)
+def _mmr(x):
+    emb = x.emb
+    units = similarity.with_unit_vec(emb).select(F.col("vec_id").alias("corpus_id"), "unit")
+    cands = similarity.cosine_topk(emb, emb.filter(F.col("vec_id") % 50 == 0), k=20)
+    return similarity.mmr_rerank(cands.join(units, "corpus_id"), k=5)
+
+
+def _sessions(ev):
+    return timeseries.session_intervals(ev, "ts", "user_id", 1800, ["ts", "event_id"])
+
+
+@section(
+    "l-diversity / Benford / concurrency sweep / loop detection",
+    ("l-diversity: the two-phase count-distinct shuffles only "
+     "narrow (qi, sensitive) keys and counts — no payload column "
+     "in any exchange", "ldiv", shuffles_exclude("value", "props")),
+    ("benford: one narrow (digit) count exchange + the 9-row "
+     "literal broadcast; zero Python; the raw value column never "
+     "shuffles", "benford", all_of(shuffles_exclude("value"), no_python)),
+    ("concurrency: the sweep shuffles interval ENDPOINTS only "
+     "(session aggregates, 2 rows/session) — no event payload "
+     "column in any exchange", "concurrency",
+     shuffles_exclude("value", "props", "event_type")),
+    ("loop detection: pure zero-shuffle zero-Python projection", "loops",
+     all_of(no_exchange, no_python)),
+)
+def _ldiv_benford_concurrency_loops(x):
+    ev = x.ev
+    return {
+        "benford": expectations.benford_deviation(ev, "value"),
+        "ldiv": expectations.l_diversity_violations(
+            ev.withColumn("day", F.date_trunc("day", F.col("ts"))),
+            ["user_id", "day"], "event_type", 3,
+        ),
+        "concurrency": timeseries.concurrency_timeline(_sessions(ev)),
+        "loops": textstats.loop_detection(x.docs),
+    }
+
+
+section(
+    "Lang margin / distinct-n diversity / forecast backtest",
+    ("lang margin: zero-shuffle zero-Python projection", "margin",
+     all_of(no_exchange, no_python)),
+    ("distinct-n diversity: grams shuffle as 16-byte md5 keys — "
+     "raw text/gram strings never enter an exchange", "diversity",
+     shuffles_exclude("text", "_g")),
+    ("forecast backtest: ONE Window node serves every lag; "
+     "exchanges carry spine cells and (key, lag) aggregates only", "backtest",
+     all_of(count_exactly("Window", 1), shuffles_exclude("value", "props"))),
+    build=lambda x: {
+        "backtest": timeseries.seasonal_naive_backtest(x.ev, "ts", "event_type"),
+        "margin": textstats.with_lang_margin(x.docs),
+        "diversity": textstats.distinct_ngram_ratio(x.docs, ns=(1, 2)),
+    },
+)
+
+
+@section(
+    "Interval x interval overlap join",
+    ("interval overlap join: bucketed equi hash join — no "
+     "CartesianProduct/BroadcastNestedLoop anywhere in the plan", no_cross),
+)
+def _interval_overlap(x):
+    ev = x.ev
+    sessions = _sessions(ev).select(
+        (F.col("user_id") * 100000 + F.col("sess_id")).alias("sid"), "start_ts", "end_ts",
     )
-    anom16 = (
-        tsr_ops.burst_hours(ev16, "ts", "event_type", n_trail=24, z=3)
+    hour = F.col("hour_id") * 3600
+    anomalies = (
+        timeseries.burst_hours(ev, "ts", "event_type", n_trail=24, z=3)
         .filter(F.col("anomaly").isNotNull())
         .select(
-            F.concat_ws("#", "event_type",
-                        F.col("hour_id").cast("string")).alias("rid"),
-            F.timestamp_seconds(F.col("hour_id") * 3600).alias("r_start_ts"),
-            F.timestamp_seconds(F.col("hour_id") * 3600 + 3599).alias(
-                "r_end_ts"),
+            F.concat_ws("#", "event_type", F.col("hour_id").cast("string")).alias("rid"),
+            F.timestamp_seconds(hour).alias("r_start_ts"),
+            F.timestamp_seconds(hour + 3599).alias("r_end_ts"),
         )
     )
-    ovj = joins_ops.interval_overlap_join(sess16, anom16, "sid", "rid")
-    ovj_plan = executed(ovj)
-    notes = [
-        check("interval overlap join: bucketed equi hash join — no "
-              "CartesianProduct/BroadcastNestedLoop anywhere in the plan",
-              "CartesianProduct" not in ovj_plan
-              and "BroadcastNestedLoopJoin" not in ovj_plan),
-    ]
-    sections.append(("Interval x interval overlap join", ovj_plan, notes))
+    return joins.interval_overlap_join(sessions, anomalies, "sid", "rid")
 
-    # ---- session-17 operators ---------------------------------------------
-    from log_analysis_spark.operators import expectations as exp17
-    from log_analysis_spark.operators import sketches as sk17
-    from log_analysis_spark.operators import textstats as ts17
 
-    # sequence integrity: ONE group-keyed integer aggregate — no window,
-    # no sort, no text column in any exchange
-    seq = exp17.sequence_integrity(turns)
-    seq_plan = executed(seq)
-    seq_shufs = shuffle_schemas(seq)
-    notes = [
-        check("sequence integrity: no Window/Sort node — pure counting",
-              "Window" not in seq_plan),
-        check("sequence integrity: exchanges carry group/idx ints only, "
-              "never text",
-              all("text" not in cols for _p, cols in seq_shufs),
-              f"shuffles={[c for _p, c in seq_shufs]}"),
-    ]
-    sections.append(("Turn-sequence integrity audit", seq_plan, notes))
+section(
+    "Turn-sequence integrity audit",
+    ("sequence integrity: no Window/Sort node — pure counting", lacks("Window")),
+    ("sequence integrity: exchanges carry group/idx ints only, "
+     "never text", shuffles_exclude("text")),
+    build=lambda x: expectations.sequence_integrity(x.turns),
+)
 
-    # join-size planner: no exchange carries a wide payload — per-key
-    # counts, decimal-sum partials (sum/isEmpty pairs) and the 1-row fold
-    ev17 = spark.read.parquet(f"{sf_dir}/events.parquet").select("user_id")
-    jsz = sk17.join_size_estimate(ev17, ev17, "user_id", hh_k=128)
-    jsz_shufs = shuffle_schemas(jsz)
-    notes = [
-        check("join-size planner: every exchange carries only key/count/"
-              "aggregate-partial columns — never row payloads",
-              all(
-                  set(cols) <= {"k", "na", "nb", "item", "cnt", "n_part",
-                                "count", "sum", "isEmpty", "min", "max",
-                                "p", "_exact", "user_id"}
-                  for _p, cols in jsz_shufs
-              ),
-              f"shuffles={[c for _p, c in jsz_shufs]}"),
-    ]
-    sections.append(("End-biased join-size pre-flight", executed(jsz), notes))
 
-    # vocabulary drift: the token shuffle carries (tok, count, count);
-    # the top-k cut is TakeOrderedAndProject, never a global sort
-    vd = ts17.vocab_drift(
-        docs.filter(F.col("doc_id") % 7 != 0), docs.filter(F.col("doc_id") % 5 != 0),
+@section(
+    "End-biased join-size pre-flight",
+    ("join-size planner: every exchange carries only key/count/"
+     "aggregate-partial columns — never row payloads",
+     shuffles_within("k", "na", "nb", "item", "cnt", "n_part", "count", "sum", "isEmpty",
+                     "min", "max", "p", "_exact", "user_id")),
+)
+def _join_size(x):
+    users = x.ev.select("user_id")
+    return sketches.join_size_estimate(users, users, "user_id", hh_k=128)
+
+
+section(
+    "Cross-snapshot vocabulary drift",
+    ("vocab drift: top-k via TakeOrderedAndProject (no global sort)",
+     has("TakeOrderedAndProject")),
+    ("vocab drift: no exchange carries document text", shuffles_exclude("text")),
+    build=lambda x: textstats.vocab_drift(
+        x.docs.filter(F.col("doc_id") % 7 != 0), x.docs.filter(F.col("doc_id") % 5 != 0),
         top_k=50,
+    ),
+)
+
+# the waterfilling windows run over the |groups|-row stats table; the
+# doc-level cumsum is keyed by group
+section(
+    "Token-budget waterfilling mixture",
+    ("budget mix: no exchange carries document text", shuffles_exclude("text")),
+    ("budget mix: the per-doc cumsum exchange is KEYED by group "
+     "(data rows never funnel through a single partition; the "
+     "only SinglePartition stages are the |groups|-row "
+     "waterfilling scans)", shuffles_at_least(1, keyed="group")),
+    build=lambda x: corpus.budget_mix(
+        x.docs, {"en": 0.4, "de": 0.3, "zh": 0.3}, 5_000, mix_col="lang"
+    ),
+)
+
+
+@section(
+    "Dimensional cube + pivot",
+    ("cube: single Expand node feeds one aggregate (no repeated "
+     "scans per grouping set)", "cube",
+     all_of(count_at_least("Expand", 1), count_at_most("FileScan", 1))),
+    ("pivot: two narrow keyed exchanges (the partial (row, col) "
+     "count, then the row-keyed pivot) — map-side combine before "
+     "the pivot, no text in any exchange", "pivot",
+     all_of(shuffles_exactly(2), shuffles_keyed("role"), shuffles_exclude("*text*"))),
+)
+def _cube_pivot(x):
+    classes = ["error", "info", "request", "timing", "unknown"]
+    return {
+        "cube": aggregate.dimensional_rollup(x.parsed, ["turn_class", "role"]),
+        "pivot": aggregate.pivot_matrix(x.parsed, "role", "turn_class", classes),
+    }
+
+
+# ---- the runner --------------------------------------------------------------
+
+
+@contextlib.contextmanager
+def _audit_scope(spark):
+    """AQE off for the audit, and one cleanup path: AQE restored, the bucket
+    database dropped and every temp dir removed, even when a builder raises.
+
+    AQE leaves displayed plans as isFinalPlan=false (no WholeStageCodegen
+    wrapper shown pre-execution); the operator choices under audit
+    (broadcast, no cross product, two-phase agg) are decided before AQE."""
+    aqe = spark.conf.get(AQE)
+    spark.conf.set(AQE, "false")
+    root = tempfile.mkdtemp(prefix="explain_audit_")
+    try:
+        yield root
+    finally:
+        spark.conf.set(AQE, aqe)
+        spark.sql(f"DROP DATABASE IF EXISTS {BUCKET_DB} CASCADE")
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def audit(spark, sf_dir: str):
+    """Build every section's frames and evaluate its checks.  Returns
+    ``(sections, failures)``: ``(title, plan text, note lines)`` per section
+    and the FAIL lines.  Writes nothing."""
+    sections: list[tuple[str, str, list[str]]] = []
+    failures: list[str] = []
+    with _audit_scope(spark) as root:
+        x = Inputs(spark, sf_dir, root)
+        for title, build, checks in SECTIONS:
+            built = build(x)
+            frames = built if isinstance(built, dict) else {None: built}
+            plans = {k: f if isinstance(f, Plan) else Plan(f) for k, f in frames.items()}
+            notes = []
+            for name, *frame, pred in checks:
+                plan = plans[frame[0] if frame else None]
+                if pred(plan):
+                    notes.append(f"PASS  {name}")
+                else:
+                    shuffled = [cols for _part, cols in plan.shuffles]
+                    notes.append(f"FAIL  {name} — shuffles={shuffled}")
+                    failures.append(notes[-1])
+            sections.append((title, next(iter(plans.values())).text, notes))
+    return sections, failures
+
+
+def printable(text: str) -> str:
+    """Escape control characters (plan literals such as a NUL separator)
+    so EXPLAIN.md stays a text file."""
+    return "".join(
+        c if c.isprintable() or c == "\n" else c.encode("unicode_escape").decode("ascii")
+        for c in text
     )
-    vd_plan = executed(vd)
-    notes = [
-        check("vocab drift: top-k via TakeOrderedAndProject (no global sort)",
-              "TakeOrderedAndProject" in vd_plan),
-        check("vocab drift: no exchange carries document text",
-              all("text" not in cols for _p, cols in shuffle_schemas(vd))),
-    ]
-    sections.append(("Cross-snapshot vocabulary drift", vd_plan, notes))
 
-    # budget mixture: the waterfilling windows run over the |groups|-row
-    # stats table only; the doc-level cumsum is a KEYED window (partitioned
-    # by group — no corpus-wide single-partition funnel); no text in any
-    # exchange
-    bm = corpus.budget_mix(
-        docs, {"en": 0.4, "de": 0.3, "zh": 0.3}, 5_000, mix_col="lang"
-    )
-    bm_plan = executed(bm)
-    notes = [
-        check("budget mix: no exchange carries document text",
-              all("text" not in cols for _p, cols in shuffle_schemas(bm))),
-        check("budget mix: the per-doc cumsum exchange is KEYED by group "
-              "(data rows never funnel through a single partition; the "
-              "only SinglePartition stages are the |groups|-row "
-              "waterfilling scans)",
-              any("group" in p for p, _c in shuffle_schemas(bm))),
-    ]
-    sections.append(("Token-budget waterfilling mixture", bm_plan, notes))
 
-    # dimensional cube: ONE Expand + ONE aggregate exchange, never 2^dims
-    # scans; pivot: one row-key exchange
-    cube = agg.dimensional_rollup(parsed, ["turn_class", "role"])
-    cube_plan = executed(cube)
-    notes = [
-        check("cube: single Expand node feeds one aggregate (no repeated "
-              "scans per grouping set)",
-              cube_plan.count("Expand") >= 1
-              and cube_plan.count("FileScan") <= 1),
-        check("pivot: two narrow keyed exchanges (the partial (row, col) "
-              "count, then the row-keyed pivot) — map-side combine before "
-              "the pivot, no text in any exchange",
-              (lambda sh: len(sh) == 2
-               and all("role" in p for p, _c in sh)
-               and all("text" not in c for _p, cols in sh for c in cols))(
-                  shuffle_schemas(
-                      agg.pivot_matrix(parsed, "role", "turn_class",
-                                       ["error", "info", "request",
-                                        "timing", "unknown"])))),
-    ]
-    sections.append(("Dimensional cube + pivot", cube_plan, notes))
-
-    # ---- write EXPLAIN.md -------------------------------------------------
+def main() -> int:
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    sections, failures = audit(get_spark("explain-audit"), sf_dir)
     md = ["# EXPLAIN audit — physical plans vs 100 TB design intents",
           "",
           f"Generated by `python tools/explain_audit.py {sf_dir}`.  Every note",
           "line is asserted by the tool (exit 1 on FAIL), not hand-written.",
           ""]
     for title, plan, notes in sections:
-        md.append(f"## {title}")
-        md.append("")
-        md.extend(f"- {n}" for n in notes)
-        md.append("")
-        if plan != "(see notes)":
-            trimmed = "\n".join(plan.splitlines()[:40])
-            md.append("```\n" + trimmed + "\n```")
-            md.append("")
+        print("\n".join(notes))
+        trimmed = printable("\n".join(plan.splitlines()[:40]))
+        md += [f"## {title}", "", *(f"- {n}" for n in notes), "", f"```\n{trimmed}\n```", ""]
     with open(os.path.join(REPO, "EXPLAIN.md"), "w") as f:
         f.write("\n".join(md))
 
-    shutil.rmtree(tdir, ignore_errors=True)
     print(f"\n{len(failures)} failures — EXPLAIN.md written")
     return 1 if failures else 0
 
