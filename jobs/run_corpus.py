@@ -231,6 +231,7 @@ def main() -> None:
         urls,
     )
     from log_analysis_spark.session import get_spark
+    from log_analysis_spark.sources import sinks
 
     spark = get_spark("run_corpus", master=args.master)
     path = args.docs or f"{args.sf_dir}/documents.parquet"
@@ -324,8 +325,8 @@ def main() -> None:
     else:
         n_span = n_clean
 
+    bench = spark.read.parquet(args.bench) if args.bench else None
     if args.bench:
-        bench = spark.read.parquet(args.bench)
         flags = corpus.decontaminate(
             docs, bench, n=args.decontam_n, min_hits=args.decontam_min_hits
         ).select("doc_id", "contaminated")
@@ -341,7 +342,6 @@ def main() -> None:
     if args.fuzzy_decontam_threshold is not None:
         if not args.bench:
             raise SystemExit("--fuzzy-decontam-threshold requires --bench")
-        bench = spark.read.parquet(args.bench)
         fz = dedup.fuzzy_decontaminate(
             docs, bench, threshold=args.fuzzy_decontam_threshold
         ).select("doc_id", "contaminated")
@@ -490,38 +490,39 @@ def main() -> None:
     # docs feeds pack_shards AND the final join — persist so the sampled
     # scrubbed frame isn't recomputed on both sides
     docs, n_sampled = _materialize(docs)
+    counts = {
+        "n_input": n_input,
+        "n_after_repetition_filter": n_clean,
+        "n_after_gopher": n_gopher,
+        "n_after_domain_blocklist": n_blocked,
+        "n_after_badwords": n_badwords,
+        "n_after_span_dedup": n_span,
+        "n_after_decontamination": n_decontam,
+        "n_after_fuzzy_decontam": n_fuzzy,
+        "n_after_loop_gate": n_loop,
+        "n_after_ttr_gate": n_ttr,
+        "n_after_ppl_tiering": n_ppl,
+        "n_after_classifier": n_classifier,
+        "n_after_dsir": n_dsir,
+    }
     if n_sampled == 0:
-        # fail loudly: pack_shards would write an empty dataset and the
-        # read-back would die with an opaque schema-inference error
-        counts = {
-            "n_input": n_input,
-            "n_after_repetition_filter": n_clean,
-            "n_after_gopher": n_gopher,
-            "n_after_domain_blocklist": n_blocked,
-            "n_after_badwords": n_badwords,
-            "n_after_span_dedup": n_span,
-            "n_after_decontamination": n_decontam,
-            "n_after_fuzzy_decontam": n_fuzzy,
-            "n_after_loop_gate": n_loop,
-            "n_after_ttr_gate": n_ttr,
-            "n_after_ppl_tiering": n_ppl,
-            "n_after_classifier": n_classifier,
-            "n_after_dsir": n_dsir,
-            "n_after_sampling": n_sampled,
-        }
+        # fail loudly: pack_shards would write an empty dataset and every
+        # downstream reader would die with an opaque schema-inference error
         raise SystemExit(
             "no documents survived the stage chain; loosen the gate that "
-            f"first hit zero: {json.dumps(counts)}"
+            "first hit zero: "
+            f"{json.dumps({**counts, 'n_after_sampling': n_sampled})}"
         )
 
-    n_soft_dup = None
+    # the counts the job reports about its shards ride the shards write
+    shard_metrics = [F.sum("n_tokens").alias("tokens")]
     if args.soft_dedup:
         # SoftDedup (He et al. 2024): keep every exact-dup copy, attach the
         # 1e6 div n_copies sampling weight so the group carries one doc of
         # gradient mass downstream — the keep-everything alternative to a
         # hard dedup stage; weights ride the packed shards.
         docs = docs.join(dedup.softdedup_weights(docs), "doc_id")
-        n_soft_dup = docs.filter(F.col("n_copies") > 1).count()
+        shard_metrics.append(F.count_if(F.col("n_copies") > 1).alias("soft_dup"))
 
     if args.split_eval_frac is not None:
         pairs = dedup.minhash_lsh_pairs(docs, threshold=0.2)
@@ -532,9 +533,10 @@ def main() -> None:
         docs = corpus.leakage_safe_split(
             docs, groups, eval_fraction=args.split_eval_frac
         ).drop("rep_id")
-        part_cols = ["split", "shard"]
+        part_cols = ("split", "shard")
+        shard_metrics.append(F.count_if(F.col("split") == "eval").alias("eval"))
     else:
-        part_cols = ["shard"]
+        part_cols = ("shard",)
 
     packed = corpus.pack_shards(
         docs, budget=args.budget, order_col=args.pack_order_col
@@ -542,8 +544,9 @@ def main() -> None:
     out = (
         docs.join(packed.select("doc_id", "n_tokens", "shard"), "doc_id")
     )
-    out.write.mode("overwrite").partitionBy(*part_cols).parquet(
-        f"{args.out}/shards"
+    shards_path = f"{args.out}/shards"
+    written = sinks.write_counted(
+        out, shards_path, *shard_metrics, partition_by=part_cols
     )
     if args.vocab_top:
         textstats.vocabulary(docs, top_v=args.vocab_top).write.mode(
@@ -553,36 +556,19 @@ def main() -> None:
         corpus.corpus_report(
             docs, gopher_min_stopwords=args.gopher_min_stopwords
         ).write.mode("overwrite").parquet(f"{args.out}/report")
-    shards = spark.read.parquet(f"{args.out}/shards")
-    n_shards = shards.select("shard").distinct().count()
-    tok_total = shards.agg(F.sum("n_tokens")).collect()[0][0] or 0
     print(
         json.dumps(
             {
-                "n_input": n_input,
-                "n_after_repetition_filter": n_clean,
-                "n_after_gopher": n_gopher,
-                "n_after_domain_blocklist": n_blocked,
-                "n_after_badwords": n_badwords,
-                "n_after_span_dedup": n_span,
-                "n_after_decontamination": n_decontam,
-                "n_after_fuzzy_decontam": n_fuzzy,
-                "n_after_loop_gate": n_loop,
-                "n_after_ttr_gate": n_ttr,
-            "n_after_ppl_tiering": n_ppl,
-                "n_after_classifier": n_classifier,
-                "n_after_dsir": n_dsir,
-                "n_soft_dup_docs": n_soft_dup,
+                **counts,
+                "n_soft_dup_docs": written.get("soft_dup"),
                 "n_after_sampling": n_sampled,
                 "budget": args.budget,
-                "n_shards": n_shards,
-                "total_tokens": int(tok_total),
-                "n_eval": (
-                    shards.filter(F.col("split") == "eval").count()
-                    if args.split_eval_frac is not None
-                    else None
+                "n_shards": len(
+                    sinks.partition_values(spark, shards_path, part_cols, "shard")
                 ),
-                "shards_path": f"{args.out}/shards",
+                "total_tokens": int(written["tokens"] or 0),
+                "n_eval": written.get("eval"),
+                "shards_path": shards_path,
             }
         )
     )

@@ -43,6 +43,7 @@ def main() -> None:
 
     from log_analysis_spark.operators import dedup
     from log_analysis_spark.session import get_spark
+    from log_analysis_spark.sources import sinks
 
     spark = get_spark("run_dedup", master=args.master)
     path = args.docs or f"{args.sf_dir}/documents.parquet"
@@ -63,10 +64,9 @@ def main() -> None:
     pairs = pairs.persist()
     groups = dedup.neardup_groups(docs.select(F.col("doc_id").alias("id")), pairs)
     kept = dedup.drop_near_duplicates(docs, groups)
-    kept.write.mode("overwrite").parquet(f"{args.out}/kept")
+    n_kept = sinks.write_counted(kept, f"{args.out}/kept")["rows"]
 
     n_docs = docs.count()
-    n_kept = spark.read.parquet(f"{args.out}/kept").count()
     print(
         json.dumps(
             {

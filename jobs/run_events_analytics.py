@@ -103,7 +103,7 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    from log_analysis_spark.operators import sketches, timeseries
+    from log_analysis_spark.operators import expectations, sketches, timeseries
     from log_analysis_spark.plans.manifest import (
         Manifest,
         StageRecord,
@@ -111,6 +111,7 @@ def main() -> None:
         fingerprint_source,
     )
     from log_analysis_spark.session import get_spark
+    from log_analysis_spark.sources import sinks
 
     spark = get_spark("run_events_analytics", master=args.master)
     path = args.input or f"{args.sf_dir}/events.parquet"
@@ -133,6 +134,9 @@ def main() -> None:
         print(json.dumps({**prior["metrics"], "resumed": True}))
         return
 
+    def write(name, df, *metrics):
+        return sinks.write_counted(df, f"{args.out}/{name}", *metrics)
+
     counts: dict[str, int] = {}
 
     asof = timeseries.asof_join(
@@ -143,35 +147,26 @@ def main() -> None:
         right_order="event_id",
         tolerance_sec=args.asof_tolerance_sec,
     )
-    asof.write.mode("overwrite").parquet(f"{args.out}/asof")
-    counts["n_asof"] = spark.read.parquet(f"{args.out}/asof").count()
+    counts["n_asof"] = write("asof", asof)["rows"]
 
     sliding = timeseries.sliding_counts(
         ev, "ts", args.window_sec, args.slide_sec, group="event_type"
     )
-    sliding.write.mode("overwrite").parquet(f"{args.out}/sliding")
-    counts["n_sliding"] = spark.read.parquet(f"{args.out}/sliding").count()
+    counts["n_sliding"] = write("sliding", sliding)["rows"]
 
     steps = [s for s in args.funnel.split(",") if s]
     funnel = timeseries.funnel_steps(
         ev, "user_id", "ts", "event_type", steps, "event_id"
     )
-    funnel.write.mode("overwrite").parquet(f"{args.out}/funnel")
-    fc = {
-        int(r["steps_completed"]): r["n"]
-        for r in spark.read.parquet(f"{args.out}/funnel")
-        .groupBy("steps_completed")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    counts["n_funnel_users"] = sum(fc.values())
-    counts["n_funnel_completed"] = fc.get(len(steps), 0)
+    fc = write(
+        "funnel", funnel,
+        F.count_if(F.col("steps_completed") == len(steps)).alias("completed"),
+    )
+    counts["n_funnel_users"] = fc["rows"]
+    counts["n_funnel_completed"] = fc["completed"]
 
     retention = timeseries.cohort_retention(ev, "user_id", "ts")
-    retention.write.mode("overwrite").parquet(f"{args.out}/retention")
-    counts["n_retention_cells"] = spark.read.parquet(
-        f"{args.out}/retention"
-    ).count()
+    counts["n_retention_cells"] = write("retention", retention)["rows"]
 
     qs = [float(x) for x in args.quantiles.split(",") if x]
     report = sketches.kmv_distinct(
@@ -190,48 +185,35 @@ def main() -> None:
             ).withColumnRenamed("est_distinct", "est_distinct_hll"),
             "event_type",
         )
-    report.write.mode("overwrite").parquet(f"{args.out}/report")
-    counts["n_report_rows"] = spark.read.parquet(f"{args.out}/report").count()
+    counts["n_report_rows"] = write("report", report)["rows"]
 
     if args.ohlc_bucket_sec:
         ohlc = timeseries.downsample_ohlc(
             ev, "event_type", "ts", "value", "event_id", args.ohlc_bucket_sec
         )
-        ohlc.write.mode("overwrite").parquet(f"{args.out}/ohlc")
-        counts["n_ohlc_bars"] = spark.read.parquet(f"{args.out}/ohlc").count()
+        counts["n_ohlc_bars"] = write("ohlc", ohlc)["rows"]
 
     if args.burst_trail_hours:
         alerts = timeseries.burst_hours(
             ev, "ts", "event_type",
             n_trail=args.burst_trail_hours, z=args.burst_z,
         ).filter(F.col("anomaly").isNotNull())
-        alerts.write.mode("overwrite").parquet(f"{args.out}/alerts")
-        counts["n_burst_alerts"] = spark.read.parquet(
-            f"{args.out}/alerts"
-        ).count()
+        counts["n_burst_alerts"] = write("alerts", alerts)["rows"]
 
     if args.cusum_h:
         drift = timeseries.cusum_hours(
             ev, "ts", "event_type",
             k_milli=args.cusum_k_milli, h_mult=args.cusum_h,
         ).filter(F.col("drift").isNotNull())
-        drift.write.mode("overwrite").parquet(f"{args.out}/drift")
-        counts["n_drift_alerts"] = spark.read.parquet(
-            f"{args.out}/drift"
-        ).count()
+        counts["n_drift_alerts"] = write("drift", drift)["rows"]
 
     if args.robust_k_milli:
-        from log_analysis_spark.operators import sketches as sk_job
-
-        outl = sk_job.robust_outliers(
+        outl = sketches.robust_outliers(
             ev, "value", k_milli=args.robust_k_milli, group="event_type"
         ).filter("is_outlier").select(
             "event_id", "event_type", "value", "dev_cells", "mad_cells"
         )
-        outl.write.mode("overwrite").parquet(f"{args.out}/outliers")
-        counts["n_robust_outliers"] = spark.read.parquet(
-            f"{args.out}/outliers"
-        ).count()
+        counts["n_robust_outliers"] = write("outliers", outl)["rows"]
 
     if args.attr_conv_type:
         attr = timeseries.attribution(
@@ -242,19 +224,17 @@ def main() -> None:
             ),
             lookback_hours=args.attr_lookback_hours,
         )
-        attr.write.mode("overwrite").parquet(f"{args.out}/attribution")
-        attr_back = spark.read.parquet(f"{args.out}/attribution")
-        counts["n_attribution_rows"] = attr_back.count()
-        counts["n_attributed_convs"] = (
-            attr_back.filter(F.col("touch_event_id").isNotNull())
-            .select("conv_event_id").distinct().count()
+        # each attributed conversion has exactly one last-touch row holding
+        # the full credit; unattributed ones carry zero credit
+        m = write(
+            "attribution", attr,
+            F.count_if(F.col("credit_last_micro") > 0).alias("convs"),
         )
+        counts["n_attribution_rows"] = m["rows"]
+        counts["n_attributed_convs"] = m["convs"]
 
-    from log_analysis_spark.operators import expectations as expect_ops
-
-    profile = expect_ops.profile_columns(ev, ["value", "user_id"])
-    profile.write.mode("overwrite").parquet(f"{args.out}/profile")
-    counts["n_profile_rows"] = spark.read.parquet(f"{args.out}/profile").count()
+    profile = expectations.profile_columns(ev, ["value", "user_id"])
+    counts["n_profile_rows"] = write("profile", profile)["rows"]
 
     hot = sketches.skewed_keys(ev, "user_id", threshold_frac=args.skew_frac)
     counts["hot_user_ids"] = sorted(

@@ -30,12 +30,11 @@ compacted + tail transparently and results are identical either way
 (equality-tested).  ``--compact-now`` compacts and exits.
 
 Each run is one manifest stage keyed on a content fingerprint of the batch
-files: re-submitting the same batch resumes (prints the recorded summary,
-writes nothing); a new batch gets the next ingest_id.  State appends land
-in per-ingest subdirectories (``ingest_id=<n>``) so a crash mid-append
-never corrupts prior state — the manifest records an ingest only after
-ALL its writes completed, and a rerun of a crashed ingest overwrites
-exactly its own subdirectories.
+files (``incremental.ingest_job``): re-submitting the same batch resumes
+(prints the recorded summary, writes nothing); a new batch commits the
+next ``ingest_id=<n>`` subdirectories, and the manifest records it only
+after ALL its writes completed, so a crash never corrupts prior state and
+a rerun overwrites exactly the crashed ingest's own subdirectories.
 
 At 100 TB: sig_store/band_index stay ~0.03% the corpus size; the only
 corpus-sized work per increment is reading the BATCH.  Bucket band_index
@@ -45,70 +44,34 @@ candidate probe shuffle-free on the state side.
 
 from __future__ import annotations
 
-import argparse
 import json
-import os
 import sys
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--batch", help="new documents batch (parquet); "
-                                    "required unless --compact-now")
-    ap.add_argument("--state", required=True, help="dedup state directory")
-    ap.add_argument("--id-col", default="doc_id")
+    from log_analysis_spark.operators import incremental
+
+    ap = incremental.job_parser("documents", id_col="doc_id")
     ap.add_argument("--text-col", default="text")
     ap.add_argument("--threshold", type=float, default=0.5)
     ap.add_argument("--shingle-k", type=int, default=3)
     ap.add_argument("--n-hashes", type=int, default=32)
     ap.add_argument("--bands", type=int, default=8)
-    ap.add_argument("--master", default=None)
-    ap.add_argument(
-        "--compact-every", type=int, default=8,
-        help="fold the per-ingest state partitions into ONE bucketed layout "
-             "whenever this many uncompacted increments accumulate "
-             "(0 disables auto-compaction)",
-    )
-    ap.add_argument(
-        "--n-buckets", type=int, default=16,
-        help="bucket count of the compacted state tables (band_index by "
-             "(band,bkey), sig_store by id)",
-    )
-    ap.add_argument(
-        "--compact-now", action="store_true",
-        help="compact all completed increments and exit (no batch ingested)",
-    )
     args = ap.parse_args()
     if not args.compact_now and not args.batch:
         ap.error("--batch is required unless --compact-now")
 
-    from pyspark.sql import functions as F
-
-    from log_analysis_spark.operators import incremental
     from log_analysis_spark.plans.manifest import (
-        Manifest,
-        StageRecord,
-        fingerprint_input,
-        fingerprint_source,
-        partition_row_counts,
+        Manifest, fingerprint_input, fingerprint_source,
     )
     from log_analysis_spark.session import get_spark
 
     spark = get_spark("run_incremental_dedup", master=args.master)
 
-    # pin the LSH knobs the state is a pure function of — ingesting with
-    # different knobs than the state was built with makes band keys never
-    # collide, silently accepting every cross-corpus duplicate
-    incremental.ensure_state_params(
-        args.state, hash_impl="xxhash64", shingle_k=args.shingle_k,
-        n_hashes=args.n_hashes, bands=args.bands,
-    )
-    manifest = Manifest(f"{args.state}/_manifest.jsonl")
-
     if args.compact_now:
-        upto = len(manifest.completed("ingest"))
+        upto = len(Manifest(f"{args.state}/_manifest.jsonl").completed("ingest"))
         marker = incremental.compact_state(
             spark, args.state, upto, n_buckets=args.n_buckets
         )
@@ -120,89 +83,19 @@ def main() -> None:
         args.state, args.threshold, args.shingle_k, args.n_hashes, args.bands,
         args.id_col, args.text_col, fingerprint_source(batch),
     )
-    # lookup_any, not latest-wins: each ingest owns its own output dir, so a
-    # historic record stays valid — re-submitting increment 1 after
-    # increment 5 completed must resume, not re-ingest it as increment 6
-    prior = manifest.lookup_any("ingest", fp)
-    if prior is not None and os.path.exists(prior["output_path"]):
-        print(json.dumps({**prior["metrics"], "resumed": True,
-                          "accepted_path": prior["output_path"]}))
-        return
-    # next ingest_id = count of completed ingests (manifest is append-only;
-    # a crashed attempt left no record, so its id is reused and its partial
-    # subdirectories are overwritten)
-    done = manifest.completed("ingest")
-    ingest_id = len(done)
-
-    # the id column crosses increments as the corpus-wide key: normalize to
-    # string so heterogenous batch schemas (long ids, uuid ids) still union
-    batch = batch.withColumn(args.id_col, F.col(args.id_col).cast("string"))
-
-    # only manifest-recorded increments count as state (crash-recovery rule:
-    # see incremental.load_state)
-    sig_store, band_index = incremental.load_state(spark, args.state, ingest_id)
-
-    res = incremental.ingest_batch(
-        batch, sig_store, band_index,
-        text_col=args.text_col, id_col=args.id_col, k=args.shingle_k,
-        n_hashes=args.n_hashes, bands=args.bands, threshold=args.threshold,
+    # the LSH knobs the state is a pure function of are pinned in
+    # _params.json — ingesting with different knobs than the state was
+    # built with makes band keys never collide, silently accepting every
+    # cross-corpus duplicate, so a drift refuses to run
+    kind = incremental.text_kind(
+        threshold=args.threshold, text_col=args.text_col,
+        shingle_k=args.shingle_k, n_hashes=args.n_hashes, bands=args.bands,
     )
-
-    accepted_path = f"{args.state}/accepted/ingest_id={ingest_id}"
-    accepted_docs = batch.join(res.accepted.withColumnRenamed("id", args.id_col),
-                               args.id_col).persist()
-    accepted_docs.write.mode("overwrite").parquet(accepted_path)
-    res.rejected.write.mode("overwrite").parquet(
-        f"{args.state}/rejects/ingest_id={ingest_id}"
+    res = incremental.ingest_job(
+        spark, kind, args.state, batch, args.id_col, fp,
+        args.compact_every, args.n_buckets,
     )
-    res.new_sig_rows.write.mode("overwrite").parquet(
-        f"{args.state}/sig_store/ingest_id={ingest_id}"
-    )
-    res.new_band_rows.write.mode("overwrite").parquet(
-        f"{args.state}/band_index/ingest_id={ingest_id}"
-    )
-
-    n_batch = batch.count()
-    written = spark.read.parquet(accepted_path)
-    n_accepted = written.count()
-    rejects = spark.read.parquet(f"{args.state}/rejects/ingest_id={ingest_id}")
-    n_cross = rejects.filter(F.col("why") == "cross_corpus").count()
-    metrics = {
-        "ingest_id": ingest_id,
-        "n_batch": n_batch,
-        "n_accepted": n_accepted,
-        "n_rejected_within_batch": n_batch - n_accepted - n_cross,
-        "n_rejected_cross_corpus": n_cross,
-    }
-    pc = partition_row_counts(written)
-    manifest.record(
-        StageRecord(
-            stage="ingest",
-            input_fingerprint=fp,
-            output_path=accepted_path,
-            rows=n_accepted,
-            n_partitions=len(pc),
-            partition_rows=pc,
-            metrics=metrics,
-        )
-    )
-    accepted_docs.unpersist()
-
-    # auto-compaction: once enough per-ingest partitions accumulate, fold
-    # them (plus any previous compacted layout) into one bucketed state
-    # table pair — the layout that makes the next probe shuffle-free on the
-    # state side.  Runs AFTER the manifest commit: a crash inside
-    # compact_state never loses the ingest (versioned tables + atomic
-    # marker; see incremental.compact_state).
-    comp = incremental._read_compaction_marker(args.state)
-    tail = ingest_id + 1 - (comp["upto"] if comp else 0)
-    if args.compact_every and tail >= args.compact_every:
-        marker = incremental.compact_state(
-            spark, args.state, ingest_id + 1, n_buckets=args.n_buckets
-        )
-        metrics["compacted_upto"] = marker["upto"]
-
-    print(json.dumps({**metrics, "accepted_path": accepted_path}))
+    print(json.dumps(res))
 
 
 if __name__ == "__main__":

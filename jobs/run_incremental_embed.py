@@ -23,20 +23,10 @@ State layout under ``--state`` (all owned by this job):
     _params.json                             pinned LSH knobs (raise on drift)
     _compaction.json                         compaction watermark (atomic)
 
-Every ``--compact-every`` increments (default 8), the per-ingest state
-partitions fold into ONE bucketed table pair — band_index clustered by
-(band, bkey), unit_store by id — so the candidate probe reads the catalog
-layout and exchanges only the (small) batch side; ``load_embed_state``
-reads compacted + tail transparently and results are identical either way
-(equality-tested).  ``--compact-now`` compacts and exits.
-
-Each run is one manifest stage keyed on a content fingerprint of the batch
-files: re-submitting the same batch resumes (prints the recorded summary,
-writes nothing); a new batch gets the next ingest_id.  State appends land
-in per-ingest subdirectories (``ingest_id=<n>``) so a crash mid-append
-never corrupts prior state — the manifest records an ingest only after ALL
-its writes completed, and a rerun of a crashed ingest overwrites exactly
-its own subdirectories.
+Compaction (``--compact-every``, ``--compact-now``), manifest resume and
+crash safety are the text job's, through the same
+``incremental.ingest_job`` (see jobs/run_incremental_dedup.py); the
+compacted pair is unit_store by id and band_index by (band, bkey).
 
 At 100 TB: unit_store+band_index stay ~(dim×8 + n_bands×12) bytes/vector
 (≈ 0.7 KB at 64 dims); the only corpus-sized work per increment is reading
@@ -46,9 +36,7 @@ units — no estimator noise, no raw-embedding re-reads.
 
 from __future__ import annotations
 
-import argparse
 import json
-import os
 import sys
 from pathlib import Path
 
@@ -56,11 +44,9 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 
 def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--batch", help="new vectors batch (parquet); "
-                                    "required unless --compact-now")
-    ap.add_argument("--state", required=True, help="embed state directory")
-    ap.add_argument("--id-col", default="vec_id")
+    from log_analysis_spark.operators import incremental
+
+    ap = incremental.job_parser("vectors", id_col="vec_id")
     ap.add_argument("--vec-col", default="embedding")
     ap.add_argument("--threshold", type=float, default=0.99)
     ap.add_argument("--dim", type=int, default=None,
@@ -69,143 +55,44 @@ def main() -> None:
     ap.add_argument("--n-planes", type=int, default=64)
     ap.add_argument("--band-bits", type=int, default=8)
     ap.add_argument("--seed", type=int, default=42)
-    ap.add_argument("--master", default=None)
-    ap.add_argument(
-        "--compact-every", type=int, default=8,
-        help="fold the per-ingest state partitions into ONE bucketed layout "
-             "whenever this many uncompacted increments accumulate "
-             "(0 disables auto-compaction)",
-    )
-    ap.add_argument(
-        "--n-buckets", type=int, default=16,
-        help="bucket count of the compacted state tables (band_index by "
-             "(band,bkey), unit_store by id)",
-    )
-    ap.add_argument(
-        "--compact-now", action="store_true",
-        help="compact all completed increments and exit (no batch ingested)",
-    )
     args = ap.parse_args()
     if not args.compact_now and not args.batch:
         ap.error("--batch is required unless --compact-now")
 
-    from pyspark.sql import functions as F
-
-    from log_analysis_spark.operators import incremental, incremental_embed, similarity
+    from log_analysis_spark.operators import incremental_embed, similarity
     from log_analysis_spark.plans.manifest import (
-        Manifest,
-        StageRecord,
-        fingerprint_input,
-        fingerprint_source,
-        partition_row_counts,
+        Manifest, fingerprint_input, fingerprint_source,
     )
     from log_analysis_spark.session import get_spark
 
     spark = get_spark("run_incremental_embed", master=args.master)
-    manifest = Manifest(f"{args.state}/_manifest.jsonl")
 
     if args.compact_now:
-        upto = len(manifest.completed("ingest"))
+        upto = len(Manifest(f"{args.state}/_manifest.jsonl").completed("ingest"))
         marker = incremental_embed.compact_embed_state(
             spark, args.state, upto, n_buckets=args.n_buckets
         )
         print(json.dumps({"compacted": True, **marker}))
         return
 
-    # the state ids are longs (the matmul signature schemas) — normalize
-    batch = spark.read.parquet(args.batch).withColumn(
-        args.id_col, F.col(args.id_col).cast("long")
-    )
-    # pin the LSH knobs (and dim) the state is a pure function of; dim is
-    # inferred from the first batch so later batches of a different width
-    # refuse instead of banding garbage
+    batch = spark.read.parquet(args.batch)
+    # the LSH knobs (and dim) the state is a pure function of are pinned in
+    # _params.json; dim is inferred from the first batch so later batches
+    # of a different width refuse instead of banding garbage
     dim = args.dim or similarity._validate_dim(batch, args.vec_col, None)
-    incremental_embed.ensure_embed_state_params(
-        args.state, n_planes=args.n_planes, band_bits=args.band_bits,
-        seed=args.seed, dim=dim,
-    )
-
     fp = fingerprint_input(
         args.state, args.threshold, args.n_planes, args.band_bits, args.seed,
         dim, args.id_col, args.vec_col, fingerprint_source(batch),
     )
-    # lookup_any, not latest-wins: each ingest owns its own output dir, so a
-    # historic record stays valid — re-submitting increment 1 after
-    # increment 5 completed must resume, not re-ingest it as increment 6
-    prior = manifest.lookup_any("ingest", fp)
-    if prior is not None and os.path.exists(prior["output_path"]):
-        print(json.dumps({**prior["metrics"], "resumed": True,
-                          "accepted_path": prior["output_path"]}))
-        return
-    done = manifest.completed("ingest")
-    ingest_id = len(done)
-
-    # only manifest-recorded increments count as state (crash-recovery rule:
-    # see incremental.load_state_tables)
-    unit_store, band_index = incremental_embed.load_embed_state(
-        spark, args.state, ingest_id
+    kind = incremental_embed.embed_kind(
+        dim, threshold=args.threshold, n_planes=args.n_planes,
+        band_bits=args.band_bits, seed=args.seed, vec_col=args.vec_col,
     )
-
-    res = incremental_embed.ingest_embedding_batch(
-        batch, unit_store, band_index,
-        threshold=args.threshold, dim=dim, n_planes=args.n_planes,
-        band_bits=args.band_bits, seed=args.seed,
-        id_col=args.id_col, vec_col=args.vec_col,
+    res = incremental.ingest_job(
+        spark, kind, args.state, batch, args.id_col, fp,
+        args.compact_every, args.n_buckets,
     )
-
-    accepted_path = f"{args.state}/accepted/ingest_id={ingest_id}"
-    accepted_vecs = batch.join(
-        res.accepted.withColumnRenamed("id", args.id_col), args.id_col
-    ).persist()
-    accepted_vecs.write.mode("overwrite").parquet(accepted_path)
-    res.rejected.write.mode("overwrite").parquet(
-        f"{args.state}/rejects/ingest_id={ingest_id}"
-    )
-    res.new_unit_rows.write.mode("overwrite").parquet(
-        f"{args.state}/unit_store/ingest_id={ingest_id}"
-    )
-    res.new_band_rows.write.mode("overwrite").parquet(
-        f"{args.state}/band_index/ingest_id={ingest_id}"
-    )
-
-    n_batch = batch.count()
-    written = spark.read.parquet(accepted_path)
-    n_accepted = written.count()
-    rejects = spark.read.parquet(f"{args.state}/rejects/ingest_id={ingest_id}")
-    n_cross = rejects.filter(F.col("why") == "cross_corpus").count()
-    metrics = {
-        "ingest_id": ingest_id,
-        "n_batch": n_batch,
-        "n_accepted": n_accepted,
-        "n_rejected_within_batch": n_batch - n_accepted - n_cross,
-        "n_rejected_cross_corpus": n_cross,
-    }
-    pc = partition_row_counts(written)
-    manifest.record(
-        StageRecord(
-            stage="ingest",
-            input_fingerprint=fp,
-            output_path=accepted_path,
-            rows=n_accepted,
-            n_partitions=len(pc),
-            partition_rows=pc,
-            metrics=metrics,
-        )
-    )
-    accepted_vecs.unpersist()
-
-    # auto-compaction AFTER the manifest commit: a crash inside
-    # compact_embed_state never loses the ingest (versioned tables + atomic
-    # marker; see incremental.compact_state_tables)
-    comp = incremental._read_compaction_marker(args.state)
-    tail = ingest_id + 1 - (comp["upto"] if comp else 0)
-    if args.compact_every and tail >= args.compact_every:
-        marker = incremental_embed.compact_embed_state(
-            spark, args.state, ingest_id + 1, n_buckets=args.n_buckets
-        )
-        metrics["compacted_upto"] = marker["upto"]
-
-    print(json.dumps({**metrics, "accepted_path": accepted_path}))
+    print(json.dumps(res))
 
 
 if __name__ == "__main__":

@@ -93,24 +93,24 @@ def main() -> None:
 
     seq_report = None
     if args.seq_audit:
-        from log_analysis_spark.operators import expectations as E
         from pyspark.sql import functions as F
 
-        audit = E.sequence_integrity(turns)
-        audit.write.mode("overwrite").parquet(f"{args.out}/seq_audit")
-        audit = spark.read.parquet(f"{args.out}/seq_audit")
-        tot = audit.agg(
-            F.count(F.lit(1)).alias("n"),
+        from log_analysis_spark.operators import expectations as E
+        from log_analysis_spark.sources import sinks
+
+        tot = sinks.write_counted(
+            E.sequence_integrity(turns), f"{args.out}/seq_audit",
             F.count_if(~F.col("is_contiguous")).alias("bad"),
-        ).first()
-        seq_report = {"n_convs": int(tot["n"]), "n_bad_convs": int(tot["bad"])}
+        )
+        n, bad = tot["rows"], tot["bad"]
+        seq_report = {"n_convs": n, "n_bad_convs": bad}
         if (
             args.seq_audit_max_bad_frac is not None
-            and tot["n"] > 0
-            and tot["bad"] > args.seq_audit_max_bad_frac * tot["n"]
+            and n > 0
+            and bad > args.seq_audit_max_bad_frac * n
         ):
             raise SystemExit(
-                f"sequence audit failed: {tot['bad']}/{tot['n']} "
+                f"sequence audit failed: {bad}/{n} "
                 f"conversations non-contiguous "
                 f"(max {args.seq_audit_max_bad_frac}); see {args.out}/seq_audit"
             )

@@ -57,6 +57,7 @@ def main() -> None:
 
     from log_analysis_spark.operators import retrieval
     from log_analysis_spark.session import get_spark
+    from log_analysis_spark.sources import sinks
 
     spark = get_spark("run_retrieval", master=args.master)
     path = args.docs or f"{args.sf_dir}/documents.parquet"
@@ -68,14 +69,16 @@ def main() -> None:
     k_each = args.k_each or 4 * args.k
     counts: dict[str, int] = {}
 
+    def write(name, df):
+        return sinks.write_counted(df, f"{args.out}/{name}")["rows"]
+
     bm = retrieval.bm25_topk(docs, queries, k=k_each if args.hybrid else args.k)
-    bm.write.mode("overwrite").parquet(f"{args.out}/bm25")
-    counts["n_bm25"] = spark.read.parquet(f"{args.out}/bm25").count()
+    counts["n_bm25"] = write("bm25", bm)
 
     if args.hybrid:
         jac = retrieval.jaccard_topk(docs, queries, k=k_each)
-        jac.write.mode("overwrite").parquet(f"{args.out}/jaccard")
-        counts["n_jaccard"] = spark.read.parquet(f"{args.out}/jaccard").count()
+        counts["n_jaccard"] = write("jaccard", jac)
+        # the fusion reads the two written rankings as its inputs
         fused = retrieval.rrf_fuse(
             [
                 spark.read.parquet(f"{args.out}/bm25"),
@@ -84,15 +87,11 @@ def main() -> None:
             k=args.k,
             k0=args.rrf_k0,
         )
-        fused.write.mode("overwrite").parquet(f"{args.out}/hybrid")
-        counts["n_hybrid"] = spark.read.parquet(f"{args.out}/hybrid").count()
+        counts["n_hybrid"] = write("hybrid", fused)
 
     if args.phrase:
         ph = retrieval.phrase_search(docs, args.phrase)
-        ph.write.mode("overwrite").parquet(f"{args.out}/phrase")
-        counts["n_phrase_docs"] = spark.read.parquet(
-            f"{args.out}/phrase"
-        ).count()
+        counts["n_phrase_docs"] = write("phrase", ph)
 
     print(
         json.dumps(

@@ -81,9 +81,9 @@ def main() -> None:
         StageRecord,
         fingerprint_input,
         fingerprint_source,
-        partition_row_counts,
     )
     from log_analysis_spark.session import get_spark
+    from log_analysis_spark.sources import sinks
 
     spark = get_spark("run_transcript_corpus", master=args.master)
     if args.input:
@@ -143,11 +143,8 @@ def main() -> None:
             docs.select(F.col("conv_id").alias("id")), pairs
         )
         kept = dedup.drop_near_duplicates(docs, groups, id_col="conv_id").persist()
-        n_kept = kept.count()
-        docs.unpersist()
-        pairs.unpersist()
     else:
-        kept, n_pairs, n_kept = docs, 0, n_docs
+        kept, pairs, n_pairs = docs, None, 0
 
     # n_tokens is already materialized by with_quality — pass it through so
     # the pack's second scan re-reads a stored long, not a re-tokenize
@@ -155,31 +152,34 @@ def main() -> None:
         kept, budget=args.budget, id_col="conv_id", token_count_col="n_tokens"
     )
     out = kept.join(packed.select("conv_id", "pack_key", "shard"), "conv_id")
-    out.write.mode("overwrite").partitionBy("shard").parquet(shards_path)
-    kept.unpersist()
+    written = sinks.write_counted(
+        out, shards_path, F.sum("n_tokens").alias("tokens"),
+        partition_by=("shard",),
+    )
+    n_kept = written["rows"]  # one shard row per kept document
+    for df in (kept, docs, pairs):
+        if df is not None:
+            df.unpersist()
 
-    shards = spark.read.parquet(shards_path)
-    n_shards = shards.select("shard").distinct().count()
-    tok_total = shards.agg(F.sum("n_tokens")).collect()[0][0] or 0
+    n_shards = len(sinks.partition_values(spark, shards_path, ("shard",), "shard"))
     metrics = {
         "n_docs": n_docs,
         "n_neardup_pairs": n_pairs,
         "n_kept": n_kept,
         "n_dropped": n_docs - n_kept,
         "n_shards": n_shards,
-        "total_tokens": int(tok_total),
+        "total_tokens": int(written["tokens"] or 0),
         "budget": args.budget,
         "n_lines_removed": n_lines_removed,
     }
-    pc = partition_row_counts(shards)
     manifest.record(
         StageRecord(
             stage="shards",
             input_fingerprint=fp,
             output_path=shards_path,
-            rows=sum(pc.values()),
-            n_partitions=len(pc),
-            partition_rows=pc,
+            rows=n_kept,
+            n_partitions=n_shards,
+            partition_rows={"shards": n_kept},
             metrics=metrics,
         )
     )

@@ -42,13 +42,16 @@ rather than duplicating them: the state append is idempotent-by-content.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, fields
+from functools import partial
+from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from log_analysis_spark.operators import dedup
+from log_analysis_spark.sources.sinks import write_counted
 
 
 @dataclass
@@ -200,20 +203,16 @@ def load_state_tables(
     out = []
     for i, spec in enumerate(specs):
         path = f"{state_dir}/{spec.name}"
-        tail = None
-        if _has_data_files(path):
-            df = spark.read.parquet(path).filter(F.col("ingest_id") >= comp_upto)
-            if before_ingest_id is not None:
-                df = df.filter(F.col("ingest_id") < before_ingest_id)
-            tail = df.select(*spec.cols)
-        base = (
-            comp_tables[i] if comp_tables is not None
-            else spark.createDataFrame([], spec.schema)
-        )
-        if tail is not None:
-            out.append(base.unionByName(tail) if comp_tables is not None else tail)
-        else:
-            out.append(base)
+        base = comp_tables[i] if comp_tables is not None else None
+        if not _has_data_files(path):
+            empty = spark.createDataFrame([], spec.schema)
+            out.append(base if base is not None else empty)
+            continue
+        tail = spark.read.parquet(path).filter(F.col("ingest_id") >= comp_upto)
+        if before_ingest_id is not None:
+            tail = tail.filter(F.col("ingest_id") < before_ingest_id)
+        tail = tail.select(*spec.cols)
+        out.append(tail if base is None else base.unionByName(tail))
     return out
 
 
@@ -234,10 +233,9 @@ def load_state(
             f"state at {state_dir!r} was compacted with "
             f"hash_impl={comp['hash_impl']!r}, not {hash_impl!r}"
         )
-    sig, band = load_state_tables(
+    return tuple(load_state_tables(
         spark, state_dir, text_state_specs(hash_impl), before_ingest_id
-    )
-    return sig, band
+    ))
 
 
 def _state_db(state_dir: str) -> str:
@@ -319,6 +317,7 @@ def compact_state_tables(
 
     Returns the marker dict ({"upto", "version", "n_buckets", **extra}).
     """
+    import glob
     import json
     import os
     import shutil
@@ -360,16 +359,10 @@ def compact_state_tables(
 
     if prune:
         for spec in specs:
-            root = f"{state_dir}/{spec.name}"
-            if os.path.isdir(root):
-                for d in os.listdir(root):
-                    if d.startswith("ingest_id="):
-                        try:
-                            n = int(d.split("=", 1)[1])
-                        except ValueError:
-                            continue
-                        if n < upto_ingest_id:
-                            shutil.rmtree(f"{root}/{d}", ignore_errors=True)
+            for d in glob.glob(f"{state_dir}/{spec.name}/ingest_id=*"):
+                n = d.rsplit("=", 1)[1]
+                if n.isdigit() and int(n) < upto_ingest_id:
+                    shutil.rmtree(d, ignore_errors=True)
         if prev is not None:
             v = prev["version"]
             for spec in specs:
@@ -449,6 +442,94 @@ def _resolve_local(pairs_rows: list, score_key: str = "jaccard") -> dict:
     return out
 
 
+def _within_batch(
+    batch: DataFrame,
+    intra_pairs: DataFrame,
+    id_col: str,
+    id_type: T.DataType,
+    score: str,
+    score_out: str,
+    local_pairs_cap: int,
+) -> tuple[DataFrame, DataFrame]:
+    """Resolve one increment's verified pairs ``(id_a, id_b, <score>)``
+    into (rejected ``(id, matched_id, <score_out>, why)``, representatives).
+
+    An increment's pair graph is tiny (pairs, not docs), so up to
+    ``local_pairs_cap`` edges it resolves driver-side by union-find — one
+    collect instead of the distributed CC loop's per-iteration join and
+    convergence action (~5 s fixed latency on a 500-doc increment).  The
+    iterative CC is the over-cap fallback, for when the batch IS a corpus."""
+    intra_pairs = intra_pairs.persist()
+    if intra_pairs.count() <= local_pairs_cap:
+        losers = _resolve_local(intra_pairs.collect(), score_key=score)
+        intra_pairs.unpersist()  # resolved driver-side; nothing references it
+        loser_schema = T.StructType(
+            [
+                T.StructField("id", id_type),
+                T.StructField("matched_id", id_type),
+                T.StructField(score_out, T.DoubleType()),
+            ]
+        )
+        rejected = batch.sparkSession.createDataFrame(
+            [(i, r, j) for i, (r, j) in losers.items()], loser_schema
+        ).withColumn("why", F.lit("within_batch"))
+        reps = batch.join(
+            F.broadcast(rejected.select(F.col("id").alias(id_col))),
+            id_col,
+            "left_anti",
+        )
+        return rejected, reps
+    groups = dedup.neardup_groups(batch.select(F.col(id_col).alias("id")), intra_pairs)
+    rejected = (
+        groups.filter(F.col("id") != F.col("rep_id"))
+        .join(
+            intra_pairs.select(
+                F.col("id_a").alias("rep_id"), F.col("id_b").alias("id"), score
+            ),
+            ["id", "rep_id"],
+            "left",
+        )
+        .select(
+            "id",
+            F.col("rep_id").alias("matched_id"),
+            F.col(score).alias(score_out),
+            F.lit("within_batch").alias("why"),
+        )
+    )
+    return rejected, dedup.drop_near_duplicates(batch, groups, id_col)
+
+
+def _band_candidates(batch_bands: DataFrame, band_index: DataFrame) -> DataFrame:
+    """Distinct (new_id, old_id) pairs whose band keys collide: the batch
+    bands equi-join the index on (band, bkey) — never a cross product."""
+    return (
+        batch_bands.alias("n")
+        .join(
+            band_index.alias("o"),
+            on=[F.col("n.band") == F.col("o.band"), F.col("n.bkey") == F.col("o.bkey")],
+        )
+        .select(F.col("n.id").alias("new_id"), F.col("o.id").alias("old_id"))
+        .dropDuplicates(["new_id", "old_id"])
+    )
+
+
+def _best_corpus_match(verified: DataFrame, score: str) -> DataFrame:
+    """One cross-corpus reject per new id: its best-scoring corpus match."""
+    return (
+        verified.groupBy("new_id")
+        .agg(
+            F.max_by("old_id", score).alias("matched_id"),
+            F.max(score).alias(score),
+        )
+        .select(
+            F.col("new_id").alias("id"),
+            "matched_id",
+            score,
+            F.lit("cross_corpus").alias("why"),
+        )
+    )
+
+
 def ingest_batch(
     batch: DataFrame,
     sig_store: DataFrame,
@@ -487,70 +568,19 @@ def ingest_batch(
             "state and ingest must use the same hash family"
         )
     # -- 1. within-batch: exact-verify near-dup dedup (text is at hand) ----
-    # The pair graph of ONE increment is tiny next to the increment itself
-    # (near-dup pairs, not docs), so up to ``local_pairs_cap`` edges the
-    # components resolve driver-side with union-find — one collect of the
-    # pair list instead of the distributed CC loop's per-iteration join +
-    # convergence action (measured ~5 s of fixed latency on a 500-doc
-    # increment).  The iterative CC stays as the over-cap fallback: it's
-    # the right plan when the batch IS a corpus.
-    spark = batch.sparkSession
-    id_type = batch.schema[id_col].dataType
-    intra_pairs = dedup.minhash_lsh_pairs(
-        batch, text_col, id_col, k, n_hashes, bands, threshold, hash_impl
-    ).persist()
-    if intra_pairs.count() <= local_pairs_cap:
-        losers = _resolve_local(intra_pairs.collect())
-        intra_pairs.unpersist()  # resolved driver-side; nothing references it
-        loser_schema = T.StructType(
-            [
-                T.StructField("id", id_type),
-                T.StructField("matched_id", id_type),
-                T.StructField("est_jaccard", T.DoubleType()),
-            ]
-        )
-        intra_rejected = spark.createDataFrame(
-            [(i, r, j) for i, (r, j) in losers.items()], loser_schema
-        ).withColumn("why", F.lit("within_batch"))
-        reps = batch.join(
-            F.broadcast(intra_rejected.select(F.col("id").alias(id_col))),
-            id_col,
-            "left_anti",
-        )
-    else:
-        groups = dedup.neardup_groups(
-            batch.select(F.col(id_col).alias("id")), intra_pairs
-        )
-        intra_rejected = (
-            groups.filter(F.col("id") != F.col("rep_id"))
-            .join(
-                intra_pairs.select(
-                    F.col("id_a").alias("rep_id"), F.col("id_b").alias("id"), "jaccard"
-                ),
-                ["id", "rep_id"],
-                "left",
-            )
-            .select(
-                "id",
-                F.col("rep_id").alias("matched_id"),
-                F.col("jaccard").alias("est_jaccard"),
-                F.lit("within_batch").alias("why"),
-            )
-        )
-        reps = dedup.drop_near_duplicates(batch, groups, id_col)
+    intra_rejected, reps = _within_batch(
+        batch,
+        dedup.minhash_lsh_pairs(
+            batch, text_col, id_col, k, n_hashes, bands, threshold, hash_impl
+        ),
+        id_col, batch.schema[id_col].dataType, "jaccard", "est_jaccard",
+        local_pairs_cap,
+    )
 
     # -- 2. cross-corpus candidates: batch bands equi-join the index -------
     batch_sigs = sig_table(reps, text_col, id_col, k, n_hashes, hash_impl)
     batch_bands = dedup.bands_from_sig(batch_sigs, n_hashes, bands, hash_impl)
-    cand = (
-        batch_bands.alias("n")
-        .join(
-            band_index.alias("o"),
-            on=[F.col("n.band") == F.col("o.band"), F.col("n.bkey") == F.col("o.bkey")],
-        )
-        .select(F.col("n.id").alias("new_id"), F.col("o.id").alias("old_id"))
-        .dropDuplicates(["new_id", "old_id"])
-    )
+    cand = _band_candidates(batch_bands, band_index)
 
     # -- 3. signature-agreement verify (no corpus text touched) ------------
     verified = (
@@ -560,19 +590,7 @@ def ingest_batch(
         .filter(F.col("est_jaccard") >= threshold)
     )
     # one row per rejected new doc: its best corpus match
-    cross_rejected = (
-        verified.groupBy("new_id")
-        .agg(
-            F.max_by("old_id", "est_jaccard").alias("matched_id"),
-            F.max("est_jaccard").alias("est_jaccard"),
-        )
-        .select(
-            F.col("new_id").alias("id"),
-            "matched_id",
-            "est_jaccard",
-            F.lit("cross_corpus").alias("why"),
-        )
-    )
+    cross_rejected = _best_corpus_match(verified, "est_jaccard")
 
     # -- 4. accepted = reps minus corpus matches; state rows to append -----
     dup_ids = cross_rejected.select("id")
@@ -586,6 +604,161 @@ def ingest_batch(
         new_sig_rows=new_sig_rows,
         new_band_rows=new_band_rows,
     )
+
+
+@dataclass(frozen=True)
+class IncrementKind:
+    """One kind of incremental near-dup state, as ``commit_increment`` needs
+    it.  ``ingest(batch, *state, id_col=...)`` returns a result whose fields
+    are the accepted ids, the rejects, then each spec's new rows."""
+
+    specs: tuple        # the persisted state tables (StateTableSpec)
+    id_type: str        # corpus-wide id type every batch is cast to
+    params: dict        # knobs the state is a pure function of (_params.json)
+    marker: dict        # compaction-marker fields that name the kind
+    load: Callable      # (spark, state_dir, before_ingest_id) -> state frames
+    ingest: Callable
+
+
+def text_kind(
+    threshold: float = 0.5, text_col: str = "text", shingle_k: int = 3,
+    n_hashes: int = 32, bands: int = 8, hash_impl: str = "xxhash64",
+) -> IncrementKind:
+    """The MinHash text state (``ingest_batch``) as an increment kind."""
+    return IncrementKind(
+        specs=text_state_specs(hash_impl),
+        id_type="string",
+        params=dict(hash_impl=hash_impl, shingle_k=shingle_k,
+                    n_hashes=n_hashes, bands=bands),
+        marker={"hash_impl": hash_impl},
+        load=partial(load_state, hash_impl=hash_impl),
+        ingest=partial(
+            ingest_batch, text_col=text_col, k=shingle_k, n_hashes=n_hashes,
+            bands=bands, threshold=threshold, hash_impl=hash_impl,
+        ),
+    )
+
+
+def _increment_dir(state_dir: str, table: str, ingest_id: int) -> str:
+    return f"{state_dir}/{table}/ingest_id={ingest_id}"
+
+
+def commit_increment(
+    kind: IncrementKind, batch: DataFrame, state_dir: str, ingest_id: int,
+    id_col: str,
+) -> tuple[dict, int]:
+    """Ingest ``batch`` as increment ``ingest_id`` and commit it: the one
+    increment path of the jobs (ingest id = manifest position) and the
+    streams (ingest id = micro-batch id).
+
+    Pins ``kind.params`` (a drift raises before anything is written), casts
+    the id to ``kind.id_type``, loads the state below ``ingest_id``,
+    ingests, and overwrites ``accepted/``, ``rejects/`` and each spec's new
+    rows under ``ingest_id=<n>``, so a replay rewrites exactly its own
+    directories.  Returns the rows each write observed and the number of
+    cross-corpus rejects."""
+    ensure_state_params(state_dir, keys=tuple(kind.params), **kind.params)
+    batch = batch.withColumn(id_col, F.col(id_col).cast(kind.id_type))
+    state = kind.load(batch.sparkSession, state_dir, ingest_id)
+    res = kind.ingest(batch, *state, id_col=id_col)
+    accepted, rejected, *new_rows = (getattr(res, f.name) for f in fields(res))
+
+    def write(table, df, *metrics):
+        return write_counted(df, _increment_dir(state_dir, table, ingest_id), *metrics)
+
+    rows = {
+        "accepted": write(
+            "accepted", batch.join(accepted.withColumnRenamed("id", id_col), id_col)
+        )["rows"],
+    }
+    rej = write(
+        "rejects", rejected,
+        F.count_if(F.col("why") == "cross_corpus").alias("cross_corpus"),
+    )
+    rows["rejects"] = rej["rows"]
+    for spec, df in zip(kind.specs, new_rows):
+        rows[spec.name] = write(spec.name, df)["rows"]
+    return rows, rej["cross_corpus"]
+
+
+def job_parser(what: str, id_col: str):
+    """The command line both incremental jobs share; each adds its knobs."""
+    import argparse
+
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--batch", help=f"new {what} batch (parquet); "
+                                    "required unless --compact-now")
+    ap.add_argument("--state", required=True, help="state directory")
+    ap.add_argument("--id-col", default=id_col)
+    ap.add_argument("--master", default=None)
+    ap.add_argument(
+        "--compact-every", type=int, default=8,
+        help="fold the per-ingest state partitions into ONE bucketed layout "
+             "whenever this many uncompacted increments accumulate "
+             "(0 disables auto-compaction)",
+    )
+    ap.add_argument(
+        "--n-buckets", type=int, default=16,
+        help="bucket count of the compacted state tables (band_index by "
+             "(band,bkey), the vector/signature store by id)",
+    )
+    ap.add_argument(
+        "--compact-now", action="store_true",
+        help="compact all completed increments and exit (no batch ingested)",
+    )
+    return ap
+
+
+def ingest_job(
+    spark, kind: IncrementKind, state_dir: str, batch: DataFrame, id_col: str,
+    fingerprint: str, compact_every: int, n_buckets: int,
+) -> dict:
+    """One run of an incremental dedup job, a manifest stage keyed on
+    ``fingerprint``; returns its JSON result.  A batch already ingested
+    resumes from its record; a new one commits as the next increment, is
+    recorded only after all its writes completed, then auto-compacts.  A
+    batch's accepted and rejected rows partition it (ids are the
+    corpus-wide key), so ``n_batch`` is their sum."""
+    import os
+
+    from log_analysis_spark.plans.manifest import Manifest, StageRecord
+
+    manifest = Manifest(f"{state_dir}/_manifest.jsonl")
+    # lookup_any, not latest-wins: each ingest owns its own output dir, so a
+    # historic record stays valid — re-submitting increment 1 after
+    # increment 5 completed must resume, not re-ingest it as increment 6
+    prior = manifest.lookup_any("ingest", fingerprint)
+    if prior is not None and os.path.exists(prior["output_path"]):
+        return {**prior["metrics"], "resumed": True,
+                "accepted_path": prior["output_path"]}
+    # next ingest_id = count of completed ingests (manifest is append-only;
+    # a crashed attempt left no record, so its id is reused and its partial
+    # subdirectories are overwritten)
+    ingest_id = len(manifest.completed("ingest"))
+    rows, n_cross = commit_increment(kind, batch, state_dir, ingest_id, id_col)
+    metrics = {
+        "ingest_id": ingest_id,
+        "n_batch": rows["accepted"] + rows["rejects"],
+        "n_accepted": rows["accepted"],
+        "n_rejected_within_batch": rows["rejects"] - n_cross,
+        "n_rejected_cross_corpus": n_cross,
+    }
+    accepted_path = _increment_dir(state_dir, "accepted", ingest_id)
+    manifest.record(StageRecord(
+        stage="ingest", input_fingerprint=fingerprint, output_path=accepted_path,
+        rows=rows["accepted"], n_partitions=len(rows), partition_rows=rows,
+        metrics=metrics,
+    ))
+    # auto-compaction AFTER the manifest commit: a crash inside the
+    # compaction never loses the ingest (versioned tables + atomic marker;
+    # see compact_state_tables)
+    comp = _read_compaction_marker(state_dir)
+    if compact_every and ingest_id + 1 - (comp["upto"] if comp else 0) >= compact_every:
+        marker = compact_state_tables(
+            spark, state_dir, ingest_id + 1, kind.specs, n_buckets, kind.marker
+        )
+        metrics["compacted_upto"] = marker["upto"]
+    return {**metrics, "accepted_path": accepted_path}
 
 
 @dataclass

@@ -55,12 +55,13 @@ schemas the way ``dedup._minhash_banded_schema`` derives its id type.
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import partial
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from log_analysis_spark.operators import dedup, incremental, similarity
+from log_analysis_spark.operators import incremental, similarity
 
 UNIT_SCHEMA = "id long, unit array<double>"
 EBAND_SCHEMA = "id long, band int, bkey int"
@@ -103,10 +104,9 @@ def load_embed_state(spark, state_dir: str, before_ingest_id: int | None = None)
             f"state at {state_dir!r} is not an embedding state "
             f"(marker kind={comp.get('kind')!r})"
         )
-    unit, band = incremental.load_state_tables(
+    return tuple(incremental.load_state_tables(
         spark, state_dir, EMBED_STATE_SPECS, before_ingest_id
-    )
-    return unit, band
+    ))
 
 
 def compact_embed_state(
@@ -129,6 +129,25 @@ class EmbedIngestResult:
     rejected: DataFrame        # (id, matched_id, cosine, why)
     new_unit_rows: DataFrame   # (id, unit) to append to unit_store
     new_band_rows: DataFrame   # (id, band, bkey) to append to band_index
+
+
+def embed_kind(
+    dim: int, threshold: float = 0.99, n_planes: int = 64, band_bits: int = 8,
+    seed: int = 42, vec_col: str = "embedding",
+) -> incremental.IncrementKind:
+    """The sign-band vector state (``ingest_embedding_batch``) as an
+    increment kind; ``dim`` is pinned with the LSH knobs."""
+    return incremental.IncrementKind(
+        specs=EMBED_STATE_SPECS,
+        id_type="long",
+        params=dict(n_planes=n_planes, band_bits=band_bits, seed=seed, dim=dim),
+        marker={"kind": "embed"},
+        load=load_embed_state,
+        ingest=partial(
+            ingest_embedding_batch, threshold=threshold, dim=dim,
+            n_planes=n_planes, band_bits=band_bits, seed=seed, vec_col=vec_col,
+        ),
+    )
 
 
 def empty_embed_state(spark) -> tuple[DataFrame, DataFrame]:
@@ -165,55 +184,14 @@ def ingest_embedding_batch(
     near-dup-rejected) and contribute no state rows — identical to the
     batch path, which drops them from both the banding and the verify.
     """
-    spark = batch.sparkSession
-
     # -- 1. within-batch: exact-cosine near-dup dedup ----------------------
-    intra_pairs = similarity.embedding_neardup_pairs_matmul(
-        batch, threshold, dim, n_planes, band_bits, seed, id_col, vec_col
-    ).persist()
-    if intra_pairs.count() <= local_pairs_cap:
-        losers = incremental._resolve_local(
-            intra_pairs.collect(), score_key="cosine"
-        )
-        intra_pairs.unpersist()
-        loser_schema = T.StructType(
-            [
-                T.StructField("id", T.LongType()),
-                T.StructField("matched_id", T.LongType()),
-                T.StructField("cosine", T.DoubleType()),
-            ]
-        )
-        intra_rejected = spark.createDataFrame(
-            [(i, r, c) for i, (r, c) in losers.items()], loser_schema
-        ).withColumn("why", F.lit("within_batch"))
-        reps = batch.join(
-            F.broadcast(intra_rejected.select(F.col("id").alias(id_col))),
-            id_col,
-            "left_anti",
-        )
-    else:
-        groups = dedup.neardup_groups(
-            batch.select(F.col(id_col).alias("id")), intra_pairs
-        )
-        intra_rejected = (
-            groups.filter(F.col("id") != F.col("rep_id"))
-            .join(
-                intra_pairs.select(
-                    F.col("id_a").alias("rep_id"),
-                    F.col("id_b").alias("id"),
-                    "cosine",
-                ),
-                ["id", "rep_id"],
-                "left",
-            )
-            .select(
-                "id",
-                F.col("rep_id").alias("matched_id"),
-                "cosine",
-                F.lit("within_batch").alias("why"),
-            )
-        )
-        reps = dedup.drop_near_duplicates(batch, groups, id_col)
+    intra_rejected, reps = incremental._within_batch(
+        batch,
+        similarity.embedding_neardup_pairs_matmul(
+            batch, threshold, dim, n_planes, band_bits, seed, id_col, vec_col
+        ),
+        id_col, T.LongType(), "cosine", "cosine", local_pairs_cap,
+    )
 
     # -- 2. cross-corpus candidates: batch bands equi-join the index -------
     dim = similarity._validate_dim(reps, vec_col, dim)
@@ -221,18 +199,7 @@ def ingest_embedding_batch(
     batch_bands = similarity._signatures_matmul(
         reps, planes, band_bits, id_col, vec_col
     ).select("id", F.posexplode("bkeys").alias("band", "bkey"))
-    cand = (
-        batch_bands.alias("n")
-        .join(
-            band_index.alias("o"),
-            on=[
-                F.col("n.band") == F.col("o.band"),
-                F.col("n.bkey") == F.col("o.bkey"),
-            ],
-        )
-        .select(F.col("n.id").alias("new_id"), F.col("o.id").alias("old_id"))
-        .dropDuplicates(["new_id", "old_id"])
-    )
+    cand = incremental._band_candidates(batch_bands, band_index)
 
     # -- 3. exact-cosine verify over the two unit stores -------------------
     new_units = similarity._units_matmul(reps, id_col, vec_col)
@@ -248,19 +215,7 @@ def ingest_embedding_batch(
         .withColumn("cosine", similarity._pair_cosine(F.col("un"), F.col("uo")))
         .filter(F.col("cosine") >= threshold)
     )
-    cross_rejected = (
-        verified.groupBy("new_id")
-        .agg(
-            F.max_by("old_id", "cosine").alias("matched_id"),
-            F.max("cosine").alias("cosine"),
-        )
-        .select(
-            F.col("new_id").alias("id"),
-            "matched_id",
-            "cosine",
-            F.lit("cross_corpus").alias("why"),
-        )
-    )
+    cross_rejected = incremental._best_corpus_match(verified, "cosine")
 
     # -- 4. accepted = reps minus corpus matches; state rows to append -----
     dup_ids = cross_rejected.select("id")

@@ -5,11 +5,14 @@
   * S9 — CSV sink with header (response_times2.py:49-55)
   * S10 — partitioned fan-out sink: one directory per distinct key value
     (log_processing.py:14-41 one file per PID → partitionBy)
+  * ``write_counted`` — the jobs' output sink: the counts a job reports
+    about its own output ride the write, never a read-back
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import functions as F
 
 
 def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
@@ -25,6 +28,33 @@ def write_partitioned(
     mode: str = "overwrite",
 ) -> None:
     df.write.mode(mode).format(fmt).partitionBy(*partition_cols).save(path)
+
+
+def write_counted(
+    df: DataFrame, path: str, *metrics: Column, partition_by: tuple = ()
+) -> dict:
+    """Overwrite ``path`` with ``df`` as parquet (hive-partitioned by
+    ``partition_by``) and return what the write counted: ``rows`` plus one
+    key per aggregate in ``metrics``, named by its alias.
+
+    The counts ride the write as an unnamed ``Observation`` (unique across
+    micro-batches) in its result stage, where a retried task is merged
+    once; the output is never read back.  Spark rejects DISTINCT in
+    observed metrics."""
+    obs = Observation()
+    observed = df.observe(obs, F.count(F.lit(1)).alias("rows"), *metrics)
+    observed.write.mode("overwrite").partitionBy(*partition_by).parquet(path)
+    return obs.get
+
+
+def partition_values(spark, path: str, partition_by: tuple, col: str) -> set:
+    """The values of hive partition column ``col`` that a write partitioned
+    by ``partition_by`` created under ``path``, read off the directory
+    listing (Hadoop FS, any scheme): a DISTINCT with no Spark job."""
+    depth = list(partition_by).index(col)
+    pattern = spark._jvm.org.apache.hadoop.fs.Path(path + "/*" * depth + f"/{col}=*")
+    fs = pattern.getFileSystem(spark._jsc.hadoopConfiguration())
+    return {st.getPath().getName()[len(col) + 1:] for st in fs.globStatus(pattern) or []}
 
 
 def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
@@ -111,8 +141,7 @@ def upsert_keyed(
 
     new_version = version + 1
     out = os.path.join(table_dir, f"version={new_version}")
-    merged.write.mode("overwrite").parquet(out)
-    n_rows = spark.read.parquet(out).count()
+    n_rows = write_counted(merged, out)["rows"]
     tmp = marker + ".tmp"
     os.makedirs(table_dir, exist_ok=True)
     with open(tmp, "w") as f:

@@ -1,11 +1,14 @@
-"""Streaming near-dup corpus ingestion: the incremental LSH ingest
-(operators/incremental.py) driven by Structured Streaming's file source.
+"""Streaming near-dup corpus ingestion: the incremental LSH ingests (text
+MinHash and embedding sign-band) driven by Structured Streaming's file
+source.
 
-The batch job (jobs/run_incremental_dedup.py) ingests one increment per
-spark-submit; this is the same state machine running CONTINUOUSLY — new
+The batch jobs (jobs/run_incremental_{dedup,embed}.py) ingest one increment
+per spark-submit; this is the same state machine running CONTINUOUSLY — new
 parquet files landing in a watch directory become micro-batches, each
-deduped within itself and against everything previously accepted, with the
-signature/band state growing append-only per batch.
+deduped within itself and against everything previously accepted.  Both
+kinds run one ``foreachBatch`` driver over the jobs' own
+``incremental.commit_increment``, so a drifted LSH knob raises before the
+micro-batch writes anything, exactly like the jobs.
 
 Exactly-once story (the streaming analogue of the batch job's manifest):
 the checkpoint records the last committed micro-batch id, and every write
@@ -22,10 +25,62 @@ files only; the accepted corpus is the union of ``accepted/ingest_id=*``.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+import os
+from typing import Callable
 
-from log_analysis_spark.operators import incremental
+from pyspark.errors import StreamingQueryException
+from pyspark.sql import DataFrame, SparkSession
+
+from log_analysis_spark.operators import incremental, incremental_embed, similarity
+
+
+def _drain(
+    spark: SparkSession,
+    src_path: str,
+    schema: str,
+    state_dir: str,
+    id_col: str,
+    kind_for: Callable[[DataFrame], incremental.IncrementKind],
+    max_files_per_trigger: int | None,
+) -> dict[str, int]:
+    """Commit every unprocessed file of ``src_path`` (ingest id =
+    micro-batch id) and return the state dir's accepted/rejected totals.
+    A micro-batch's error is re-raised as itself, not wrapped in a
+    ``StreamingQueryException``."""
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    failures: list[Exception] = []
+
+    def ingest(batch_df: DataFrame, batch_id: int) -> None:
+        try:
+            incremental.commit_increment(
+                kind_for(batch_df), batch_df, state_dir, batch_id, id_col
+            )
+        except Exception as e:
+            failures.append(e)
+            raise
+
+    q = (
+        reader.parquet(src_path).writeStream.foreachBatch(ingest)
+        .option("checkpointLocation", f"{state_dir}/_checkpoint")
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    except StreamingQueryException:
+        if failures:
+            raise failures[-1] from None
+        raise
+    finally:
+        q.stop()
+
+    # totals over every call on this state dir, not just this drain
+    totals = {}
+    for key, table in (("n_accepted", "accepted"), ("n_rejected", "rejects")):
+        path = f"{state_dir}/{table}"
+        totals[key] = spark.read.parquet(path).count() if os.path.exists(path) else 0
+    return totals
 
 
 def run_stream_neardup_ingest(
@@ -38,56 +93,43 @@ def run_stream_neardup_ingest(
     threshold: float = 0.5,
     max_files_per_trigger: int | None = None,
 ) -> dict[str, int]:
-    """Drain ``src_path`` through the incremental ingest; returns totals.
-
-    Call repeatedly with the same ``state_dir``: the derived checkpoint
-    makes each call resume from files not yet processed (the test drives
-    two calls with a file landing in between — two micro-batches, one
-    cross-batch duplicate rejection).
-    """
-    reader = spark.readStream.schema(doc_schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(src_path)
-
-    def ingest(batch_df: DataFrame, batch_id: int) -> None:
-        b = batch_df.withColumn(id_col, F.col(id_col).cast("string"))
-        sig, band = incremental.load_state(spark, state_dir, batch_id)
-        res = incremental.ingest_batch(
-            b, sig, band, text_col=text_col, id_col=id_col, threshold=threshold
-        )
-        accepted = b.join(
-            res.accepted.withColumnRenamed("id", id_col), id_col
-        ).persist()
-        accepted.write.mode("overwrite").parquet(
-            f"{state_dir}/accepted/ingest_id={batch_id}"
-        )
-        res.rejected.write.mode("overwrite").parquet(
-            f"{state_dir}/rejects/ingest_id={batch_id}"
-        )
-        res.new_sig_rows.write.mode("overwrite").parquet(
-            f"{state_dir}/sig_store/ingest_id={batch_id}"
-        )
-        res.new_band_rows.write.mode("overwrite").parquet(
-            f"{state_dir}/band_index/ingest_id={batch_id}"
-        )
-        accepted.unpersist()
-
-    q = (
-        stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", f"{state_dir}/_checkpoint")
-        .start()
+    """Drain ``src_path`` through the incremental text ingest; returns
+    totals.  Call repeatedly with the same ``state_dir``: the derived
+    checkpoint makes each call resume from files not yet processed."""
+    kind = incremental.text_kind(threshold=threshold, text_col=text_col)
+    return _drain(
+        spark, src_path, doc_schema, state_dir, id_col, lambda _: kind,
+        max_files_per_trigger,
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
 
-    import os
 
-    totals = {"n_accepted": 0, "n_rejected": 0}
-    if os.path.exists(f"{state_dir}/accepted"):
-        totals["n_accepted"] = spark.read.parquet(f"{state_dir}/accepted").count()
-    if os.path.exists(f"{state_dir}/rejects"):
-        totals["n_rejected"] = spark.read.parquet(f"{state_dir}/rejects").count()
-    return totals
+def run_stream_embed_ingest(
+    spark: SparkSession,
+    src_path: str,
+    state_dir: str,
+    vec_schema: str = "vec_id long, embedding array<float>",
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    threshold: float = 0.99,
+    dim: int | None = None,
+    n_planes: int = 64,
+    band_bits: int = 8,
+    seed: int = 42,
+    max_files_per_trigger: int | None = None,
+) -> dict[str, int]:
+    """Drain ``src_path`` through the incremental embedding ingest (EXACT
+    cosine over the persisted unit store); returns totals.  Call repeatedly
+    with the same ``state_dir``.  ``dim`` defaults to the width of each
+    micro-batch, pinned with the LSH knobs like the batch job's."""
+
+    def kind_for(batch: DataFrame) -> incremental.IncrementKind:
+        return incremental_embed.embed_kind(
+            dim or similarity._validate_dim(batch, vec_col, None),
+            threshold=threshold, n_planes=n_planes, band_bits=band_bits,
+            seed=seed, vec_col=vec_col,
+        )
+
+    return _drain(
+        spark, src_path, vec_schema, state_dir, id_col, kind_for,
+        max_files_per_trigger,
+    )

@@ -67,6 +67,27 @@ def test_csv_and_partitioned_sinks(spark, transcripts, tmp_path):
     assert set(back2.columns) == {"conv_id", "turn_idx", "role"}
 
 
+def test_write_counted_counts_ride_the_write(spark, tmp_path):
+    """The counts come from the write itself: rows plus plain aggregates,
+    for a two-level partitioned write and for an empty output; the
+    partition values match what a read of the output finds."""
+    from pyspark.sql import functions as F
+
+    df = spark.range(10).selectExpr("id", "id % 2 AS split", "id % 3 AS shard")
+    out = str(tmp_path / "o")
+    got = sinks.write_counted(
+        df, out, F.count_if(F.col("id") > 6).alias("big"),
+        F.sum("id").alias("total"), partition_by=("split", "shard"),
+    )
+    assert got == {"rows": 10, "big": 3, "total": 45}
+    back = spark.read.parquet(out)
+    assert back.count() == 10
+    for col in ("split", "shard"):
+        want = {str(r[0]) for r in back.select(col).distinct().collect()}
+        assert sinks.partition_values(spark, out, ("split", "shard"), col) == want
+    assert sinks.write_counted(df.filter("id < 0"), str(tmp_path / "e")) == {"rows": 0}
+
+
 # ---------------------------------------------------------------------------
 # bucketed (co-located) tables
 # ---------------------------------------------------------------------------

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from log_analysis_spark.functions.parse import parse_turns
@@ -221,7 +222,7 @@ def test_stream_embed_ingest_across_microbatches(spark, tmp_path):
     verbatim duplicate landing in the second file rejects cross-corpus at
     exact cosine 1.0 against the persisted unit store; a drained stream
     re-run changes nothing."""
-    from log_analysis_spark.streaming.incremental_embed_stream import (
+    from log_analysis_spark.streaming.incremental_stream import (
         run_stream_embed_ingest,
     )
 
@@ -254,6 +255,40 @@ def test_stream_embed_ingest_across_microbatches(spark, tmp_path):
     # drained stream: a third call processes nothing and changes nothing
     t3 = run_stream_embed_ingest(spark, src, state)
     assert t3 == t2
+
+
+def test_stream_embed_ingest_refuses_drifted_params(spark, tmp_path):
+    """The stream pins its LSH knobs like the batch job: a second drain of
+    the same state with a different seed raises before its micro-batch
+    writes anything, instead of admitting a verbatim duplicate whose band
+    keys can no longer collide with the stored ones."""
+    from log_analysis_spark.streaming.incremental_stream import (
+        run_stream_embed_ingest,
+    )
+
+    src = str(tmp_path / "vec_src")
+    state = tmp_path / "embed_state"
+    schema = "vec_id long, embedding array<float>"
+    spark.createDataFrame(
+        [(1, [1.0, 0.0, 0.0, 0.0]), (2, [0.0, 1.0, 0.0, 0.0])], schema
+    ).coalesce(1).write.mode("overwrite").parquet(src)
+    t1 = run_stream_embed_ingest(spark, src, str(state), seed=42)
+    assert t1 == {"n_accepted": 2, "n_rejected": 0}
+
+    def snapshot():
+        return {
+            str(p.relative_to(state)): p.read_bytes()
+            for p in state.rglob("*")
+            if p.is_file() and "_checkpoint" not in p.parts
+        }
+
+    before = snapshot()
+    spark.createDataFrame(
+        [(10, [1.0, 0.0, 0.0, 0.0])], schema
+    ).coalesce(1).write.mode("append").parquet(src)
+    with pytest.raises(ValueError, match="seed"):
+        run_stream_embed_ingest(spark, src, str(state), seed=7)
+    assert snapshot() == before
 
 
 def test_streaming_quality_gates_match_batch(spark, tmp_path):

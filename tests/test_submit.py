@@ -59,15 +59,33 @@ def _submit(pkg_zip, job, extra, cwd):
     assert lines, out.stdout[-2000:]
     return json.loads(lines[-1])
 
-def test_submit_pipeline_job(pkg_zip, tmp_path):
+def test_submit_pipeline_job(pkg_zip, tmp_path, sf_dir):
+    """One clean sf0.001 submit with both input gates on: --expect's
+    structural report lands in the summary, --seq-audit writes the sidecar
+    and reports zero non-contiguous conversations, and the routed counts
+    cover every turn."""
     res = _submit(
         pkg_zip,
         "run_pipeline.py",
-        ["--sf-dir", "/root/testdata/sf0.001", "--out", str(tmp_path / "pipe")],
+        ["--sf-dir", sf_dir, "--out", str(tmp_path / "pipe"),
+         "--expect", "--seq-audit", "--seq-audit-max-bad-frac", "0.0"],
         cwd=tmp_path,
     )
     assert res["n_turns"] > 0
     assert sum(res["per_sink_counts"].values()) == res["n_turns"]
+    assert res["expectations"] == {
+        "not_null(conv_id)": 0, "not_null(turn_idx)": 0, "not_null(ts)": 0,
+        "unique(conv_id,turn_idx)": 0, "min_rows(1)": 0,
+    }
+    assert res["seq_audit"]["n_convs"] > 0
+    assert res["seq_audit"]["n_bad_convs"] == 0
+    import duckdb
+
+    n = duckdb.connect().execute(
+        f"SELECT count(*), count(*) FILTER (WHERE NOT is_contiguous)"
+        f" FROM read_parquet('{tmp_path}/pipe/seq_audit/*.parquet')"
+    ).fetchone()
+    assert n[0] == res["seq_audit"]["n_convs"] and n[1] == 0
 
 
 def test_submit_dedup_job(pkg_zip, tmp_path):
@@ -415,6 +433,28 @@ def test_submit_incremental_dedup_job(pkg_zip, tmp_path):
     }
     assert got == {"d1", "d3", "e2"}
 
+    # every count the job reports rode its writes: recount each increment's
+    # outputs from disk
+    def recount(table, i, where="true"):
+        return dd.sql(
+            f"SELECT count(*) FROM read_parquet("
+            f"'{state}/{table}/ingest_id={i}/*.parquet') WHERE {where}"
+        ).fetchone()[0]
+
+    for r, batch in ((r1, "b1"), (r2, "b2")):
+        i = r["ingest_id"]
+        on_disk = {
+            "n_batch": dd.sql(
+                f"SELECT count(*) FROM read_parquet('{tmp_path}/{batch}.parquet')"
+            ).fetchone()[0],
+            "n_accepted": recount("accepted", i),
+            "n_rejected_within_batch": recount("rejects", i, "why = 'within_batch'"),
+            "n_rejected_cross_corpus": recount("rejects", i, "why = 'cross_corpus'"),
+        }
+        assert {k: r[k] for k in on_disk} == on_disk
+    # a resumed run reprints the original increment's counts
+    assert {k: r4[k] for k in r1} == r1
+
 
 def test_submit_incremental_compaction_across_sessions(pkg_zip, tmp_path):
     """Auto-compaction fires at --compact-every, prunes the folded
@@ -618,11 +658,39 @@ def test_submit_events_analytics_job(pkg_zip, tmp_path):
     assert res["n_robust_outliers"] > 0  # outliers/ written, MAD gate bites
     import duckdb
 
-    rep = duckdb.connect().execute(
+    con = duckdb.connect()
+    rep = con.execute(
         f"SELECT count(*), count(est_distinct_hll) "
         f"FROM read_parquet('{tmp_path}/ea/report/*.parquet')"
     ).fetchone()
     assert rep[0] == 15 and rep[1] == 15  # HLL column present on every row
+
+    # every count the job reports rode its write: recount each from disk
+    def recount(out, where="true", what="count(*)"):
+        return con.execute(
+            f"SELECT {what} FROM read_parquet('{tmp_path}/ea/{out}/*.parquet')"
+            f" WHERE {where}"
+        ).fetchone()[0]
+
+    on_disk = {
+        "n_asof": recount("asof"),
+        "n_sliding": recount("sliding"),
+        "n_funnel_users": recount("funnel"),
+        "n_funnel_completed": recount("funnel", "steps_completed = 3"),
+        "n_retention_cells": recount("retention"),
+        "n_report_rows": recount("report"),
+        "n_ohlc_bars": recount("ohlc"),
+        "n_burst_alerts": recount("alerts"),
+        "n_drift_alerts": recount("drift"),
+        "n_robust_outliers": recount("outliers"),
+        "n_attribution_rows": recount("attribution"),
+        "n_attributed_convs": recount(
+            "attribution", "touch_event_id IS NOT NULL",
+            "count(DISTINCT conv_event_id)",
+        ),
+        "n_profile_rows": recount("profile"),
+    }
+    assert {k: res[k] for k in on_disk} == on_disk
     # resume: same knobs reprint the summary without recompute
     res2 = _submit(
         pkg_zip,
@@ -643,22 +711,10 @@ def test_submit_events_analytics_job(pkg_zip, tmp_path):
     assert res2.get("resumed") is True and res2["n_asof"] == res["n_asof"]
 
 
-def test_pipeline_expect_gate(pkg_zip, tmp_path):
-    """--expect: clean input passes and the report lands in the summary;
-    corrupt input (duplicated (conv_id, turn_idx)) fails LOUDLY with the
-    violating rule before any pipeline stage writes."""
-    res = _submit(
-        pkg_zip,
-        "run_pipeline.py",
-        ["--sf-dir", "/root/testdata/sf0.001",
-         "--out", str(tmp_path / "p1"), "--expect"],
-        cwd=tmp_path,
-    )
-    assert res["expectations"] == {
-        "not_null(conv_id)": 0, "not_null(turn_idx)": 0, "not_null(ts)": 0,
-        "unique(conv_id,turn_idx)": 0, "min_rows(1)": 0,
-    }
-    # corrupt: duplicate a turn key
+def test_pipeline_expect_gate(tmp_path):
+    """--expect on corrupt input (duplicated (conv_id, turn_idx)) fails
+    LOUDLY with the violating rule before any pipeline stage writes; the
+    clean-input pass is part of test_submit_pipeline_job."""
     import duckdb
 
     bad = tmp_path / "bad_turns"
@@ -679,27 +735,11 @@ def test_pipeline_expect_gate(pkg_zip, tmp_path):
     assert "unique(conv_id,turn_idx)" in (out.stderr + out.stdout)
 
 
-def test_pipeline_seq_audit_gate(pkg_zip, tmp_path):
-    """--seq-audit: clean derived turns audit fully contiguous (sidecar
-    written + zero bad convs in the summary); a gapped input stream under
-    a tight --seq-audit-max-bad-frac fails loudly BEFORE the pipeline."""
-    res = _submit(
-        pkg_zip,
-        "run_pipeline.py",
-        ["--sf-dir", "/root/testdata/sf0.001",
-         "--out", str(tmp_path / "s1"), "--seq-audit",
-         "--seq-audit-max-bad-frac", "0.0"],
-        cwd=tmp_path,
-    )
-    assert res["seq_audit"]["n_convs"] > 0
-    assert res["seq_audit"]["n_bad_convs"] == 0
+def test_pipeline_seq_audit_gate(tmp_path):
+    """--seq-audit: a gapped input stream under a tight
+    --seq-audit-max-bad-frac fails loudly BEFORE the pipeline; the clean
+    contiguous audit is part of test_submit_pipeline_job."""
     import duckdb
-
-    n = duckdb.connect().execute(
-        f"SELECT count(*), count(*) FILTER (WHERE NOT is_contiguous)"
-        f" FROM read_parquet('{tmp_path}/s1/seq_audit/*.parquet')"
-    ).fetchone()
-    assert n[0] == res["seq_audit"]["n_convs"] and n[1] == 0
 
     # gapped stream: drop turn_idx=1 from one conv → non-contiguous
     bad = tmp_path / "gap_turns"
