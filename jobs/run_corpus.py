@@ -220,6 +220,29 @@ def main() -> None:
     )
     ap.add_argument("--master", default=None)
     args = ap.parse_args()
+    # usage errors exit 2 here, before the JVM starts
+    if (
+        args.classifier_min_mean is not None
+        and args.classifier_pareto_alpha is not None
+    ):
+        ap.error(
+            "--classifier-min-mean and --classifier-pareto-alpha are "
+            "mutually exclusive gates"
+        )
+    rates = json.loads(args.rates)
+    n_mix_modes = sum(
+        1 for on in (bool(rates), args.temperature is not None,
+                     args.budget_mix_weights is not None) if on
+    )
+    if n_mix_modes > 1:
+        ap.error(
+            "--rates, --temperature and --budget-mix-weights are mutually "
+            "exclusive sampling modes"
+        )
+    if args.budget_mix_weights is not None and args.budget_mix_tokens is None:
+        ap.error("--budget-mix-weights requires --budget-mix-tokens")
+    if args.fuzzy_decontam_threshold is not None and not args.bench:
+        ap.error("--fuzzy-decontam-threshold requires --bench")
 
     from pyspark.sql import functions as F
 
@@ -340,8 +363,6 @@ def main() -> None:
 
     n_fuzzy = n_decontam
     if args.fuzzy_decontam_threshold is not None:
-        if not args.bench:
-            raise SystemExit("--fuzzy-decontam-threshold requires --bench")
         fz = dedup.fuzzy_decontaminate(
             docs, bench, threshold=args.fuzzy_decontam_threshold
         ).select("doc_id", "contaminated")
@@ -420,14 +441,6 @@ def main() -> None:
 
     if (
         args.classifier_min_mean is not None
-        and args.classifier_pareto_alpha is not None
-    ):
-        raise SystemExit(
-            "--classifier-min-mean and --classifier-pareto-alpha are "
-            "mutually exclusive gates"
-        )
-    if (
-        args.classifier_min_mean is not None
         or args.classifier_pareto_alpha is not None
     ):
         scored = textstats.ngram_quality_classifier(
@@ -459,18 +472,6 @@ def main() -> None:
     else:
         n_dsir = None
 
-    rates = json.loads(args.rates)
-    n_mix_modes = sum(
-        1 for on in (bool(rates), args.temperature is not None,
-                     args.budget_mix_weights is not None) if on
-    )
-    if n_mix_modes > 1:
-        raise SystemExit(
-            "--rates, --temperature and --budget-mix-weights are mutually "
-            "exclusive sampling modes"
-        )
-    if args.budget_mix_weights is not None and args.budget_mix_tokens is None:
-        raise SystemExit("--budget-mix-weights requires --budget-mix-tokens")
     if rates:
         docs = corpus.stratified_sample(docs, args.strata_col, rates)
     elif args.temperature is not None:

@@ -11,6 +11,11 @@
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+import shutil
+
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
@@ -57,6 +62,23 @@ def partition_values(spark, path: str, partition_by: tuple, col: str) -> set:
     return {st.getPath().getName()[len(col) + 1:] for st in fs.globStatus(pattern) or []}
 
 
+def footer_rows(path: str, partition_by: tuple, col: str) -> dict[str, int]:
+    """Rows per value of hive partition column ``col`` under the local
+    ``path``, written partitioned by ``partition_by``: the sum of
+    ``num_rows`` in each committed file's parquet footer, so no Spark job
+    runs and no data page is read.  Names starting with ``_`` or ``.`` are
+    skipped, as Spark's reader skips them (``_temporary/``, ``.crc``)."""
+    import pyarrow.parquet as pq
+
+    depth = list(partition_by).index(col)
+    pattern = [glob.escape(path), *(f"{c}=*" for c in partition_by), "[!_.]*"]
+    counts: dict[str, int] = {}
+    for f in glob.glob(os.path.join(*pattern)):
+        value = os.path.relpath(f, path).split(os.sep)[depth][len(col) + 1:]
+        counts[value] = counts.get(value, 0) + pq.read_metadata(f).num_rows
+    return counts
+
+
 def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     """ORC sink — the other columnar format warehouses standardize on;
     native in Spark (vectorized reader, predicate pushdown) so the engine
@@ -96,13 +118,6 @@ def upsert_keyed(
     result order-dependent — rejected; schema drift vs the current table is
     rejected by unionByName (no silent column loss).
     """
-    import glob
-    import json
-    import os
-    import shutil
-
-    from pyspark.sql import functions as F
-
     if not key_cols:
         raise ValueError("key_cols must be non-empty")
     dup = (
@@ -158,9 +173,6 @@ def read_keyed(spark, table_dir: str) -> DataFrame:
     """Read the current committed version of an ``upsert_keyed`` table (the
     marker is the single source of truth — a newer, un-flipped version dir
     from a crashed writer is invisible)."""
-    import json
-    import os
-
     marker = os.path.join(table_dir, "_current.json")
     with open(marker) as f:
         version = json.load(f)["version"]

@@ -25,13 +25,13 @@ files only; the accepted corpus is the union of ``accepted/ingest_id=*``.
 
 from __future__ import annotations
 
-import os
 from typing import Callable
 
 from pyspark.errors import StreamingQueryException
 from pyspark.sql import DataFrame, SparkSession
 
 from log_analysis_spark.operators import incremental, incremental_embed, similarity
+from log_analysis_spark.sources import sinks
 
 
 def _drain(
@@ -44,7 +44,8 @@ def _drain(
     max_files_per_trigger: int | None,
 ) -> dict[str, int]:
     """Commit every unprocessed file of ``src_path`` (ingest id =
-    micro-batch id) and return the state dir's accepted/rejected totals.
+    micro-batch id) and return the state dir's accepted/rejected totals,
+    summed from the footers of the files every call on it committed.
     A micro-batch's error is re-raised as itself, not wrapped in a
     ``StreamingQueryException``."""
     reader = spark.readStream.schema(schema)
@@ -76,11 +77,11 @@ def _drain(
         q.stop()
 
     # totals over every call on this state dir, not just this drain
-    totals = {}
-    for key, table in (("n_accepted", "accepted"), ("n_rejected", "rejects")):
-        path = f"{state_dir}/{table}"
-        totals[key] = spark.read.parquet(path).count() if os.path.exists(path) else 0
-    return totals
+    def total(table: str) -> int:
+        rows = sinks.footer_rows(f"{state_dir}/{table}", ("ingest_id",), "ingest_id")
+        return sum(rows.values())
+
+    return {"n_accepted": total("accepted"), "n_rejected": total("rejects")}
 
 
 def run_stream_neardup_ingest(

@@ -15,10 +15,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from log_analysis_spark.datagen import TRANSCRIPTS_SCHEMA_DDL
 from log_analysis_spark.functions.parse import parse_turns_native
 from log_analysis_spark.operators import router
+from log_analysis_spark.sources import sinks
 
 
 def stream_transcripts(spark: SparkSession, path: str) -> DataFrame:
@@ -45,22 +47,25 @@ def streaming_hourly_counts(stream: DataFrame, watermark: str = "2 hours") -> Da
     )
 
 
+def _run_to_end(writer: DataStreamWriter) -> None:
+    """Start ``writer``'s query and stop it once every available file is
+    processed."""
+    q = writer.start()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+
 def run_stream_to_memory(
     spark: SparkSession, path: str, query_name: str = "stream_counts"
 ) -> DataFrame:
     """Drive the streaming query to completion over a static dir (test/demo
     harness: memory sink + processAllAvailable)."""
     agg = streaming_hourly_counts(stream_transcripts(spark, path))
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .start()
+    _run_to_end(
+        agg.writeStream.outputMode("complete").format("memory").queryName(query_name)
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return spark.sql(f"SELECT * FROM {query_name}")
 
 
@@ -79,17 +84,10 @@ def run_stream_dedup_to_memory(
     stream = stream_transcripts(spark, path)
     parsed = parse_turns_native(stream)
     dd = parsed.withColumn("_k", F.md5("text")).dropDuplicates(["_k"])
-    q = (
+    _run_to_end(
         dd.select("conv_id", "turn_idx", "turn_class", "_k")
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
+        .writeStream.outputMode("append").format("memory").queryName(query_name)
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return spark.sql(
         f"SELECT turn_class, count(*) AS n_unique FROM {query_name}"
         " GROUP BY turn_class"
@@ -124,29 +122,26 @@ def streaming_dedup_within_watermark(
 def run_stream_routed(
     spark: SparkSession, src_path: str, out_dir: str, checkpoint: str | None = None
 ) -> dict[str, int]:
-    """Streaming fan-out: parse → tag → per-batch partitionBy(sink) append
-    via ``foreachBatch``.
+    """Streaming fan-out: parse → tag → a ``foreachBatch`` write of each
+    micro-batch, partitioned by sink, into ``batch=<id>``; returns the rows
+    per sink over every ``batch=*`` dir, summed from the committed files'
+    parquet footers (``sinks.footer_rows``: no Spark job).
 
-    Exactly-once story: the checkpoint records the last committed batch id;
-    ``foreachBatch`` writes each micro-batch into a ``batch=<id>`` suffix
-    dir so a replayed batch overwrites its own output instead of
-    double-appending (idempotent per batch id — the streaming analogue of
-    the manifest's replace-partition rule).  Restarting with the same
-    checkpoint resumes from the unprocessed files only.
+    Exactly-once story: the checkpoint records the last committed batch id,
+    and a replayed batch overwrites its own ``batch=<id>`` dir instead of
+    double-appending (the streaming analogue of the manifest's
+    replace-partition rule); a restart resumes from unprocessed files only.
 
-    The guarantee only holds when batch ids and batch dirs stay in sync, so
-    the checkpoint is mandatory (derived from ``out_dir`` when not given) and
-    a start WITHOUT a prior checkpoint clears any stale ``batch=*`` dirs —
-    otherwise a shorter rerun would restart ids at 0 and the read-back would
-    double-count surviving ``batch=N`` dirs from the earlier, longer run.
-
-    The auto-clean is scoped to the DERIVED-checkpoint case only (out_dir
-    and checkpoint are then one unit, so batch dirs without the checkpoint
-    are provably stale).  With an EXPLICIT checkpoint that does not exist
-    while out_dir holds batch dirs, the function refuses to start instead of
-    silently destroying output that may belong to another job or to a
-    checkpoint the caller mislaid — delete the dirs (or pass the derived
-    default) to opt into the cleanup.
+    That guarantee, and exact totals, need batch ids and batch dirs in sync,
+    so the checkpoint is mandatory (derived from ``out_dir`` when not given)
+    and a start WITHOUT a prior checkpoint clears stale ``batch=*`` dirs,
+    which a shorter rerun restarting ids at 0 would otherwise double-count.
+    The clean is scoped to the DERIVED checkpoint (out_dir and checkpoint
+    are then one unit, so batch dirs without it are provably stale).  With
+    an EXPLICIT checkpoint that does not exist while out_dir holds batch
+    dirs, the function refuses to start instead of silently destroying
+    output that may belong to another job or to a checkpoint the caller
+    mislaid — delete the dirs (or pass the derived default) to opt in.
     """
     import glob
     import os
@@ -174,16 +169,11 @@ def run_stream_routed(
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         router.route_write(batch_df, f"{out_dir}/batch={batch_id}")
 
-    writer = tagged.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint
+    _run_to_end(
+        tagged.writeStream.foreachBatch(write_batch)
+        .option("checkpointLocation", checkpoint)
     )
-    q = writer.start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    routed = spark.read.option("basePath", out_dir).parquet(f"{out_dir}/batch=*")
-    return {r["sink"]: r["n"] for r in router.sink_counts(routed).collect()}
+    return sinks.footer_rows(out_dir, ("batch", "sink"), "sink")
 
 
 def streaming_session_counts(stream: DataFrame, gap: str = "15 minutes") -> DataFrame:
@@ -219,14 +209,7 @@ def run_stream_sessions_to_memory(
     query_name: str = "stream_sessions",
 ) -> DataFrame:
     agg = streaming_session_counts(stream_transcripts(spark, path), gap)
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .start()
+    _run_to_end(
+        agg.writeStream.outputMode("complete").format("memory").queryName(query_name)
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return spark.sql(f"SELECT * FROM {query_name}")

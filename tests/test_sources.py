@@ -88,6 +88,34 @@ def test_write_counted_counts_ride_the_write(spark, tmp_path):
     assert sinks.write_counted(df.filter("id < 0"), str(tmp_path / "e")) == {"rows": 0}
 
 
+def test_footer_rows_match_a_spark_count(spark, tmp_path):
+    """Rows per partition value summed from the files' footers equal a
+    Spark groupBy count on a two-level partitioned write, files and dirs
+    Spark's reader skips (``_`` / ``.`` prefixes) are skipped, a missing
+    path gives {} and an empty write counts 0."""
+    import shutil
+
+    df = spark.range(100).selectExpr("id", "id % 2 AS split", "id % 3 AS shard")
+    out = tmp_path / "f"
+    df.write.partitionBy("split", "shard").parquet(str(out))
+    part = next(out.glob("split=0/shard=0/part-*.parquet"))
+    for planted in (
+        part.parent / "_planted.parquet", part.parent / ".planted.parquet",
+        part.parent / "_temporary/p.parquet",
+        out / "_temporary/0/split=0/shard=0/p.parquet",
+    ):
+        planted.parent.mkdir(parents=True, exist_ok=True)
+        shutil.copy(part, planted)
+    back = spark.read.parquet(str(out))
+    for col in ("split", "shard"):
+        want = {str(r[col]): r["count"] for r in back.groupBy(col).count().collect()}
+        assert sinks.footer_rows(str(out), ("split", "shard"), col) == want
+    assert sinks.footer_rows(str(tmp_path / "missing"), ("split",), "split") == {}
+    empty = str(tmp_path / "e")
+    df.filter("id < 0").write.parquet(f"{empty}/ingest_id=0")
+    assert sinks.footer_rows(empty, ("ingest_id",), "ingest_id") == {"0": 0}
+
+
 # ---------------------------------------------------------------------------
 # bucketed (co-located) tables
 # ---------------------------------------------------------------------------
