@@ -53,11 +53,15 @@ byte-identical shard assignments):
    a training loader reads one directory per shard.
 9. **vocabulary sidecar** (`textstats.vocabulary`, when ``--vocab-top``):
    the packed corpus's top-V token table written to ``OUT/vocab``.
+
+Stages 1–6 are one ordered table (``gates``) run by one loop
+(``run_gates``).  Each counted gate is materialized by one eager
+``localCheckpoint`` that also counts it, and reports ``n_after_<gate>``;
+a gate that is off reports ``null``.
 """
 
 from __future__ import annotations
 
-import argparse
 import json
 import sys
 from pathlib import Path
@@ -65,12 +69,11 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    src = ap.add_mutually_exclusive_group(required=True)
-    src.add_argument("--docs", help="documents table path (parquet)")
-    src.add_argument("--sf-dir", help="testdata dir holding documents.parquet")
-    ap.add_argument("--out", required=True, help="output directory")
+def parse_args(argv=None):
+    """The job's options; usage errors exit 2 here, before the JVM starts."""
+    from log_analysis_spark.plans import job
+
+    ap = job.parser("documents")
     ap.add_argument("--budget", type=int, default=65536, help="tokens per shard")
     ap.add_argument(
         "--rates",
@@ -218,301 +221,228 @@ def main() -> None:
         "--classifier-min-mean cut, keep each doc iff a deterministic "
         "Pareto(alpha) draw exceeds 1 - sigmoid(score)",
     )
-    ap.add_argument("--master", default=None)
-    args = ap.parse_args()
-    # usage errors exit 2 here, before the JVM starts
-    if (
-        args.classifier_min_mean is not None
-        and args.classifier_pareto_alpha is not None
+    args = ap.parse_args(argv)
+    n_mix_modes = sum(map(bool, (
+        json.loads(args.rates), args.temperature is not None,
+        args.budget_mix_weights is not None,
+    )))
+    tiers = _tiers(args.ppl_keep or "")
+    for bad, message in (
+        (args.classifier_min_mean is not None
+         and args.classifier_pareto_alpha is not None,
+         "--classifier-min-mean and --classifier-pareto-alpha are mutually "
+         "exclusive gates"),
+        (n_mix_modes > 1,
+         "--rates, --temperature and --budget-mix-weights are mutually "
+         "exclusive sampling modes"),
+        (args.budget_mix_weights is not None and args.budget_mix_tokens is None,
+         "--budget-mix-weights requires --budget-mix-tokens"),
+        (args.fuzzy_decontam_threshold is not None and not args.bench,
+         "--fuzzy-decontam-threshold requires --bench"),
+        (args.ppl_keep is not None
+         and not (tiers and all(0 <= t < args.ppl_buckets for t in tiers)),
+         f"--ppl-keep tiers must be in [0, {args.ppl_buckets}), "
+         f"got {args.ppl_keep!r}"),
     ):
-        ap.error(
-            "--classifier-min-mean and --classifier-pareto-alpha are "
-            "mutually exclusive gates"
-        )
+        if bad:
+            ap.error(message)
+    return args
+
+
+def _tiers(ppl_keep: str) -> list[int]:
+    return [int(x) for x in ppl_keep.split(",") if x != ""]
+
+
+def _words(csv: str | None) -> list[str]:
+    return [w.strip() for w in (csv or "").split(",") if w.strip()]
+
+
+def _micro(frac: float) -> int:
+    return round(frac * 1_000_000)
+
+
+def _keep_flagged(docs, flags, keep):
+    """The shape most gates share: join the gate's per-doc ``flags``
+    (``doc_id`` plus its signal columns), keep the docs where ``keep``
+    holds, drop the signals."""
+    signals = [c for c in flags.columns if c != "doc_id"]
+    return docs.join(flags, "doc_id").filter(keep).drop(*signals)
+
+
+def gates(args, bench) -> list:
+    """Stages 1–6 in order, as (summary key or None, is on, docs -> docs).
+
+    A keyed stage is a counted gate: ``run_gates`` materializes and counts
+    its output.  An unkeyed stage stays lazy until the next counted gate.
+    Two rows share a key where one gate has two modes; at most one of them
+    is on."""
+    from pyspark.sql import functions as F
+
+    from log_analysis_spark.operators import corpus, dedup, span_dedup, textstats, urls
+
+    def scored(d):
+        return textstats.ngram_quality_classifier(
+            d, F.expr(args.classifier_target), n_buckets=args.classifier_buckets,
+        ).select("doc_id", "mean_logodds")
+
+    def selected(d, sel):
+        # a selection is at most the top-K / budget's docs: broadcast it
+        return d.join(F.broadcast(sel.select("doc_id")), "doc_id")
+
     rates = json.loads(args.rates)
-    n_mix_modes = sum(
-        1 for on in (bool(rates), args.temperature is not None,
-                     args.budget_mix_weights is not None) if on
+    return [
+        ("n_after_repetition_filter", not args.no_repetition_filter,
+         lambda d: _keep_flagged(
+             d, corpus.repetition_stats(d).select("doc_id", "keep_repetition"),
+             F.col("keep_repetition"))),
+        # scan-fused projection: no join, the gate is a filter
+        ("n_after_gopher", args.gopher,
+         lambda d: textstats.gopher_rules(
+             d, min_words=args.gopher_min_words,
+             min_stopwords=args.gopher_min_stopwords,
+         ).filter(F.col("keep_gopher")).select(*d.columns)),
+        ("n_after_domain_blocklist", bool(args.block_domains),
+         lambda d: urls.blocklist_filter(
+             urls.with_url_domains(d), _words(args.block_domains)
+         ).drop("urls", "domains")),
+        ("n_after_badwords", bool(args.badwords),
+         lambda d: textstats.badwords_gate(
+             d, _words(args.badwords), max_hits=args.badwords_max)),
+        ("n_after_span_dedup", args.span_k and args.span_action == "remove",
+         lambda d: d.drop("text").join(
+             span_dedup.remove_dup_spans(d, k=args.span_k)
+             .withColumnRenamed("clean_text", "text"), "doc_id")),
+        ("n_after_span_dedup", args.span_k and args.span_action == "filter",
+         lambda d: _keep_flagged(
+             d, span_dedup.dup_span_stats(d, k=args.span_k)
+             .select("doc_id", "dup_coverage"),
+             F.col("dup_coverage") <= args.span_max_coverage)),
+        ("n_after_decontamination", bench is not None,
+         lambda d: _keep_flagged(
+             d, corpus.decontaminate(
+                 d, bench, n=args.decontam_n, min_hits=args.decontam_min_hits
+             ).select("doc_id", "contaminated"),
+             ~F.col("contaminated"))),
+        ("n_after_fuzzy_decontam", args.fuzzy_decontam_threshold is not None,
+         lambda d: _keep_flagged(
+             d, dedup.fuzzy_decontaminate(
+                 d, bench, threshold=args.fuzzy_decontam_threshold
+             ).select("doc_id", "contaminated"),
+             ~F.col("contaminated"))),
+        (None, args.scrub_pii,
+         lambda d: textstats.scrub_pii(d).drop("text")
+         .withColumnRenamed("text_clean", "text")),
+        (None, args.max_surprise is not None,
+         lambda d: _keep_flagged(
+             d, textstats.unigram_surprise(d).select("doc_id", "surprise"),
+             F.col("surprise") <= args.max_surprise)),
+        (None, args.max_bigram_surprise is not None,
+         lambda d: _keep_flagged(
+             d, textstats.bigram_surprise(d).select("doc_id", "bigram_surprise"),
+             F.col("bigram_surprise") <= args.max_bigram_surprise)),
+        ("n_after_loop_gate", args.max_loop_frac is not None,
+         lambda d: _keep_flagged(
+             d, textstats.loop_detection(d).select("doc_id", "loop_frac_micro"),
+             F.col("loop_frac_micro") <= _micro(args.max_loop_frac))),
+        ("n_after_ttr_gate", args.min_ttr is not None,
+         lambda d: _keep_flagged(
+             d, textstats.lexical_diversity(d).select("doc_id", "ttr_micro"),
+             F.col("ttr_micro") >= _micro(args.min_ttr))),
+        ("n_after_ppl_tiering", args.ppl_keep is not None,
+         lambda d: _keep_flagged(
+             d, textstats.perplexity_buckets(d, n_buckets=args.ppl_buckets)
+             .select("doc_id", "ppl_bucket"),
+             F.col("ppl_bucket").isin(_tiers(args.ppl_keep)))),
+        ("n_after_classifier", args.classifier_min_mean is not None,
+         lambda d: _keep_flagged(
+             d, scored(d), F.col("mean_logodds") >= args.classifier_min_mean)),
+        ("n_after_classifier", args.classifier_pareto_alpha is not None,
+         lambda d: _keep_flagged(
+             d, textstats.pareto_classifier_gate(
+                 scored(d), alpha=args.classifier_pareto_alpha
+             ).select("doc_id", "keep_pareto"),
+             F.col("keep_pareto"))),
+        ("n_after_dsir", args.dsir_top > 0,
+         lambda d: selected(d, textstats.dsir_select(
+             d, F.expr(args.dsir_target), k=args.dsir_top))),
+        # sampling: the usage checks allow at most one mode
+        (None, bool(rates),
+         lambda d: corpus.stratified_sample(d, args.strata_col, rates)),
+        (None, args.temperature is not None,
+         lambda d: corpus.temperature_mix(
+             d, args.mix_col, temperature=args.temperature,
+             target_fraction=args.target_fraction)),
+        (None, args.budget_mix_weights is not None,
+         lambda d: selected(d, corpus.budget_mix(
+             d, json.loads(args.budget_mix_weights), args.budget_mix_tokens,
+             mix_col=args.mix_col))),
+        # the sampled frame feeds pack_shards and the final join
+        ("n_after_sampling", True, lambda d: d),
+    ]
+
+
+def _checkpoint_counted(df):
+    """``df`` materialized by one eager ``localCheckpoint``, its row count
+    observed on that same Spark job.
+
+    Materializing each gate runs the progressively longer chain (the
+    explode -> groupBy repetition trees, the decontamination gram join)
+    once, not once per downstream count plus once for the final write.
+    ``localCheckpoint`` rather than ``persist`` because it also cuts the
+    logical-plan lineage: DSIR and the leakage split reference their input
+    3-5 times, so with every stage on the untruncated plan grows as
+    branching^stages, and the driver ran out of memory just rendering it.
+    Each checkpoint resets the chain to a leaf; the blocks of the previous
+    one age out with its Python reference (ContextCleaner)."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    obs = Observation()
+    df = df.observe(obs, F.count(F.lit(1)).alias("rows")).localCheckpoint(
+        eager=True
     )
-    if n_mix_modes > 1:
-        ap.error(
-            "--rates, --temperature and --budget-mix-weights are mutually "
-            "exclusive sampling modes"
-        )
-    if args.budget_mix_weights is not None and args.budget_mix_tokens is None:
-        ap.error("--budget-mix-weights requires --budget-mix-tokens")
-    if args.fuzzy_decontam_threshold is not None and not args.bench:
-        ap.error("--fuzzy-decontam-threshold requires --bench")
+    return df, obs.get["rows"]
+
+
+def run_gates(docs, table) -> tuple:
+    """Run the ``gates`` table over ``docs``: (docs after the last stage,
+    {key: rows after that gate, or None when the gate is off})."""
+    counts = dict.fromkeys(key for key, _, _ in table if key)
+    rows = None  # the row count of docs while it is a counted checkpoint
+    for key, on, stage in table:
+        if not on:
+            continue
+        out = stage(docs)
+        if out is not docs:
+            docs, rows = out, None
+        if key is not None:
+            if rows is None:
+                docs, rows = _checkpoint_counted(docs)
+            counts[key] = rows
+    return docs, counts
+
+
+def main() -> None:
+    args = parse_args()
 
     from pyspark.sql import functions as F
 
-    from log_analysis_spark.operators import (
-        corpus,
-        dedup,
-        span_dedup,
-        textstats,
-        urls,
-    )
-    from log_analysis_spark.session import get_spark
+    from log_analysis_spark.operators import corpus, dedup, textstats
+    from log_analysis_spark.plans import job
     from log_analysis_spark.sources import sinks
 
-    spark = get_spark("run_corpus", master=args.master)
-    path = args.docs or f"{args.sf_dir}/documents.parquet"
-    docs = spark.read.parquet(path)
+    spark = job.session(args)
+    docs = job.read_source(spark, args, "documents")
     n_input = docs.count()
-
-    # each expensive stage materializes its output before the count so the
-    # progressively-longer chain (explode→groupBy repetition trees, the
-    # decontamination gram join) executes ONCE, not once per downstream
-    # count + once for the final write.  localCheckpoint (not persist)
-    # because it also CUTS THE LOGICAL-PLAN LINEAGE: stages like DSIR and
-    # the leakage split reference their input frame 3-5 times, so the
-    # composed plan tree grows ~branching^stages — with every stage on,
-    # the un-truncated plan made the driver OOM just RENDERING the plan
-    # string for a downstream .cache() name.  persist() caches data but
-    # keeps the full plan; checkpointing resets each stage to a leaf.
-    # Predecessor block cleanup is left to the ContextCleaner: once the
-    # next stage is checkpointed its lineage no longer references the
-    # previous frame, so the blocks age out with the Python reference.
-    prev_cached = None
-
-    def _materialize(df):
-        nonlocal prev_cached
-        if df is prev_cached:
-            # stage was a no-op (e.g. empty --rates, no --scrub-pii): the
-            # frame is already materialized
-            return df, df.count()
-        df = df.localCheckpoint(eager=True)
-        prev_cached = df
-        return df, df.count()
-
-    if not args.no_repetition_filter:
-        rep = corpus.repetition_stats(docs).select("doc_id", "keep_repetition")
-        docs, n_clean = _materialize(
-            docs.join(rep, "doc_id")
-            .filter(F.col("keep_repetition"))
-            .drop("keep_repetition")
-        )
-    else:
-        n_clean = n_input
-
-    if args.gopher:
-        # scan-fused projection — no join needed, the gate is a filter
-        docs, n_gopher = _materialize(
-            textstats.gopher_rules(
-                docs,
-                min_words=args.gopher_min_words,
-                min_stopwords=args.gopher_min_stopwords,
-            )
-            .filter(F.col("keep_gopher"))
-            .select(*docs.columns)
-        )
-    else:
-        n_gopher = None
-
-    if args.block_domains:
-        blocked = [d.strip() for d in args.block_domains.split(",") if d.strip()]
-        docs, n_blocked = _materialize(
-            urls.blocklist_filter(urls.with_url_domains(docs), blocked).drop(
-                "urls", "domains"
-            )
-        )
-    else:
-        n_blocked = None
-
-    if args.badwords:
-        words = [w.strip() for w in args.badwords.split(",") if w.strip()]
-        docs, n_badwords = _materialize(
-            textstats.badwords_gate(docs, words, max_hits=args.badwords_max)
-        )
-    else:
-        n_badwords = None
-
-    if args.span_k:
-        if args.span_action == "remove":
-            clean = span_dedup.remove_dup_spans(docs, k=args.span_k)
-            docs, n_span = _materialize(
-                docs.drop("text").join(
-                    clean.withColumnRenamed("clean_text", "text"), "doc_id"
-                )
-            )
-        else:
-            cov = span_dedup.dup_span_stats(docs, k=args.span_k).select(
-                "doc_id", "dup_coverage"
-            )
-            docs, n_span = _materialize(
-                docs.join(cov, "doc_id")
-                .filter(F.col("dup_coverage") <= args.span_max_coverage)
-                .drop("dup_coverage")
-            )
-    else:
-        n_span = n_clean
-
     bench = spark.read.parquet(args.bench) if args.bench else None
-    if args.bench:
-        flags = corpus.decontaminate(
-            docs, bench, n=args.decontam_n, min_hits=args.decontam_min_hits
-        ).select("doc_id", "contaminated")
-        docs, n_decontam = _materialize(
-            docs.join(flags, "doc_id")
-            .filter(~F.col("contaminated"))
-            .drop("contaminated")
-        )
-    else:
-        n_decontam = n_span
-
-    n_fuzzy = n_decontam
-    if args.fuzzy_decontam_threshold is not None:
-        fz = dedup.fuzzy_decontaminate(
-            docs, bench, threshold=args.fuzzy_decontam_threshold
-        ).select("doc_id", "contaminated")
-        docs, n_fuzzy = _materialize(
-            docs.join(fz, "doc_id")
-            .filter(~F.col("contaminated"))
-            .drop("contaminated")
-        )
-
-    if args.scrub_pii:
-        docs = (
-            textstats.scrub_pii(docs)
-            .drop("text")
-            .withColumnRenamed("text_clean", "text")
-        )
-
-    if args.max_surprise is not None:
-        surp = textstats.unigram_surprise(docs).select("doc_id", "surprise")
-        docs = (
-            docs.join(surp, "doc_id")
-            .filter(F.col("surprise") <= args.max_surprise)
-            .drop("surprise")
-        )
-
-    if args.max_bigram_surprise is not None:
-        bsurp = textstats.bigram_surprise(docs).select(
-            "doc_id", "bigram_surprise"
-        )
-        docs = (
-            docs.join(bsurp, "doc_id")
-            .filter(F.col("bigram_surprise") <= args.max_bigram_surprise)
-            .drop("bigram_surprise")
-        )
-
-    if args.max_loop_frac is not None:
-        loops = textstats.loop_detection(docs).select(
-            "doc_id", "loop_frac_micro"
-        )
-        thr = round(args.max_loop_frac * 1_000_000)
-        docs, n_loop = _materialize(
-            docs.join(loops, "doc_id")
-            .filter(F.col("loop_frac_micro") <= thr)
-            .drop("loop_frac_micro")
-        )
-    else:
-        n_loop = None
-
-    n_ttr = n_loop
-    if args.min_ttr is not None:
-        ttr = textstats.lexical_diversity(docs).select(
-            "doc_id", (F.col("ttr_micro") >= int(round(args.min_ttr * 1_000_000))).alias("_keep_ttr")
-        )
-        docs, n_ttr = _materialize(
-            docs.join(ttr, "doc_id").filter("_keep_ttr").drop("_keep_ttr")
-        )
-
-    if args.ppl_keep is not None:
-        keep_tiers = [int(x) for x in args.ppl_keep.split(",") if x != ""]
-        if not keep_tiers or not all(
-            0 <= t < args.ppl_buckets for t in keep_tiers
-        ):
-            raise SystemExit(
-                f"--ppl-keep tiers must be in [0, {args.ppl_buckets}), "
-                f"got {args.ppl_keep!r}"
-            )
-        tiers = textstats.perplexity_buckets(
-            docs, n_buckets=args.ppl_buckets
-        ).select("doc_id", "ppl_bucket")
-        docs, n_ppl = _materialize(
-            docs.join(tiers, "doc_id")
-            .filter(F.col("ppl_bucket").isin(keep_tiers))
-            .drop("ppl_bucket")
-        )
-    else:
-        n_ppl = None
-
-    if (
-        args.classifier_min_mean is not None
-        or args.classifier_pareto_alpha is not None
-    ):
-        scored = textstats.ngram_quality_classifier(
-            docs, F.expr(args.classifier_target),
-            n_buckets=args.classifier_buckets,
-        ).select("doc_id", "mean_logodds")
-        if args.classifier_pareto_alpha is not None:
-            keep = (
-                textstats.pareto_classifier_gate(
-                    scored, alpha=args.classifier_pareto_alpha
-                )
-                .filter(F.col("keep_pareto"))
-                .select("doc_id")
-            )
-        else:
-            keep = scored.filter(
-                F.col("mean_logodds") >= args.classifier_min_mean
-            ).select("doc_id")
-        docs, n_classifier = _materialize(docs.join(keep, "doc_id"))
-    else:
-        n_classifier = None
-
-    if args.dsir_top:
-        # top-K is ≤K rows → broadcast the selection back onto the corpus
-        sel = textstats.dsir_select(
-            docs, F.expr(args.dsir_target), k=args.dsir_top
-        ).select("doc_id")
-        docs, n_dsir = _materialize(docs.join(F.broadcast(sel), "doc_id"))
-    else:
-        n_dsir = None
-
-    if rates:
-        docs = corpus.stratified_sample(docs, args.strata_col, rates)
-    elif args.temperature is not None:
-        docs = corpus.temperature_mix(
-            docs, args.mix_col,
-            temperature=args.temperature,
-            target_fraction=args.target_fraction,
-        )
-    elif args.budget_mix_weights is not None:
-        sel = corpus.budget_mix(
-            docs,
-            json.loads(args.budget_mix_weights),
-            args.budget_mix_tokens,
-            mix_col=args.mix_col,
-        ).select("doc_id")
-        docs = docs.join(F.broadcast(sel), "doc_id")
-    # docs feeds pack_shards AND the final join — persist so the sampled
-    # scrubbed frame isn't recomputed on both sides
-    docs, n_sampled = _materialize(docs)
-    counts = {
-        "n_input": n_input,
-        "n_after_repetition_filter": n_clean,
-        "n_after_gopher": n_gopher,
-        "n_after_domain_blocklist": n_blocked,
-        "n_after_badwords": n_badwords,
-        "n_after_span_dedup": n_span,
-        "n_after_decontamination": n_decontam,
-        "n_after_fuzzy_decontam": n_fuzzy,
-        "n_after_loop_gate": n_loop,
-        "n_after_ttr_gate": n_ttr,
-        "n_after_ppl_tiering": n_ppl,
-        "n_after_classifier": n_classifier,
-        "n_after_dsir": n_dsir,
-    }
-    if n_sampled == 0:
+    docs, counts = run_gates(docs, gates(args, bench))
+    counts = {"n_input": n_input, **counts}
+    if counts["n_after_sampling"] == 0:
         # fail loudly: pack_shards would write an empty dataset and every
         # downstream reader would die with an opaque schema-inference error
         raise SystemExit(
             "no documents survived the stage chain; loosen the gate that "
-            "first hit zero: "
-            f"{json.dumps({**counts, 'n_after_sampling': n_sampled})}"
+            f"first hit zero: {json.dumps(counts)}"
         )
 
     # the counts the job reports about its shards ride the shards write
@@ -562,7 +492,6 @@ def main() -> None:
             {
                 **counts,
                 "n_soft_dup_docs": written.get("soft_dup"),
-                "n_after_sampling": n_sampled,
                 "budget": args.budget,
                 "n_shards": len(
                     sinks.partition_values(spark, shards_path, part_cols, "shard")

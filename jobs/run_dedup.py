@@ -19,7 +19,6 @@ to groups and keep the lowest-id representative per group.
 
 from __future__ import annotations
 
-import argparse
 import json
 import sys
 from pathlib import Path
@@ -28,26 +27,21 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 
 def main() -> None:
-    ap = argparse.ArgumentParser()
-    src = ap.add_mutually_exclusive_group(required=True)
-    src.add_argument("--docs", help="documents table path (parquet)")
-    src.add_argument("--sf-dir", help="testdata dir holding documents.parquet")
-    ap.add_argument("--out", required=True, help="output directory")
+    from log_analysis_spark.plans import job
+
+    ap = job.parser("documents")
     ap.add_argument("--method", default="jaccard", choices=["jaccard", "minhash"])
     ap.add_argument("--threshold", type=float, default=0.5)
     ap.add_argument("--shingle-k", type=int, default=2)
-    ap.add_argument("--master", default=None)
     args = ap.parse_args()
 
     from pyspark.sql import functions as F
 
     from log_analysis_spark.operators import dedup
-    from log_analysis_spark.session import get_spark
     from log_analysis_spark.sources import sinks
 
-    spark = get_spark("run_dedup", master=args.master)
-    path = args.docs or f"{args.sf_dir}/documents.parquet"
-    docs = spark.read.parquet(path)
+    spark = job.session(args)
+    docs = job.read_source(spark, args, "documents")
 
     if args.method == "jaccard":
         pairs = dedup.ngram_jaccard_pairs(

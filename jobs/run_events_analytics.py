@@ -25,14 +25,13 @@ micro-units).  The
 summary JSON line carries per-output row counts plus the CMS-detected hot
 keys — the skew advisory that feeds salting knobs downstream.
 
-Resume: manifest-checkpointed like every job here — a rerun with the same
-input fingerprint + knobs reprints the recorded summary without
-recomputation.
+Resume: a rerun with the same input files and the same options (every
+option but ``--master``) reprints the recorded summary plus
+``"resumed": true`` without recomputation (``plans/job.resume``).
 """
 
 from __future__ import annotations
 
-import argparse
 import json
 import sys
 from pathlib import Path
@@ -40,12 +39,10 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    src = ap.add_mutually_exclusive_group(required=True)
-    src.add_argument("--input", help="events table path (parquet)")
-    src.add_argument("--sf-dir", help="testdata dir holding events.parquet")
-    ap.add_argument("--out", required=True)
+def parser():
+    from log_analysis_spark.plans import job
+
+    ap = job.parser("events")
     ap.add_argument("--asof-left-type", default="error")
     ap.add_argument("--asof-right-type", default="purchase")
     ap.add_argument("--asof-tolerance-sec", type=int, default=None)
@@ -96,48 +93,24 @@ def main() -> None:
         help="also report HLL distinct-user estimates at 2^p registers "
         "(0 = KMV only)",
     )
-    ap.add_argument("--master", default=None)
-    args = ap.parse_args()
+    return ap
 
-    import os
 
+def analytics(args, ev) -> tuple[dict, dict]:
+    """Write every output under ``--out``; (summary, rows per output)."""
     from pyspark.sql import functions as F
 
     from log_analysis_spark.operators import expectations, sketches, timeseries
-    from log_analysis_spark.plans.manifest import (
-        Manifest,
-        StageRecord,
-        fingerprint_input,
-        fingerprint_source,
-    )
-    from log_analysis_spark.session import get_spark
+    from log_analysis_spark.plans import job
     from log_analysis_spark.sources import sinks
 
-    spark = get_spark("run_events_analytics", master=args.master)
-    path = args.input or f"{args.sf_dir}/events.parquet"
-    ev = spark.read.parquet(path).withColumn(
-        "ts", F.col("ts").cast("timestamp")
-    )
-
-    manifest = Manifest(f"{args.out}/_manifest.jsonl")
-    fp = fingerprint_input(
-        args.out, args.asof_left_type, args.asof_right_type,
-        args.asof_tolerance_sec, args.window_sec, args.slide_sec,
-        args.funnel, args.kmv_k, args.quantiles, args.quantile_resolution,
-        args.skew_frac, args.ohlc_bucket_sec, args.burst_trail_hours,
-        args.burst_z, args.hll_p, args.cusum_h, args.cusum_k_milli,
-        args.attr_conv_type, args.attr_touch_types, args.attr_lookback_hours,
-        fingerprint_source(ev),
-    )
-    prior = manifest.lookup("events_analytics", fp)
-    if prior is not None and os.path.exists(f"{args.out}/report"):
-        print(json.dumps({**prior["metrics"], "resumed": True}))
-        return
+    counts: dict[str, int] = {}
+    written: dict[str, int] = {}
 
     def write(name, df, *metrics):
-        return sinks.write_counted(df, f"{args.out}/{name}", *metrics)
-
-    counts: dict[str, int] = {}
+        res = sinks.write_counted(df, f"{args.out}/{name}", *metrics)
+        written[name] = res["rows"]
+        return res
 
     asof = timeseries.asof_join(
         ev.filter(F.col("event_type") == args.asof_left_type),
@@ -241,17 +214,28 @@ def main() -> None:
         int(r["user_id"]) for r in hot.collect()
     )
 
-    summary = {"events_path": path, "n_events": ev.count(), **counts}
-    manifest.record(
-        StageRecord(
-            stage="events_analytics",
-            input_fingerprint=fp,
-            output_path=args.out,
-            rows=summary["n_events"],
-            n_partitions=0,
-            partition_rows={},
-            metrics=summary,
-        )
+    summary = {
+        "events_path": job.source_path(args, "events"),
+        "n_events": ev.count(),
+        **counts,
+    }
+    return summary, written
+
+
+def main() -> None:
+    from log_analysis_spark.plans import job
+
+    args = parser().parse_args()
+
+    from pyspark.sql import functions as F
+
+    spark = job.session(args)
+    ev = job.read_source(spark, args, "events").withColumn(
+        "ts", F.col("ts").cast("timestamp")
+    )
+    summary = job.resume(
+        args, "events_analytics", f"{args.out}/report", ev,
+        lambda: analytics(args, ev),
     )
     print(json.dumps(summary))
 

@@ -50,6 +50,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
+
 def main() -> None:
     from log_analysis_spark.operators import incremental
 
@@ -63,26 +64,10 @@ def main() -> None:
     if not args.compact_now and not args.batch:
         ap.error("--batch is required unless --compact-now")
 
-    from log_analysis_spark.plans.manifest import (
-        Manifest, fingerprint_input, fingerprint_source,
-    )
-    from log_analysis_spark.session import get_spark
+    from log_analysis_spark.plans import job
+    from log_analysis_spark.plans.manifest import fingerprint_input, fingerprint_source
 
-    spark = get_spark("run_incremental_dedup", master=args.master)
-
-    if args.compact_now:
-        upto = len(Manifest(f"{args.state}/_manifest.jsonl").completed("ingest"))
-        marker = incremental.compact_state(
-            spark, args.state, upto, n_buckets=args.n_buckets
-        )
-        print(json.dumps({"compacted": True, **marker}))
-        return
-
-    batch = spark.read.parquet(args.batch)
-    fp = fingerprint_input(
-        args.state, args.threshold, args.shingle_k, args.n_hashes, args.bands,
-        args.id_col, args.text_col, fingerprint_source(batch),
-    )
+    spark = job.session(args)
     # the LSH knobs the state is a pure function of are pinned in
     # _params.json — ingesting with different knobs than the state was
     # built with makes band keys never collide, silently accepting every
@@ -91,10 +76,18 @@ def main() -> None:
         threshold=args.threshold, text_col=args.text_col,
         shingle_k=args.shingle_k, n_hashes=args.n_hashes, bands=args.bands,
     )
-    res = incremental.ingest_job(
-        spark, kind, args.state, batch, args.id_col, fp,
-        args.compact_every, args.n_buckets,
-    )
+    if args.compact_now:
+        res = incremental.compact_job(spark, kind, args.state, args.n_buckets)
+    else:
+        batch = spark.read.parquet(args.batch)
+        fp = fingerprint_input(
+            args.state, args.threshold, args.shingle_k, args.n_hashes,
+            args.bands, args.id_col, args.text_col, fingerprint_source(batch),
+        )
+        res = incremental.ingest_job(
+            spark, kind, args.state, batch, args.id_col, fp,
+            args.compact_every, args.n_buckets,
+        )
     print(json.dumps(res))
 
 

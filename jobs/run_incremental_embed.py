@@ -60,38 +60,32 @@ def main() -> None:
         ap.error("--batch is required unless --compact-now")
 
     from log_analysis_spark.operators import incremental_embed, similarity
-    from log_analysis_spark.plans.manifest import (
-        Manifest, fingerprint_input, fingerprint_source,
-    )
-    from log_analysis_spark.session import get_spark
+    from log_analysis_spark.plans import job
+    from log_analysis_spark.plans.manifest import fingerprint_input, fingerprint_source
 
-    spark = get_spark("run_incremental_embed", master=args.master)
-
-    if args.compact_now:
-        upto = len(Manifest(f"{args.state}/_manifest.jsonl").completed("ingest"))
-        marker = incremental_embed.compact_embed_state(
-            spark, args.state, upto, n_buckets=args.n_buckets
-        )
-        print(json.dumps({"compacted": True, **marker}))
-        return
-
-    batch = spark.read.parquet(args.batch)
-    # the LSH knobs (and dim) the state is a pure function of are pinned in
-    # _params.json; dim is inferred from the first batch so later batches
-    # of a different width refuse instead of banding garbage
-    dim = args.dim or similarity._validate_dim(batch, args.vec_col, None)
-    fp = fingerprint_input(
-        args.state, args.threshold, args.n_planes, args.band_bits, args.seed,
-        dim, args.id_col, args.vec_col, fingerprint_source(batch),
-    )
+    spark = job.session(args)
+    batch = None if args.compact_now else spark.read.parquet(args.batch)
+    if batch is not None:
+        # the LSH knobs (and dim) the state is a pure function of are pinned
+        # in _params.json; dim is inferred from the first batch so later
+        # batches of a different width refuse instead of banding garbage
+        args.dim = args.dim or similarity._validate_dim(batch, args.vec_col, None)
     kind = incremental_embed.embed_kind(
-        dim, threshold=args.threshold, n_planes=args.n_planes,
+        args.dim, threshold=args.threshold, n_planes=args.n_planes,
         band_bits=args.band_bits, seed=args.seed, vec_col=args.vec_col,
     )
-    res = incremental.ingest_job(
-        spark, kind, args.state, batch, args.id_col, fp,
-        args.compact_every, args.n_buckets,
-    )
+    if batch is None:
+        res = incremental.compact_job(spark, kind, args.state, args.n_buckets)
+    else:
+        fp = fingerprint_input(
+            args.state, args.threshold, args.n_planes, args.band_bits,
+            args.seed, args.dim, args.id_col, args.vec_col,
+            fingerprint_source(batch),
+        )
+        res = incremental.ingest_job(
+            spark, kind, args.state, batch, args.id_col, fp,
+            args.compact_every, args.n_buckets,
+        )
     print(json.dumps(res))
 
 

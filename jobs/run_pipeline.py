@@ -20,7 +20,6 @@ from the events parquet.  Reruns resume from the checkpoint manifest.
 
 from __future__ import annotations
 
-import argparse
 import json
 import sys
 from pathlib import Path
@@ -29,11 +28,9 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 
 def main() -> None:
-    ap = argparse.ArgumentParser()
-    src = ap.add_mutually_exclusive_group(required=True)
-    src.add_argument("--input", help="transcripts table path (parquet)")
-    src.add_argument("--sf-dir", help="testdata dir to derive transcripts from")
-    ap.add_argument("--out", required=True, help="output directory")
+    from log_analysis_spark.plans import job
+
+    ap = job.parser("transcripts")
     ap.add_argument(
         "--parse-impl", default="native", choices=["native", "arrow"]
     )
@@ -57,18 +54,12 @@ def main() -> None:
         help="with --seq-audit: fail loudly when more than this fraction "
         "of conversations is non-contiguous",
     )
-    ap.add_argument("--master", default=None)
     args = ap.parse_args()
 
-    from log_analysis_spark.datagen import transcripts_from_events
     from log_analysis_spark.plans.pipeline import run_pipeline
-    from log_analysis_spark.session import get_spark
 
-    spark = get_spark("run_pipeline", master=args.master)
-    if args.input:
-        turns = spark.read.parquet(args.input)
-    else:
-        turns = transcripts_from_events(spark, args.sf_dir)
+    spark = job.session(args)
+    turns = job.read_source(spark, args, "transcripts")
 
     expect_report = None
     if args.expect:

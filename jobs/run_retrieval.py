@@ -22,7 +22,6 @@ JSON line carries per-output row counts and the query list.
 
 from __future__ import annotations
 
-import argparse
 import json
 import sys
 from pathlib import Path
@@ -31,11 +30,9 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 
 def main() -> None:
-    ap = argparse.ArgumentParser()
-    src = ap.add_mutually_exclusive_group(required=True)
-    src.add_argument("--docs", help="documents table path (parquet)")
-    src.add_argument("--sf-dir", help="testdata dir holding documents.parquet")
-    ap.add_argument("--out", required=True, help="output directory")
+    from log_analysis_spark.plans import job
+
+    ap = job.parser("documents")
     ap.add_argument(
         "--query", action="append", default=[],
         help="query text (repeatable; query_id = position, 1-based)",
@@ -50,18 +47,15 @@ def main() -> None:
     ap.add_argument("--rrf-k0", type=int, default=60)
     ap.add_argument("--phrase", default="",
                     help="exact phrase to locate (positional match)")
-    ap.add_argument("--master", default=None)
     args = ap.parse_args()
     if not args.query:
         ap.error("at least one --query is required")
 
     from log_analysis_spark.operators import retrieval
-    from log_analysis_spark.session import get_spark
     from log_analysis_spark.sources import sinks
 
-    spark = get_spark("run_retrieval", master=args.master)
-    path = args.docs or f"{args.sf_dir}/documents.parquet"
-    docs = spark.read.parquet(path)
+    spark = job.session(args)
+    docs = job.read_source(spark, args, "documents")
     queries = spark.createDataFrame(
         [(i + 1, q) for i, q in enumerate(args.query)],
         "query_id int, query_text string",
@@ -96,7 +90,7 @@ def main() -> None:
     print(
         json.dumps(
             {
-                "docs_path": path,
+                "docs_path": job.source_path(args, "documents"),
                 "queries": args.query,
                 "k": args.k,
                 "hybrid": bool(args.hybrid),

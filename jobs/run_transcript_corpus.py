@@ -42,7 +42,6 @@ counted stage persists once (counts never re-execute the chain).
 
 from __future__ import annotations
 
-import argparse
 import json
 import sys
 from pathlib import Path
@@ -50,67 +49,15 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    src = ap.add_mutually_exclusive_group(required=True)
-    src.add_argument("--input", help="transcripts table path (parquet)")
-    src.add_argument("--sf-dir", help="testdata dir to derive transcripts from")
-    ap.add_argument("--out", required=True, help="output directory")
-    ap.add_argument("--budget", type=int, default=65536, help="tokens per shard")
-    ap.add_argument("--boilerplate-frac", type=float, default=0.1)
-    ap.add_argument(
-        "--strip-line-frac", type=float, default=None,
-        help="also strip LINES of the assembled docs recurring across >= "
-        "this fraction of conversations (broadcast common-set probe)",
-    )
-    ap.add_argument("--min-tokens", type=int, default=1)
-    ap.add_argument("--dedup-threshold", type=float, default=0.9)
-    ap.add_argument("--shingle-k", type=int, default=3)
-    ap.add_argument("--no-dedup", action="store_true")
-    ap.add_argument("--master", default=None)
-    args = ap.parse_args()
-
-    import os
-
+def corpus_shards(args, turns) -> tuple[dict, dict]:
+    """Assemble, gate, dedup and pack ``turns`` into ``OUT/shards``;
+    (summary, rows written)."""
     from pyspark.sql import functions as F
 
-    from log_analysis_spark.datagen import transcripts_from_events
     from log_analysis_spark.operators import corpus, dedup, span_dedup, textstats
-    from log_analysis_spark.plans.manifest import (
-        Manifest,
-        StageRecord,
-        fingerprint_input,
-        fingerprint_source,
-    )
-    from log_analysis_spark.session import get_spark
     from log_analysis_spark.sources import sinks
 
-    spark = get_spark("run_transcript_corpus", master=args.master)
-    if args.input:
-        turns = spark.read.parquet(args.input)
-    else:
-        turns = transcripts_from_events(spark, args.sf_dir)
-
-    # manifest resume (same contract as jobs/run_pipeline.py): the shards
-    # write is checkpointed under a content fingerprint of the input files
-    # + every knob that shapes the output; a rerun with the same fingerprint
-    # skips all recomputation and reprints the recorded summary, any change
-    # (input files, sizes, mtimes, or any knob) recomputes (latest-wins
-    # lookup — see plans/manifest.py)
     shards_path = f"{args.out}/shards"
-    manifest = Manifest(f"{args.out}/_manifest.jsonl")
-    fp = fingerprint_input(
-        args.out, args.budget, args.boilerplate_frac, args.min_tokens,
-        args.dedup_threshold, args.shingle_k, args.no_dedup,
-        args.strip_line_frac,
-        fingerprint_source(turns),
-    )
-    prior = manifest.lookup("shards", fp)
-    if prior is not None and os.path.exists(shards_path):
-        print(json.dumps({**prior["metrics"], "resumed": True,
-                          "shards_path": shards_path}))
-        return
-
     docs = corpus.transcripts_to_docs(
         turns, boilerplate_conv_frac=args.boilerplate_frac
     )
@@ -161,8 +108,10 @@ def main() -> None:
         if df is not None:
             df.unpersist()
 
-    n_shards = len(sinks.partition_values(spark, shards_path, ("shard",), "shard"))
-    metrics = {
+    n_shards = len(
+        sinks.partition_values(turns.sparkSession, shards_path, ("shard",), "shard")
+    )
+    summary = {
         "n_docs": n_docs,
         "n_neardup_pairs": n_pairs,
         "n_kept": n_kept,
@@ -171,19 +120,37 @@ def main() -> None:
         "total_tokens": int(written["tokens"] or 0),
         "budget": args.budget,
         "n_lines_removed": n_lines_removed,
+        "shards_path": shards_path,
     }
-    manifest.record(
-        StageRecord(
-            stage="shards",
-            input_fingerprint=fp,
-            output_path=shards_path,
-            rows=n_kept,
-            n_partitions=n_shards,
-            partition_rows={"shards": n_kept},
-            metrics=metrics,
-        )
+    return summary, {"shards": n_kept}
+
+
+def main() -> None:
+    from log_analysis_spark.plans import job
+
+    ap = job.parser("transcripts")
+    ap.add_argument("--budget", type=int, default=65536, help="tokens per shard")
+    ap.add_argument("--boilerplate-frac", type=float, default=0.1)
+    ap.add_argument(
+        "--strip-line-frac", type=float, default=None,
+        help="also strip LINES of the assembled docs recurring across >= "
+        "this fraction of conversations (broadcast common-set probe)",
     )
-    print(json.dumps({**metrics, "shards_path": shards_path}))
+    ap.add_argument("--min-tokens", type=int, default=1)
+    ap.add_argument("--dedup-threshold", type=float, default=0.9)
+    ap.add_argument("--shingle-k", type=int, default=3)
+    ap.add_argument("--no-dedup", action="store_true")
+    args = ap.parse_args()
+
+    spark = job.session(args)
+    turns = job.read_source(spark, args, "transcripts")
+    # a rerun with the same input files and options resumes from the
+    # manifest; any change recomputes (plans/job.resume)
+    summary = job.resume(
+        args, "shards", f"{args.out}/shards", turns,
+        lambda: corpus_shards(args, turns),
+    )
+    print(json.dumps(summary))
 
 
 if __name__ == "__main__":

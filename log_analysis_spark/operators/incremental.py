@@ -683,14 +683,13 @@ def commit_increment(
 
 def job_parser(what: str, id_col: str):
     """The command line both incremental jobs share; each adds its knobs."""
-    import argparse
+    from log_analysis_spark.plans import job
 
-    ap = argparse.ArgumentParser()
+    ap = job.parser()
     ap.add_argument("--batch", help=f"new {what} batch (parquet); "
                                     "required unless --compact-now")
     ap.add_argument("--state", required=True, help="state directory")
     ap.add_argument("--id-col", default=id_col)
-    ap.add_argument("--master", default=None)
     ap.add_argument(
         "--compact-every", type=int, default=8,
         help="fold the per-ingest state partitions into ONE bucketed layout "
@@ -759,6 +758,18 @@ def ingest_job(
         )
         metrics["compacted_upto"] = marker["upto"]
     return {**metrics, "accepted_path": accepted_path}
+
+
+def compact_job(spark, kind: IncrementKind, state_dir: str, n_buckets: int) -> dict:
+    """``--compact-now``: fold every completed increment of the kind's
+    state into the bucketed layout; returns the job's JSON result."""
+    from log_analysis_spark.plans.manifest import Manifest
+
+    upto = len(Manifest(f"{state_dir}/_manifest.jsonl").completed("ingest"))
+    marker = compact_state_tables(
+        spark, state_dir, upto, kind.specs, n_buckets, kind.marker
+    )
+    return {"compacted": True, **marker}
 
 
 @dataclass
