@@ -381,32 +381,11 @@ def gates(args, bench) -> list:
     ]
 
 
-def _checkpoint_counted(df):
-    """``df`` materialized by one eager ``localCheckpoint``, its row count
-    observed on that same Spark job.
-
-    Materializing each gate runs the progressively longer chain (the
-    explode -> groupBy repetition trees, the decontamination gram join)
-    once, not once per downstream count plus once for the final write.
-    ``localCheckpoint`` rather than ``persist`` because it also cuts the
-    logical-plan lineage: DSIR and the leakage split reference their input
-    3-5 times, so with every stage on the untruncated plan grows as
-    branching^stages, and the driver ran out of memory just rendering it.
-    Each checkpoint resets the chain to a leaf; the blocks of the previous
-    one age out with its Python reference (ContextCleaner)."""
-    from pyspark.sql import Observation
-    from pyspark.sql import functions as F
-
-    obs = Observation()
-    df = df.observe(obs, F.count(F.lit(1)).alias("rows")).localCheckpoint(
-        eager=True
-    )
-    return df, obs.get["rows"]
-
-
 def run_gates(docs, table) -> tuple:
     """Run the ``gates`` table over ``docs``: (docs after the last stage,
     {key: rows after that gate, or None when the gate is off})."""
+    from log_analysis_spark.plans import job
+
     counts = dict.fromkeys(key for key, _, _ in table if key)
     rows = None  # the row count of docs while it is a counted checkpoint
     for key, on, stage in table:
@@ -417,7 +396,7 @@ def run_gates(docs, table) -> tuple:
             docs, rows = out, None
         if key is not None:
             if rows is None:
-                docs, rows = _checkpoint_counted(docs)
+                docs, rows = job.checkpoint_counted(docs)
             counts[key] = rows
     return docs, counts
 

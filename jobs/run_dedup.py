@@ -35,6 +35,7 @@ def main() -> None:
     ap.add_argument("--shingle-k", type=int, default=2)
     args = ap.parse_args()
 
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     from log_analysis_spark.operators import dedup
@@ -52,22 +53,24 @@ def main() -> None:
             docs, k=max(args.shingle_k, 3), threshold=args.threshold
         )
     # pair discovery (shingle → band join → exact verify) is the job's most
-    # expensive stage and is consumed twice — by the group resolution below
-    # and by the n_pairs summary count — so cache the pair list (tiny
+    # expensive stage and the group resolution reads its output every
+    # round, so it runs once, into a checkpoint that counts the pairs (tiny
     # relative to the corpus: one row per near-dup pair)
-    pairs = pairs.persist()
+    pairs, n_pairs = job.checkpoint_counted(pairs)
     groups = dedup.neardup_groups(docs.select(F.col("doc_id").alias("id")), pairs)
-    kept = dedup.drop_near_duplicates(docs, groups)
+    # the kept write scans every doc once: count them there
+    seen = Observation()
+    observed = docs.observe(seen, F.count(F.lit(1)).alias("n_docs"))
+    kept = dedup.drop_near_duplicates(observed, groups)
     n_kept = sinks.write_counted(kept, f"{args.out}/kept")["rows"]
-
-    n_docs = docs.count()
+    n_docs = seen.get["n_docs"]
     print(
         json.dumps(
             {
                 "method": args.method,
                 "threshold": args.threshold,
                 "n_docs": n_docs,
-                "n_pairs": pairs.count(),
+                "n_pairs": n_pairs,
                 "n_kept": n_kept,
                 "n_dropped": n_docs - n_kept,
                 "kept_path": f"{args.out}/kept",

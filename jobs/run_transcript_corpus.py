@@ -61,7 +61,7 @@ def corpus_shards(args, turns) -> tuple[dict, dict]:
     docs = corpus.transcripts_to_docs(
         turns, boilerplate_conv_frac=args.boilerplate_frac
     )
-    n_lines_removed = None
+    n_lines_removed = stripped = None
     if args.strip_line_frac is not None:
         stripped = span_dedup.strip_common_lines(
             docs, max_doc_frac=args.strip_line_frac,
@@ -104,7 +104,7 @@ def corpus_shards(args, turns) -> tuple[dict, dict]:
         partition_by=("shard",),
     )
     n_kept = written["rows"]  # one shard row per kept document
-    for df in (kept, docs, pairs):
+    for df in (kept, docs, pairs, stripped):
         if df is not None:
             df.unpersist()
 
@@ -125,7 +125,7 @@ def corpus_shards(args, turns) -> tuple[dict, dict]:
     return summary, {"shards": n_kept}
 
 
-def main() -> None:
+def parser():
     from log_analysis_spark.plans import job
 
     ap = job.parser("transcripts")
@@ -140,7 +140,13 @@ def main() -> None:
     ap.add_argument("--dedup-threshold", type=float, default=0.9)
     ap.add_argument("--shingle-k", type=int, default=3)
     ap.add_argument("--no-dedup", action="store_true")
-    args = ap.parse_args()
+    return ap
+
+
+def main() -> None:
+    from log_analysis_spark.plans import job
+
+    args = parser().parse_args()
 
     spark = job.session(args)
     turns = job.read_source(spark, args, "transcripts")

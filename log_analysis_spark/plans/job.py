@@ -74,6 +74,29 @@ def read_source(spark, args, source: str):
     return transcripts_from_events(spark, args.sf_dir)
 
 
+def checkpoint_counted(df):
+    """``df`` materialized by one eager ``localCheckpoint``, its row count
+    observed on that same Spark job: (checkpointed df, rows).
+
+    Materializing a frame that later stages read more than once (a corpus
+    gate's progressively longer chain, dedup's pair list) runs its chain
+    once, not once per downstream count plus once for the final write.
+    ``localCheckpoint`` rather than ``persist`` because it also cuts the
+    logical-plan lineage: DSIR and the leakage split reference their input
+    3-5 times, so with every corpus gate on the untruncated plan grows as
+    branching^stages, and the driver ran out of memory just rendering it.
+    Each checkpoint resets the chain to a leaf; its blocks age out with its
+    Python reference (ContextCleaner)."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    obs = Observation()
+    df = df.observe(obs, F.count(F.lit(1)).alias("rows")).localCheckpoint(
+        eager=True
+    )
+    return df, obs.get["rows"]
+
+
 def fingerprint(args, source_fingerprint: str) -> str:
     """The resume key: every parsed option except ``--master`` (where the
     job runs does not change what it writes), plus the source's files."""

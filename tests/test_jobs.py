@@ -143,3 +143,22 @@ def test_corpus_counted_gates_run_one_spark_job_each(spark, sf_dir):
     assert counts["n_after_gopher"] == gopher.count() < docs.count()
     assert counts["n_after_badwords"] < counts["n_after_domain_blocklist"]
     assert counts["n_after_sampling"] == counts["n_after_badwords"] == out.count()
+
+
+def test_transcript_corpus_strip_leaves_nothing_persisted(spark, sf_dir, tmp_path):
+    """``--strip-line-frac`` persists the stripped frame for its line count;
+    the job unpersists it with its other frames after the shards write.
+    (Dedup is off: its per-round ``localCheckpoint``s are left to the
+    ContextCleaner.)"""
+    tc = _load_job("run_transcript_corpus")
+    args = tc.parser().parse_args([
+        "--sf-dir", sf_dir, "--out", str(tmp_path), "--strip-line-frac", "0.05",
+        "--no-dedup",
+    ])
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persisted().keys())
+    summary, written = tc.corpus_shards(args, job.read_source(spark, args, "transcripts"))
+    assert summary["n_lines_removed"] is not None
+    assert written == {"shards": summary["n_kept"]} and summary["n_kept"] > 0
+    # the cleaner may drop earlier tests' blocks meanwhile: compare new ids
+    assert set(persisted().keys()) - before == set()

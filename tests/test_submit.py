@@ -20,6 +20,8 @@ from pathlib import Path
 import pytest
 from pyspark.sql import functions as F
 
+from log_analysis_spark.session import submit_flags
+
 REPO = Path(__file__).resolve().parents[1]
 
 
@@ -37,8 +39,10 @@ def _spark_submit(pkg_zip, job, extra, cwd):
             # (the JVM is already up); the default 1g OOMs the longer stage
             # chains, so size the driver here like any real launch would
             "--driver-memory", "4g",
-            # likewise get_spark's default JVM options: the README launch shape
+            # likewise get_spark's default JVM options and its local file
+            # system: the README launch shape
             "--driver-java-options", "-XX:-DontCompileHugeMethods",
+            *submit_flags(),
             "--conf", "spark.ui.enabled=false",
             "--py-files", str(pkg_zip),
             str(REPO / "jobs" / job),
@@ -51,6 +55,8 @@ def _spark_submit(pkg_zip, job, extra, cwd):
 def _submit(pkg_zip, job, extra, cwd):
     out = _spark_submit(pkg_zip, job, extra, cwd)
     assert out.returncode == 0, out.stderr[-3000:]
+    # the job's get_spark found the flags' file system bound, so it warned not
+    assert not submit_flags() or "stock file system" not in out.stderr
     lines = [ln for ln in out.stdout.splitlines() if ln.startswith("{")]
     assert lines, out.stdout[-2000:]
     return json.loads(lines[-1])
